@@ -21,7 +21,9 @@ from ..functions import sum_exact
 
 
 def zscore_stats(df: DataFrame, col: str) -> DataFrame:
-    """One-row frame: n, mean, stddev (sample), from exact sums."""
+    """One-row frame: n, mean, stddev (sample), from exact sums.  The
+    sample stddev is undefined below two values: ``std`` is NULL there
+    (pandas gives NaN) instead of a division by zero."""
     x = F.col(col)
     return df.agg(
         F.count(x).alias("n"),
@@ -30,22 +32,28 @@ def zscore_stats(df: DataFrame, col: str) -> DataFrame:
     ).select(
         "n",
         (F.col("_sx") / F.col("n")).alias("mean"),
-        F.sqrt(
-            (F.col("_sxx") - F.col("_sx") * F.col("_sx") / F.col("n"))
-            / (F.col("n") - 1)
+        F.when(
+            F.col("n") > 1,
+            F.sqrt(
+                (F.col("_sxx") - F.col("_sx") * F.col("_sx") / F.col("n"))
+                / (F.col("n") - 1)
+            ),
         ).alias("std"),
     )
 
 
 def flag_outliers(df: DataFrame, col: str, threshold: float = 3.0) -> DataFrame:
     """Attach ``zscore`` and ``is_outlier`` (|z| > threshold) via a broadcast
-    of the global stats (ref etl_pipeline.py:313-322)."""
+    of the global stats (ref etl_pipeline.py:313-322).  With no spread (one
+    row, or every value equal) ``zscore`` is NULL and ``is_outlier`` false,
+    as the reference's NaN z-score compares false."""
     stats = zscore_stats(df, col)
-    z = (F.col(col) - F.col("mean")) / F.col("std")
+    spread = F.col("std") > 0
+    z = F.when(spread, (F.col(col) - F.col("mean")) / F.col("std"))
     return (
         df.crossJoin(F.broadcast(stats))
         .withColumn("zscore", z)
-        .withColumn("is_outlier", F.abs(z) > threshold)
+        .withColumn("is_outlier", F.when(spread, F.abs(z) > threshold).otherwise(False))
         .drop("n", "mean", "std")
     )
 

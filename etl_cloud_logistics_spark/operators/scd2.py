@@ -111,12 +111,6 @@ def scd2_apply(
     )
 
 
-def scd2_current_lookup(dim: DataFrame, keys: list[str]) -> DataFrame:
-    """The reference's surrogate-key UPDATE lookups (etl_pipeline.py:1144-1158)
-    need only the current version per key."""
-    return dim.filter(F.col(IS_CURRENT)).select(*keys, VALID_FROM, VALID_TO)
-
-
 def scd2_asof_lookup(
     dim: DataFrame,
     fact: DataFrame,

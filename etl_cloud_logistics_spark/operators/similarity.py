@@ -10,10 +10,15 @@ Design:
   set against the corpus, rank per query, keep row_number ≤ k — the corpus
   side streams, nothing materializes;
 - the scale path is IVF-style bucket pruning: restrict candidates to the
-  query's coarse partition before ranking (here the deterministic ``label``
-  plays the centroid-assignment role; in production the assignment comes
-  from a trained quantizer).  Candidate generation becomes an equi-join on
-  the bucket id — shuffle O(corpus), not O(queries × corpus).
+  query's coarse partition before ranking (a precomputed bucket column such
+  as ``label``, or a trained quantizer's centroids).  Candidate generation
+  becomes an equi-join on the bucket id — shuffle O(corpus), not
+  O(queries × corpus);
+- the index has one lifecycle: train (``train_ivf_centroids`` +
+  ``train_sq8_bounds``) → build (``build_sq8_index``) → persist → serve
+  (``knn_sq8_serve``); ``knn_sq8`` is the same lifecycle in one plan, and
+  ``knn_pq`` swaps the SQ8 codec for product quantization over the same
+  shortlist/rerank tail.
 """
 
 from __future__ import annotations
@@ -28,30 +33,11 @@ from pyspark.sql.window import Window as W
 _DEC = "decimal(30,12)"
 
 
-def dot_exact(a: Column, b: Column) -> Column:
-    """Order-independent exact dot product of two float arrays (as double)."""
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(
-        prods,
-        F.lit(0).cast(_DEC),
-        lambda acc, x: (acc + x.cast(_DEC)).cast(_DEC),
-    ).cast("double")
-
-
-def norm_exact(a: Column) -> Column:
-    """Exact-sum L2 norm (sqrt applied to a deterministic double)."""
-    return F.sqrt(dot_exact(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot_exact(a, b) / (norm_exact(a) * norm_exact(b))
-
-
 def _bq(name: str) -> str:
     """Backtick-quote a column NAME for the one-parse SQL builders,
     escaping embedded backticks (ADVICE r11: a verbatim ``` ` ``` in the
-    name would otherwise break the expression, and these str overloads
-    must resolve the same top-level column F.col's parsed-identifier path
+    name would otherwise break the expression, and these builders must
+    resolve the same top-level column F.col's parsed-identifier path
     would)."""
     return "`" + name.replace("`", "``") + "`"
 
@@ -65,9 +51,9 @@ def _dot_exact_sql(a: str, b: str) -> str:
     similarity paths build 7-14 of them per query CONSTRUCTION — measured
     as the dominant cost of knn_sq8_rerank's rebuild (profile: 2065 py4j
     round-trips, ~3.1 s socket wait on the bench host).  Parsing one SQL
-    string builds the IDENTICAL expression tree (same zip_with/aggregate,
-    same DECIMAL(30,12) casts in the same places — oracle rows pin the
-    emitted values bit-exactly) in a single round-trip."""
+    string builds the same zip_with/aggregate tree with the same
+    DECIMAL(30,12) casts in the same places (oracle rows pin the emitted
+    values bit-exactly) in a single round-trip."""
     return (
         f"CAST(aggregate(zip_with({_bq(a)}, {_bq(b)}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -76,26 +62,16 @@ def _dot_exact_sql(a: str, b: str) -> str:
     )
 
 
-def dot_exact_cols(a: str, b: str) -> Column:
-    """``dot_exact`` over two NAMED columns via one parsed expression —
-    same result bit-for-bit, ~100x fewer py4j calls to build."""
+def dot_exact(a: str, b: str) -> Column:
+    """Order-independent exact dot product of two NAMED float-array columns
+    (as double), built as one parsed expression."""
     return F.expr(_dot_exact_sql(a, b))
 
 
-def norm_exact_col(a: str) -> Column:
-    """``norm_exact`` over a NAMED column via one parsed expression."""
+def norm_exact(a: str) -> Column:
+    """Exact-sum L2 norm of a NAMED float-array column (sqrt applied to a
+    deterministic double)."""
     return F.expr(f"SQRT({_dot_exact_sql(a, a)})")
-
-
-def dot_fast(a: Column, b: Column) -> Column:
-    """Plain double-fold dot product — order-dependent in the last bits, so
-    never emitted as a result value; used only as a conservative prefilter
-    (cheap: no per-element BigDecimal allocation)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def lit_double_array(values) -> Column:
@@ -136,15 +112,72 @@ def _darray_sql(values) -> str:
 def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
     """Dot product for a KNOWN dimensionality as a static sum of
     ``a[i] * b[i]`` terms.  GetArrayItem arithmetic participates in
-    whole-stage codegen, where the ``zip_with``/``aggregate`` higher-order
-    fold of ``dot_fast`` is interpreted per row — measured ~1.6x faster on
-    the ~200k-pair neardup prefilter at sf0.1.  Order-dependent in the
-    last bits exactly like ``dot_fast``: prefilter use only, never an
-    emitted value."""
+    whole-stage codegen, where a ``zip_with``/``aggregate`` double fold is
+    interpreted per row — measured ~1.6x faster on the ~200k-pair neardup
+    prefilter at sf0.1.  Order-dependent in the last bits: prefilter use
+    only, never an emitted value."""
     out = a[0].cast("double") * b[0].cast("double")
     for i in range(1, dim):
         out = out + a[i].cast("double") * b[i].cast("double")
     return out
+
+
+def _with_norm(
+    df: DataFrame, id_name: str, p: str, id_col: str, vec_col: str, *extra: Column
+) -> DataFrame:
+    """``(id_name, {p}_vec, {p}_norm, *extra)``: one side of a pair join.
+    Norms are per-row, so each side computes its own BEFORE the join and
+    every pair evaluates one decimal fold (the dot), not three."""
+    return df.select(
+        F.col(id_col).alias(id_name),
+        F.col(vec_col).alias(f"{p}_vec"),
+        norm_exact(vec_col).alias(f"{p}_norm"),
+        *extra,
+    )
+
+
+def _exact_top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Shared tail of every top-k path: decimal-exact cosine of each
+    (query, neighbor) pair, ranked per query with the neighbor id as
+    deterministic tiebreaker, top ``k`` kept.  ``pairs`` carries the
+    ``_with_norm`` columns of both sides (``q_*`` and ``c_*``)."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        (dot_exact("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))).alias("cos_sim"),
+    )
+    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
+    )
+
+
+def _verified_pairs(pairs: DataFrame, threshold: float, dim: int) -> DataFrame:
+    """Two-phase verify of candidate (vec_a, vec_b) pairs carrying the
+    ``_with_norm`` columns of both sides: codegen double-dot prefilter
+    (``dot_unrolled``, ≥ 10x cheaper than the decimal fold) with a 1e-6
+    margin — it dwarfs ~1e-15 relative double-summation error and covers
+    the half-ulp a 6-decimal ROUND can pull a just-below-threshold pair up
+    by, so no qualifying pair is lost — then the exact decimal cosine only
+    for survivors, so emitted values stay bit-exact vs the oracle."""
+    return (
+        pairs.filter(
+            dot_unrolled(F.col("a_vec"), F.col("b_vec"), dim)
+            / (F.col("a_norm") * F.col("b_norm"))
+            >= threshold - 1e-6
+        )
+        .select(
+            "vec_a",
+            "vec_b",
+            F.round(
+                dot_exact("a_vec", "b_vec") / (F.col("a_norm") * F.col("b_norm")),
+                6,
+            ).alias("cos_sim"),
+        )
+        .filter(F.col("cos_sim") >= threshold)
+    )
 
 
 def knn_bruteforce(
@@ -157,98 +190,44 @@ def knn_bruteforce(
     """Exact top-k cosine neighbors per query (baseline).  The query set is
     broadcast; ranking is per-query (Window.partitionBy) with the neighbor id
     as deterministic tiebreaker."""
-    # norms are per-row: compute each side's BEFORE the join so every pair
-    # evaluates one decimal fold (the dot), not three
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm_exact_col(vec_col).alias("q_norm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm_exact_col(vec_col).alias("c_norm"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot_exact_cols("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
+    q = _with_norm(queries, "query_id", "q", id_col, vec_col)
+    c = _with_norm(corpus, "neighbor_id", "c", id_col, vec_col)
+    return _exact_top_k(
+        c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id")),
+        k,
     )
 
 
 def cosine_neardup_pairs(
     emb: DataFrame,
     threshold: float,
+    dim: int,
     bucket_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (extension X2, vector variant):
     unordered pairs (a < b) with cosine ≥ threshold, candidates restricted to
     the same coarse bucket so the join is equi on the bucket id — shuffle
     O(corpus), never the O(n²) full cross product.  At 100 TB the bucket
     assignment comes from an LSH family or a trained quantizer; recall is
-    tuned by probing multiple buckets per vector."""
-    a = emb.select(
-        F.col(id_col).alias("vec_a"),
-        F.col(vec_col).alias("a_vec"),
-        norm_exact_col(vec_col).alias("a_norm"),
-        F.col(bucket_col).alias("bucket"),
-    )
-    b = emb.select(
-        F.col(id_col).alias("vec_b"),
-        F.col(vec_col).alias("b_vec"),
-        norm_exact_col(vec_col).alias("b_norm"),
-        F.col(bucket_col).alias("bucket"),
-    )
-    # two-phase: double-dot prefilter over all candidate pairs (≥ 10x cheaper
-    # than the decimal fold), exact decimal cosine only for survivors — the
-    # 1e-6 margin dwarfs double-summation error (~1e-15 relative), so no
-    # qualifying pair is lost and emitted values stay bit-exact.  With a
-    # known dim the prefilter dot is statically unrolled so it runs inside
-    # whole-stage codegen (higher-order folds are interpreted).
-    pre_dot = (
-        dot_unrolled(F.col("a_vec"), F.col("b_vec"), dim)
-        if dim is not None
-        else dot_fast(F.col("a_vec"), F.col("b_vec"))
-    )
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(
-            pre_dot / (F.col("a_norm") * F.col("b_norm")) >= threshold - 1e-6
-        )
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                dot_exact_cols("a_vec", "b_vec")
-                / (F.col("a_norm") * F.col("b_norm")),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
+    tuned by probing multiple buckets per vector.  ``dim`` is the vector
+    length the prefilter dot unrolls over (see ``_verified_pairs``)."""
+    bucket = F.col(bucket_col).alias("bucket")
+    a = _with_norm(emb, "vec_a", "a", id_col, vec_col, bucket)
+    b = _with_norm(emb, "vec_b", "b", id_col, vec_col, bucket)
+    return _verified_pairs(
+        a.join(b, "bucket").filter(F.col("vec_a") < F.col("vec_b")), threshold, dim
     )
 
 
 def semdedup_prune(
     emb: DataFrame,
     threshold: float,
+    dim: int,
     bucket_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic pruning (Abbas et al. 2023, arXiv:2303.09540):
     keep a vector iff it has NO lower-id near-neighbor (cosine ≥ threshold)
@@ -271,7 +250,7 @@ def semdedup_prune(
     blocker aggregation and the left join back onto the corpus are one
     keyed shuffle each on the id — nothing scales with pair chains."""
     pairs = cosine_neardup_pairs(
-        emb, threshold, bucket_col=bucket_col, id_col=id_col, vec_col=vec_col, dim=dim
+        emb, threshold, dim, bucket_col=bucket_col, id_col=id_col, vec_col=vec_col
     )
     blockers = pairs.groupBy(F.col("vec_b").alias(id_col)).agg(
         F.count("*").alias("n_lower_dups"),
@@ -318,6 +297,25 @@ def nearest_buckets(vec: Column, centroids: list[list[float]], nprobe: int) -> C
     return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["bucket"])
 
 
+def _bucket_of(
+    vec_col: str,
+    centroids: list[list[float]] | None,
+    bucket_col: str | None,
+    nprobe: int | None = None,
+) -> Column:
+    """The coarse bucket column of the IVF paths: ``bucket_col`` as given,
+    or from trained ``centroids`` — a corpus vector's nearest centroid
+    (``nprobe=None``) or a query's ``nprobe`` nearest, exploded to one row
+    per probe.  Exactly one of ``centroids``/``bucket_col`` is given."""
+    if (centroids is None) == (bucket_col is None):
+        raise ValueError("give exactly one of centroids= or bucket_col=")
+    if bucket_col is not None:
+        return F.col(bucket_col)
+    if nprobe is None:
+        return nearest_buckets(F.col(vec_col), centroids, 1)[0]
+    return F.explode(nearest_buckets(F.col(vec_col), centroids, nprobe))
+
+
 def train_ivf_centroids(
     corpus: DataFrame,
     n_clusters: int,
@@ -336,9 +334,10 @@ def train_ivf_centroids(
     - Only the k×dims centroid matrix ever reaches the driver (model
       metadata, not data rows) — the corpus itself never collects.
 
-    The returned centroids feed ``nearest_buckets`` / ``knn_ivf_trained``;
-    at 100 TB train on a sample (the quantizer needs ~256k vectors, not the
-    corpus) and persist the matrix next to the index."""
+    The returned centroids feed ``build_sq8_index`` / ``knn_sq8`` /
+    ``knn_sq8_serve``; at 100 TB train on a sample (the quantizer needs
+    ~256k vectors, not the corpus) and persist the matrix next to the
+    index."""
     seeds = (
         corpus.groupBy(F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_clusters)).alias("g"))
         .agg(F.min_by(vec_col, F.col(id_col)).alias("v"))
@@ -372,51 +371,6 @@ def train_ivf_centroids(
             for b in range(len(cents))
         ]
     return cents
-
-
-def knn_ivf_trained(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    centroids: list[list[float]],
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF top-k with a trained coarse quantizer and multi-probe: the corpus
-    is assigned to its nearest centroid (narrow projection, indexed once);
-    each query probes its ``nprobe`` nearest buckets.  Candidate generation
-    is an equi-join on the bucket id — shuffle O(corpus × nprobe/k_buckets),
-    never O(queries × corpus).  Recall is tuned by ``nprobe`` and measured
-    by ``recall_at_k`` against ``knn_bruteforce`` — an ANN path without a
-    recall figure is not operable."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm_exact_col(vec_col).alias("q_norm"),
-        nearest_buckets(F.col(vec_col), centroids, nprobe).alias("probes"),
-    ).select("query_id", "q_vec", "q_norm", F.explode("probes").alias("bucket"))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm_exact_col(vec_col).alias("c_norm"),
-        nearest_buckets(F.col(vec_col), centroids, 1)[0].alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot_exact_cols("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
 
 
 def recall_at_k(approx: DataFrame, exact: DataFrame) -> DataFrame:
@@ -499,9 +453,9 @@ def train_sq8_bounds_frame(
 
 def _quantize_sq8_sql(vec: str, lo_sql: str, step_sql: str) -> str:
     """Shared SQL text of the SQ8 quantize transform: ``lo_sql``/``step_sql``
-    are either literal ``array(...)`` expressions (the list API) or
-    backticked COLUMN references (the in-plan bounds path) — one builder so
-    the two forms cannot drift."""
+    are either literal ``array(...)`` expressions (the persisted-model
+    path) or backticked COLUMN references (``knn_sq8``'s in-plan bounds) —
+    one builder so the two forms cannot drift."""
     return (
         f"transform({_bq(vec)}, (x, i) -> CAST(LEAST(127, GREATEST(-128, "
         f"CAST(FLOOR((CAST(x AS DOUBLE) - element_at({lo_sql}, i + 1)) "
@@ -519,62 +473,52 @@ def _dequantize_sq8_sql(codes: str, lo_sql: str, step_sql: str) -> str:
     )
 
 
-def quantize_sq8(vec: Column | str, lo: list[float], hi: list[float]) -> Column:
-    """8-bit scalar quantization: per-dimension affine map of a float vector
-    onto ``array<tinyint>`` codes in [-128, 127].  This is the at-rest /
-    in-memory index format — 1 byte per dimension instead of 4, the 4×
-    footprint cut that makes a 100 TB corpus' index fit a cluster's RAM.
-    Rounding is ``floor(x + 0.5)`` (identical semantics in Spark and DuckDB,
-    so the oracle reproduces codes bit-exactly; ``round`` half-even vs
-    half-up ambiguity never enters).
-
-    ``vec`` may be a column NAME: the whole transform then parses as one
-    SQL expression (r11 optimization round — the Python-API lambda costs
-    ~60 ms of py4j chatter per build; the parsed tree is identical, and
-    the oracle pins the codes bit-exactly).  A Column argument keeps the
-    API-built path."""
-    if isinstance(vec, str):
-        lo_sql = _darray_sql(lo)
-        step_sql = _darray_sql(_sq8_steps(lo, hi))
-        return F.expr(_quantize_sq8_sql(vec, lo_sql, step_sql))
-    lo_arr = lit_double_array(lo)
-    step_arr = lit_double_array(_sq8_steps(lo, hi))
-    return F.transform(
-        vec,
-        lambda x, i: F.least(
-            F.lit(127),
-            F.greatest(
-                F.lit(-128),
-                (
-                    F.floor(
-                        (x.cast("double") - F.element_at(lo_arr, i + 1))
-                        / F.element_at(step_arr, i + 1)
-                        + F.lit(0.5)
-                    ).cast("int")
-                    - 128
-                ),
-            ),
-        ).cast("tinyint"),
+def quantize_sq8(vec: str, lo: list[float], hi: list[float]) -> Column:
+    """8-bit scalar quantization of the NAMED vector column: per-dimension
+    affine map of a float vector onto ``array<tinyint>`` codes in
+    [-128, 127].  This is the at-rest / in-memory index format — 1 byte per
+    dimension instead of 4, the 4× footprint cut that makes a 100 TB
+    corpus' index fit a cluster's RAM.  Rounding is ``floor(x + 0.5)``
+    (identical semantics in Spark and DuckDB, so the oracle reproduces
+    codes bit-exactly; ``round`` half-even vs half-up ambiguity never
+    enters).  The transform parses as one SQL expression (r11 optimization
+    round — a Python-API lambda costs ~60 ms of py4j chatter per build)."""
+    return F.expr(
+        _quantize_sq8_sql(vec, _darray_sql(lo), _darray_sql(_sq8_steps(lo, hi)))
     )
 
 
-def dequantize_sq8(codes: Column | str, lo: list[float], hi: list[float]) -> Column:
-    """Inverse of ``quantize_sq8`` up to step/2 per element: reconstructs the
-    double vector the asymmetric scorer uses (query stays float, candidate is
-    reconstructed from its codes — FAISS's asymmetric distance computation).
+def dequantize_sq8(codes: str, lo: list[float], hi: list[float]) -> Column:
+    """Inverse of ``quantize_sq8`` up to step/2 per element over the NAMED
+    codes column: reconstructs the double vector the asymmetric scorer uses
+    (query stays float, candidate is reconstructed from its codes — FAISS's
+    asymmetric distance computation)."""
+    return F.expr(
+        _dequantize_sq8_sql(codes, _darray_sql(lo), _darray_sql(_sq8_steps(lo, hi)))
+    )
 
-    ``codes`` may be a column NAME for the one-parse build (see
-    quantize_sq8); a Column keeps the API-built path."""
-    if isinstance(codes, str):
-        lo_sql = _darray_sql(lo)
-        step_sql = _darray_sql(_sq8_steps(lo, hi))
-        return F.expr(_dequantize_sq8_sql(codes, lo_sql, step_sql))
-    lo_arr = lit_double_array(lo)
-    step_arr = lit_double_array(_sq8_steps(lo, hi))
-    return F.transform(
-        codes,
-        lambda c, i: F.element_at(lo_arr, i + 1)
-        + (c.cast("double") + F.lit(128.0)) * F.element_at(step_arr, i + 1),
+
+def _codes_index(
+    corpus: DataFrame,
+    bucket: Column,
+    codes: Column,
+    recon,
+    id_col: str,
+    *carry: str,
+) -> DataFrame:
+    """A codes-only scored index: ``(neighbor_id, bucket, codes, *carry,
+    approx_norm)``, where ``recon`` maps the codes column NAME to the
+    reconstructed double vector and ``approx_norm`` is that vector's norm —
+    what the asymmetric shortlist divides by.  Shared by the SQ8 and PQ
+    builds."""
+    return corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        bucket.alias("bucket"),
+        codes.alias("codes"),
+        *carry,
+    ).withColumn(
+        "approx_norm",
+        F.sqrt(F.aggregate(recon("codes"), F.lit(0.0), lambda acc, x: acc + x * x)),
     )
 
 
@@ -596,146 +540,40 @@ def build_sq8_index(
     :func:`knn_sq8_serve` — the index build is the expensive pass, serving
     reads the stored index.  (lo, hi, centroids) are the small model
     metadata to persist alongside (k×dims floats)."""
-    if (centroids is None) == (bucket_col is None):
-        raise ValueError("give exactly one of centroids= or bucket_col=")
-    c_bucket = (
-        nearest_buckets(F.col(vec_col), centroids, 1)[0]
-        if centroids is not None
-        else F.col(bucket_col)
-    )
-    return corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        c_bucket.alias("bucket"),
-        quantize_sq8(vec_col, lo, hi).alias("codes"),
-    ).withColumn(
-        "approx_norm",
-        F.sqrt(F.aggregate(
-            dequantize_sq8("codes", lo, hi),
-            F.lit(0.0),
-            lambda acc, x: acc + x * x,
-        )),
-    )
-
-
-def knn_sq8(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    lo: list[float] | None = None,
-    hi: list[float] | None = None,
-    shortlist: int | None = None,
-    centroids: list[list[float]] | None = None,
-    nprobe: int = 1,
-    bucket_col: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Quantized top-k serving path: IVF bucket pruning + SQ8 asymmetric
-    scoring + exact rerank — :func:`build_sq8_index` composed with
-    :func:`knn_sq8_serve` in one plan (the registry/oracle entry point; a
-    deployment builds the index once and serves from storage instead).
-
-    1. INDEX: see :func:`build_sq8_index`.
-    2. SHORTLIST: candidates from the probed buckets (equi-join on bucket
-       id) are scored with the cheap asymmetric dot (float query ×
-       dequantized codes); the top ``shortlist`` (default 4k) per query
-       survive.  Deterministic: fixed-order fold + neighbor-id tiebreaker.
-    3. RERANK: only the shortlist joins back to the float vectors (at scale
-       a point-lookup fetch of k×4 rows per query, not a corpus scan) and
-       the emitted cos_sim is the decimal-exact cosine — bit-identical to
-       ``knn_bruteforce`` values, so quantization error can demote/promote
-       only candidates, never distort a reported score.
-
-    Buckets come from ``centroids`` (trained, multi-probe) or a precomputed
-    ``bucket_col``; exactly one must be given.
-
-    ``lo``/``hi`` omitted (r12 optimization round, guide §2.4): the SQ8
-    bounds are derived IN-PLAN — :func:`train_sq8_bounds_frame`'s one-row
-    (lo_arr, step_arr) aggregate is broadcast-cross-joined into the index
-    build and the quantize/dequantize transforms reference the arrays as
-    columns instead of baked literals.  One SQL execution instead of two
-    (the separate bounds collect was ~0.6 s of the knn_sq8_rerank rebuild);
-    codes, shortlist and emitted cos_sim are bit-identical (the transforms
-    share their SQL text with the literal path, and the oracle pins the
-    values).  A deployment that PERSISTS the model keeps the explicit
-    list API (run_index_build collects bounds because model.json must)."""
-    if (lo is None) != (hi is None):
-        raise ValueError("give both lo= and hi=, or neither")
-    if lo is not None:
-        index = build_sq8_index(
-            corpus, lo, hi, centroids, bucket_col, id_col, vec_col
-        )
-        return knn_sq8_serve(
-            index, queries, corpus, k, lo, hi,
-            shortlist=shortlist, centroids=centroids, nprobe=nprobe,
-            bucket_col=bucket_col, id_col=id_col, vec_col=vec_col,
-        )
-    if (centroids is None) == (bucket_col is None):
-        raise ValueError("give exactly one of centroids= or bucket_col=")
-    if shortlist is None:
-        shortlist = 4 * k
-    bounds = train_sq8_bounds_frame(corpus, vec_col)
-    c_bucket = (
-        nearest_buckets(F.col(vec_col), centroids, 1)[0]
-        if centroids is not None
-        else F.col(bucket_col)
-    )
-    # the index rows carry the two bound arrays from the 1-row broadcast so
-    # the serve-side reconstruction can reference them as columns; they are
-    # projected away right after the shortlist score
-    index = corpus.crossJoin(F.broadcast(bounds)).select(
-        F.col(id_col).alias("neighbor_id"),
-        c_bucket.alias("bucket"),
-        F.expr(_quantize_sq8_sql(vec_col, "`lo_arr`", "`step_arr`")).alias(
-            "codes"
-        ),
-        "lo_arr",
-        "step_arr",
-    ).withColumn(
-        "approx_norm",
-        F.sqrt(F.aggregate(
-            F.expr(_dequantize_sq8_sql("codes", "`lo_arr`", "`step_arr`")),
-            F.lit(0.0),
-            lambda acc, x: acc + x * x,
-        )),
-    )
-    if centroids is not None:
-        q_probe = F.explode(nearest_buckets(F.col(vec_col), centroids, nprobe))
-    else:
-        q_probe = F.col(bucket_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm_exact_col(vec_col).alias("q_norm"),
-        q_probe.alias("bucket"),
-    )
-    return _asym_shortlist_rerank(
-        index, q, queries, corpus, k, shortlist,
-        recon=lambda codes: F.expr(
-            _dequantize_sq8_sql(codes, "`lo_arr`", "`step_arr`")
-        ),
-        id_col=id_col, vec_col=vec_col,
+    return _codes_index(
+        corpus,
+        _bucket_of(vec_col, centroids, bucket_col),
+        quantize_sq8(vec_col, lo, hi),
+        lambda codes: dequantize_sq8(codes, lo, hi),
+        id_col,
     )
 
 
 def _asym_shortlist_rerank(
     index: DataFrame,
-    q: DataFrame,
     queries: DataFrame,
     corpus_vectors: DataFrame,
     k: int,
-    shortlist: int,
+    shortlist: int | None,
+    probe: Column,
     recon,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Shared tail of every quantized serving path (SQ8, PQ): asymmetric
-    shortlist over the codes-only index, then decimal-exact rerank of the
-    shortlist against the float vectors.  ``recon`` maps the ``codes``
-    column to the reconstructed double vector (dequantize_sq8 / decode_pq)
-    — the ONLY piece that differs between quantizers, so the tie-breaks,
-    the 9-dp rounding of the shortlist score (fold noise must not decide
-    the cut) and the self-match filter cannot drift between them."""
+    """Shared serving tail of every quantized index (SQ8, PQ): each query
+    probes the index buckets ``probe`` names, the codes-only candidates
+    there are scored with the cheap asymmetric dot (float query ×
+    ``recon``-structed codes) and the top ``shortlist`` (default 4k) per
+    query survive; only the shortlist joins back to the float vectors (at
+    scale a point-lookup fetch of k×4 rows per query, not a corpus scan)
+    for the decimal-exact rerank — so quantization can demote/promote only
+    candidates, never distort a reported score.  ``recon`` is the ONLY
+    piece that differs between quantizers, so the tie-breaks, the 9-dp
+    rounding of the shortlist score (fold noise must not decide the cut)
+    and the self-match filter cannot drift between them."""
+    if shortlist is None:
+        shortlist = 4 * k
+    q = _with_norm(queries, "query_id", "q", id_col, vec_col, probe.alias("bucket"))
     approx_dot = F.aggregate(
         F.zip_with(
             F.col("q_vec"),
@@ -758,33 +596,65 @@ def _asym_shortlist_rerank(
         .filter(F.col("srank") <= shortlist)
         .select("query_id", "neighbor_id")
     )
-    qf = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm_exact_col(vec_col).alias("q_norm"),
+    qf = _with_norm(queries, "query_id", "q", id_col, vec_col)
+    cf = _with_norm(corpus_vectors, "neighbor_id", "c", id_col, vec_col)
+    return _exact_top_k(
+        shortlisted.join(cf, "neighbor_id").join(F.broadcast(qf), "query_id"), k
     )
-    cf = corpus_vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm_exact_col(vec_col).alias("c_norm"),
+
+
+def knn_sq8(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    shortlist: int | None = None,
+    centroids: list[list[float]] | None = None,
+    nprobe: int = 1,
+    bucket_col: str | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Quantized top-k in ONE plan: IVF bucket pruning + SQ8 asymmetric
+    shortlist + exact rerank — the :func:`build_sq8_index` →
+    :func:`knn_sq8_serve` lifecycle without the persist step (the
+    registry/oracle entry point; a deployment builds the index once and
+    serves from storage instead, with identical rows — pinned by the index
+    parquet round-trip test).  Buckets come from ``centroids`` (trained,
+    multi-probe) or a precomputed ``bucket_col``; exactly one must be
+    given.  A shortlist covering every candidate returns exactly the float
+    IVF ranking (every probed-bucket candidate reaches the exact rerank).
+
+    The SQ8 bounds are derived IN-PLAN (r12 optimization round, guide
+    §2.4): :func:`train_sq8_bounds_frame`'s one-row (lo_arr, step_arr)
+    aggregate is broadcast-cross-joined into the index build and the
+    quantize/dequantize transforms reference the arrays as columns instead
+    of baked literals.  One SQL execution instead of two (a separate
+    bounds collect was ~0.6 s of the knn_sq8_rerank rebuild); codes,
+    shortlist and emitted cos_sim are bit-identical to the persisted-model
+    path (the transforms share their SQL text, and the oracle pins the
+    values).  A deployment that PERSISTS the model collects the bounds
+    with :func:`train_sq8_bounds` instead (``run_index_build`` must write
+    them to model.json)."""
+    bucket = _bucket_of(vec_col, centroids, bucket_col)
+    probe = _bucket_of(vec_col, centroids, bucket_col, nprobe)
+
+    def recon(codes: str) -> Column:
+        return F.expr(_dequantize_sq8_sql(codes, "`lo_arr`", "`step_arr`"))
+
+    # the index rows carry the two bound arrays from the 1-row broadcast so
+    # the serve-side reconstruction can reference them as columns; they are
+    # projected away right after the shortlist score
+    index = _codes_index(
+        corpus.crossJoin(F.broadcast(train_sq8_bounds_frame(corpus, vec_col))),
+        bucket,
+        F.expr(_quantize_sq8_sql(vec_col, "`lo_arr`", "`step_arr`")),
+        recon,
+        id_col,
+        "lo_arr",
+        "step_arr",
     )
-    scored = (
-        shortlisted.join(cf, "neighbor_id")
-        .join(F.broadcast(qf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot_exact_cols("q_vec", "c_vec")
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
+    return _asym_shortlist_rerank(
+        index, queries, corpus, k, shortlist, probe, recon, id_col, vec_col
     )
 
 
@@ -807,24 +677,11 @@ def knn_sq8_serve(
     ``corpus_vectors`` is consulted only for the k×4-per-query exact
     rerank fetch.  Results are identical to :func:`knn_sq8` over the same
     corpus — pinned by the index parquet round-trip test."""
-    if (centroids is None) == (bucket_col is None):
-        raise ValueError("give exactly one of centroids= or bucket_col=")
-    if shortlist is None:
-        shortlist = 4 * k
-    if centroids is not None:
-        q_probe = F.explode(nearest_buckets(F.col(vec_col), centroids, nprobe))
-    else:
-        q_probe = F.col(bucket_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm_exact_col(vec_col).alias("q_norm"),
-        q_probe.alias("bucket"),
-    )
     return _asym_shortlist_rerank(
-        index, q, queries, corpus_vectors, k, shortlist,
-        recon=lambda codes: dequantize_sq8(codes, lo, hi),
-        id_col=id_col, vec_col=vec_col,
+        index, queries, corpus_vectors, k, shortlist,
+        _bucket_of(vec_col, centroids, bucket_col, nprobe),
+        lambda codes: dequantize_sq8(codes, lo, hi),
+        id_col, vec_col,
     )
 
 
@@ -838,32 +695,12 @@ def knn_ivf(
 ) -> DataFrame:
     """IVF-style approximate top-k: candidates limited to the query's coarse
     bucket (equi-join on the bucket id), then exact ranking within bucket."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm_exact_col(vec_col).alias("q_norm"),
-        F.col(bucket_col).alias("bucket"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm_exact_col(vec_col).alias("c_norm"),
-        F.col(bucket_col).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot_exact_cols("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm"))).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
+    bucket = F.col(bucket_col).alias("bucket")
+    q = _with_norm(queries, "query_id", "q", id_col, vec_col, bucket)
+    c = _with_norm(corpus, "neighbor_id", "c", id_col, vec_col, bucket)
+    return _exact_top_k(
+        c.join(F.broadcast(q), "bucket").filter(F.col("neighbor_id") != F.col("query_id")),
+        k,
     )
 
 
@@ -1036,18 +873,14 @@ def srp_lsh_neardup(
     dim: int = 64,
     n_tables: int = 8,
     n_bits: int = 8,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Hyperplane-LSH near-duplicate pairs: candidates = unordered pairs
     sharing a full B-bit signature in ANY of the T tables (equi-join on
     (t, sig), distinct), verified by exact decimal cosine ≥ threshold.
 
-    ``impl`` selects signature generation: ``'arrow'`` (default — one
-    vectorized int64-matmul pass, srp_signatures_arrow) or
-    ``'relational'`` (the corpus×dim×(T·B) aggregation whose SQL twin is
-    the DuckDB oracle).  Both produce bit-identical signatures
-    (pytest-pinned equality on the sf corpus), so the choice is purely a
-    cost decision.
+    Signatures come from the vectorized :func:`srp_signatures_arrow`; they
+    are bit-identical to the relational :func:`srp_signatures` whose SQL
+    twin is the DuckDB oracle (pytest-pinned equality on the sf corpus).
 
     The scale contract matches the MinHash/LSH text path: candidate
     generation is an equi-join on shared evidence — shuffle O(corpus · T),
@@ -1055,13 +888,10 @@ def srp_lsh_neardup(
     Recall follows the SRP S-curve 1 − (1 − (1 − θ/π)^B)^T: with B=8/T=8,
     ≈ 0.94 at cos 0.9 but only ~0.15 at cos 0.35 — this family is for
     HIGH-similarity near-dup detection; moderate-threshold sweeps belong to
-    the trained-IVF bucketing (knn_ivf_trained) whose probe count buys
-    recall monotonically.  The measured figure on the planted fixture is
-    pytest-pinned (test_extensions.py)."""
-    if impl not in ("arrow", "relational"):
-        raise ValueError(f"impl must be 'arrow' or 'relational': {impl!r}")
-    sig_fn = srp_signatures_arrow if impl == "arrow" else srp_signatures
-    sigs = sig_fn(
+    the trained-IVF bucketing (``knn_sq8`` with ``centroids=``) whose probe
+    count buys recall monotonically.  The measured figure on the planted
+    fixture is pytest-pinned (test_extensions.py)."""
+    sigs = srp_signatures_arrow(
         emb, id_col=id_col, vec_col=vec_col, dim=dim, n_tables=n_tables, n_bits=n_bits
     )
     a = sigs.select(F.col(id_col).alias("vec_a"), "t", "sig")
@@ -1076,41 +906,11 @@ def srp_lsh_neardup(
     # candidate pair endpoint (O(candidates) — the r6 profile showed the
     # verify stage at ~8 of the row's 11.5 s at sf0.1, dwarfing the
     # vectorized signatures); same value either way, so emitted cosines
-    # are unchanged
-    ea = emb.select(
-        F.col(id_col).alias("vec_a"),
-        F.col(vec_col).alias("a_vec"),
-        norm_exact_col(vec_col).alias("a_norm"),
-    )
-    eb = emb.select(
-        F.col(id_col).alias("vec_b"),
-        F.col(vec_col).alias("b_vec"),
-        norm_exact_col(vec_col).alias("b_norm"),
-    )
-    pairs = cand.join(ea, "vec_a").join(eb, "vec_b")
-    # two-phase verify, same contract as cosine_neardup_pairs: codegen
-    # double-dot prefilter with a 1e-6 margin (dwarfs ~1e-15 relative
-    # double-summation error, and covers the half-ulp a 6-decimal ROUND
-    # can pull a just-below-threshold pair up by), exact decimal cosine
-    # only for survivors — emitted values stay bit-exact vs the oracle,
-    # which replays the plain exact form over the full candidate set
-    return (
-        pairs.filter(
-            dot_unrolled(F.col("a_vec"), F.col("b_vec"), dim)
-            / (F.col("a_norm") * F.col("b_norm"))
-            >= threshold - 1e-6
-        )
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                dot_exact_cols("a_vec", "b_vec")
-                / (F.col("a_norm") * F.col("b_norm")),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    # are unchanged.  The oracle replays the plain exact form over the
+    # full candidate set.
+    ea = _with_norm(emb, "vec_a", "a", id_col, vec_col)
+    eb = _with_norm(emb, "vec_b", "b", id_col, vec_col)
+    return _verified_pairs(cand.join(ea, "vec_a").join(eb, "vec_b"), threshold, dim)
 
 
 # --- Product quantization (PQ) ---------------------------------------------
@@ -1260,80 +1060,22 @@ def knn_pq(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ asymmetric top-k with exact rerank, mirroring :func:`knn_sq8`:
-    shortlist by approx cosine of the float query against reconstructed
-    candidates (rounded to 9 dp before the rank cut, so fold noise never
-    decides it), exact decimal rerank of the shortlist only.
-    ``bucket_col=None`` scores the whole corpus (the pure-PQ measurement
-    mode); give a bucket column to compose with IVF pruning."""
-    index = build_pq_index(
-        corpus, codebooks, dim=dim, bucket_col=bucket_col,
-        id_col=id_col, vec_col=vec_col,
-    )
-    return knn_pq_serve(
-        index, queries, corpus, k, codebooks, shortlist=shortlist,
-        bucket_col=bucket_col, id_col=id_col, vec_col=vec_col,
-    )
-
-
-def build_pq_index(
-    corpus: DataFrame,
-    codebooks: list[list[list[float]]],
-    dim: int = 64,
-    bucket_col: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The PERSISTABLE PQ scored index, mirroring :func:`build_sq8_index`:
-    per corpus vector its coarse bucket, its m ``tinyint`` subspace codes
-    (32× smaller than float32, vs SQ8's 4×) and the reconstruction norm —
-    floats excluded.  The codebooks (m × k_sub × dim/m floats) are the
-    model metadata to persist alongside, exactly like SQ8's (lo, hi,
-    centroids); encode once per corpus version, serve many times with
-    :func:`knn_pq_serve` from storage."""
+    the index holds per corpus vector its coarse bucket, its m ``tinyint``
+    subspace codes (32× smaller than float32, vs SQ8's 4×) and the
+    reconstruction norm; the shortlist ranks by approx cosine of the float
+    query against reconstructed candidates (rounded to 9 dp before the rank
+    cut, so fold noise never decides it), and only the shortlist gets the
+    exact decimal rerank.  ``bucket_col=None`` scores the whole corpus (the
+    pure-PQ measurement mode); give a bucket column to compose with IVF
+    pruning."""
     bucket = F.col(bucket_col) if bucket_col else F.lit(0)
-    return corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        bucket.alias("bucket"),
-        encode_pq(F.col(vec_col), codebooks, dim).alias("codes"),
-    ).withColumn(
-        "approx_norm",
-        F.sqrt(
-            F.aggregate(
-                decode_pq(F.col("codes"), codebooks),
-                F.lit(0.0),
-                lambda acc, x: acc + x * x,
-            )
-        ),
-    )
 
+    def recon(codes: str) -> Column:
+        return decode_pq(F.col(codes), codebooks)
 
-def knn_pq_serve(
-    index: DataFrame,
-    queries: DataFrame,
-    corpus_vectors: DataFrame,
-    k: int,
-    codebooks: list[list[list[float]]],
-    shortlist: int | None = None,
-    bucket_col: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Serve top-k from a PRE-BUILT (possibly storage-resident) PQ index —
-    the ADC shortlist touches only ``index`` (codes, no floats);
-    ``corpus_vectors`` is consulted only for the exact-rerank fetch.
-    Results are identical to :func:`knn_pq` over the same corpus (shared
-    `_asym_shortlist_rerank` tail; pinned by the parquet round-trip
-    test)."""
-    if shortlist is None:
-        shortlist = 4 * k
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm_exact_col(vec_col).alias("q_norm"),
-        (F.col(bucket_col) if bucket_col else F.lit(0)).alias("bucket"),
+    index = _codes_index(
+        corpus, bucket, encode_pq(F.col(vec_col), codebooks, dim), recon, id_col
     )
     return _asym_shortlist_rerank(
-        index, q, queries, corpus_vectors, k, shortlist,
-        recon=lambda codes: decode_pq(F.col(codes), codebooks),
-        id_col=id_col, vec_col=vec_col,
+        index, queries, corpus, k, shortlist, bucket, recon, id_col, vec_col
     )

@@ -119,7 +119,7 @@ def multimodal_embedding_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_parallel(spark, sf_dir)
     emb = extract_embedding_stub(attach_binary_payload(docs), dim=8)
     return emb.select(
-        "doc_id", F.round(norm_exact(F.col("embedding")), 6).alias("l2_norm")
+        "doc_id", F.round(norm_exact("embedding"), 6).alias("l2_norm")
     )
 
 

@@ -23,9 +23,9 @@ from ..operators.similarity import (
 )
 from . import register
 
-# DuckDB twin of operators.similarity.cosine: positional expansion over the
-# 64 dims; float32×float32 products are exact in double, DECIMAL(38,12) sums
-# are order-independent.
+# DuckDB twin of operators.similarity.dot_exact/norm_exact: positional
+# expansion over the 64 dims; float32×float32 products are exact in double,
+# DECIMAL(38,12) sums are order-independent.
 _COS_TERMS = """
         SELECT query_id, neighbor_id,
                CAST(SUM(CAST(CAST(qv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE) AS DECIMAL(38,12))) AS DOUBLE) AS dot,
@@ -294,7 +294,7 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried through aggregation with exact-sum norms."""
     emb = load_table(spark, sf_dir, "embeddings")
     return (
-        emb.select("label", norm_exact(F.col("embedding")).alias("nrm"))
+        emb.select("label", norm_exact("embedding").alias("nrm"))
         .groupBy("label")
         .agg(
             F.count("*").alias("n_vecs"),
@@ -523,13 +523,13 @@ def maxsim_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_vec"),
-        norm_exact(F.col("embedding")).alias("q_norm"),
+        norm_exact("embedding").alias("q_norm"),
     )
     c = emb.filter(F.col("vec_id") >= 5).select(
         F.col("vec_id").alias("neighbor_id"),
         (F.col("vec_id") / 25).cast("long").alias("group_id"),
         F.col("embedding").alias("c_vec"),
-        norm_exact(F.col("embedding")).alias("c_norm"),
+        norm_exact("embedding").alias("c_norm"),
     )
     from ..operators.similarity import dot_exact
 
@@ -537,7 +537,7 @@ def maxsim_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "group_id",
         F.round(
-            dot_exact(F.col("q_vec"), F.col("c_vec"))
+            dot_exact("q_vec", "c_vec")
             / (F.col("q_norm") * F.col("c_norm")),
             6,
         ).alias("cos_sim"),

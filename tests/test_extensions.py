@@ -90,9 +90,10 @@ def test_ivf_trained_perfect_recall_on_clustered_data(spark):
     route every query to the bucket holding its true neighbors: recall@3 =
     1.0 with nprobe=1.  (The sf corpus is near-isotropic, so this planted
     fixture is what proves the machinery; the sf numbers are measured in
-    test_ivf_recall_at_k_on_sf_corpus.)"""
+    test_ivf_recall_at_k_on_sf_corpus.)  A shortlist covering every
+    candidate makes knn_sq8 score the float IVF ranking exactly."""
     from etl_cloud_logistics_spark.operators.similarity import (
-        knn_ivf_trained,
+        knn_sq8,
         recall_at_k,
         train_ivf_centroids,
     )
@@ -111,7 +112,7 @@ def test_ivf_trained_perfect_recall_on_clustered_data(spark):
     assert len(cents) == 4 and len(cents[0]) == 16
     q = emb.filter(F.col("vec_id") % 10 == 0)  # 8 queries, 2 per cluster
     exact = knn_bruteforce(q, emb, k=3)
-    approx = knn_ivf_trained(q, emb, k=3, centroids=cents, nprobe=1)
+    approx = knn_sq8(q, emb, k=3, centroids=cents, nprobe=1, shortlist=10**6)
     per_q = recall_at_k(approx, exact)
     overall = per_q.agg(F.avg("recall").alias("r")).first()["r"]
     print(f"planted-cluster IVF recall@3 (nprobe=1): {overall:.3f}")
@@ -124,14 +125,12 @@ def test_ivf_recall_at_k_on_sf_corpus(spark, sf_med):
     an approximate index without a measured recall number isn't operable).
 
     Measured (deterministic: training uses decimal-exact sums and hash
-    seeding): trained IVF k=8 recall@3 ≈ 0.53/0.77/0.93 at nprobe=1/2/4;
-    the label-bucket variant ≈ 0.03 because the synthetic labels are
-    uncorrelated with embedding geometry (same-label mean cosine 0.013 vs
-    -0.003 cross-label) — documented in COVERAGE.md."""
+    seeding): trained IVF k=8 recall@3 ≈ 0.53/0.77/0.93 at nprobe=1/2/4 —
+    documented in COVERAGE.md.  The float IVF ranking is knn_sq8 with a
+    shortlist covering every candidate."""
     from etl_cloud_logistics_spark.catalog import load_table
     from etl_cloud_logistics_spark.operators.similarity import (
-        knn_ivf,
-        knn_ivf_trained,
+        knn_sq8,
         recall_at_k,
         train_ivf_centroids,
     )
@@ -144,12 +143,13 @@ def test_ivf_recall_at_k_on_sf_corpus(spark, sf_med):
     cents = train_ivf_centroids(emb, n_clusters=8, n_iter=3)
     got = {}
     for nprobe in (1, 2, 4):
-        approx = knn_ivf_trained(queries, emb, k=3, centroids=cents, nprobe=nprobe)
+        approx = knn_sq8(
+            queries, emb, k=3, centroids=cents, nprobe=nprobe, shortlist=10**6
+        )
         got[nprobe] = recall_at_k(approx, exact).agg(F.avg("recall")).first()[0]
-    label_recall = recall_at_k(knn_ivf(queries, emb, k=3), exact).agg(F.avg("recall")).first()[0]
     print(
         "sf0.01 recall@3 — trained IVF nprobe=1/2/4: "
-        f"{got[1]:.3f}/{got[2]:.3f}/{got[4]:.3f}; label-bucket: {label_recall:.3f}"
+        f"{got[1]:.3f}/{got[2]:.3f}/{got[4]:.3f}"
     )
     emb.unpersist()
     exact.unpersist()
@@ -159,8 +159,6 @@ def test_ivf_recall_at_k_on_sf_corpus(spark, sf_med):
     assert got[2] >= 0.6
     assert got[4] >= 0.85
     assert got[1] <= got[2] <= got[4]
-    # the trained quantizer must beat the geometry-blind label bucketing
-    assert got[1] > label_recall + 0.2
 
 
 def test_sq8_recall_at_k_on_sf_corpus(spark, sf_med):
@@ -173,38 +171,40 @@ def test_sq8_recall_at_k_on_sf_corpus(spark, sf_med):
       shortlist cut (no IVF routing loss mixed in);
     - trained IVF + SQ8 at nprobe=1/2/4 → the full serving path, to compare
       against the IVF-only 0.533/0.767/0.933 (equality means SQ8 adds ~0
-      incremental loss at 64-dim).  Figures recorded in COVERAGE.md."""
+      incremental loss at 64-dim).  Figures recorded in COVERAGE.md.
+
+    The label-bucket IVF (knn_ivf) reads ≈ 0.03 because the synthetic
+    labels are uncorrelated with embedding geometry (same-label mean cosine
+    0.013 vs -0.003 cross-label): the trained quantizer must beat it."""
     from etl_cloud_logistics_spark.catalog import load_table
     from etl_cloud_logistics_spark.operators.similarity import (
+        knn_ivf,
         knn_sq8,
         recall_at_k,
         train_ivf_centroids,
-        train_sq8_bounds,
     )
 
     emb = load_table(spark, sf_med, "embeddings").persist()
     queries = emb.filter(F.col("vec_id") < 10)
     exact = knn_bruteforce(queries, emb, k=3).persist()
     exact.count()
-    lo, hi = train_sq8_bounds(emb)
 
     one_bucket = emb.withColumn("b", F.lit(0))
     shortlist_only = knn_sq8(
-        one_bucket.filter(F.col("vec_id") < 10), one_bucket, k=3,
-        lo=lo, hi=hi, bucket_col="b",
+        one_bucket.filter(F.col("vec_id") < 10), one_bucket, k=3, bucket_col="b"
     )
     r_cut = recall_at_k(shortlist_only, exact).agg(F.avg("recall")).first()[0]
 
     cents = train_ivf_centroids(emb, n_clusters=8, n_iter=3)
     got = {}
     for nprobe in (1, 2, 4):
-        approx = knn_sq8(
-            queries, emb, k=3, lo=lo, hi=hi, centroids=cents, nprobe=nprobe
-        )
+        approx = knn_sq8(queries, emb, k=3, centroids=cents, nprobe=nprobe)
         got[nprobe] = recall_at_k(approx, exact).agg(F.avg("recall")).first()[0]
+    label_recall = recall_at_k(knn_ivf(queries, emb, k=3), exact).agg(F.avg("recall")).first()[0]
     print(
         f"sf0.01 SQ8 recall@3 (shortlist=4k) — quantized cut alone: {r_cut:.3f}; "
-        f"IVF+SQ8 nprobe=1/2/4: {got[1]:.3f}/{got[2]:.3f}/{got[4]:.3f}"
+        f"IVF+SQ8 nprobe=1/2/4: {got[1]:.3f}/{got[2]:.3f}/{got[4]:.3f}; "
+        f"label-bucket: {label_recall:.3f}"
     )
     emb.unpersist()
     exact.unpersist()
@@ -216,12 +216,15 @@ def test_sq8_recall_at_k_on_sf_corpus(spark, sf_med):
     assert got[2] >= 0.6
     assert got[4] >= 0.85
     assert got[1] <= got[2] <= got[4]
+    # the trained quantizer must beat the geometry-blind label bucketing
+    assert got[1] > label_recall + 0.2
 
 
 def test_sq8_codes_schema_and_roundtrip(spark):
     """SQ8 codes must be genuine array<tinyint> (the 4x footprint claim) and
     dequantization must reconstruct within step/2 per element; a constant
-    dimension reconstructs exactly."""
+    dimension reconstructs exactly.  Codes are floor((x - lo)/step + 0.5) -
+    128, hand-computed below (0.3 and -0.4 are their float32 values)."""
     from etl_cloud_logistics_spark.operators.similarity import (
         _sq8_steps,
         dequantize_sq8,
@@ -242,12 +245,18 @@ def test_sq8_codes_schema_and_roundtrip(spark):
     coded = emb.select(
         "vec_id",
         F.col("embedding").alias("orig"),
-        quantize_sq8(F.col("embedding"), lo, hi).alias("codes"),
+        quantize_sq8("embedding", lo, hi).alias("codes"),
     )
     assert dict(coded.dtypes)["codes"] == "array<tinyint>"
     out = coded.select(
-        "orig", "codes", dequantize_sq8(F.col("codes"), lo, hi).alias("xhat")
-    ).collect()
+        "vec_id", "orig", "codes", dequantize_sq8("codes", lo, hi).alias("xhat")
+    ).orderBy("vec_id").collect()
+    assert [list(r.codes) for r in out] == [
+        [-128, -128, -128],
+        [127, 127, -128],
+        [-64, 38, -128],  # 0.25*255 + 0.5 = 64.25; 1.3/(2/255) + 0.5 = 166.25
+        [63, -52, -128],  # 0.75*255 + 0.5 = 191.75; 0.6/(2/255) + 0.5 = 76.99..
+    ]
     for r in out:
         for x, c, xh, st in zip(r.orig, r.codes, r.xhat, steps):
             assert -128 <= c <= 127
@@ -280,30 +289,6 @@ def test_sq8_bounds_frame_matches_collected(spark):
     assert list(frame[0]["step_arr"]) == _sq8_steps(lo, hi)
 
 
-def test_knn_sq8_inplan_bounds_equals_list_api(spark):
-    """r12: knn_sq8 with lo/hi omitted (bounds derived in-plan) returns the
-    SAME rows as the explicit list API over the same corpus."""
-    from etl_cloud_logistics_spark.operators.similarity import (
-        knn_sq8,
-        train_sq8_bounds,
-    )
-
-    rows = [
-        (i, [float((i * 7 + d * 3) % 11) / 11.0 for d in range(4)], i % 2)
-        for i in range(20)
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    q = emb.filter(F.col("vec_id") < 4)
-    lo, hi = train_sq8_bounds(emb)
-    a = sorted(
-        map(tuple, knn_sq8(q, emb, 3, lo=lo, hi=hi, bucket_col="label").collect())
-    )
-    b = sorted(map(tuple, knn_sq8(q, emb, 3, bucket_col="label").collect()))
-    assert a == b and len(a) == 12
-
-
 def test_darray_sql_nonfinite_literals_parse_and_roundtrip(spark):
     """ADVICE r11: repr() of nan/inf renders unparseable ('nanD'); the
     fallback CAST forms must parse and round-trip the exact values."""
@@ -321,32 +306,30 @@ def test_darray_sql_nonfinite_literals_parse_and_roundtrip(spark):
 
 def test_one_parse_builders_escape_backticks(spark):
     """ADVICE r11: a column name containing a backtick must resolve in the
-    str overloads exactly as the Column API path does."""
+    one-parse builders as the top-level column it names (values checked
+    against hand-computed ones)."""
     from etl_cloud_logistics_spark.operators.similarity import (
         dequantize_sq8,
         dot_exact,
-        dot_exact_cols,
+        norm_exact,
         quantize_sq8,
     )
 
     df = spark.createDataFrame(
         [([0.5, 0.25], [0.125, 1.0])], ["we`ird", "plain"]
     )
-    via_str = df.select(dot_exact_cols("we`ird", "plain").alias("d")).first()["d"]
-    via_col = df.select(
-        dot_exact(F.col("`we``ird`"), F.col("plain")).alias("d")
-    ).first()["d"]
-    assert via_str == via_col
+    r = df.select(
+        dot_exact("we`ird", "plain").alias("d"), norm_exact("we`ird").alias("n")
+    ).first()
+    assert r["d"] == 0.3125  # 0.5*0.125 + 0.25*1.0
+    assert r["n"] == 0.3125 ** 0.5  # sqrt(0.5² + 0.25²)
     lo, hi = [0.0, 0.0], [1.0, 1.0]
-    codes_str = df.select(quantize_sq8("we`ird", lo, hi).alias("c")).first()["c"]
-    codes_col = df.select(
-        quantize_sq8(F.col("`we``ird`"), lo, hi).alias("c")
-    ).first()["c"]
-    assert list(codes_str) == list(codes_col)
+    codes = df.select(quantize_sq8("we`ird", lo, hi).alias("c")).first()["c"]
+    assert list(codes) == [0, -64]  # floor(x*255 + 0.5) - 128
     deq = df.select(
         quantize_sq8("we`ird", lo, hi).alias("we`ird2")
     ).select(dequantize_sq8("we`ird2", lo, hi).alias("x")).first()["x"]
-    assert len(deq) == 2
+    assert list(deq) == [128.0 * (1.0 / 255.0), 64.0 * (1.0 / 255.0)]
 
 
 def test_sq8_full_shortlist_equals_float_path(spark, sf_med):
@@ -355,18 +338,11 @@ def test_sq8_full_shortlist_equals_float_path(spark, sf_med):
     (same ids, bit-same rounded cosines).  Proves the rerank emits exact
     scores and quantization only ever gates shortlist membership."""
     from etl_cloud_logistics_spark.catalog import load_table
-    from etl_cloud_logistics_spark.operators.similarity import (
-        knn_ivf,
-        knn_sq8,
-        train_sq8_bounds,
-    )
+    from etl_cloud_logistics_spark.operators.similarity import knn_ivf, knn_sq8
 
     emb = load_table(spark, sf_med, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    lo, hi = train_sq8_bounds(emb)
-    sq8 = knn_sq8(
-        queries, emb, k=3, lo=lo, hi=hi, shortlist=10**6, bucket_col="label"
-    )
+    sq8 = knn_sq8(queries, emb, k=3, shortlist=10**6, bucket_col="label")
     flt = knn_ivf(queries, emb, k=3)
     assert sq8.exceptAll(flt).count() == 0 and flt.exceptAll(sq8).count() == 0
 
@@ -378,11 +354,9 @@ def test_sq8_recall_on_sf_corpus(spark, sf_med):
     over the float IVF path at the same nprobe — the loss budget is 0.05."""
     from etl_cloud_logistics_spark.catalog import load_table
     from etl_cloud_logistics_spark.operators.similarity import (
-        knn_ivf_trained,
         knn_sq8,
         recall_at_k,
         train_ivf_centroids,
-        train_sq8_bounds,
     )
 
     emb = load_table(spark, sf_med, "embeddings").persist()
@@ -390,12 +364,13 @@ def test_sq8_recall_on_sf_corpus(spark, sf_med):
     exact = knn_bruteforce(queries, emb, k=3).persist()
     exact.count()
     cents = train_ivf_centroids(emb, n_clusters=8, n_iter=3)
-    lo, hi = train_sq8_bounds(emb)
+    # a shortlist covering every candidate = the float IVF ranking
     r_float = recall_at_k(
-        knn_ivf_trained(queries, emb, k=3, centroids=cents, nprobe=2), exact
+        knn_sq8(queries, emb, k=3, centroids=cents, nprobe=2, shortlist=10**6),
+        exact,
     ).agg(F.avg("recall")).first()[0]
     r_sq8 = recall_at_k(
-        knn_sq8(queries, emb, k=3, lo=lo, hi=hi, centroids=cents, nprobe=2), exact
+        knn_sq8(queries, emb, k=3, centroids=cents, nprobe=2), exact
     ).agg(F.avg("recall")).first()[0]
     print(f"sf0.01 recall@3 nprobe=2 — float IVF: {r_float:.3f}; SQ8+rerank: {r_sq8:.3f}")
     emb.unpersist()
@@ -446,7 +421,7 @@ def test_cosine_neardup_symmetric_and_thresholded(spark):
         (3, [1.0, 0.0], 2),     # same dir as 0 but other bucket → never paired
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    out = cosine_neardup_pairs(emb, threshold=0.9).collect()
+    out = cosine_neardup_pairs(emb, threshold=0.9, dim=2).collect()
     pairs = {(r.vec_a, r.vec_b) for r in out}
     assert pairs == {(0, 1)}  # a<b ordering, bucket-pruned, thresholded
 
@@ -662,10 +637,12 @@ def test_minhash_lsh_recall_on_sf_corpus(spark, sf_med):
 
 
 def test_sq8_index_parquet_roundtrip_serves_identically(spark, sf_med, tmp_path):
-    """The index lifecycle a deployment runs: build_sq8_index once, persist
-    to parquet, serve from the STORED index — results must be identical to
-    the single-plan knn_sq8 over the same corpus, and the stored codes must
-    survive the round-trip as genuine array<tinyint> (the 4x footprint)."""
+    """The index lifecycle a deployment runs: collect the bounds, build_sq8_index
+    once, persist to parquet, serve from the STORED index — results must be
+    identical to the single-plan knn_sq8 (bounds derived in-plan) over the
+    same corpus, for trained centroids and for a precomputed bucket column
+    alike, and the stored codes must survive the round-trip as genuine
+    array<tinyint> (the 4x footprint)."""
     from etl_cloud_logistics_spark.catalog import load_table
     from etl_cloud_logistics_spark.operators.similarity import (
         build_sq8_index,
@@ -680,18 +657,22 @@ def test_sq8_index_parquet_roundtrip_serves_identically(spark, sf_med, tmp_path)
     lo, hi = train_sq8_bounds(emb)
     cents = train_ivf_centroids(emb, n_clusters=8, n_iter=3)
 
-    path = str(tmp_path / "sq8_index")
-    build_sq8_index(emb, lo, hi, centroids=cents).write.parquet(path)
-    stored = spark.read.parquet(path)
-    assert dict(stored.dtypes)["codes"] == "array<tinyint>"
+    for name, buckets in (
+        ("centroids", {"centroids": cents}),
+        ("label", {"bucket_col": "label"}),
+    ):
+        path = str(tmp_path / f"sq8_index_{name}")
+        build_sq8_index(emb, lo, hi, **buckets).write.parquet(path)
+        stored = spark.read.parquet(path)
+        assert dict(stored.dtypes)["codes"] == "array<tinyint>"
 
-    direct = knn_sq8(queries, emb, k=3, lo=lo, hi=hi, centroids=cents, nprobe=2)
-    served = knn_sq8_serve(
-        stored, queries, emb, k=3, lo=lo, hi=hi, centroids=cents, nprobe=2
-    )
-    a = sorted(tuple(r) for r in direct.collect())
-    b = sorted(tuple(r) for r in served.collect())
-    assert a == b and len(a) == 30
+        direct = knn_sq8(queries, emb, k=3, nprobe=2, **buckets)
+        served = knn_sq8_serve(
+            stored, queries, emb, k=3, lo=lo, hi=hi, nprobe=2, **buckets
+        )
+        a = sorted(tuple(r) for r in direct.collect())
+        b = sorted(tuple(r) for r in served.collect())
+        assert a == b and len(a) == 30, name
 
 
 def test_minhash_hot_shingle_cap_controls_boilerplate(spark):
@@ -1329,8 +1310,8 @@ def test_ann_recall_table_on_clustered_corpus(spark, clustered_corpus):
     nprobe — and pure PQ (32× compression) must hold a usable shortlist
     recall on the same geometry."""
     from etl_cloud_logistics_spark.operators.similarity import (
-        knn_ivf_trained,
         knn_pq,
+        knn_sq8,
         recall_at_k,
         train_ivf_centroids,
         train_pq_codebooks,
@@ -1344,7 +1325,10 @@ def test_ann_recall_table_on_clustered_corpus(spark, clustered_corpus):
     cents = train_ivf_centroids(emb, n_clusters=16, n_iter=4)
     ivf = {}
     for nprobe in (1, 2, 4):
-        approx = knn_ivf_trained(queries, emb, k=5, centroids=cents, nprobe=nprobe)
+        # a shortlist covering every candidate = the float IVF ranking
+        approx = knn_sq8(
+            queries, emb, k=5, centroids=cents, nprobe=nprobe, shortlist=10**6
+        )
         ivf[nprobe] = recall_at_k(approx, exact).agg(F.avg("recall")).first()[0]
 
     books = train_pq_codebooks(emb, m=8, k=16, n_iter=3, dim=64)
@@ -1440,35 +1424,6 @@ def test_remove_duplicated_spans_excises_planted_boilerplate(spark, tmp_path):
     assert out[2]["clean_text"] == "one two three four five six"
     assert out[3]["n_removed"] == 0
     assert out[3]["clean_text"] == docs[2][1]
-
-
-def test_pq_index_parquet_roundtrip_serves_identically(spark, sf_med, tmp_path):
-    """PQ's index lifecycle, mirroring the SQ8 one: build_pq_index once,
-    persist to parquet, serve from the STORED index — identical results to
-    the single-plan knn_pq, codes surviving as genuine array<tinyint>
-    (the 32x footprint claim)."""
-    from etl_cloud_logistics_spark.catalog import load_table
-    from etl_cloud_logistics_spark.operators.similarity import (
-        build_pq_index,
-        knn_pq,
-        knn_pq_serve,
-        train_pq_codebooks,
-    )
-
-    emb = load_table(spark, sf_med, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    books = train_pq_codebooks(emb, m=8, k=16, n_iter=2)
-
-    path = str(tmp_path / "pq_index")
-    build_pq_index(emb, books).write.parquet(path)
-    stored = spark.read.parquet(path)
-    assert dict(stored.dtypes)["codes"] == "array<tinyint>"
-
-    direct = knn_pq(queries, emb, k=3, codebooks=books, shortlist=50)
-    served = knn_pq_serve(stored, queries, emb, k=3, codebooks=books, shortlist=50)
-    a = sorted(tuple(r) for r in direct.collect())
-    b = sorted(tuple(r) for r in served.collect())
-    assert a == b and len(a) == 30
 
 
 def test_kmv_sketch_accuracy_exhaustive_branch_and_union_merge(spark):

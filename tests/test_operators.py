@@ -19,7 +19,7 @@ from etl_cloud_logistics_spark.operators.dims import (
     generate_dim_date,
     generate_dim_time,
 )
-from etl_cloud_logistics_spark.operators.quality import flag_outliers, qa_flags
+from etl_cloud_logistics_spark.operators.quality import flag_outliers, qa_flags, zscore_stats
 from etl_cloud_logistics_spark.operators.scd2 import scd2_apply
 
 
@@ -196,6 +196,18 @@ def test_zscore_flags_extremes(spark):
     out = flag_outliers(df, "x")
     assert out.filter("is_outlier").count() == 1
     assert out.filter("is_outlier").first().x == 10_000.0
+
+
+def test_zscore_no_spread_flags_nothing(spark):
+    """One row, or all-equal values, have no sample stddev: std is NULL
+    (n < 2) or 0, and flag_outliers must give a NULL zscore and no outlier
+    instead of dividing by zero."""
+    for data in ([(5.0,)], [(7.0,), (7.0,)]):
+        df = spark.createDataFrame(data, "x double")
+        out = flag_outliers(df, "x").collect()
+        assert len(out) == len(data)
+        assert all(r.zscore is None and r.is_outlier is False for r in out)
+    assert zscore_stats(spark.createDataFrame([(5.0,)], "x double"), "x").first().std is None
 
 
 def test_dim_generators(spark):

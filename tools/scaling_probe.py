@@ -39,9 +39,9 @@ Usage: python tools/scaling_probe.py [K ...]            (default 1 5 10)
        python tools/scaling_probe.py --skewjoin [R ...] (hot-key join at
            R fact rows, 30% on one key: AQE skew split vs disabled vs
            manual targeted salting, equal-output checksums; default 16e6)
-       python tools/scaling_probe.py --ann [K ...]      (IVF train + serve
-           + recall-vs-brute at K× shifted embedding replicas; default
-           1 8 32)
+       python tools/scaling_probe.py --ann [K ...]      (IVF train + SQ8
+           index build once + serve at nprobe 2/4 + recall-vs-brute at
+           K× shifted embedding replicas; default 1 8 32)
        python tools/scaling_probe.py --text [K ...]     (BM25 top-15 at K×
            corpus with a constant matched-posting set; default 1 5 10)
        python tools/scaling_probe.py --etl [N ...]      (SCD2 dim churn +
@@ -970,19 +970,20 @@ def winnow_probe(ks: list[int]) -> None:
 
 
 def ann_probe(ks: list[int]) -> None:
-    """End-to-end ANN scaling: train the IVF coarse quantizer, serve a
-    fixed 20-query top-10 batch, and measure recall against brute force at
-    K× shifted replicas of the embeddings corpus.  The evidence sought for
-    100 TB: train cost grows ~linearly (Lloyd passes are narrow
-    projections + one hash-agg each), serve stays an equi-join on the
-    bucket id (shuffle ~O(N·nprobe/n_clusters), never O(Q·N) — the brute
-    column IS the O(Q·N) baseline growing linearly with the corpus), and
-    recall holds as the corpus and cluster count scale together
-    (n_clusters ~ sqrt(N), the FAISS rule of thumb)."""
+    """End-to-end ANN scaling over the index lifecycle: train the IVF
+    coarse quantizer, build + persist the SQ8 index ONCE per scale, then
+    serve a fixed 20-query top-10 batch from it at nprobe 2 and 4 and
+    measure recall against brute force at K× shifted replicas of the
+    embeddings corpus.  The evidence sought for 100 TB: train cost grows
+    ~linearly (Lloyd passes are narrow projections + one hash-agg each),
+    serve stays an equi-join on the stored bucket id (shuffle
+    ~O(N·nprobe/n_clusters), never O(Q·N) — the brute column IS the
+    O(Q·N) baseline growing linearly with the corpus), and recall holds
+    as the corpus and cluster count scale together (n_clusters ~ sqrt(N),
+    the FAISS rule of thumb)."""
     from etl_cloud_logistics_spark.operators.similarity import (
         build_sq8_index,
         knn_bruteforce,
-        knn_ivf_trained,
         knn_sq8_serve,
         recall_at_k,
         train_ivf_centroids,
@@ -998,21 +999,22 @@ def ann_probe(ks: list[int]) -> None:
     # warm-up: compile every plan shape once at the smallest scale
     warm = replicated_embeddings(spark, 1)
     cents0 = train_ivf_centroids(warm, n_clusters=16, n_iter=1)
-    knn_ivf_trained(queries, warm, 10, cents0, nprobe=2).write.mode(
-        "overwrite"
-    ).format("noop").save()
+    lo0, hi0 = train_sq8_bounds(warm)
+    knn_sq8_serve(
+        build_sq8_index(warm, lo0, hi0, centroids=cents0),
+        queries, warm, 10, lo0, hi0, centroids=cents0, nprobe=2,
+    ).write.mode("overwrite").format("noop").save()
     print(
         f"ANN probe over {SF_DIR}: IVF train(5 Lloyd iters, "
-        f"n_clusters~sqrt(N)) + 20-query top-10 serve vs brute; the "
-        f"shifted replicas are near-uniform (ANN's hardest case — no "
-        f"cluster structure), so recall here is the FLOOR the nprobe "
-        f"knob buys back"
+        f"n_clusters~sqrt(N)) + SQ8 index build once + 20-query top-10 "
+        f"serve from it vs brute; the shifted replicas are near-uniform "
+        f"(ANN's hardest case — no cluster structure), so recall here is "
+        f"the FLOOR the nprobe knob buys back"
     )
     print(
         f"{'K':>3} {'vecs':>7} {'n_cl':>5} {'train_sec':>9} "
-        f"{'serve2_sec':>10} {'recall@2':>8} {'serve4_sec':>10} "
-        f"{'recall@4':>8} {'idx_sec':>8} {'idxserve_sec':>12} "
-        f"{'recall@idx':>10} {'brute_sec':>9}"
+        f"{'idx_sec':>8} {'serve2_sec':>10} {'recall@2':>8} "
+        f"{'serve4_sec':>10} {'recall@4':>8} {'brute_sec':>9}"
     )
     for k in ks:
         corpus = replicated_embeddings(spark, k).persist()
@@ -1021,52 +1023,39 @@ def ann_probe(ks: list[int]) -> None:
         t0 = time.perf_counter()
         cents = train_ivf_centroids(corpus, n_clusters=n_clusters, n_iter=5)
         train_sec = time.perf_counter() - t0
-        # persist: exact feeds three recall_at_k joins below — unpersisted,
+        # persist: exact feeds two recall_at_k joins below — unpersisted,
         # each would re-run the full O(Q·N) cross-score (timed write first,
         # so brute_sec reports the real cost, not a cache read)
         exact = knn_bruteforce(queries, corpus, 10).persist()
         t0 = time.perf_counter()
         exact.write.mode("overwrite").format("noop").save()
         brute_sec = time.perf_counter() - t0
-        cols = []
-        for nprobe in (2, 4):
-            approx = knn_ivf_trained(queries, corpus, 10, cents, nprobe=nprobe)
-            t0 = time.perf_counter()
-            approx.write.mode("overwrite").format("noop").save()
-            serve_sec = time.perf_counter() - t0
-            rec = (
-                recall_at_k(approx, exact)
-                .agg(F.avg("recall").alias("r"))
-                .collect()[0]["r"]
-            )
-            cols.append((serve_sec, rec))
-        # the PRODUCTION serve path: persist the bucket+codes index ONCE
-        # (idx_sec — INCLUDING the SQ8 bounds pass, which is part of the
-        # build, so the build-vs-serve crossover is stated honestly), then
-        # serve from it — the inline-assign O(N·n_cl) term the plain
-        # knn_ivf_trained column pays per call is amortized away
+        # persist the bucket+codes index ONCE (idx_sec — INCLUDING the SQ8
+        # bounds pass, which is part of the build, so the build-vs-serve
+        # crossover is stated honestly), then serve every nprobe from it
         t0 = time.perf_counter()
         lo, hi = train_sq8_bounds(corpus)
         index = build_sq8_index(corpus, lo, hi, centroids=cents).persist()
         index.count()
         idx_sec = time.perf_counter() - t0
-        idx_served = knn_sq8_serve(
-            index, queries, corpus, 10, lo, hi, centroids=cents, nprobe=4
-        )
-        t0 = time.perf_counter()
-        idx_served.write.mode("overwrite").format("noop").save()
-        idxserve_sec = time.perf_counter() - t0
-        idx_rec = (
-            recall_at_k(idx_served, exact)
-            .agg(F.avg("recall").alias("r"))
-            .collect()[0]["r"]
-        )
+        cols = []
+        for nprobe in (2, 4):
+            served = knn_sq8_serve(
+                index, queries, corpus, 10, lo, hi, centroids=cents, nprobe=nprobe
+            )
+            t0 = time.perf_counter()
+            served.write.mode("overwrite").format("noop").save()
+            serve_sec = time.perf_counter() - t0
+            rec = (
+                recall_at_k(served, exact)
+                .agg(F.avg("recall").alias("r"))
+                .collect()[0]["r"]
+            )
+            cols.append((serve_sec, rec))
         print(
-            f"{k:>3} {n:>7} {n_clusters:>5} {train_sec:>9.2f} "
+            f"{k:>3} {n:>7} {n_clusters:>5} {train_sec:>9.2f} {idx_sec:>8.2f} "
             f"{cols[0][0]:>10.2f} {cols[0][1]:>8.3f} "
-            f"{cols[1][0]:>10.2f} {cols[1][1]:>8.3f} "
-            f"{idx_sec:>8.2f} {idxserve_sec:>12.2f} {idx_rec:>10.3f} "
-            f"{brute_sec:>9.2f}"
+            f"{cols[1][0]:>10.2f} {cols[1][1]:>8.3f} {brute_sec:>9.2f}"
         )
         index.unpersist()
         exact.unpersist()
