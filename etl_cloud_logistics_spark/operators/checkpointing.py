@@ -18,8 +18,12 @@ and planning cost explodes.  Two mechanisms, selected by
   calls) never clobbers the parquet backing a still-live lazy result.
 
 Extracted (r7) from ``neardup_components``' inline implementation so the
-graph family (``pagerank_fixed``/``pagerank``/``bfs_min_hops``) offers the
-same cluster-safe mode instead of being localCheckpoint-only.
+graph family (``pagerank_fixed``/``bfs_min_hops``/``sssp_fixed``) offers
+the same cluster-safe mode instead of being localCheckpoint-only.
+
+This module is also the one place that knows the graph family's PIN
+POLICY: which loop static is re-keyed by its join key, past which size,
+in which mode (``PIN_MIN_ROWS``, applied by ``RoundCheckpointer.static``).
 """
 
 from __future__ import annotations
@@ -31,6 +35,28 @@ import uuid
 import warnings
 
 from pyspark.sql import DataFrame
+
+# Pin gates: (operator = RoundCheckpointer prefix, static name, mode) ->
+# the row count past which ``static(..., pin_key=...)`` re-keys that static
+# by its join key.  The unit is what the loop already counts: NODES for
+# pagerank_fixed (n), EDGES for bfs_min_hops/sssp_fixed (the persisted or
+# read-back edge static).  A (factor, key) entry is TIED to another entry
+# rather than independently settable.  No entry for a (static, mode): never
+# pinned there.  The doctrine behind every value is on ``static``.
+PIN_MIN_ROWS: dict[tuple[str, str, str], int | tuple[int, tuple[str, str, str]]] = {
+    # +20% pinned on the registry graph, 587 MB/round un-pinned at 1e7 (GRAPH_PROBE_r08.txt)
+    ("pagerank-fixed", "edges-od", "local"): 50_000,
+    # pin rejected at 1e6 nodes; 1410 -> 1122 MB/round at 3e6 nodes (GRAPH_PROBE_r08.txt)
+    ("pagerank-fixed", "edges-od", "reliable"): 2_000_000,
+    # +48/52% at 1e5/3e5 nodes, -6% at 5e5/1e6 nodes (OPT_ATTR_r12.txt addendum 2)
+    ("pagerank-fixed", "nodes", "local"): 500_000,
+    # 10 edges/node x the PageRank gate; 1.8 GB BFS shuffle at 1e7 (GRAPH_PROBE_r08.txt)
+    ("bfs-visited", "edges", "local"): (10, ("pagerank-fixed", "edges-od", "local")),
+    # same tie; also selects the merge carry, -4% at 1e7 (OPT_ATTR_r12.txt addendum 1)
+    ("sssp-fixed", "edges", "local"): (10, ("pagerank-fixed", "edges-od", "local")),
+    # +26/28% at 1e7/1e8 edges, -48% at 2e8/3e8 edges (OPT_ATTR_r12.txt addendum 3)
+    ("sssp-fixed", "edges", "reliable"): 200_000_000,
+}
 
 # Observability for _reset_plan_stats' best-effort fallback (r11, VERDICT r10
 # "what's wrong" #1): if the JVM seam the reset depends on ever disappears
@@ -121,7 +147,7 @@ def _reset_plan_stats(df: DataFrame) -> DataFrame:
 class RoundCheckpointer:
     """Callable that truncates a DataFrame's lineage once per round.
 
-    ``chk = RoundCheckpointer(checkpoint_dir, prefix="pagerank")`` then
+    ``chk = RoundCheckpointer(checkpoint_dir, prefix="pagerank-fixed")`` then
     ``frame = chk(frame)`` inside the loop; call
     ``chk.cleanup_stale(returning=frame)`` after the loop to drop the
     slots that only backed intermediate rounds (the final result's slot is
@@ -131,6 +157,7 @@ class RoundCheckpointer:
 
     def __init__(self, checkpoint_dir: str | None = None, prefix: str = "rounds"):
         self.calls = 0
+        self.prefix = prefix
         self._static_names: list[str] = []
         self._persisted_statics: list[DataFrame] = []
         self.run_dir = (
@@ -168,6 +195,7 @@ class RoundCheckpointer:
         df: DataFrame,
         name: str,
         pin_key: str | None = None,
+        rows: int | None = None,
         lazy: bool = False,
     ) -> DataFrame:
         """Materialize a LOOP-INVARIANT frame (edge lists, out-degrees):
@@ -175,88 +203,99 @@ class RoundCheckpointer:
         every round reads it, so in reliable mode it must survive executor
         loss exactly like the per-round labels do.
 
-        ``pin_key`` (r8, power-law probe finding) pins the static's
-        partitioning to the given join key so every round's join against
-        it is exchange-free on the static side:
+        ``pin_key`` names the static's per-round join key.  The static is
+        PINNED by it — hash-partitioned on the key and persisted, so every
+        round's join against it is exchange-free on the static side — once
+        ``rows`` reaches this operator's gate for the mode in
+        ``PIN_MIN_ROWS``.  ``rows`` is the count the loop already holds;
+        when omitted, the static's own rows are counted where the mode
+        materializes them anyway (local: one persist + count that also
+        feeds the static; reliable: the parquet read-back), and only when
+        the table has a gate to answer.  Calling ``static`` again on a
+        frame it returned is the post-hoc form (the gate's count only
+        exists once that static has materialized): nothing is re-written,
+        only the gated pin applies.  A pinned static comes back cached
+        (``df.is_cached``); one the gate left unpinned does not, unless
+        ``lazy``.
 
-        - local mode: ``repartition(pin_key)`` + eager ``persist`` — the
+        The gate doctrine, measured rather than assumed (the records are
+        cited on each table entry):
+
+        - below the gate the pin is a pure tax: broadcast joins are free on
+          floor-sized graphs, and the pinned columnar cache round-trip plus
+          the shuffle join it forces cost +15-20% per invocation on the
+          registry graph; above it the un-pinned join re-exchanges the
+          O(|E|) static every round (587 MB/round at 1e7 edges);
+        - local mode pins the frame INSTEAD of localCheckpointing it — the
           cached PLAN keeps its Catalyst ``outputPartitioning``, which
-          ``localCheckpoint`` (an RDD scan) DROPS; the unpinned form
-          re-shuffled the O(|E|) edge list every PageRank/BFS round
-          (measured 587 MB/round at 1e7 edges).
-        - reliable mode: the frame is always written to parquet (the
-          durable record); with ``pin_key`` the read-back is additionally
-          re-keyed once and persisted, so rounds reuse the cached
-          partitioning and a lost executor recomputes lost blocks from
-          the parquet.  Callers must gate this on a HIGHER threshold than
-          local mode — measured, not assumed: the parquet read-back
-          carries accurate size statistics, so while the other
-          (ranks/frontier) side fits AQE's broadcast threshold the edge
-          static never re-exchanges anyway (265 MB/round PageRank at 1e7
-          edges / 1e6 nodes) and the pin only ADDS its re-key cost
-          (+118 MB/round, measured and rejected at that scale); once the
-          other side outgrows broadcastability the un-pinned join
-          re-exchanges O(|E|) per round (1410 MB/round at 3e7 edges /
-          3e6 nodes) and the pin is what removes it.
+          ``localCheckpoint`` (an RDD scan) drops;
+        - reliable mode gates higher: the parquet read-back carries
+          accurate size statistics, so while the other (ranks/frontier/
+          distance) side fits AQE's broadcast threshold the static never
+          re-exchanges and the pin only adds its re-key cost.  The parquet
+          slot stays the durable record and the pin is a cache layered
+          over it, so a lost executor recomputes pinned blocks from the
+          file;
+        - a post-hoc pin layers over an already-checkpointed frame the same
+          way; its one-off re-key job is noise in the regimes it is gated
+          to.
 
-        Pinning is opt-in because the columnar cache round-trip costs
-        measurably more per round than an RDD scan on floor-sized graphs
-        (+15% per invocation on the registry graph) — callers gate it on
-        size per mode.  Pinned blocks are unpersisted by
-        ``cleanup_stale``/``cleanup_all``.
+        Pinned blocks are unpersisted by ``cleanup_stale``/``cleanup_all``.
 
         ``lazy`` (r11 optimization round — guide §2.4, remove jobs
-        outright): in LOCAL mode with no ``pin_key``, ``persist()`` the
-        frame instead of eagerly localCheckpointing it, so its
-        materialization folds into the first action that already has to
-        read it (a count, round 1 of the loop) instead of being its own
-        scheduled job.  On floor-sized graphs the per-JOB floor, not data,
-        dominates iterative walls (13 SQL executions measured on the
-        registry PageRank row), so every folded job is wall time off; the
-        cached blocks serve every later round exactly like the checkpoint
-        blocks did, and the cache entry is released by
-        ``cleanup_stale``/``cleanup_all`` as with pinned statics.  Ignored
-        in RELIABLE mode (the eager parquet write IS the durability
-        contract) and with ``pin_key`` (the pin's repartition+count is the
-        measured big-graph path, where one extra job is noise)."""
-        if self.run_dir is None:
-            if pin_key is not None:
-                out = df.repartition(pin_key).persist()
-                out.count()  # eager, like the checkpoint path
-                self._persisted_statics.append(out)
+        outright): in LOCAL mode, an un-pinned static is ``persist()``-ed
+        instead of eagerly localCheckpointed, so its materialization folds
+        into the first action that already has to read it (a count, round
+        1 of the loop) instead of being its own scheduled job.  On
+        floor-sized graphs the per-JOB floor, not data, dominates iterative
+        walls, so every folded job is wall time off; the cache entry is
+        released by ``cleanup_stale``/``cleanup_all`` as with pinned
+        statics.  Ignored in RELIABLE mode (the eager parquet write IS the
+        durability contract)."""
+        gate = None if pin_key is None else self._pin_gate(name)
+        if getattr(df, "_rc_slot_kind", None) == "static":
+            out = df
+        elif self.run_dir is None:
+            pre = None
+            if gate is not None and rows is None:
+                pre = df = df.persist()
+                rows = df.count()
+            if gate is not None and rows >= gate:
+                out = self._pin(df, pin_key)
             elif lazy:
                 out = df.persist()
                 self._persisted_statics.append(out)
             else:
                 out = df.localCheckpoint(eager=True)
+            if pre is not None:
+                pre.unpersist()
             out._rc_slot_kind = "static"
             return out
-        path = os.path.join(self.run_dir, f"static-{name}")
-        self._static_names.append(name)
-        df.write.mode("overwrite").parquet(path)
-        out = df.sparkSession.read.parquet(path)
-        if pin_key is not None:
-            out = out.repartition(pin_key).persist()
-            out.count()
-            self._persisted_statics.append(out)
+        else:
+            path = os.path.join(self.run_dir, f"static-{name}")
+            self._static_names.append(name)
+            df.write.mode("overwrite").parquet(path)
+            out = df.sparkSession.read.parquet(path)
+        if gate is not None:
+            if rows is None:
+                rows = out.count()
+            if rows >= gate:
+                out = self._pin(out, pin_key)
         out._rc_slot_kind = "static"
         return out
 
-    def repin(self, df: DataFrame, pin_key: str) -> DataFrame:
-        """Re-key an ALREADY-MATERIALIZED static (or checkpointed frame)
-        to a join-key partitioning and register the cache for cleanup —
-        the post-hoc form of ``static(pin_key=...)`` for callers whose
-        gate signal (a count) only exists after the frame materializes
-        (r12: pagerank_fixed's nodes pin past NODES_PIN_MIN_NODES;
-        sssp_fixed's reliable edge pin past its broadcast-flip gate).
-        The input must already be durable/recomputable on its own (a
-        checkpointed frame or a parquet static read-back) — the pinned
-        cache is a layer over it, exactly like ``static``'s pin tail, and
-        a lost block recomputes from the underlying frame."""
+    def _pin_gate(self, name: str) -> int | None:
+        mode = "local" if self.run_dir is None else "reliable"
+        gate = PIN_MIN_ROWS.get((self.prefix, name, mode))
+        if isinstance(gate, tuple):
+            factor, key = gate
+            gate = factor * PIN_MIN_ROWS[key]
+        return gate
+
+    def _pin(self, df: DataFrame, pin_key: str) -> DataFrame:
         out = df.repartition(pin_key).persist()
-        out.count()
+        out.count()  # eager, like the checkpoint path
         self._persisted_statics.append(out)
-        out._rc_slot_kind = "static"
         return out
 
     def cleanup_stale(self, returning: DataFrame | None = None) -> None:

@@ -1,5 +1,5 @@
-"""Iterative graph analytics over an edge list: PageRank (float and
-bit-exact fixed-point), frontier BFS, and the O(log n)-round alternating
+"""Iterative graph analytics over an edge list: bit-exact fixed-point
+PageRank, frontier BFS, and the O(log n)-round alternating
 large-star/small-star connected components (the high-diameter complement
 to operators/dedup.py's label-propagation canonicalizer) — rank the
 co-purchase graph's influential parts, the near-dup graph's hub documents,
@@ -11,17 +11,17 @@ Same iterative discipline as ``neardup_components``:
   re-keyed to dst) plus one aggregation — no collect of graph data;
 - lineage truncates every round (eager ``localCheckpoint``), keeping the
   plan one-iteration deep instead of nesting every prior round;
-- convergence is measured distributed (L1 delta as a decimal-exact sum)
-  and iteration stops at ``tol`` or ``max_iter``, whichever first.
+- loop statics that every round joins against are pinned by their join
+  key once the graph is big enough — a policy ``RoundCheckpointer`` owns
+  (``operators.checkpointing.PIN_MIN_ROWS``), not the loops.
 
-Semantics (Page et al. 1999, power iteration on the Google matrix):
-``rank = (1-d)/N + d · (Σ_in rank/out_deg + dangling_mass/N)`` — dangling
-nodes (no out-edges) redistribute their mass uniformly, so total rank is
-invariant at 1.0 every round (pytest-pinned to 1e-9; the per-round
-dangling mass is one broadcast scalar).  Ranks are float: contribution
-sums are order-dependent in the last bits, so the registry row is
-rows-only and the differential test compares against driver-side numpy
-power iteration at 1e-8, not bit-exact — stated rather than papered over.
+PageRank semantics (Page et al. 1999, power iteration on the Google
+matrix): ``rank = (1-d)/N + d · (Σ_in rank/out_deg + dangling_mass/N)`` —
+dangling nodes (no out-edges) redistribute their mass uniformly, so total
+rank stays 1.0 every round (up to the fixed-point floor; the per-round
+dangling mass is one broadcast scalar).  ``pagerank_fixed`` runs it in
+scaled integers, so the result is bit-exact and the differential test
+compares it against driver-side numpy power iteration.
 """
 
 from __future__ import annotations
@@ -35,52 +35,6 @@ from pyspark.sql import types as T
 from .checkpointing import RoundCheckpointer
 
 PR_SCALE = 10**15  # fixed-point unit for pagerank_fixed (1.0 == 10^15)
-
-# Pin the static edge list's partitioning to the per-round join key only
-# past this node count (r8): below it, broadcast joins are free and the
-# pinned 32-partition shuffle join is a pure scheduling tax (+20% measured
-# on the registry graph); above it, the pin is what keeps per-round
-# shuffle at O(|V|) instead of re-exchanging O(|E|) every round.
-PIN_PARTITIONING_MIN_NODES = 50_000
-# Reliable mode's threshold is higher: the parquet statics carry size
-# statistics, so AQE broadcasts the ranks side for free until it outgrows
-# the broadcast threshold (~a few million nodes) — pinning earlier only
-# adds re-key cost (measured at 1e6 nodes), pinning past it removes an
-# O(|E|)-per-round re-exchange (measured at 3e6 nodes: 1410 MB/round
-# un-pinned).  Sized to the default 10 MB autoBroadcastJoinThreshold over
-# ~16-byte (node, rank) rows with margin.
-PIN_PARTITIONING_MIN_NODES_RELIABLE = 2_000_000
-# Pin sssp_fixed's RELIABLE-mode edge static by its join key only past
-# this edge count (r12 resumed session): below it the per-round parquet
-# slots' accurate statistics keep the DISTANCE side broadcast and the
-# pin is measured harmful (+26/+28% per-invocation shuffle at 1e7/1e8
-# Zipf edges — the re-key plus forced shuffle joins where broadcast was
-# free); past the flip the un-pinned relaxation join re-exchanges
-# O(|E|) EVERY round (measured 15.9 GB vs 8.2 GB pinned at 2e8 edges,
-# 23.4 vs 12.1 GB at 3e8 — −48% shuffle, −30/−40% wall, bit-equal;
-# OPT_ATTR_r12.txt addendum 3).  The flip sits between the measured
-# 99.6M-edge (harmful) and 199.3M-edge (winning) tiers under the
-# engine's 64 MB broadcast threshold; the 2e8 constant is CONSERVATIVE —
-# every gated size lies at or inside the measured-good 199.3M-299M
-# bracket (or past it, where the O(|E|)-per-round blowup only grows),
-# and the 199.3M probe tier itself deliberately sits just below the
-# gate rather than overfitting the constant to one generator's edge
-# count.  Edge count is the signal,
-# like the local-mode gates — on much denser graphs (|V| ≪ |E|/10) the
-# distance side stays broadcastable longer and the pin fires early; the
-# same accepted power-law-shaped exposure as the local n_e gates.
-SSSP_RELIABLE_PIN_MIN_EDGES = 200_000_000
-# Pin pagerank_fixed's NODES static by its per-round join key only past
-# this node count (r12 resumed session, local mode): the per-round
-# nodes⋈contribs LEFT join writes the whole node list to its exchange
-# every round once the planner stops keeping that join exchange-light —
-# measured flipping between ~3e5 and ~5e5 nodes on Zipf graphs (+48/52%
-# per-invocation shuffle from pinning at 1e5/3e5 nodes; −6% at 5e5 and
-# 1e6 nodes, wall −10/−25% at 1e6 nodes, results bit-equal —
-# OPT_ATTR_r12.txt addendum 2).  10× the edge-pin gate, and every shipped
-# size is measured-good; the one-off repin job is noise in this regime
-# (the pin-path doctrine in RoundCheckpointer.static).
-NODES_PIN_MIN_NODES = 500_000
 
 
 def bfs_min_hops(
@@ -118,26 +72,10 @@ def bfs_min_hops(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
     # distinct() leaves the edge list partitioned by (src, dst); on big
-    # graphs re-key it by the per-level join key so the pinned static
-    # makes every level's join exchange-free on the edge side (r8 probe
-    # finding — 1.8 GB of BFS shuffle at 1e7 edges, mostly the edge side;
-    # gated like pagerank so floor-sized graphs keep broadcast joins, and
-    # local-mode-only: the reliable slot's parquet statistics already let
-    # AQE broadcast the frontier side, so the pin would only add cost
-    # there — see RoundCheckpointer.static).  The gate's edge count is
-    # folded into the materialization (r8 verdict nit: a dedicated
-    # e.count() was an extra O(|E|) scan per invocation): persist once,
-    # count — which both materializes the cache and answers the gate —
-    # then build the static FROM the cache, so no job scans the source a
-    # second time just to decide the pin.
-    if chk_v.run_dir is None:
-        pre = edges_frame.persist()
-        n_e = pre.count()
-        pin = "src" if n_e >= 10 * PIN_PARTITIONING_MIN_NODES else None
-        e = chk_v.static(pre, "edges", pin_key=pin)
-        pre.unpersist()
-    else:
-        e = chk_v.static(edges_frame, "edges")
+    # graphs the checkpointer re-keys it by the per-level join key so every
+    # level's join is exchange-free on the edge side (r8 probe finding —
+    # 1.8 GB of BFS shuffle at 1e7 edges, mostly the edge side)
+    e = chk_v.static(edges_frame, "edges", pin_key="src")
     visited = chk_v(
         seeds.select("node").distinct().withColumn("hops", F.lit(0))
     )
@@ -174,11 +112,11 @@ def pagerank_fixed(
     of ``1/scale`` and every operation is integer add/multiply/floor-div —
     no floating point anywhere, so the result is a pure function of the
     edge set, independent of partitioning, aggregation order, and engine.
-    That buys what the float ``pagerank`` cannot have: a bit-exact SQL
-    oracle (the registry row unrolls the same ``n_iter`` iterations as
-    chained CTEs with the same ``//`` arithmetic in DuckDB).
+    That buys what float ranks cannot have: a bit-exact SQL oracle (the
+    registry row unrolls the same ``n_iter`` iterations as chained CTEs
+    with the same ``//`` arithmetic in DuckDB).
 
-    Per iteration (same Google-matrix semantics as ``pagerank``):
+    Per iteration (the Google-matrix semantics in the module docstring):
     ``r' = base + (d_pct * (Σ_in r//out_deg + dang//n)) // 100`` with
     ``base = (100-d_pct)*scale // (100*n)``.  Floor division loses at most
     1 unit (1e-15) per term per round — far below any ranking-relevant
@@ -269,48 +207,21 @@ def pagerank_fixed(
         chk.cleanup_all()
         return edges.sparkSession.createDataFrame([], schema)
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    # hash-partition the joined edge list by its join key BEFORE the static
-    # checkpoint (r8, power-law probe finding): the persisted plan keeps
-    # its outputPartitioning, so every round's ranks⋈edges join reuses it
-    # and only the O(|V|) ranks side + the message aggregation shuffle per
-    # round — without this the O(|E|) edge list re-shuffled EVERY round
-    # (measured 587 MB/round at 1e7 edges vs ~160 MB of edge data).
-    # SIZE-GATED PER MODE: on floor-sized graphs the pinned partitioning
-    # makes the planner keep a 32-partition shuffle join where broadcast
-    # was free — measured +20% per invocation on the registry's 2-pair
-    # graph — so the pin applies only past the scale where it starts paying
-    # (n is already counted).  Reliable mode pins too, behind its own
-    # HIGHER threshold (PIN_PARTITIONING_MIN_NODES_RELIABLE): the parquet
-    # slot stays the durable record and the read-back is re-keyed +
-    # persisted once (RoundCheckpointer.static), so a lost executor
-    # recomputes pinned blocks from the parquet; below that threshold the
-    # parquet statistics let AQE broadcast the ranks side for free and the
-    # pin would only add its re-key cost (measured and rejected at 1e7
-    # edges / 1e6 nodes; measured winning at 3e7: 1410 -> 1122 MB/round).
+    # the edge static pins by the rounds' join key on big graphs (r8,
+    # power-law probe finding): only the O(|V|) ranks side + the message
+    # aggregation then shuffle per round, not the O(|E|) edge list
     e_od_frame = e.join(out_deg, "src").select(
         F.col("src").alias("e_src"), F.col("dst").alias("e_dst"), "od"
     )
-    pin_min = (
-        PIN_PARTITIONING_MIN_NODES
-        if chk.run_dir is None
-        else PIN_PARTITIONING_MIN_NODES_RELIABLE
-    )
-    pin_key = "e_src" if n >= pin_min else None
-    e_od = chk.static(e_od_frame, "edges-od", pin_key=pin_key)
-    # r12 resumed session (guide §2.3 — shuffle fewer bytes): past
-    # NODES_PIN_MIN_NODES, repin the already-checkpointed nodes static by
-    # its per-round join key so the nodes⋈contribs LEFT join stops
-    # writing the O(|V|) node list to an exchange every round (measured
-    # 679.3 → 639.6 MB per invocation at 1e7 Zipf edges / 1e6 nodes,
-    # walls −10/−25% over order-balanced idle sessions, bit-equal; the
-    # repin is one extra one-off job, which is noise here).  LOCAL mode
-    # only and deliberately ON TOP of the checkpoint rather than replacing
-    # it, so below the gate — every registry/driver graph — the plan is
-    # byte-identical to the pre-change shape.  Below ~3e5 nodes the pin
-    # is measured HARMFUL (+48-52% shuffle: the planner keeps that join
-    # exchange-light there), hence the dedicated higher gate.
-    if chk.run_dir is None and n >= NODES_PIN_MIN_NODES:
-        nodes = chk.repin(nodes, "node")
+    e_od = chk.static(e_od_frame, "edges-od", pin_key="e_src", rows=n)
+    # r12 resumed session (guide §2.3 — shuffle fewer bytes): post-hoc pin
+    # of the already-checkpointed nodes static by its per-round join key,
+    # so on big graphs the nodes⋈contribs LEFT join stops writing the
+    # O(|V|) node list to an exchange every round (measured 679.3 → 639.6
+    # MB per invocation at 1e7 Zipf edges / 1e6 nodes, bit-equal).  It
+    # layers ON TOP of the checkpoint rather than replacing it, so below
+    # the gate — every registry/driver graph — the plan is unchanged.
+    nodes = chk.static(nodes, "nodes", pin_key="node", rows=n)
     if n_dangling:
         # hoist the SET too, not just the count: the per-round dang
         # aggregate semi-joins against it, and a lazy frame would re-run
@@ -363,105 +274,6 @@ def pagerank_fixed(
         ranks = new
     chk.cleanup_stale(returning=ranks)
     return ranks.select("node", F.col("r").alias("rank_fp"))
-
-
-def pagerank(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    damping: float = 0.85,
-    max_iter: int = 30,
-    tol: float = 1e-8,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Returns (node, rank) for every node appearing in ``edges``.
-    Duplicate edges are collapsed (simple graph).  ``tol`` is the total L1
-    rank movement under which iteration stops.  ``checkpoint_dir`` switches
-    lineage truncation to the reliable two-slot parquet scheme (see
-    operators.checkpointing) for executor-loss-safe cluster runs."""
-    chk = RoundCheckpointer(checkpoint_dir, prefix="pagerank")
-    e = chk.static(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct(),
-        "edges",
-    )
-    nodes = chk.static(
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct(),
-        "nodes",
-    )
-    n = nodes.count()
-    if n == 0:
-        # same leak guard as pagerank_fixed: never return a static-backed
-        # frame from the empty path (r8 ADVICE fix)
-        schema = T.StructType(
-            nodes.schema.fields + [T.StructField("rank", T.DoubleType())]
-        )
-        chk.cleanup_all()
-        return edges.sparkSession.createDataFrame([], schema)
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    # pinned edge partitioning, same size gate and rationale as
-    # pagerank_fixed (r8): rounds stop re-shuffling O(|E|) on big graphs,
-    # floor-sized graphs keep their free broadcast joins
-    e2 = e.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
-    if n >= (
-        PIN_PARTITIONING_MIN_NODES
-        if chk.run_dir is None
-        else PIN_PARTITIONING_MIN_NODES_RELIABLE
-    ):
-        e2 = chk.static(e2, "edges-keyed", pin_key="e_src")
-    ranks = chk(nodes.withColumn("rank", F.lit(1.0 / n)))
-    base = (1.0 - damping) / n
-    probe_every = 4  # convergence probes are extra jobs; amortize them
-    for i in range(max_iter):
-        with_deg = ranks.join(
-            out_deg, ranks["node"] == out_deg["src"], "left"
-        ).select("node", "rank", "out_deg")
-        # dangling mass stays IN the plan as a broadcast 1-row aggregate
-        # (the zscore-stats pattern) — no per-round driver collect
-        dang = with_deg.filter(F.col("out_deg").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
-        contribs = (
-            with_deg.filter(F.col("out_deg").isNotNull())
-            .join(e2, F.col("node") == F.col("e_src"))
-            .select(
-                F.col("e_dst").alias("node"),
-                (F.col("rank") / F.col("out_deg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        new_ranks = chk(
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("inflow"), F.lit(0.0))
-                        + F.col("dm") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % probe_every == 0 or i == max_iter - 1:
-            delta = (
-                new_ranks.join(
-                    ranks.select("node", F.col("rank").alias("old")), "node"
-                )
-                .agg(F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d"))
-                .first()["d"]
-            )
-            if delta is not None and delta < tol:
-                ranks = new_ranks
-                break
-        ranks = new_ranks
-    chk.cleanup_stale(returning=ranks)
-    return ranks
 
 
 # Probe/test introspection for the last completed invocation on the
@@ -637,7 +449,7 @@ def connected_components_star(
 
 
 def _oriented_triangle_stream(
-    edges: DataFrame, src_col: str, dst_col: str, checkpoint: bool
+    edges: DataFrame, src_col: str, dst_col: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared core of ``triangle_stats`` / ``triangle_support``: canonical
     edge set ``e`` (lo < hi, distinct), per-node ``deg``, and the exact
@@ -649,9 +461,8 @@ def _oriented_triangle_stream(
         .filter("x <> y")
         .select(F.least("x", "y").alias("lo"), F.greatest("x", "y").alias("hi"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
     deg = (
         e.select(F.col("lo").alias("node"))
         .unionAll(e.select(F.col("hi").alias("node")))
@@ -674,9 +485,8 @@ def _oriented_triangle_stream(
             .otherwise(F.col("dlo"))
             .alias("dv"),
         )
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        oriented = oriented.localCheckpoint(eager=True)
     e1 = oriented.select("u", F.col("v").alias("b"), F.col("dv").alias("db"))
     e2 = oriented.select("u", F.col("v").alias("c"), F.col("dv").alias("dc"))
     wedges = e1.join(e2, "u").where(
@@ -692,7 +502,6 @@ def triangle_stats(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Exact per-node triangle counts + local clustering coefficient by
     degree-ordered edge orientation (the MapReduce triangle scheme of
@@ -722,8 +531,8 @@ def triangle_stats(
        no cartesian, no driver-side adjacency;
     5. per-node counts: explode each triangle's three corners, groupBy.
 
-    With ``checkpoint`` (default), the canonical edge set and the oriented
-    edge set are eagerly ``localCheckpoint``-ed: edges feed degree + both
+    The canonical edge set and the oriented edge set are eagerly
+    ``localCheckpoint``-ed: edges feed degree + both
     orientation joins, oriented feeds three consumers (both wedge sides +
     closure) — without truncation the upstream derivation (for the
     near-dup caller: the whole SimHash subtree) re-executes per consumer.
@@ -737,7 +546,7 @@ def triangle_stats(
     IEEE division is engine-exact (the registry's integer-operand
     division doctrine) — and 0.0 for degree-1 nodes.
     """
-    e, deg, tri = _oriented_triangle_stream(edges, src_col, dst_col, checkpoint)
+    e, deg, tri = _oriented_triangle_stream(edges, src_col, dst_col)
     # ONE generator pass over the triangle stream — a three-branch union
     # would give tri three consumers and re-execute the wedge+closure
     # subtree once per corner (probe-caught at the 4e6-edge tier: three
@@ -763,7 +572,6 @@ def triangle_support(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Per-EDGE triangle support: for every canonical edge (lo < hi), the
     number of triangles it participates in — the single-round core of
@@ -784,7 +592,7 @@ def triangle_support(
     edges (left join — the denoiser must see the bridges to drop them):
     (lo, hi, support).
     """
-    e, _deg, tri = _oriented_triangle_stream(edges, src_col, dst_col, checkpoint)
+    e, _deg, tri = _oriented_triangle_stream(edges, src_col, dst_col)
     tri_edges = tri.select(
         F.explode(
             F.array(
@@ -931,30 +739,12 @@ def sssp_fixed(
         F.col(dst_col).alias("dst"),
         F.col(weight_col).cast("long").alias("w"),
     ).distinct()
-    # same pin discipline as bfs_min_hops: count once off the persisted
-    # frame (local mode only — reliable parquet statics let AQE broadcast
-    # the distance side below the higher threshold)
-    if chk.run_dir is None:
-        pre = edges_frame.persist()
-        n_e = pre.count()
-        pin = "src" if n_e >= 10 * PIN_PARTITIONING_MIN_NODES else None
-        e = chk.static(pre, "edges", pin_key=pin)
-        pre.unpersist()
-    else:
-        pin = "src"  # reliable mode always checkpoints every round below
-        e = chk.static(edges_frame, "edges")
-        # r12 resumed session (guide §2.3): past the distance-side
-        # broadcast flip the un-pinned relaxation join re-exchanges the
-        # whole edge static every round — repin it by the join key past
-        # SSSP_RELIABLE_PIN_MIN_EDGES (the pagerank_fixed reliable
-        # discipline, measured for THIS operator's dataflow: −48%
-        # per-invocation shuffle at 2e8/3e8 Zipf edges, harmful below
-        # the flip, hence the dedicated gate — see the constant).  The
-        # gate count is metadata-only off the parquet static just
-        # written; the pinned cache layers over the parquet slot, so a
-        # lost executor recomputes pinned blocks from the durable file.
-        if e.count() >= SSSP_RELIABLE_PIN_MIN_EDGES:
-            e = chk.repin(e, "src")
+    # the bfs_min_hops pin, gated per mode by the checkpointer: in
+    # reliable mode past the distance-side broadcast flip, where the
+    # un-pinned relaxation join re-exchanges the whole edge static every
+    # round (−48% per-invocation shuffle at 2e8/3e8 Zipf edges)
+    e = chk.static(edges_frame, "edges", pin_key="src")
+    pinned = e.is_cached
     d = chk(
         sources.select("node").distinct().withColumn(
             "dist", F.lit(0).cast("long")
@@ -976,7 +766,7 @@ def sssp_fixed(
     # parquet slot is the executor-loss recovery contract — the +17%
     # per-round shuffle is the scaling cost, so every round checkpoints
     # exactly as before (plans unchanged above the gate).
-    stride2 = chk.run_dir is None and pin is None
+    stride2 = chk.run_dir is None and not pinned
     # r12 (second pass over the round's "not yet optimized" #2 — guide
     # §2.3, shuffle fewer bytes): ABOVE the pin gate the union+groupBy
     # carry re-ships the whole distance frame through the MIN aggregation
@@ -997,7 +787,7 @@ def sssp_fixed(
     # repartition(P, "node") carry is byte-IDENTICAL to plain stride-2
     # (+17% at 1e7 — the skipped round's re-exchange just moves), and
     # merge+stride-2 still pays +13%.
-    merge = chk.run_dir is None and pin is not None
+    merge = chk.run_dir is None and pinned
     for it in range(n_rounds):
         cand = d.join(e, d["node"] == e["src"]).select(
             F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")

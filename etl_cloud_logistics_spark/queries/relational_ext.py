@@ -956,8 +956,8 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated; eager (runs when built).  Uses the fixed-point
     ``pagerank_fixed`` (scaled-BIGINT, engine-exact integer arithmetic) so
     the unrolled iterations in the DuckDB oracle reproduce every rank
-    bit-for-bit — the float twin (``operators.graph.pagerank``) keeps the
-    convergence-probed production form and its numpy differential test."""
+    bit-for-bit; its numpy power-iteration differential test lives with
+    the operator."""
     from ..operators.cooccurrence import frequent_pairs
     from ..operators.graph import pagerank_fixed
 

@@ -678,16 +678,19 @@ def test_misra_gries_bounds_on_zipf_stress(spark):
 
 
 def test_pagerank_matches_power_iteration(spark):
-    """4-node graph with a dangling node: distributed PageRank == numpy
+    """4-node graph with a dangling node: fixed-point PageRank == numpy
     power iteration on the dense Google matrix to 1e-8, and total rank
     mass stays 1.0 (the dangling redistribution invariant)."""
     import numpy as np
 
-    from etl_cloud_logistics_spark.operators.graph import pagerank
+    from etl_cloud_logistics_spark.operators.graph import PR_SCALE, pagerank_fixed
 
     edges = [(0, 1), (0, 2), (1, 2), (2, 0), (2, 3)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.rank for r in pagerank(df, max_iter=100, tol=1e-12).collect()}
+    got = {
+        r.node: r.rank_fp / PR_SCALE
+        for r in pagerank_fixed(df, n_iter=100).collect()
+    }
     n, d = 4, 0.85
     m = np.zeros((n, n))
     out = {0: 2, 1: 1, 2: 2}
@@ -703,13 +706,14 @@ def test_pagerank_matches_power_iteration(spark):
 
 def test_pagerank_uniform_on_symmetric_cycle(spark):
     """A symmetric cycle has the uniform stationary distribution — any
-    deviation reveals a normalization bug."""
-    from etl_cloud_logistics_spark.operators.graph import pagerank
+    deviation reveals a normalization bug.  In fixed point the uniform
+    rank is an exact fixed point: base 3e13 + (85 · 2e14) div 100 = 2e14."""
+    from etl_cloud_logistics_spark.operators.graph import PR_SCALE, pagerank_fixed
 
     edges = [(i, (i + 1) % 5) for i in range(5)] + [((i + 1) % 5, i) for i in range(5)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = [r.rank for r in pagerank(df, max_iter=40, tol=1e-12).collect()]
-    assert all(abs(x - 0.2) < 1e-9 for x in got)
+    got = [r.rank_fp for r in pagerank_fixed(df, n_iter=40).collect()]
+    assert len(got) == 5 and all(x == PR_SCALE // 5 for x in got), got
 
 
 def test_ks_statistic_matches_direct_computation(spark):
@@ -843,7 +847,7 @@ def test_bloom_filter_rows_is_superset_prefilter(spark):
 
 
 def test_graph_family_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir on pagerank/pagerank_fixed/bfs_min_hops switches
+    """checkpoint_dir on pagerank_fixed/bfs_min_hops switches
     lineage truncation from localCheckpoint to the shared two-slot parquet
     scheme (operators.checkpointing.RoundCheckpointer — executor-loss-safe
     on a real cluster); results must be IDENTICAL to the default mode, and
@@ -855,7 +859,6 @@ def test_graph_family_reliable_checkpoint(spark, tmp_path):
 
     from etl_cloud_logistics_spark.operators.graph import (
         bfs_min_hops,
-        pagerank,
         pagerank_fixed,
     )
 
@@ -871,15 +874,6 @@ def test_graph_family_reliable_checkpoint(spark, tmp_path):
         for r in pagerank_fixed(df, n_iter=5, checkpoint_dir=chk).collect()
     }
     assert fixed_rel == fixed_local  # bit-exact: integer arithmetic
-
-    flt_local = {r.node: r.rank for r in pagerank(df, max_iter=9).collect()}
-    flt_rel = {
-        r.node: r.rank
-        for r in pagerank(df, max_iter=9, checkpoint_dir=chk).collect()
-    }
-    assert set(flt_rel) == set(flt_local)
-    for k in flt_local:
-        assert abs(flt_rel[k] - flt_local[k]) < 1e-12, k
 
     seeds = spark.createDataFrame([(0,)], "node long")
     bfs_local = {(r.node, r.hops) for r in bfs_min_hops(df, seeds).collect()}
@@ -1078,35 +1072,51 @@ def test_cleanup_stale_static_misuse_raises(spark, tmp_path):
 
 
 def test_pagerank_empty_graph_leaves_no_checkpoint_litter(spark, tmp_path):
-    """Empty-graph early exit in reliable mode (r8 ADVICE fix): both
-    pagerank variants must return an unbacked empty frame and remove their
+    """Empty-graph early exit in reliable mode (r8 ADVICE fix):
+    pagerank_fixed must return an unbacked empty frame and remove its
     per-invocation run dir, not leak static slots under a shared
     checkpoint_dir forever."""
     import os
 
-    from etl_cloud_logistics_spark.operators.graph import pagerank, pagerank_fixed
+    from etl_cloud_logistics_spark.operators.graph import pagerank_fixed
 
     empty = spark.createDataFrame([], "src long, dst long")
     chk = tmp_path / "chk"
     out_fp = pagerank_fixed(empty, n_iter=3, checkpoint_dir=str(chk))
     assert out_fp.columns == ["node", "rank_fp"] and out_fp.count() == 0
-    out_fl = pagerank(empty, max_iter=3, checkpoint_dir=str(chk))
-    assert out_fl.columns == ["node", "rank"] and out_fl.count() == 0
     assert not os.path.isdir(chk) or os.listdir(chk) == [], (
         "empty-graph path leaked checkpoint dirs: " + str(os.listdir(chk))
     )
 
 
+def _record_pins(monkeypatch):
+    """Wrap RoundCheckpointer._pin so a test can see which statics a run
+    actually pinned: a list of (operator prefix, pin key)."""
+    from etl_cloud_logistics_spark.operators.checkpointing import RoundCheckpointer
+
+    pins = []
+    real = RoundCheckpointer._pin
+
+    def recording(self, df, pin_key):
+        pins.append((self.prefix, pin_key))
+        return real(self, df, pin_key)
+
+    monkeypatch.setattr(RoundCheckpointer, "_pin", recording)
+    return pins
+
+
 def test_partitioning_pin_is_semantics_preserving_at_gate(spark, monkeypatch):
-    """The r8 size gate (PIN_PARTITIONING_MIN_NODES) switches pagerank's
-    edge static between localCheckpoint and a keyed persisted cache purely
-    for plan shape; fixed-point arithmetic must make the RESULT identical
-    on both sides of the gate.  Run one mid-sized random-ish graph with
-    the gate forced each way and require tuple-for-tuple equality — the
-    invariant that makes the gate a pure performance knob."""
+    """The r8 local edge-pin gate (PIN_MIN_ROWS' pagerank-fixed edges-od
+    entry, which BFS's edge gate is tied to) switches the edge static
+    between localCheckpoint and a keyed persisted cache purely for plan
+    shape; the RESULT must be identical on both sides of the gate.  Run
+    one mid-sized random-ish graph through pagerank_fixed and bfs_min_hops
+    with the gate forced each way and require tuple-for-tuple equality —
+    the invariant that makes the gate a pure performance knob."""
     from pyspark.sql import functions as F
 
     from etl_cloud_logistics_spark.operators import graph as G
+    from etl_cloud_logistics_spark.operators.checkpointing import PIN_MIN_ROWS
 
     # ~3k nodes / ~20k edges: big enough that the pinned path exercises a
     # real multi-partition cache, small enough for CI
@@ -1119,15 +1129,27 @@ def test_partitioning_pin_is_semantics_preserving_at_gate(spark, monkeypatch):
         .filter("src <> dst")
         .localCheckpoint(eager=True)
     )
-    monkeypatch.setattr(G, "PIN_PARTITIONING_MIN_NODES", 10**9)  # force OFF
-    unpinned = {(r.node, r.rank_fp) for r in G.pagerank_fixed(e, n_iter=4).collect()}
-    monkeypatch.setattr(G, "PIN_PARTITIONING_MIN_NODES", 1)  # force ON
-    pinned = {(r.node, r.rank_fp) for r in G.pagerank_fixed(e, n_iter=4).collect()}
-    assert pinned == unpinned and len(pinned) > 2500
+    seeds = e.agg(F.min("src").alias("node"))
+    pins = _record_pins(monkeypatch)
+    gate = ("pagerank-fixed", "edges-od", "local")
+
+    def run():
+        ranks = {(r.node, r.rank_fp) for r in G.pagerank_fixed(e, n_iter=4).collect()}
+        hops = {(r.node, r.hops) for r in G.bfs_min_hops(e, seeds, max_hops=3).collect()}
+        return ranks, hops
+
+    monkeypatch.setitem(PIN_MIN_ROWS, gate, 10**9)  # force OFF
+    unpinned = run()
+    assert pins == []
+    monkeypatch.setitem(PIN_MIN_ROWS, gate, 1)  # force ON (BFS: 10 edges)
+    pinned = run()
+    assert pins == [("pagerank-fixed", "e_src"), ("bfs-visited", "src")], pins
+    assert pinned == unpinned
+    assert len(pinned[0]) > 2500 and len(pinned[1]) > 100
 
 
 def test_nodes_pin_gate_is_semantics_preserving(spark, monkeypatch):
-    """The r12 nodes-static repin (NODES_PIN_MIN_NODES — pagerank_fixed's
+    """The r12 post-hoc nodes-static pin (pagerank_fixed's
     per-round nodes⋈contribs join stops exchanging the node list on big
     graphs) must be a pure plan-shape knob: forcing the gate each way,
     with and without the edge pin underneath, gives identical fixed-point
@@ -1136,6 +1158,7 @@ def test_nodes_pin_gate_is_semantics_preserving(spark, monkeypatch):
     from pyspark.sql import functions as F
 
     from etl_cloud_logistics_spark.operators import graph as G
+    from etl_cloud_logistics_spark.operators.checkpointing import PIN_MIN_ROWS
 
     e = (
         spark.range(15_000)
@@ -1146,18 +1169,23 @@ def test_nodes_pin_gate_is_semantics_preserving(spark, monkeypatch):
         .filter("src <> dst")
         .localCheckpoint(eager=True)
     )
-    monkeypatch.setattr(G, "NODES_PIN_MIN_NODES", 10**9)  # force OFF
+    pins = _record_pins(monkeypatch)
+    nodes_gate = ("pagerank-fixed", "nodes", "local")
+    monkeypatch.setitem(PIN_MIN_ROWS, nodes_gate, 10**9)  # force OFF
     base = {(r.node, r.rank_fp) for r in G.pagerank_fixed(e, n_iter=4).collect()}
-    monkeypatch.setattr(G, "NODES_PIN_MIN_NODES", 1)  # force ON (edge pin off)
+    assert pins == []
+    monkeypatch.setitem(PIN_MIN_ROWS, nodes_gate, 1)  # force ON (edge pin off)
     pinned = {(r.node, r.rank_fp) for r in G.pagerank_fixed(e, n_iter=4).collect()}
-    monkeypatch.setattr(G, "PIN_PARTITIONING_MIN_NODES", 1)  # both pins on
+    assert pins == [("pagerank-fixed", "node")], pins
+    monkeypatch.setitem(PIN_MIN_ROWS, ("pagerank-fixed", "edges-od", "local"), 1)
     both = {(r.node, r.rank_fp) for r in G.pagerank_fixed(e, n_iter=4).collect()}
+    assert pins[1:] == [("pagerank-fixed", "e_src"), ("pagerank-fixed", "node")]
     assert pinned == base == both and len(base) > 2000
 
 
 def test_partitioning_pin_reliable_mode_semantics(spark, monkeypatch, tmp_path):
     """Same invariant for the reliable-mode pin (r8: parquet slot + keyed
-    persisted read-back past PIN_PARTITIONING_MIN_NODES_RELIABLE): forcing
+    persisted read-back past the reliable edges-od gate): forcing
     the reliable threshold each way must not change fixed-point results,
     and the run dir still ends holding only the result's round slot."""
     import os
@@ -1165,6 +1193,7 @@ def test_partitioning_pin_reliable_mode_semantics(spark, monkeypatch, tmp_path):
     from pyspark.sql import functions as F
 
     from etl_cloud_logistics_spark.operators import graph as G
+    from etl_cloud_logistics_spark.operators.checkpointing import PIN_MIN_ROWS
 
     e = (
         spark.range(8_000)
@@ -1175,21 +1204,97 @@ def test_partitioning_pin_reliable_mode_semantics(spark, monkeypatch, tmp_path):
         .filter("src <> dst")
         .localCheckpoint(eager=True)
     )
-    monkeypatch.setattr(G, "PIN_PARTITIONING_MIN_NODES_RELIABLE", 10**9)
+    pins = _record_pins(monkeypatch)
+    gate = ("pagerank-fixed", "edges-od", "reliable")
+    monkeypatch.setitem(PIN_MIN_ROWS, gate, 10**9)
     base = {
         (r.node, r.rank_fp)
         for r in G.pagerank_fixed(
             e, n_iter=3, checkpoint_dir=str(tmp_path / "a")
         ).collect()
     }
-    monkeypatch.setattr(G, "PIN_PARTITIONING_MIN_NODES_RELIABLE", 1)
+    assert pins == []
+    monkeypatch.setitem(PIN_MIN_ROWS, gate, 1)
     chk_b = tmp_path / "b"
     out = G.pagerank_fixed(e, n_iter=3, checkpoint_dir=str(chk_b))
     pinned = {(r.node, r.rank_fp) for r in out.collect()}
+    assert pins == [("pagerank-fixed", "e_src")], pins
     assert pinned == base and len(pinned) > 1000
     (run_dir,) = os.listdir(chk_b)
     slots = sorted(os.listdir(os.path.join(chk_b, run_dir)))
     assert slots and all(p.startswith("slot-") for p in slots), slots
+
+
+def test_reliable_checkpoints_survive_block_loss(spark, monkeypatch, tmp_path):
+    """Executor loss, made executable: after every round checkpoint, drop
+    the blocks of every RDD the operator has cached so far (the
+    BlockManagerMaster.removeRdd a lost executor amounts to).  Reliable
+    mode — pinned statics forced on — must return results bit-equal to an
+    undisturbed run, because each cache layers over a parquet slot and
+    recomputes from it; local mode must fail loudly instead of returning
+    rows, because localCheckpoint blocks have nothing to recompute from."""
+    import pytest as _pytest
+
+    from pyspark.sql import functions as F
+
+    from etl_cloud_logistics_spark.operators import graph as G
+    from etl_cloud_logistics_spark.operators.checkpointing import (
+        PIN_MIN_ROWS,
+        RoundCheckpointer,
+    )
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def cached_rdd_ids():
+        return {info.id() for info in jsc.getRDDStorageInfo()}
+
+    # recomputable inputs (no localCheckpoint of their own to lose)
+    e = (
+        spark.range(3_000)
+        .select(
+            F.pmod(F.hash(F.col("id")), F.lit(400)).alias("src"),
+            F.pmod(F.hash(F.col("id") + 5), F.lit(400)).alias("dst"),
+            (F.lit(1) + F.pmod(F.hash(F.col("id") + 9), F.lit(7)))
+            .cast("long")
+            .alias("w"),
+        )
+        .filter("src <> dst")
+    )
+    seeds = spark.createDataFrame([(0,)], "node long")
+
+    def run_all(tag):
+        d = str(tmp_path / tag)
+        ranks = G.pagerank_fixed(e, n_iter=6, checkpoint_dir=d)
+        dists = G.sssp_fixed(e, seeds, n_rounds=4, checkpoint_dir=d)
+        hops = G.bfs_min_hops(e, seeds, max_hops=4, checkpoint_dir=d)
+        return (
+            {(r.node, r.rank_fp) for r in ranks.collect()},
+            {(r.node, r.dist) for r in dists.collect()},
+            {(r.node, r.hops) for r in hops.collect()},
+        )
+
+    monkeypatch.setitem(PIN_MIN_ROWS, ("pagerank-fixed", "edges-od", "reliable"), 1)
+    monkeypatch.setitem(PIN_MIN_ROWS, ("sssp-fixed", "edges", "reliable"), 1)
+    undisturbed = run_all("calm")
+
+    before = cached_rdd_ids()
+    dropped = []
+    real_call = RoundCheckpointer.__call__
+
+    def call_then_lose_blocks(self, df):
+        out = real_call(self, df)
+        for rdd_id in cached_rdd_ids() - before:
+            jsc.env().blockManager().master().removeRdd(rdd_id, True)
+            dropped.append(rdd_id)
+        return out
+
+    monkeypatch.setattr(RoundCheckpointer, "__call__", call_then_lose_blocks)
+    assert run_all("lossy") == undisturbed
+    assert dropped, "no cached RDD was dropped: the fault never fired"
+    assert all(len(r) > 50 for r in undisturbed)
+
+    with _pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        G.pagerank_fixed(e, n_iter=6).collect()
 
 
 def test_triangle_stats_planted_k4_with_pendant(spark):
@@ -1244,7 +1349,7 @@ def test_triangle_stats_matches_bruteforce_random_graph(spark):
     df = spark.createDataFrame(und, "src long, dst long")
     got = {
         r.node: (r.degree, r.triangles, r.clustering)
-        for r in triangle_stats(df, checkpoint=False).collect()
+        for r in triangle_stats(df).collect()
     }
     touched = {v for v in range(n) if adj[v]}
     assert set(got) == touched
@@ -1289,8 +1394,8 @@ def test_triangle_support_consistent_with_triangle_stats(spark):
         {(a, b) for a in range(n) for b in range(a + 1, n) if rng.random() < 0.12}
     )
     df = spark.createDataFrame(und, "src long, dst long")
-    sup = {(r.lo, r.hi): r.support for r in triangle_support(df, checkpoint=False).collect()}
-    stats = {r.node: r.triangles for r in triangle_stats(df, checkpoint=False).collect()}
+    sup = {(r.lo, r.hi): r.support for r in triangle_support(df).collect()}
+    stats = {r.node: r.triangles for r in triangle_stats(df).collect()}
     assert set(sup) == set(und)
     assert sum(sup.values()) == 3 * (sum(stats.values()) // 3) == sum(stats.values())
     per_node = defaultdict(int)
@@ -1443,6 +1548,7 @@ def test_sssp_fixed_merge_carry_gate_is_semantics_preserving(
     from pyspark.sql import functions as F
 
     from etl_cloud_logistics_spark.operators import graph as G
+    from etl_cloud_logistics_spark.operators.checkpointing import PIN_MIN_ROWS
 
     e = (
         spark.range(6_000)
@@ -1457,14 +1563,18 @@ def test_sssp_fixed_merge_carry_gate_is_semantics_preserving(
         .localCheckpoint(eager=True)
     )
     seeds = e.agg(F.min("src").alias("node"))
-    monkeypatch.setattr(G, "PIN_PARTITIONING_MIN_NODES", 10**9)  # union carry
+    pins = _record_pins(monkeypatch)
+    # the SSSP local edge gate is tied to the PageRank one (10 edges/node)
+    tie = ("pagerank-fixed", "edges-od", "local")
+    monkeypatch.setitem(PIN_MIN_ROWS, tie, 10**9)  # union carry
     union_carry = {
         (r.node, r.dist) for r in G.sssp_fixed(e, seeds, n_rounds=5).collect()
     }
-    monkeypatch.setattr(G, "PIN_PARTITIONING_MIN_NODES", 1)  # merge carry
+    monkeypatch.setitem(PIN_MIN_ROWS, tie, 1)  # merge carry
     merge_carry = {
         (r.node, r.dist) for r in G.sssp_fixed(e, seeds, n_rounds=5).collect()
     }
+    assert pins == [("sssp-fixed", "src")], pins
     reliable = {
         (r.node, r.dist)
         for r in G.sssp_fixed(
@@ -1473,13 +1583,14 @@ def test_sssp_fixed_merge_carry_gate_is_semantics_preserving(
     }
     # force the r12 reliable-mode edge pin too (the broadcast-flip gate):
     # pinned reliable must also be tuple-identical
-    monkeypatch.setattr(G, "SSSP_RELIABLE_PIN_MIN_EDGES", 1)
+    monkeypatch.setitem(PIN_MIN_ROWS, ("sssp-fixed", "edges", "reliable"), 1)
     reliable_pinned = {
         (r.node, r.dist)
         for r in G.sssp_fixed(
             e, seeds, n_rounds=5, checkpoint_dir=str(tmp_path / "chk2")
         ).collect()
     }
+    assert pins == [("sssp-fixed", "src")] * 2, pins
     assert (
         merge_carry == union_carry == reliable == reliable_pinned
         and len(merge_carry) > 500
