@@ -65,9 +65,9 @@ from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from etl_cloud_logistics_spark.metrics import ExecutionMeter  # noqa: E402
 from etl_cloud_logistics_spark.queries import REGISTRY, _load_all  # noqa: E402
 from etl_cloud_logistics_spark.session import get_spark  # noqa: E402
-from tools.shuffle_audit import _execution_metrics  # noqa: E402
 
 # single idle-gate threshold (r8 ADVICE): the wait loop and the idle_start
 # stamp must agree on what "idle" means, so tuning one can't silently
@@ -186,33 +186,25 @@ def main() -> None:
     # two rounds running, so the artifact now carries signals that ambient
     # load cannot move — per row: [SQL executions, shuffle MB written,
     # parquet MB read] — measured on the LAST of the three run-once reps
-    # with the deduped-accumulator reader (tools/shuffle_audit; the dedup
-    # matters under AQE, which re-registers plan metrics per re-plan).
-    # Snapshotting execution ids and reading the status store happen
-    # BETWEEN reps / after the median loop — no timed region changes.
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def _exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
-
+    # with the package's deduped-accumulator reader (etl_cloud_logistics_spark
+    # .metrics; the dedup matters under AQE, which re-registers plan metrics
+    # per re-plan).  The meter's snapshot and read happen BETWEEN reps /
+    # after the median loop — no timed region changes.
     stamp("run_once")
     times: dict[str, float] = {}
     meters: dict[str, list] = {}
     for name in suite:
         walls = []
-        before_ids: set[int] = set()
         for rep in range(3):
             if rep == 2:
-                before_ids = _exec_ids()
+                meter = ExecutionMeter(spark)
             walls.append(run_once(name))
         times[name] = round(statistics.median(walls), 3)
-        new_ids = _exec_ids() - before_ids
-        m = _execution_metrics(store, new_ids)
+        reading = meter.read()
         meters[name] = [
-            len(new_ids),
-            round(m.get("shuffle bytes written", 0.0) / 2**20, 1),
-            round(m.get("size of files read", 0.0) / 2**20, 1),
+            len(reading.ids),
+            round(reading.metrics.get("shuffle bytes written", 0.0) / 2**20, 1),
+            round(reading.metrics.get("size of files read", 0.0) / 2**20, 1),
         ]
         reset_memory()
 

@@ -105,12 +105,6 @@ def day_name(col: str | Column) -> Column:
     return F.date_format(c, "EEEE")
 
 
-def period_yyyy_mm(col: str | Column) -> Column:
-    """'YYYY-MM' period label (ref F4, 02:232)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyy-MM")
-
-
 def date_key(col: str | Column) -> Column:
     """yyyymmdd integer surrogate key (ref etl_pipeline.py:345,831)."""
     c = F.col(col) if isinstance(col, str) else col
@@ -122,11 +116,6 @@ def time_key_15min(col: str | Column) -> Column:
     (ref etl_pipeline.py:834-840, dim_time 04:39-50)."""
     c = F.col(col) if isinstance(col, str) else col
     return (F.hour(c) * 100 + F.floor(F.minute(c) / 15) * 15).cast("int")
-
-
-def minutes_between(later: Column, earlier: Column) -> Column:
-    """Epoch-seconds difference in minutes (ref F6, 02:134)."""
-    return (F.unix_timestamp(later) - F.unix_timestamp(earlier)) / F.lit(60.0)
 
 
 # ---------------------------------------------------------------------------
@@ -155,12 +144,6 @@ def min_waypoint_dist_km(lat: Column, lon: Column, waypoints: Column) -> Column:
 # ---------------------------------------------------------------------------
 # misc scalar surface (ref F12-F17)
 # ---------------------------------------------------------------------------
-
-
-def clamp_min(col: str | Column, lower: float) -> Column:
-    """pandas ``.clip(lower=)`` equivalent (ref etl_pipeline.py:876-881)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.greatest(c, F.lit(lower))
 
 
 def safe_div(num: Column, den: Column) -> Column:

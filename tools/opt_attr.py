@@ -1,6 +1,5 @@
-"""Per-SQL-execution job/time attribution for ANY registry query — the
-round-11 optimization round's generalization of tools/pipeline_jobs.py
-(which hard-codes curation_pipeline_end2end).
+"""Per-SQL-execution job/time attribution for any registry query, e.g.
+``curation_pipeline_end2end``, the composed many-job pipeline row.
 
 For each named query: one warm pass (plan compile + shuffle-file reuse out
 of the picture), then a timed pass whose SQL executions are listed in
@@ -14,12 +13,14 @@ Usage: python tools/opt_attr.py <query-name> [<query-name> ...]
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_cloud_logistics_spark.metrics import ExecutionMeter  # noqa: E402
 from etl_cloud_logistics_spark.queries import REGISTRY, _load_all  # noqa: E402
 from etl_cloud_logistics_spark.session import get_spark  # noqa: E402
 
@@ -28,11 +29,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def attribute(spark, name: str) -> None:
     spec = REGISTRY[name]
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
 
     def run_once() -> float:
         t0 = time.perf_counter()
@@ -41,36 +37,22 @@ def attribute(spark, name: str) -> None:
 
     run_once()  # warm
     spark.catalog.clearCache()
-    import gc
-
     gc.collect()
-    before = exec_ids()
+    meter = ExecutionMeter(spark)
     wall = run_once()
-    new = sorted(exec_ids() - before)
-
-    listed = store.executionsList()
-    rows = []
-    total_jobs = 0
-    for i in range(listed.size()):
-        e = listed.apply(i)
-        if e.executionId() not in new:
-            continue
-        n_jobs = e.jobs().size()
-        sub = e.submissionTime()
-        comp = e.completionTime()
-        dur_ms = comp.get().getTime() - sub if comp.isDefined() else -1
-        desc = str(e.description() or "")[:60].replace("\n", " ")
-        rows.append((sub, e.executionId(), n_jobs, dur_ms, desc))
-        total_jobs += n_jobs
-    rows.sort()
+    rows = meter.read().executions
     print(
         f"{name} at {SF_DIR}: wall {wall:.2f}s, {len(rows)} SQL executions, "
-        f"{total_jobs} jobs (load1={os.getloadavg()[0]:.2f})"
+        f"{sum(e.jobs for e in rows)} jobs (load1={os.getloadavg()[0]:.2f})"
     )
     print(f"{'exec':>5} {'jobs':>4} {'ms':>7}  description")
-    t_first = rows[0][0] if rows else 0
-    for sub, eid, n_jobs, dur_ms, desc in rows:
-        print(f"{eid:>5} {n_jobs:>4} {dur_ms:>7}  [+{(sub - t_first) / 1000:6.2f}s] {desc}")
+    t_first = rows[0].submitted_ms if rows else 0
+    for e in rows:
+        desc = e.description[:60].replace("\n", " ")
+        print(
+            f"{e.id:>5} {e.jobs:>4} {e.duration_ms:>7}  "
+            f"[+{(e.submitted_ms - t_first) / 1000:6.2f}s] {desc}"
+        )
     print()
 
 

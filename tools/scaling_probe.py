@@ -83,6 +83,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from etl_cloud_logistics_spark.catalog import load_table  # noqa: E402
+from etl_cloud_logistics_spark.metrics import ExecutionMeter  # noqa: E402
 from etl_cloud_logistics_spark.operators.dedup import (  # noqa: E402
     minhash_lsh_neardup,
     neardup_components,
@@ -384,8 +385,6 @@ def powerlaw_probe(es: list[int]) -> None:
     sought: per-round PageRank shuffle grows ~O(E) (column pr_MB/rnd),
     BFS shuffle is frontier/edge-bounded, not walk-enumeration-bounded,
     and no super-linear wall blowup appears across 1e5 -> 1e7."""
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.operators.dedup import (  # noqa: PLC0415
         neardup_components,
     )
@@ -395,11 +394,6 @@ def powerlaw_probe(es: list[int]) -> None:
     )
 
     spark = get_spark("scaling-probe-powerlaw")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
 
     def powerlaw_edges(n_edges: int):
         return _powerlaw_edges(spark, n_edges)
@@ -455,11 +449,11 @@ def powerlaw_probe(es: list[int]) -> None:
                 ).write.mode("overwrite").format("noop").save(),
             ),
         ):
-            before = exec_ids()
+            meter = ExecutionMeter(spark)
             t0 = time.perf_counter()
             fn()
             wall = time.perf_counter() - t0
-            m = _execution_metrics(store, exec_ids() - before)
+            m = meter.read().metrics
             rows[op] = (wall, m.get("shuffle bytes written", 0.0) / 2**20)
             spark.catalog.clearCache()
         return rows
@@ -510,17 +504,10 @@ def sssp_probe(es: list[int]) -> None:
     from the min-id node, both durability modes; the reached-count and
     min-plus checksum pin local == reliable (bit-exact independence from
     the checkpoint mechanism)."""
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.operators.graph import sssp_fixed  # noqa: PLC0415
 
     N_ROUNDS = 8
     spark = get_spark("scaling-probe-sssp")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
 
     def weighted(edges):
         return edges.select(
@@ -533,7 +520,7 @@ def sssp_probe(es: list[int]) -> None:
         )
 
     def run(edges, seeds, chk_dir):
-        before = exec_ids()
+        meter = ExecutionMeter(spark)
         t0 = time.perf_counter()
         row = (
             sssp_fixed(edges, seeds, n_rounds=N_ROUNDS, checkpoint_dir=chk_dir)
@@ -544,9 +531,7 @@ def sssp_probe(es: list[int]) -> None:
             .collect()[0]
         )
         wall = time.perf_counter() - t0
-        mb = _execution_metrics(store, exec_ids() - before).get(
-            "shuffle bytes written", 0.0
-        ) / 2**20
+        mb = meter.read().metrics.get("shuffle bytes written", 0.0) / 2**20
         spark.catalog.clearCache()
         return wall, mb, int(row["reached"]), int(row["chk"])
 
@@ -606,8 +591,6 @@ def triangle_probe(es: list[int]) -> None:
       wedge count — no silent cap) and pin its triangle total to the
       oriented run's: the two enumerations must agree exactly.
     """
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.operators.graph import (  # noqa: PLC0415
         triangle_stats,
     )
@@ -615,11 +598,6 @@ def triangle_probe(es: list[int]) -> None:
     WEDGE_CAP = 300_000_000
 
     spark = get_spark("scaling-probe-triangles")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
 
     def canonical(edges):
         return (
@@ -704,7 +682,7 @@ def triangle_probe(es: list[int]) -> None:
             F.count(F.lit(1)).alias("n"), F.max("d").alias("m")
         ).collect()[0]
 
-        before = exec_ids()
+        meter = ExecutionMeter(spark)
         t0 = time.perf_counter()
         srow = (
             triangle_stats(e, src_col="lo", dst_col="hi")
@@ -712,9 +690,7 @@ def triangle_probe(es: list[int]) -> None:
             .collect()[0]
         )
         deg_s = time.perf_counter() - t0
-        deg_mb = _execution_metrics(store, exec_ids() - before).get(
-            "shuffle bytes written", 0.0
-        ) / 2**20
+        deg_mb = meter.read().metrics.get("shuffle bytes written", 0.0) / 2**20
         tri_total = int(srow["t"]) // 3
 
         if w_id <= WEDGE_CAP:
@@ -764,8 +740,6 @@ def diameter_probe(ns: list[int]) -> None:
     """
     import math
 
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.operators.dedup import (  # noqa: PLC0415
         neardup_components,
     )
@@ -774,11 +748,6 @@ def diameter_probe(ns: list[int]) -> None:
     )
 
     spark = get_spark("scaling-probe-diameter")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
 
     def path_edges(n: int):
         return (
@@ -849,12 +818,12 @@ def diameter_probe(ns: list[int]) -> None:
             except RuntimeError:
                 label = "DNF>30"
             spark.catalog.clearCache()
-            before = exec_ids()
+            meter = ExecutionMeter(spark)
             t0 = time.perf_counter()
             comp = neardup_components(pairs, ids, algorithm="star")
             n_comp = comp.select("component").distinct().count()
             wall = time.perf_counter() - t0
-            m = _execution_metrics(store, exec_ids() - before)
+            m = meter.read().metrics
             rounds = star_probe_info()["rounds"]
             print(
                 f"{shape:>5} {ids.count():>8} {label:>9} {wall:>8.2f} "
@@ -896,12 +865,12 @@ def diameter_probe(ns: list[int]) -> None:
         spark.catalog.clearCache()
         results = {}
         for algo in ("star", "auto"):
-            before = exec_ids()
+            meter = ExecutionMeter(spark)
             t0 = time.perf_counter()
             comp = neardup_components(pairs, ids, algorithm=algo, max_iter=30)
             n_comp = comp.select("component").distinct().count()
             wall = time.perf_counter() - t0
-            m = _execution_metrics(store, exec_ids() - before)
+            m = meter.read().metrics
             results[algo] = {
                 "sec": wall,
                 "mb": m.get("shuffle bytes written", 0.0) / 2**20,
@@ -1070,15 +1039,7 @@ def text_probe(ks: list[int]) -> None:
     pruned map-side BEFORE the tf exchange; a layout that shuffled the
     full token stream would grow it K×) while wall tracks only the narrow
     tokenize scan."""
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     spark = get_spark("scaling-probe-text")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
-
     terms = ["spark_r0", "vector_r0", "merge_r0", "stream_r0"]
 
     def bm25_top15(corpus):
@@ -1098,11 +1059,11 @@ def text_probe(ks: list[int]) -> None:
     for k in ks:
         corpus = replicated_documents_full(spark, k)
         n_docs = corpus.count()
-        before = exec_ids()
+        meter = ExecutionMeter(spark)
         t0 = time.perf_counter()
         rows = bm25_top15(corpus).collect()
         wall = time.perf_counter() - t0
-        m = _execution_metrics(store, exec_ids() - before)
+        m = meter.read().metrics
         print(
             f"{k:>3} {n_docs:>7} {wall:>9.2f} "
             f"{m.get('shuffle bytes written', 0.0) / 2**20:>10.2f} "
@@ -1318,19 +1279,12 @@ def etl_probe(ns: list[int]) -> None:
     valid_to equals its successor's valid_from, and version counts
     reconcile with the churn arithmetic.
     """
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.operators.scd2 import (  # noqa: PLC0415
         scd2_apply,
         scd2_asof_lookup,
     )
 
     spark = get_spark("scaling-probe-etl")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
 
     def make_dim(n: int):
         return (
@@ -1429,14 +1383,12 @@ def etl_probe(ns: list[int]) -> None:
         for pct in (1, 10):
             dim = make_dim(n)
             stg = make_staging(n, pct)
-            before = exec_ids()
+            meter = ExecutionMeter(spark)
             t0 = time.perf_counter()
             merged = scd2_apply(dim, stg, ["k"], ["name", "score"], "2024-01-01")
             merged.write.mode("overwrite").format("noop").save()
             merge_wall = time.perf_counter() - t0
-            mb = _execution_metrics(store, exec_ids() - before).get(
-                "shuffle bytes written", 0.0
-            ) / 2**20
+            mb = meter.read().metrics.get("shuffle bytes written", 0.0) / 2**20
             dim2 = merged.localCheckpoint(eager=True)
             dim_rows = dim2.count()
             facts = make_facts(n)
@@ -1514,16 +1466,9 @@ def etl_e2e_probe(ns: list[int]) -> None:
     import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.pipelines import run_daily_etl  # noqa: PLC0415
 
     spark = get_spark("scaling-probe-etl-e2e")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
 
     def write_inputs(path: str, n: int, day: int) -> tuple[int, int]:
         """Lay down orders/customer/supplier/lineitem for one day's dir.
@@ -1610,13 +1555,13 @@ def etl_e2e_probe(ns: list[int]) -> None:
             for day, run_date in ((1, "2024-06-01"), (2, "2024-06-02")):
                 src = os.path.join(root, f"src_day{day}")
                 n_orders, new_keys = write_inputs(src, n, day)
-                before = exec_ids()
+                meter = ExecutionMeter(spark)
                 t0 = time.time()
                 audit = run_daily_etl(
                     spark, src, os.path.join(root, "wh"), run_date
                 )
                 wall = time.time() - t0
-                m = _execution_metrics(store, exec_ids() - before)
+                m = meter.read().metrics
                 shuffle_mb = m.get("shuffle bytes written", 0.0) / 1e6
                 day_rows[day] = (audit, n_orders, new_keys)
                 print(
@@ -1696,15 +1641,7 @@ def bloomrt_probe(rs: list[int]) -> None:
     default 10 GB gate (expected: no injection, identical to OFF).
     Reported per run: fact-scan output rows (the number the filter
     exists to cut), total shuffle, wall."""
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     spark = get_spark("scaling-probe-bloomrt")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
-
     confs = {
         "off": {"spark.sql.optimizer.runtime.bloomFilter.enabled": "false"},
         "on": {
@@ -1760,20 +1697,20 @@ def bloomrt_probe(rs: list[int]) -> None:
                     F.count("*").alias("n"),
                     F.sum(F.crc32(F.concat_ws(",", "o_id", "k"))).alias("sig"),
                 )
-                before = exec_ids()
+                meter = ExecutionMeter(spark)
                 t0 = time.time()
                 row = joined.collect()[0]
                 wall = time.time() - t0
-                new_ids = exec_ids() - before
-                m = _execution_metrics(store, new_ids)
+                reading = meter.read()
+                m = reading.metrics
                 # fact-scan output rows (the number the injected filter
                 # exists to cut) from the SQL plan graph — AQE wraps the
                 # executed plan in QueryStage nodes, so physical-plan
                 # collectLeaves() can't see the scans
                 scan_rows = 0
-                for eid in new_ids:
-                    graph = store.planGraph(eid)
-                    vals = store.executionMetrics(eid)
+                for eid in reading.ids:
+                    graph = meter.store.planGraph(eid)
+                    vals = meter.store.executionMetrics(eid)
                     nodes = graph.allNodes()
                     for i in range(nodes.size()):
                         node = nodes.apply(i)
@@ -2187,70 +2124,9 @@ def streaming_recovery_probe(ns: list[int]) -> None:
             shutil.rmtree(stage_root, ignore_errors=True)
 
 
-def main() -> None:
-    args = sys.argv[1:]
-    if args and args[0] == "--vectors":
-        vector_probe([int(a) for a in args[1:]] or [1, 5, 10])
-        return
-    if args and args[0] == "--pipeline":
-        pipeline_probe([int(a) for a in args[1:]] or [1, 5, 10])
-        return
-    if args and args[0] == "--bloom":
-        bloom_probe([int(a) for a in args[1:]] or [1_000_000, 3_000_000, 10_000_000])
-        return
-    if args and args[0] == "--graph":
-        graph_probe([int(a) for a in args[1:]] or [1, 5, 10])
-        return
-    if args and args[0] == "--winnow":
-        winnow_probe([int(a) for a in args[1:]] or [1, 5, 10])
-        return
-    if args and args[0] == "--powerlaw":
-        powerlaw_probe(
-            [int(float(a)) for a in args[1:]] or [100_000, 1_000_000, 10_000_000]
-        )
-        return
-    if args and args[0] == "--sssp":
-        sssp_probe(
-            [int(float(a)) for a in args[1:]] or [100_000, 1_000_000, 10_000_000]
-        )
-        return
-    if args and args[0] == "--triangles":
-        triangle_probe(
-            [int(float(a)) for a in args[1:]] or [100_000, 1_000_000, 4_000_000]
-        )
-        return
-    if args and args[0] == "--diameter":
-        diameter_probe(
-            [int(float(a)) for a in args[1:]] or [10_000, 100_000, 1_000_000]
-        )
-        return
-    if args and args[0] == "--skewjoin":
-        skewjoin_probe([int(float(a)) for a in args[1:]] or [16_000_000])
-        return
-    if args and args[0] == "--ann":
-        ann_probe([int(float(a)) for a in args[1:]] or [1, 8, 32])
-        return
-    if args and args[0] == "--text":
-        text_probe([int(float(a)) for a in args[1:]] or [1, 5, 10])
-        return
-    if args and args[0] == "--etl":
-        etl_probe([int(float(a)) for a in args[1:]] or [100_000, 1_000_000, 10_000_000])
-        return
-    if args and args[0] == "--etl-e2e":
-        etl_e2e_probe([int(float(a)) for a in args[1:]] or [10_000_000])
-        return
-    if args and args[0] == "--bloomrt":
-        bloomrt_probe([int(float(a)) for a in args[1:]] or [32_000_000])
-        return
-    if args and args[0] == "--streaming":
-        streaming_probe(
-            [int(float(a)) for a in args[1:]] or [1_000_000, 4_000_000]
-        )
-        return
-    if args and args[0] == "--streamrec":
-        streaming_recovery_probe([int(float(a)) for a in args[1:]] or [4_000_000])
-        return
-    ks = [int(a) for a in args] or [1, 5, 10]
+def dedup_probe(ks: list[int]) -> None:
+    """MinHash/LSH near-dup + connected components over K× corpus
+    replicas (the module docstring's default mode)."""
     spark = get_spark("scaling-probe")
     # warm-up: compile the plans once at the smallest scale
     warm = replicated_corpus(spark, 1)
@@ -2282,6 +2158,37 @@ def main() -> None:
             f"{k:>3} {n_docs:>7} {lsh_sec:>8.2f} {n_pairs:>7} {comp_sec:>9.2f} {n_clusters:>9}"
         )
         spark.catalog.clearCache()
+
+
+# flag -> (probe, default sizes); no flag runs the dedup kit
+PROBES = {
+    "--vectors": (vector_probe, [1, 5, 10]),
+    "--pipeline": (pipeline_probe, [1, 5, 10]),
+    "--bloom": (bloom_probe, [1_000_000, 3_000_000, 10_000_000]),
+    "--graph": (graph_probe, [1, 5, 10]),
+    "--winnow": (winnow_probe, [1, 5, 10]),
+    "--powerlaw": (powerlaw_probe, [100_000, 1_000_000, 10_000_000]),
+    "--sssp": (sssp_probe, [100_000, 1_000_000, 10_000_000]),
+    "--triangles": (triangle_probe, [100_000, 1_000_000, 4_000_000]),
+    "--diameter": (diameter_probe, [10_000, 100_000, 1_000_000]),
+    "--skewjoin": (skewjoin_probe, [16_000_000]),
+    "--ann": (ann_probe, [1, 8, 32]),
+    "--text": (text_probe, [1, 5, 10]),
+    "--etl": (etl_probe, [100_000, 1_000_000, 10_000_000]),
+    "--etl-e2e": (etl_e2e_probe, [10_000_000]),
+    "--bloomrt": (bloomrt_probe, [32_000_000]),
+    "--streaming": (streaming_probe, [1_000_000, 4_000_000]),
+    "--streamrec": (streaming_recovery_probe, [4_000_000]),
+}
+
+
+def main() -> None:
+    args = sys.argv[1:]
+    if args and args[0] in PROBES:
+        probe, default = PROBES[args.pop(0)]
+    else:
+        probe, default = dedup_probe, [1, 5, 10]
+    probe([int(float(a)) for a in args] or default)
 
 
 if __name__ == "__main__":

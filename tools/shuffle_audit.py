@@ -19,69 +19,16 @@ operator must fit its partitions in execution memory.
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# perfbench/meters.py imports the reader from here under its old name
+from etl_cloud_logistics_spark.metrics import ExecutionMeter, execution_metrics as _execution_metrics  # noqa: E402,F401,E501
 from etl_cloud_logistics_spark.queries import REGISTRY, _load_all  # noqa: E402
 from etl_cloud_logistics_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-_SIZE = re.compile(r"([\d.,]+)\s*(B|KiB|MiB|GiB|TiB)")
-_UNIT = {"B": 1.0, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40}
-
-
-def _parse_bytes(s: str) -> float:
-    """First size token in a metric string — for multi-task metrics Spark
-    formats 'total (min, med, max ...)', so the first token IS the total."""
-    m = _SIZE.search(s)
-    return float(m.group(1).replace(",", "")) * _UNIT[m.group(2)] if m else 0.0
-
-
-def _execution_metrics(store, exec_ids) -> dict[str, float]:
-    """Sum size-type metrics by name across the UNIQUE accumulators of the
-    given executions (one accumulator per physical plan node).
-
-    The per-accumulator dedup is load-bearing under AQE (r11):
-    ``SQLExecutionUIData.metrics`` accumulates one SQLPlanMetric entry per
-    ADAPTIVE PLAN VERSION — every runtime re-plan re-registers the whole
-    plan's metrics with the same accumulator ids — so summing occurrences
-    overcounts by the plan-update count.  Measured on the 13-stage
-    triangle aggregation at 2.7M edges: 39 occurrences over 6 unique
-    shuffle-write accumulators, 3989 "MB" summed vs 586 MB physical (the
-    per-stage task totals agree with the unique sum).  The inflation
-    factor is deterministic per plan shape, which is why round-over-round
-    artifact comparisons stayed coherent; absolute *_MB columns in
-    records drawn before the r11 fix carry that per-query factor."""
-    out: dict[str, float] = {}
-    listed = store.executionsList()
-    for i in range(listed.size()):
-        e = listed.apply(i)
-        if e.executionId() not in exec_ids:
-            continue
-        values = store.executionMetrics(e.executionId())
-        seen: set[int] = set()
-        mets = e.metrics()
-        it = mets.iterator()
-        while it.hasNext():
-            m = it.next()
-            acc = m.accumulatorId()
-            if acc in seen:
-                continue
-            seen.add(acc)
-            v = values.get(acc)
-            if not v.isDefined():
-                continue
-            name = m.name()
-            val = _parse_bytes(v.get())
-            if name == "peak memory":
-                out[name] = max(out.get(name, 0.0), val)
-            else:
-                out[name] = out.get(name, 0.0) + val
-    return out
-
 
 def main() -> int:
     filters = sys.argv[1:]
@@ -91,22 +38,16 @@ def main() -> int:
         if not s.extra and (not filters or any(f in n for f in filters))
     }
     spark = get_spark("shuffle-audit")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
-
     print(f"{'shuffleMB':>9} {'spillMB':>8} {'readMB':>8} {'peakMemMB':>9} "
           f"{'n_exec':>6}  query   ({SF_DIR})")
     spilled = []
     tot_shuffle = tot_read = 0.0
     for name, spec in suite.items():
-        before = exec_ids()
+        meter = ExecutionMeter(spark)
         spec.fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
         spark.catalog.clearCache()  # queries own persist(); drop between runs
-        new = exec_ids() - before
-        m = _execution_metrics(store, new)
+        reading = meter.read()
+        m = reading.metrics
         shuffle = m.get("shuffle bytes written", 0.0) / 2**20
         spill = m.get("spill size", 0.0) / 2**20
         read = m.get("size of files read", 0.0) / 2**20
@@ -116,7 +57,7 @@ def main() -> int:
         if spill > 0:
             spilled.append(name)
         print(f"{shuffle:9.2f} {spill:8.2f} {read:8.2f} {peak:9.1f} "
-              f"{len(new):6d}  {name}")
+              f"{len(reading.ids):6d}  {name}")
     print(f"\nTOTAL shuffle {tot_shuffle:.1f} MB, read {tot_read:.1f} MB "
           f"across {len(suite)} queries")
     if spilled:
