@@ -6,6 +6,10 @@ audit log), composed from this package's operators.
 Key departures from the reference, all deliberate (SURVEY.md §3.2):
 - ONE lazy DataFrame graph per run: intermediates never materialize to the
   driver (the reference round-trips every stage through driver-local pandas);
+- each landed table costs one action, its write: the audit counts are
+  metrics observed on the written frames (``_counted``), not a second
+  count over the table read back, and tables this run defines are re-read
+  with their known schema, so no schema-inference job runs;
 - the SCD2 merge actually executes (the reference generates the MERGE SQL
   and leaves it commented out, etl_pipeline.py:1087-1090);
 - loads are partitioned parquet with dynamic partition overwrite, so
@@ -25,8 +29,9 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .catalog import load_table
 from .functions import date_key, sum_exact
@@ -71,6 +76,17 @@ class EtlAudit:
 
 def _path(warehouse: str, name: str) -> str:
     return os.path.join(warehouse, name)
+
+
+def _counted(df: DataFrame, **extra: Column) -> tuple[DataFrame, Observation]:
+    """``df`` observed: the action that consumes it also computes its row
+    count ``n`` and every ``extra`` aggregate, read from the returned
+    observation's ``get`` once that action has returned.  Read it only then:
+    ``get`` blocks until an action over ``df`` has run, forever if none
+    does."""
+    obs = Observation()
+    metrics = [F.count(F.lit(1)).alias("n"), *(c.alias(k) for k, c in extra.items())]
+    return df.observe(obs, *metrics), obs
 
 
 def extract_orders_for_date(spark: SparkSession, sf_dir: str, run_date: str) -> DataFrame:
@@ -141,49 +157,37 @@ def build_fact_orders(
     return flag_outliers(fact, "o_totalprice")
 
 
-def refresh_report_segment_totals(
-    fact_path: str, spark: SparkSession, out_path: str, run_date: str | None = None
-) -> int:
+def refresh_report_segment_totals(day_fact: DataFrame, out_path: str) -> int:
     """Pre-aggregated report refresh (ref REPORT_DRIVER_TOTALS,
-    etl_pipeline.py:1100-1116) — incremental view maintenance:
+    etl_pipeline.py:1100-1116) — incremental view maintenance over
+    ``day_fact``, the run date's slice of the fact (``ingest_date`` = the
+    run date, as the daily ETL's DQ gate reads it):
 
-    1. aggregate ONLY the run date's fact slice to a day-grain partition
+    1. aggregate ONLY that slice to a day-grain partition
        (``<out>_daily/``, dynamic partition overwrite → re-runs replace the
        day, never double-count);
     2. roll the day-grain aggregates up into the totals table — counts and
        decimal sums re-aggregate losslessly (operators.quality
        .merge_aggregates rationale), so the totals never rescan the fact.
 
-    At 100 TB the daily refresh cost is O(one day) + O(|report days|),
-    versus the reference's full-table rebuild."""
-    return _refresh_report(fact_path, spark, out_path, "c_mktsegment", run_date)
+    Returns the totals table's row count, observed on its write.  At
+    100 TB the daily refresh cost is O(one day) + O(|report days|), versus
+    the reference's full-table rebuild."""
+    return _refresh_report(day_fact, out_path, "c_mktsegment")
 
 
-def refresh_report_status_totals(
-    fact_path: str, spark: SparkSession, out_path: str, run_date: str | None = None
-) -> int:
+def refresh_report_status_totals(day_fact: DataFrame, out_path: str) -> int:
     """The SECOND pre-aggregated report table (ref REPORT_ROUTE_TOTALS,
     etl_pipeline.py:1117-1132 — the reference maintains a PAIR of report
     tables per run): totals keyed by order status, same incremental
-    day-grain + rollup layout as the segment report."""
-    return _refresh_report(fact_path, spark, out_path, "o_orderstatus", run_date)
+    day-grain + rollup layout over the same ``day_fact`` slice as the
+    segment report; returns the observed row count likewise."""
+    return _refresh_report(day_fact, out_path, "o_orderstatus")
 
 
-def _refresh_report(
-    fact_path: str,
-    spark: SparkSession,
-    out_path: str,
-    group_col: str,
-    run_date: str | None = None,
-) -> int:
+def _refresh_report(day_fact: DataFrame, out_path: str, group_col: str) -> int:
     daily_path = out_path.rstrip("/") + "_daily"
-    fact = spark.read.parquet(fact_path)
-    day_slice = (
-        fact.filter(F.col("ingest_date") == F.lit(run_date).cast("date"))
-        if run_date is not None
-        else fact
-    )
-    day_agg = day_slice.groupBy(group_col, "ingest_date").agg(
+    day_agg = day_fact.groupBy(group_col, "ingest_date").agg(
         F.count("*").alias("n_orders"),
         sum_exact("net_revenue").alias("sum_revenue"),
         F.sum(F.when(~F.col("qa_passed"), 1).otherwise(0)).alias("n_qa_failed"),
@@ -194,15 +198,17 @@ def _refresh_report(
         .partitionBy("ingest_date")
         .parquet(daily_path)
     )
-    daily = spark.read.parquet(daily_path)
-    report = daily.groupBy(group_col).agg(
-        F.sum("n_orders").alias("n_orders"),
-        F.round(F.sum("sum_revenue"), 2).alias("total_revenue"),
-        F.round(F.sum("sum_revenue") / F.sum("n_orders"), 2).alias("avg_revenue"),
-        F.sum("n_qa_failed").alias("n_qa_failed"),
+    daily = day_fact.sparkSession.read.schema(day_agg.schema).parquet(daily_path)
+    report, obs = _counted(
+        daily.groupBy(group_col).agg(
+            F.sum("n_orders").alias("n_orders"),
+            F.round(F.sum("sum_revenue"), 2).alias("total_revenue"),
+            F.round(F.sum("sum_revenue") / F.sum("n_orders"), 2).alias("avg_revenue"),
+            F.sum("n_qa_failed").alias("n_qa_failed"),
+        )
     )
     report.write.mode("overwrite").parquet(out_path)
-    return spark.read.parquet(out_path).count()
+    return obs.get["n"]
 
 
 def run_daily_etl(
@@ -219,48 +225,61 @@ def run_daily_etl(
     - ``report_segment_totals/`` + ``report_status_totals/``  the pair of
       rebuilt aggregate tables (ref dual reports, etl_pipeline.py:1100-1132)
     - ``load_logs/``     one audit row per run
-    """
+
+    Each table's write is its only action; ``audit.records`` holds the
+    staged rows, the whole ``dim_date`` and both whole dimensions, the
+    day's fact rows, the failed DQ expectations and both report tables'
+    rows, all observed on those writes."""
     audit = EtlAudit(run_date=run_date)
+    day = F.lit(run_date).cast("date")
     try:
         # -- extract (pushdown) + raw staging ---------------------------------
         day_orders = extract_orders_for_date(spark, sf_dir, run_date)
-        write_json_staging(day_orders, _path(warehouse, "staging"), batch_id=run_date)
-        audit.records["staging"] = day_orders.count()
+        staged, obs = _counted(day_orders)
+        write_json_staging(staged, _path(warehouse, "staging"), batch_id=run_date)
+        audit.records["staging"] = obs.get["n"]
 
         # -- dim_date: incremental anti-join insert (J7) -----------------------
         dim_date_path = _path(warehouse, "dim_date")
         new_dates = generate_dim_date(spark, run_date, run_date)
+        dim_date_reader = spark.read.schema(new_dates.schema)
         if os.path.exists(dim_date_path):
-            existing = spark.read.parquet(dim_date_path)
+            existing = dim_date_reader.parquet(dim_date_path)
             new_dates = new_dates.join(
                 existing.select("date_key"), "date_key", "left_anti"
             )
             new_dates.write.mode("append").parquet(dim_date_path)
         else:
             new_dates.write.mode("overwrite").parquet(dim_date_path)
-        audit.records["dim_date"] = spark.read.parquet(dim_date_path).count()
+        # whole-table count, read back: an observation on the anti-join's
+        # existing-keys scan goes unfulfilled when that table is empty (AQE
+        # drops the scan from the final plan)
+        audit.records["dim_date"] = dim_date_reader.parquet(dim_date_path).count()
 
         # -- SCD2 dimension merges (J8/J9) — BOTH tracked dims, mirroring the
         # reference's dual SCD2 on dim_vehicle + dim_driver (04:53-85) -------
         def scd2_refresh(
             dim_path: str, staging: DataFrame, keys: list[str], tracked: list[str]
-        ) -> DataFrame:
+        ) -> tuple[int, T.StructType]:
+            """Merge ``staging`` into the dimension at ``dim_path``; returns
+            the whole dimension's row count and its schema."""
+            template = (
+                staging.limit(0)
+                .withColumn("valid_from", F.lit(None).cast("date"))
+                .withColumn("valid_to", F.lit(None).cast("date"))
+                .withColumn("is_current", F.lit(True))
+            )
             if os.path.exists(dim_path):
-                current = spark.read.parquet(dim_path)
+                current = spark.read.schema(template.schema).parquet(dim_path)
             else:
-                current = (
-                    staging.limit(0)
-                    .withColumn("valid_from", F.lit(None).cast("date"))
-                    .withColumn("valid_to", F.lit(None).cast("date"))
-                    .withColumn("is_current", F.lit(True))
-                )
-            merged = scd2_apply(
-                current, staging, keys=keys, tracked=tracked, effective_date=run_date
+                current = template
+            merged, obs = _counted(
+                scd2_apply(current, staging, keys=keys, tracked=tracked, effective_date=run_date)
             )
             # functional rewrite: land the snapshot NEXT TO the live dim, then
             # swap by rename — a crash anywhere leaves a complete dimension
             atomic_overwrite(merged, dim_path)
-            return spark.read.parquet(dim_path)
+            return obs.get["n"], template.schema
 
         dim_cust_path = _path(warehouse, "dim_customer")
         staging_cust = (
@@ -269,13 +288,12 @@ def run_daily_etl(
             .join(load_table(spark, sf_dir, "customer"), "c_custkey")
             .select(*DIM_CUSTOMER_KEYS, *DIM_CUSTOMER_TRACKED)
         )
-        dim_customer = scd2_refresh(
+        audit.records["dim_customer"], dim_cust_schema = scd2_refresh(
             dim_cust_path, staging_cust, DIM_CUSTOMER_KEYS, DIM_CUSTOMER_TRACKED
         )
-        audit.records["dim_customer"] = dim_customer.count()
+        dim_customer = spark.read.schema(dim_cust_schema).parquet(dim_cust_path)
 
         lineitem = load_table(spark, sf_dir, "lineitem")
-        dim_supp_path = _path(warehouse, "dim_supplier")
         staging_supp = (
             day_orders.select("o_orderkey")
             .join(lineitem, day_orders.o_orderkey == lineitem.l_orderkey)
@@ -284,19 +302,25 @@ def run_daily_etl(
             .join(load_table(spark, sf_dir, "supplier"), "s_suppkey")
             .select(*DIM_SUPPLIER_KEYS, *DIM_SUPPLIER_TRACKED)
         )
-        dim_supplier = scd2_refresh(
-            dim_supp_path, staging_supp, DIM_SUPPLIER_KEYS, DIM_SUPPLIER_TRACKED
+        audit.records["dim_supplier"], _ = scd2_refresh(
+            _path(warehouse, "dim_supplier"),
+            staging_supp,
+            DIM_SUPPLIER_KEYS,
+            DIM_SUPPLIER_TRACKED,
         )
-        audit.records["dim_supplier"] = dim_supplier.count()
 
         # -- fact build + partitioned load (S7) --------------------------------
-        fact = build_fact_orders(day_orders, lineitem, dim_customer)
+        # every fact row's ingest_date is the run date: the extract holds
+        # only that day, so the write's count is the day's slice
+        fact, obs = _counted(build_fact_orders(day_orders, lineitem, dim_customer))
         fact_path = _path(warehouse, "fact_orders")
         write_partitioned_lake(fact, fact_path, date_col="o_orderdate")
-        audit.records["fact_orders"] = (
-            spark.read.parquet(fact_path)
-            .filter(F.col("ingest_date") == F.lit(run_date).cast("date"))
-            .count()
+        audit.records["fact_orders"] = obs.get["n"]
+        fact_schema = T.StructType(
+            [*fact.schema.fields, T.StructField("ingest_date", T.DateType())]
+        )
+        day_fact = (
+            spark.read.schema(fact_schema).parquet(fact_path).filter(F.col("ingest_date") == day)
         )
 
         # -- data-quality gate over the day's slice ----------------------------
@@ -306,33 +330,33 @@ def run_daily_etl(
             run_expectations,
         )
 
-        day_fact = spark.read.parquet(fact_path).filter(
-            F.col("ingest_date") == F.lit(run_date).cast("date")
+        dq, obs = _counted(
+            run_expectations(
+                day_fact,
+                [
+                    expect_positive("n_items"),
+                    expect_not_null("c_mktsegment"),
+                    expect_not_null("date_key"),
+                ],
+                unique_cols=["o_orderkey"],
+            ).withColumn("run_date", day),
+            failed=F.sum(F.when(~F.col("passed"), 1).otherwise(0)),
         )
-        dq = run_expectations(
-            day_fact,
-            [
-                expect_positive("n_items"),
-                expect_not_null("c_mktsegment"),
-                expect_not_null("date_key"),
-            ],
-            unique_cols=["o_orderkey"],
-        ).withColumn("run_date", F.lit(run_date).cast("date"))
         (
             dq.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("run_date")
             .parquet(_path(warehouse, "dq_reports"))
         )
-        audit.records["dq_failed"] = dq.filter(~F.col("passed")).count()
+        audit.records["dq_failed"] = obs.get["failed"]
 
         # -- report refresh: BOTH pre-aggregated tables (ref loads driver AND
         # route totals every run, etl_pipeline.py:1100-1132) -------------------
         audit.records["report_segment_totals"] = refresh_report_segment_totals(
-            fact_path, spark, _path(warehouse, "report_segment_totals"), run_date
+            day_fact, _path(warehouse, "report_segment_totals")
         )
         audit.records["report_status_totals"] = refresh_report_status_totals(
-            fact_path, spark, _path(warehouse, "report_status_totals"), run_date
+            day_fact, _path(warehouse, "report_status_totals")
         )
         audit.status = "success"
     except Exception as e:  # audit trail first, then re-raise (ref :64-72)
@@ -457,7 +481,7 @@ def run_index_build(
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = train_ivf_centroids(emb, n_clusters=n_clusters, n_iter=3)
     lo, hi = train_sq8_bounds(emb)
-    index = build_sq8_index(emb, lo, hi, centroids=centroids)
+    index, written = _counted(build_sq8_index(emb, lo, hi, centroids=centroids))
 
     table = SnapshotTable(os.path.join(out_dir, "ann_index"))
     version = table.write(index)
@@ -485,7 +509,7 @@ def run_index_build(
     )
     return {
         "index_version": version,
-        "index_rows": stored.count(),
+        "index_rows": written.get["n"],
         "n_clusters": n_clusters,
         "nprobe": nprobe,
         "recall_at_k": recall,
@@ -532,8 +556,8 @@ def run_index_append(
     with open(model_path) as f:
         model = json.load(f)
 
-    delta = build_sq8_index(
-        new_vectors, model["lo"], model["hi"], centroids=model["centroids"]
+    delta, appended = _counted(
+        build_sq8_index(new_vectors, model["lo"], model["hi"], centroids=model["centroids"])
     )
     version = table.write(delta, mode="append", operation="index-append")
     new_model_path = os.path.join(
@@ -548,7 +572,7 @@ def run_index_append(
     return {
         "index_version": version,
         "parent_version": parent,
-        "appended_rows": new_vectors.count(),
+        "appended_rows": appended.get["n"],
         "index_rows": table.read(spark).count(),
         "model_path": new_model_path,
     }

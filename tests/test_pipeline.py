@@ -176,6 +176,95 @@ def test_pipeline_writes_dq_report(spark, sf_small, tmp_path):
     assert dq.filter(~F.col("passed")).count() == 0
 
 
+def _recount(spark, wh, run_date):
+    """Each audit record recounted from the landed tables with inferred
+    schemas: the meaning the pre-observation read-backs had."""
+    day = F.lit(run_date).cast("date")
+
+    def table(name):
+        return spark.read.parquet(os.path.join(wh, name))
+
+    staged = table("staging").filter(F.col("batch_id") == run_date)
+    # staging appends; this run's rows share one load_timestamp, the latest
+    last = staged.agg(F.max("load_timestamp")).first()[0]
+    return {
+        "staging": staged.filter(F.col("load_timestamp") == last).count(),
+        "dim_date": table("dim_date").count(),
+        "dim_customer": table("dim_customer").count(),
+        "dim_supplier": table("dim_supplier").count(),
+        "fact_orders": table("fact_orders").filter(F.col("ingest_date") == day).count(),
+        "dq_failed": table("dq_reports")
+        .filter((F.col("run_date") == day) & ~F.col("passed"))
+        .count(),
+        "report_segment_totals": table("report_segment_totals").count(),
+        "report_status_totals": table("report_status_totals").count(),
+    }
+
+
+def test_daily_etl_audit_counts_equal_recounts(spark, sf_small, tmp_path):
+    """Every audit count is observed on the write that lands its table; after
+    a first day, a second day and a rerun of the second day (append, merge
+    and idempotent-overwrite paths), each equals an independent recount of
+    what landed."""
+    wh = str(tmp_path / "wh_audit")
+    day1, day2 = _two_busy_days(spark, sf_small)
+    for run_date in (day1, day2, day2):
+        audit = run_daily_etl(spark, sf_small, wh, run_date)
+        assert audit.status == "success"
+        assert audit.records == _recount(spark, wh, run_date), run_date
+    assert audit.records["staging"] > 0 and audit.records["dim_date"] == 2
+
+
+def test_daily_etl_incremental_day_executions(spark, sf_small, tmp_path):
+    """An incremental day runs 12 SQL executions: one write per landed
+    table (staging, dim_date, two dimensions, fact, DQ, two tables per
+    report, load_logs) plus the whole-``dim_date`` count.  Before the audit
+    counts were observed on the writes, a day ran 19 (each table was read
+    back and counted after its write).  The count is the number of actions,
+    so it does not depend on the host or the data."""
+    from etl_cloud_logistics_spark.metrics import ExecutionMeter
+
+    wh = str(tmp_path / "wh_meter")
+    day1, day2 = _two_busy_days(spark, sf_small)
+    run_daily_etl(spark, sf_small, wh, day1)
+    meter = ExecutionMeter(spark)
+    run_daily_etl(spark, sf_small, wh, day2)
+    assert len(meter.read().executions) == 12
+
+
+def test_daily_etl_failed_write_logs_error_and_raises(spark, sf_small, tmp_path):
+    """A failing table write propagates, leaves one ``error`` row with the
+    message in ``load_logs``, and returns promptly: no observed count is
+    awaited for the writes after it, which never run."""
+    import threading
+
+    wh = str(tmp_path / "wh_fail")
+    os.makedirs(wh)
+    with open(os.path.join(wh, "fact_orders"), "w") as f:
+        f.write("a regular file where the fact table's directory belongs\n")
+    day1, _ = _two_busy_days(spark, sf_small)
+
+    outcome = {}
+
+    def run():
+        try:
+            run_daily_etl(spark, sf_small, wh, day1)
+        except Exception as e:
+            outcome["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "run_daily_etl still waiting after its write failed"
+    assert "error" in outcome
+
+    logs = spark.read.json(os.path.join(wh, "load_logs")).collect()
+    assert len(logs) == 1
+    assert logs[0]["status"] == "error"
+    assert logs[0]["error_message"] == str(outcome["error"])[:500]
+    assert logs[0]["error_message"]
+
+
 def test_run_curation_export_end_to_end(spark, sf_small, tmp_path):
     """The training-export composition: curated train docs land in
     deterministic shards with payload, the packing assignment covers
