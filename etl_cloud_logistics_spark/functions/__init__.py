@@ -149,9 +149,3 @@ def min_waypoint_dist_km(lat: Column, lon: Column, waypoints: Column) -> Column:
 def safe_div(num: Column, den: Column) -> Column:
     """x / NULLIF(y, 0) — the reference's divide-by-zero guard (ref A5)."""
     return num / F.when(den != 0, den)
-
-
-def age_months(col: str | Column) -> Column:
-    """Reference computes age as days/30.44 (etl_pipeline.py:707,769)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.floor(F.datediff(F.current_date(), c) / F.lit(30.44))

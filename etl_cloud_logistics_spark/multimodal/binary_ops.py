@@ -1,7 +1,7 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Opaque payloads travel as ``binary`` columns with a typed metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
+decode / feature-extract / frame-sample run as Arrow-batched
 ``mapInPandas`` operators — per-partition batch iterators, the only part of
 the engine that leaves the JVM, and it does so vectorized.
 
@@ -489,15 +489,6 @@ def audio_frame_stats(binary_df: DataFrame, frame_bytes: int = 256) -> DataFrame
     return binary_df.mapInPandas(batches, AUDIO_FRAME_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-    ]
-)
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -506,34 +497,6 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("frame_len", T.LongType()),
     ]
 )
-
-
-def resize_image(binary_df: DataFrame, target_w: int = 64, target_h: int = 64) -> DataFrame:
-    """'Resize' as a payload-rewriting batch operator: the stub re-samples
-    the byte stream to target_w*target_h bytes (repeat-truncate), standing in
-    for a PIL ``Image.resize``.  Shape matters more than pixels here: the
-    operator shows payload-in/payload-out through Arrow without the bytes
-    ever hitting a shuffle."""
-    out_len = target_w * target_h
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            def rs(p: bytes) -> bytes:
-                if not p:
-                    return bytes(out_len)
-                reps = -(-out_len // len(p))
-                return (p * reps)[:out_len]
-
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": pdf["payload"].map(rs),
-                    "width": pd.Series([target_w] * len(pdf), dtype="int64"),
-                    "height": pd.Series([target_h] * len(pdf), dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(batches, RESIZED_SCHEMA)
 
 
 def video_frame_sample(

@@ -177,20 +177,6 @@ def shard_assign(
     )
 
 
-def write_shards(
-    df: DataFrame, path: str, id_col: str = "doc_id", n_shards: int = 256
-) -> None:
-    """Deterministic sharded parquet export: one directory per shard.
-
-    ``repartition('shard')`` co-locates each shard in one task so each
-    shard directory gets exactly one file — the layout a training data
-    loader expects (shard = unit of shuffle/resume granularity).
-    """
-    shard_assign(df, id_col, n_shards).repartition(n_shards, "shard").write.mode(
-        "overwrite"
-    ).partitionBy("shard").parquet(path)
-
-
 # ---------------------------------------------------------------------------
 # Sequence packing
 # ---------------------------------------------------------------------------

@@ -39,10 +39,6 @@ def expect_in_set(col: str, allowed: list) -> Expectation:
     return Expectation(f"{col}_in_set", ~F.col(col).isin(allowed))
 
 
-def expect_between(col: str, lo, hi) -> Expectation:
-    return Expectation(f"{col}_between", ~F.col(col).between(lo, hi))
-
-
 def run_expectations(
     df: DataFrame,
     expectations: list[Expectation],

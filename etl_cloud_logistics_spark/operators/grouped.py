@@ -1,27 +1,15 @@
-"""Per-group normalization — both execution paths, by policy.
+"""Per-group z-score normalization as native window aggregates.
 
 The engine's UDF policy (SURVEY.md §2.10): native expressions first, Arrow
-batches only when Python is genuinely needed.  Group-wise z-score
-normalization is the canonical example where both exist:
-
-- :func:`normalize_native` — mean/std as window aggregates over the group
-  partition: whole-stage codegen, one shuffle on the group key.  This is
-  the production path and the one the query registry exposes (it has an
-  exact SQL oracle).
-- :func:`normalize_in_pandas` — the same semantics as a GROUPED_MAP
-  ``applyInPandas`` (Arrow-batched, one pandas frame per group).  Exists to
-  cover the grouped-map shape for operations that truly need pandas/NumPy
-  (sklearn transforms, per-group model scoring); tested equal to the
-  native twin.
-
-Scale note for the pandas path: one GROUP must fit in one executor's
-memory as a pandas frame — fine for bounded groups (per-customer,
-per-day), wrong for power-law keys; the native path has no such limit.
+batches only when Python is genuinely needed.  Mean/std here are window
+aggregates over the group partition: whole-stage codegen, one shuffle on
+the group key, and an exact SQL oracle in the query registry.  The
+GROUPED_MAP ``applyInPandas`` shape, for per-group work that truly needs
+pandas, runs in ``operators.curation.pack_sequences``.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -36,16 +24,3 @@ def normalize_native(df: DataFrame, group_col: str, value_col: str) -> DataFrame
         "z", F.when(std > 0, (F.col(value_col) - mean) / std)
     )
 
-
-def normalize_in_pandas(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-    """Same semantics via GROUPED_MAP applyInPandas (Arrow per-group)."""
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema += ", z double"
-
-    def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = pdf[value_col]
-        std = v.std()  # pandas sample std, ddof=1 — matches stddev_samp
-        z = (v - v.mean()) / std if std and std > 0 else pd.Series([None] * len(v))
-        return pdf.assign(z=z.astype("float64"))
-
-    return df.groupBy(group_col).applyInPandas(normalize, schema=out_schema)

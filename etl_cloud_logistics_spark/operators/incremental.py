@@ -192,70 +192,3 @@ def publish(state: DataFrame, spec: AggSpec) -> DataFrame:
         assert isinstance(col, Column)
         out = out.withColumn(name, col)
     return out
-
-
-def foreach_batch_refresh_ops(table, spec: AggSpec, op_col: str = "_op"):
-    """CDC-consuming twin of :func:`foreach_batch_refresh`: each micro-batch
-    is a mixed insert/retract changelog (rows carry ``op_col`` ∈ {+1, −1} —
-    the shape a Debezium/CDC source or a Spark update-mode stream emits),
-    folded into the versioned state via :func:`refresh_ops`.  Same
-    idempotent-sink contract: a replayed batch id is skipped, so crash
-    recovery cannot double-apply a retraction any more than an insert."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        latest = table.latest_version()
-        prev = None
-        if latest is not None:
-            manifest = table._read_manifest(latest)
-            if manifest.get("batch_id") == batch_id:
-                return  # replayed batch: already folded into this state
-            prev = table.read(spark, version=latest)
-        new_state = refresh_ops(prev, batch_df, spec, op_col)
-        parent = latest
-        version = 0 if parent is None else parent + 1
-        rel = table._write_data(new_state, version, "agg-refresh-ops")
-        table._commit(version, {
-            "version": version,
-            "parent": parent,
-            "operation": "agg-refresh-ops",
-            "batch_id": batch_id,
-            "files": [rel],
-            "stats": {},
-        })
-
-    return sink
-
-
-def foreach_batch_refresh(table, spec: AggSpec):
-    """``writeStream.foreachBatch`` adapter: maintain the aggregate state
-    in a versioned ``SnapshotTable`` — each micro-batch folds into the
-    prior version and commits the new state (ST5's additive-state twin of
-    ``snapshots.foreach_batch_merge``).  Replay of an already-folded batch
-    after a checkpoint restart would double-count, so the batch id is
-    recorded in the commit and re-application of the same id is skipped
-    (the standard idempotent-sink contract)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        latest = table.latest_version()
-        prev = None
-        if latest is not None:
-            manifest = table._read_manifest(latest)
-            if manifest.get("batch_id") == batch_id:
-                return  # replayed batch: already folded into this state
-            prev = table.read(spark, version=latest)
-        new_state = refresh(prev, batch_df, spec)
-        parent = latest
-        version = 0 if parent is None else parent + 1
-        rel = table._write_data(new_state, version, "agg-refresh")
-        table._commit(version, {
-            "version": version,
-            "parent": parent,
-            "operation": "agg-refresh",
-            "batch_id": batch_id,
-            "files": [rel],
-            "stats": {},
-        })
-
-    return sink

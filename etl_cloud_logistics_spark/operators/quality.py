@@ -78,27 +78,6 @@ def qa_flags(
     return out.withColumn("qa_passed", ~cond)
 
 
-def merge_aggregates(
-    old: DataFrame | None,
-    delta: DataFrame,
-    keys: list[str],
-    count_col: str = "n_orders",
-    sum_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Incremental materialized-view maintenance for algebraic aggregates:
-    combine an existing aggregate table with a new slice's aggregate by
-    summing counts/sums per key (counts and decimal sums re-aggregate
-    losslessly).  Cost is O(|delta| + |report|) — at 100 TB the daily
-    report refresh touches one day's slice, never the full fact history."""
-    if old is None:
-        return delta
-    both = old.unionByName(delta)
-    return both.groupBy(*keys).agg(
-        F.sum(count_col).alias(count_col),
-        *[F.sum(c).alias(c) for c in sum_cols],
-    )
-
-
 def mad_outlier_stats(
     df: DataFrame, col: str, group_col: str, threshold: float = 3.5
 ) -> DataFrame:

@@ -167,8 +167,8 @@ def refresh_report_segment_totals(day_fact: DataFrame, out_path: str) -> int:
        (``<out>_daily/``, dynamic partition overwrite → re-runs replace the
        day, never double-count);
     2. roll the day-grain aggregates up into the totals table — counts and
-       decimal sums re-aggregate losslessly (operators.quality
-       .merge_aggregates rationale), so the totals never rescan the fact.
+       decimal sums re-aggregate losslessly, so the totals never rescan the
+       fact.
 
     Returns the totals table's row count, observed on its write.  At
     100 TB the daily refresh cost is O(one day) + O(|report days|), versus

@@ -45,6 +45,17 @@ def _avgx(x: str) -> str:
     return f"{_sumx(x)} / COUNT({x})"
 
 
+def _avgx_round2(x: str) -> str:
+    """Oracle twin of ``F.round(avg_exact(x), 2)`` for non-negative ``x``:
+    the exact decimal mean, rounded half-up to 2 places in integer
+    arithmetic.  Spark rounds a double through its shortest decimal string,
+    so a mean of exactly 0.285 gives 0.29; DuckDB's ``ROUND(double, 2)``
+    scales the binary double (28.499999...) and gives 0.28."""
+    micros = f"CAST(SUM(CAST({x} AS DECIMAL(38,6))) * 1000000 AS HUGEINT)"
+    per_cent = f"(10000 * COUNT({x}))"
+    return f"CAST((2 * {micros} + {per_cent}) // (2 * {per_cent}) AS DOUBLE) / 100"
+
+
 # ---------------------------------------------------------------------------
 # Q1 — fleet composition (02_queries_analysis.sql:12-17): COUNT(*) GROUP BY
 # over a dimension.  Operators A1, O1.
@@ -743,7 +754,7 @@ def q10b_rank_within_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT date_trunc('month', o_orderdate) AS mes,
                COUNT(*) AS total_viajes,
                {_sumx('o_totalprice')} AS peso_total,
-               {_avgx('o_totalprice')} AS precio_promedio
+               {_avgx_round2('o_totalprice')} AS precio_promedio_viaje
         FROM orders
         WHERE o_orderstatus = 'F'
         GROUP BY date_trunc('month', o_orderdate)
@@ -757,7 +768,7 @@ def q10b_rank_within_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ROUND((total_viajes - LAG(total_viajes, 1) OVER (ORDER BY mes)) * 100.0
               / NULLIF(LAG(total_viajes, 1) OVER (ORDER BY mes), 0), 2) AS cambio_porcentual,
         ROUND(peso_total / 1000, 2) AS toneladas_transportadas,
-        ROUND(precio_promedio, 2) AS precio_promedio_viaje,
+        precio_promedio_viaje,
         AVG(total_viajes) OVER (ORDER BY mes ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
             AS promedio_movil_3m
     FROM mensual

@@ -2,34 +2,23 @@
 
 The reference's IO surface — Snowflake ``write_pandas`` bulk loads (S4),
 JSON→VARIANT staging (S5), the date-partitioned S3 lake (S7), DynamoDB
-point upserts (S8) — re-expressed as native Spark readers/writers.
+point upserts (S8) — re-expressed as native Spark writers.
 """
 
-from .bucketed import bucketed_join, read_bucketed, write_bucketed
 from .generator import generate_trips_like, uniform_ts, weighted_choice
-from .jdbc import build_jdbc_options, jdbc_reader
-from .lake import read_lake, write_partitioned_lake
-from .snapshots import ConcurrentWriteError, SnapshotTable, foreach_batch_merge
+from .lake import write_partitioned_lake
+from .snapshots import ConcurrentWriteError, SnapshotTable
 from .layout import cluster_by_zorder, zorder_key_for
-from .staging import read_json_staging, write_json_staging
-from .upsert import apply_cdc, foreach_batch_upsert, upsert_parquet
+from .staging import write_json_staging
+from .upsert import foreach_batch_upsert, upsert_parquet
 
 __all__ = [
     "write_partitioned_lake",
-    "read_lake",
     "write_json_staging",
-    "read_json_staging",
     "upsert_parquet",
     "foreach_batch_upsert",
-    "apply_cdc",
     "SnapshotTable",
     "ConcurrentWriteError",
-    "foreach_batch_merge",
-    "write_bucketed",
-    "read_bucketed",
-    "bucketed_join",
-    "jdbc_reader",
-    "build_jdbc_options",
     "generate_trips_like",
     "weighted_choice",
     "uniform_ts",

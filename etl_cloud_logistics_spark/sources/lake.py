@@ -19,7 +19,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -46,23 +46,3 @@ def write_partitioned_lake(
         .partitionBy(partition_col)
         .parquet(path)
     )
-
-
-def read_lake(
-    spark: SparkSession,
-    path: str,
-    start_date: str | None = None,
-    end_date: str | None = None,
-    partition_col: str = "ingest_date",
-) -> DataFrame:
-    """Scan the lake with partition-pruning date bounds.
-
-    The filters are on the partition column, so Catalyst prunes directories
-    at planning time — a 2-day read of a 10-year lake lists 2 directories.
-    """
-    df = spark.read.parquet(path)
-    if start_date is not None:
-        df = df.filter(F.col(partition_col) >= F.lit(start_date).cast("date"))
-    if end_date is not None:
-        df = df.filter(F.col(partition_col) <= F.lit(end_date).cast("date"))
-    return df

@@ -72,7 +72,6 @@ import os
 import shutil
 import time
 import uuid
-from collections.abc import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -702,18 +701,3 @@ class SnapshotTable:
                     shutil.rmtree(full)
                     removed.append(rel)
         return removed
-
-
-def foreach_batch_merge(
-    table: SnapshotTable, keys: list[str], version_col: str
-) -> Callable[[DataFrame, int], None]:
-    """``writeStream.foreachBatch`` adapter: each micro-batch MERGEs into the
-    versioned state table (ST5 over the transaction-log path — the durable
-    twin of ``upsert.foreach_batch_upsert``; checkpoint replay of a batch
-    re-merges idempotently because resolution is by ``version_col``, not
-    arrival order)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        table.merge(batch_df.sparkSession, batch_df, keys, version_col)
-
-    return sink

@@ -1,4 +1,4 @@
-"""JSON staging sink/source (operator S5, SURVEY.md §2.1).
+"""JSON staging sink (operator S5, SURVEY.md §2.1).
 
 The reference serializes each daily extract to JSON and lands it in a
 Snowflake VARIANT staging table (``etl_pipeline.py:966-974``,
@@ -9,24 +9,15 @@ one JSON document per row (not per batch, which would concentrate a day into
 a single driver-sized string) plus batch metadata columns.
 
 Scale note: per-row JSON keeps the staging write embarrassingly parallel and
-the read side re-projectable by Catalyst (``from_json`` then column pruning).
+a read-back re-projectable by Catalyst (``from_json`` then column pruning).
 A per-batch mega-document (the reference's shape) caps out at driver memory;
 this is the deliberate departure, cited in SURVEY.md §3.2.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-STAGING_SCHEMA = T.StructType(
-    [
-        T.StructField("raw_data", T.StringType()),  # JSON document (VARIANT twin)
-        T.StructField("batch_id", T.StringType()),
-        T.StructField("load_timestamp", T.TimestampType()),
-    ]
-)
 
 
 def write_json_staging(df: DataFrame, path: str, batch_id: str) -> None:
@@ -41,24 +32,3 @@ def write_json_staging(df: DataFrame, path: str, batch_id: str) -> None:
         .write.mode("append")
         .parquet(path)
     )
-
-
-def read_json_staging(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    batch_id: str | None = None,
-) -> DataFrame:
-    """Schema-on-read over the staging area (``PARSE_JSON`` twin): parse
-    ``raw_data`` back into typed columns with an explicit target schema.
-
-    Rows whose document fails to parse surface as all-null structs rather
-    than failing the job (the VARIANT-staging contract: staging never
-    rejects)."""
-    staged = spark.read.schema(STAGING_SCHEMA).parquet(path)
-    if batch_id is not None:
-        staged = staged.filter(F.col("batch_id") == batch_id)
-    parsed = staged.select(
-        F.from_json("raw_data", schema).alias("doc"), "batch_id", "load_timestamp"
-    )
-    return parsed.select("doc.*", "batch_id", "load_timestamp")

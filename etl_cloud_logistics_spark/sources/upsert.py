@@ -39,10 +39,9 @@ def atomic_overwrite(df: DataFrame, target_path: str) -> None:
     is a brief window between the two renames where ``target_path`` does
     not exist — a concurrent reader must retry.  A crash inside that window
     leaves the table at ``._old`` only; the next call recovers it
-    automatically before writing.  Local-fs semantics (same pattern as
-    sources.maintenance.compact_partition); object stores use a commit
-    protocol / table format instead — or ``SnapshotTable``, whose readers
-    never observe a missing path."""
+    automatically before writing.  Local-fs semantics; object stores use
+    a commit protocol / table format instead — or ``SnapshotTable``, whose
+    readers never observe a missing path."""
     tmp = target_path.rstrip("/") + "._tmp_swap"
     old = target_path.rstrip("/") + "._old"
     _recover_interrupted_swap(target_path)
@@ -119,32 +118,3 @@ def foreach_batch_upsert(
         upsert_parquet(batch_df.sparkSession, target_path, batch_df, keys, version_col)
 
     return sink
-
-
-def apply_cdc(
-    snapshot: DataFrame | None,
-    changes: DataFrame,
-    keys: list[str],
-    op_col: str = "op",
-    version_col: str = "version",
-) -> DataFrame:
-    """Apply a change-data-capture batch (ops: insert/update/delete) to a
-    keyed snapshot — the general form of the upsert sink (which cannot
-    delete).  Per key, the highest-version row wins; if that winner is a
-    delete, the key disappears from the snapshot.
-
-    One shuffle (the max_by hash-agg on the key), no window sort; the same
-    layout runs inside ``foreachBatch`` against a CDC stream."""
-    tagged_changes = changes
-    if snapshot is not None:
-        # existing rows participate as lowest-priority upserts
-        base = snapshot.withColumn(op_col, F.lit("upsert"))
-        missing = [c for c in changes.columns if c not in base.columns]
-        for c in missing:
-            base = base.withColumn(c, F.lit(None))
-        tagged_changes = base.select(*changes.columns).unionByName(changes)
-    payload = [c for c in tagged_changes.columns if c not in keys]
-    latest = tagged_changes.groupBy(*keys).agg(
-        *[F.max_by(c, F.col(version_col)).alias(c) for c in payload]
-    )
-    return latest.filter(F.col(op_col) != "delete").drop(op_col)

@@ -82,7 +82,7 @@ def read_event_stream(
       (:func:`decode_event_json`) — the production broker path.  Needs the
       spark-sql-kafka connector on the classpath and a reachable
       bootstrap server; neither exists in the test sandbox, so only the
-      decode half is differential-tested (like sources/jdbc.py);
+      decode half is differential-tested;
     - ``rate``: Spark's built-in rate source mapped to deterministic
       synthetic events — a self-contained soak/throughput source that
       runs anywhere, used to exercise the multi-source seam in CI."""
@@ -753,8 +753,8 @@ def foreach_batch_heavy_hitters(state_path: str, item_col: str, k: int = 256):
     so after any prefix of the stream every item with true count
     > n_seen/(k+1) is present and counts undercount by at most that bound.
     State persists via ``atomic_overwrite`` and carries the last applied
-    batch id, making crash-replays of a batch idempotent (the same
-    replay-safe-batch-id contract as ``foreach_batch_refresh_ops``)."""
+    batch id, making crash-replays of a batch idempotent: a batch id at or
+    below the last applied one is skipped."""
     import os
 
     from ..operators.heavyhitters import mg_compress, mg_sketch_partials

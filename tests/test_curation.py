@@ -17,7 +17,6 @@ from etl_cloud_logistics_spark.operators.curation import (
     pack_sequences,
     shard_assign,
     split_assign,
-    write_shards,
 )
 
 BUDGET = 256
@@ -119,23 +118,6 @@ def test_shard_assignment_stable_under_repartition(docs):
     merged = a.merge(b, on="doc_id", suffixes=("_a", "_b"))
     assert (merged.shard_a == merged.shard_b).all()
     assert a.shard.between(0, 7).all()
-
-
-def test_write_shards_layout(spark, docs, tmp_path):
-    """Sharded export: one directory per non-empty shard, each with exactly
-    one data file; reading back returns every row exactly once."""
-    import glob
-
-    path = str(tmp_path / "shards")
-    write_shards(docs, path, n_shards=8)
-    shard_dirs = sorted(glob.glob(f"{path}/shard=*"))
-    assert shard_dirs, "no shard directories written"
-    for d in shard_dirs:
-        files = glob.glob(f"{d}/*.parquet")
-        assert len(files) == 1, f"{d}: expected 1 file, got {len(files)}"
-    back = spark.read.parquet(path)
-    assert back.count() == docs.count()
-    assert back.select("doc_id").distinct().count() == docs.count()
 
 
 def test_decontam_broadcasts_bench_side(spark, docs):

@@ -1,6 +1,6 @@
 """Incremental aggregate maintenance (operators/incremental.py): delta
 refresh equals full rebuild bit-for-bit, arbitrary fold orders agree
-(monoid merge), and the streaming foreachBatch adapter is replay-safe."""
+(monoid merge), and retractions fold through the same merge."""
 
 from __future__ import annotations
 
@@ -8,12 +8,10 @@ from pyspark.sql import functions as F
 
 from etl_cloud_logistics_spark.operators.incremental import (
     AggSpec,
-    foreach_batch_refresh,
     publish,
     refresh,
     refresh_ops,
 )
-from etl_cloud_logistics_spark.sources.snapshots import SnapshotTable
 
 SPEC = AggSpec(
     keys=["k"],
@@ -147,48 +145,6 @@ def test_retraction_rejects_minmax_measures(spark):
             _mk_ops(spark, [(1, 1.0, 1)]),
             AggSpec(keys=["k"], measures=[("total_dec", "v", "sum")]),
         )
-
-
-def test_foreach_batch_refresh_folds_and_skips_replay(spark, tmp_path):
-    """Each micro-batch folds into the versioned state; re-delivery of the
-    last batch id (checkpoint replay after a crash) must not double-count."""
-    t = SnapshotTable(str(tmp_path / "agg"))
-    sink = foreach_batch_refresh(t, SPEC)
-    sink(_mk(spark, [(1, 1.0), (2, 2.0)]), batch_id=0)
-    sink(_mk(spark, [(1, 10.0)]), batch_id=1)
-    after = _out(publish(t.read(spark), SPEC))
-    assert after == _out(
-        publish(refresh(None, _mk(spark, [(1, 1.0), (2, 2.0), (1, 10.0)]), SPEC), SPEC)
-    )
-    sink(_mk(spark, [(1, 10.0)]), batch_id=1)  # replayed batch
-    assert _out(publish(t.read(spark), SPEC)) == after
-    assert t.latest_version() == 1  # replay committed nothing
-
-
-def test_foreach_batch_refresh_ops_cdc_feed(spark, tmp_path):
-    """The CDC changelog sink: micro-batches carrying +1/-1 ops fold into
-    the versioned state; the final state equals a full rebuild over the
-    surviving rows, a fully-retracted key leaves the state, and a replayed
-    batch id (crash recovery) applies nothing — retractions included."""
-    from etl_cloud_logistics_spark.operators.incremental import (
-        foreach_batch_refresh_ops,
-    )
-
-    t = SnapshotTable(str(tmp_path / "cdc_agg"))
-    sink = foreach_batch_refresh_ops(t, RSPEC)
-    sink(_mk_ops(spark, [(1, 1.0, 1), (1, 3.0, 1), (2, 2.0, 1)]), batch_id=0)
-    # batch 1: update k=1's 3.0 -> 5.0, delete k=2 entirely, insert k=3
-    batch1 = [(1, 3.0, -1), (1, 5.0, 1), (2, 2.0, -1), (3, 7.0, 1)]
-    sink(_mk_ops(spark, batch1), batch_id=1)
-    after = _rout(publish(t.read(spark), RSPEC))
-    want = _rout(
-        publish(refresh(None, _mk(spark, [(1, 1.0), (1, 5.0), (3, 7.0)]), RSPEC), RSPEC)
-    )
-    assert after == want
-    assert {r["k"] for r in t.read(spark).collect()} == {1, 3}  # k=2 gone
-    sink(_mk_ops(spark, batch1), batch_id=1)  # replayed batch
-    assert _rout(publish(t.read(spark), RSPEC)) == after
-    assert t.latest_version() == 1  # replay committed nothing
 
 
 def test_hll_distinct_incremental_equals_full_rebuild(spark):

@@ -245,24 +245,6 @@ def test_salted_agg_equals_plain(spark, sf_small):
         assert abs(s[k] - p[k]) < 1e-6 * max(1.0, abs(p[k]))
 
 
-def test_replicated_skew_join_equals_plain(spark, sf_small):
-    from etl_cloud_logistics_spark.catalog import load_table
-    from etl_cloud_logistics_spark.operators.skew import replicated_skew_join
-    from pyspark.sql import functions as F
-
-    orders = load_table(spark, sf_small, "orders")
-    customer = load_table(spark, sf_small, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    hot = [r["o_custkey"] for r in orders.groupBy("o_custkey").count().orderBy(F.desc("count")).limit(3).collect()]
-    salted = replicated_skew_join(orders, customer, "o_custkey", hot_keys=hot, n_salts=4)
-    plain = orders.join(customer, "o_custkey")
-    assert salted.count() == plain.count()
-    a = {(r["o_orderkey"], r["c_mktsegment"]) for r in salted.collect()}
-    b = {(r["o_orderkey"], r["c_mktsegment"]) for r in plain.collect()}
-    assert a == b
-
-
 def test_schema_gate_rejects_drift(spark):
     """S9: the schema validation gate fails fast on missing columns and
     type drift (ref etl_pipeline.py:194-224)."""
@@ -282,28 +264,8 @@ def test_schema_gate_rejects_drift(spark):
         validate_schema(wrong_type, "region")
 
 
-def test_merge_aggregates_combines_losslessly(spark):
-    from etl_cloud_logistics_spark.operators.quality import merge_aggregates
-
-    old = spark.createDataFrame(
-        [("A", 10, 100.0), ("B", 5, 50.0)], "seg string, n_orders long, rev double"
-    )
-    delta = spark.createDataFrame(
-        [("A", 2, 20.0), ("C", 1, 10.0)], "seg string, n_orders long, rev double"
-    )
-    out = {
-        r["seg"]: (r["n_orders"], r["rev"])
-        for r in merge_aggregates(old, delta, ["seg"], count_col="n_orders", sum_cols=("rev",)).collect()
-    }
-    assert out == {"A": (12, 120.0), "B": (5, 50.0), "C": (1, 10.0)}
-    # bootstrap: no existing table
-    boot = merge_aggregates(None, delta, ["seg"], count_col="n_orders", sum_cols=("rev",))
-    assert boot.count() == 2
-
-
 def test_expectations_flag_planted_violations(spark):
     from etl_cloud_logistics_spark.operators.expectations import (
-        expect_between,
         expect_not_null,
         expect_positive,
         run_expectations,
@@ -316,22 +278,18 @@ def test_expectations_flag_planted_violations(spark):
         r["expectation"]: (r["n_violations"], r["passed"])
         for r in run_expectations(
             df,
-            [expect_positive("v"), expect_not_null("v"), expect_between("v", 0, 100)],
+            [expect_positive("v"), expect_not_null("v")],
             unique_cols=["k"],
         ).collect()
     }
     assert rep["v_positive"] == (2, False)      # -5 and NULL both violate
     assert rep["v_not_null"] == (1, False)
-    assert rep["v_between"] == (3, False)       # -5, 200, and NULL (nulls fail checks)
     assert rep["k_unique"] == (1, False)        # k=1 twice
 
 
 def test_grouped_normalize_pandas_equals_native(spark, sf_small):
     from etl_cloud_logistics_spark.catalog import load_table
-    from etl_cloud_logistics_spark.operators.grouped import (
-        normalize_in_pandas,
-        normalize_native,
-    )
+    from etl_cloud_logistics_spark.operators.grouped import normalize_native
 
     cust = load_table(spark, sf_small, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
@@ -340,33 +298,21 @@ def test_grouped_normalize_pandas_equals_native(spark, sf_small):
         r["c_custkey"]: r["z"]
         for r in normalize_native(cust, "c_nationkey", "c_acctbal").collect()
     }
-    arrow = {
-        r["c_custkey"]: r["z"]
-        for r in normalize_in_pandas(cust, "c_nationkey", "c_acctbal").collect()
+    # reference: pandas per-group z-score over the collected rows (sample
+    # std, ddof=1, the stddev_samp convention; NULL where a group has no
+    # spread)
+    pdf = cust.toPandas()
+    by_nation = pdf.groupby("c_nationkey")["c_acctbal"]
+    std = by_nation.transform("std")
+    z = (pdf["c_acctbal"] - by_nation.transform("mean")) / std
+    want = {
+        k: (v if s > 0 else None)
+        for k, v, s in zip(pdf["c_custkey"], z, std)
     }
-    assert native.keys() == arrow.keys()
+    assert native.keys() == want.keys()
     for k in native:
-        a, b = native[k], arrow[k]
+        a, b = native[k], want[k]
         assert (a is None and b is None) or abs(a - b) < 1e-9
-
-
-def test_replicated_skew_join_rejects_build_outer(spark, sf_small):
-    """right/full outer would emit each unmatched (replicated) build row once
-    per salt — the operator must refuse instead of silently duplicating."""
-    import pytest as _pytest
-
-    from etl_cloud_logistics_spark.catalog import load_table
-    from etl_cloud_logistics_spark.operators.skew import replicated_skew_join
-
-    orders = load_table(spark, sf_small, "orders")
-    customer = load_table(spark, sf_small, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    for how in ("right", "full", "outer"):
-        with _pytest.raises(ValueError, match="inner.*left"):
-            replicated_skew_join(
-                orders, customer, "o_custkey", hot_keys=[1], n_salts=4, how=how
-            )
 
 
 def test_neardup_components_raises_on_non_convergence(spark):

@@ -107,6 +107,36 @@ def test_extra_query_values_match_oracle(spark, sf_small, duck, name):
     )
 
 
+def test_q11_half_cent_mean_rounds_half_up_in_both_engines(spark, sf_small, tmp_path):
+    """A month whose exact mean price is a half cent (0.28 and 0.29: mean
+    0.285) prints 0.29 from the engine AND from its oracle.  Spark rounds
+    the double mean through its shortest decimal form; the oracle must
+    round the exact decimal mean — DuckDB's ``ROUND(double, 2)`` scales the
+    binary double just below 0.285 and printed 0.28."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(f"{sf_small}/orders.parquet").remove_metadata()
+    rows = {
+        "o_orderkey": [1, 2],
+        "o_custkey": [1, 1],
+        "o_orderstatus": ["F", "F"],
+        "o_totalprice": [0.28, 0.29],
+        "o_orderdate": [datetime.datetime(1995, 1, 3), datetime.datetime(1995, 1, 9)],
+        "o_orderpriority": ["1-URGENT", "1-URGENT"],
+    }
+    pq.write_table(pa.table(rows, schema=schema), str(tmp_path / "orders.parquet"))
+    spec = REGISTRY["q11_monthly_trend"]
+    engine = spec.fn(spark, str(tmp_path)).collect()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{tmp_path}/orders.parquet')")
+    oracle = con.execute(spec.oracle).df()
+    assert [r["precio_promedio_viaje"] for r in engine] == [0.29]
+    assert oracle["precio_promedio_viaje"].tolist() == [0.29]
+
+
 def test_sql_api_over_registered_views(spark, sf_small):
     """spark.sql over the catalog's temp views matches the DataFrame path —
     the engine's second entry point (SURVEY.md §3.1)."""

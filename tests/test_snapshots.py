@@ -12,7 +12,6 @@ import pytest
 from etl_cloud_logistics_spark.sources.snapshots import (
     ConcurrentWriteError,
     SnapshotTable,
-    foreach_batch_merge,
 )
 
 
@@ -180,16 +179,15 @@ def test_merge_pinned_parent_detects_interleaved_commit(spark, tmp_path):
 
 
 def test_foreach_batch_merge_idempotent_replay(spark, tmp_path):
-    """Checkpoint replay of a micro-batch must not change the result:
-    resolution is by version_col, so re-merging the same batch is a no-op."""
+    """Replaying a batch must not change the result: resolution is by
+    version_col, so merging the same batch twice equals merging it once."""
     t = SnapshotTable(str(tmp_path / "state"))
-    sink = foreach_batch_merge(t, keys=["k"], version_col="version")
     b1 = _mk(spark, [(1, "a", 1), (2, "b", 1)])
     b2 = _mk(spark, [(2, "B", 2)])
-    sink(b1, 0)
-    sink(b2, 1)
+    t.merge(spark, b1, keys=["k"], version_col="version")
+    t.merge(spark, b2, keys=["k"], version_col="version")
     after = _rows(t.read(spark), "k", "val", "version")
-    sink(b2, 1)  # replayed batch after a simulated crash
+    t.merge(spark, b2, keys=["k"], version_col="version")  # replayed batch
     assert _rows(t.read(spark), "k", "val", "version") == after
     assert after == [(1, "a", 1), (2, "B", 2)]
 
@@ -569,16 +567,15 @@ def test_snapshot_table_matches_model_under_random_op_sequences(spark, tmp_path)
 
 
 def test_foreach_batch_merge_evolves_schema_mid_stream(spark, tmp_path):
-    """A later micro-batch carrying a new column evolves the table through
-    the foreachBatch merge sink — the shape a CDC feed takes when the
-    upstream adds a field mid-stream."""
+    """A later batch carrying a new column evolves the table through
+    ``merge`` — the shape a CDC feed takes when the upstream adds a field
+    mid-stream."""
     t = SnapshotTable(str(tmp_path / "tbl"))
-    sink = foreach_batch_merge(t, keys=["k"], version_col="version")
-    sink(_mk(spark, [(1, "a", 1), (2, "b", 1)]), 0)
+    t.merge(spark, _mk(spark, [(1, "a", 1), (2, "b", 1)]), keys=["k"], version_col="version")
     evolved = spark.createDataFrame(
         [(2, "b2", 2, 0.5)], "k int, val string, version int, score double"
     )
-    sink(evolved, 1)
+    t.merge(spark, evolved, keys=["k"], version_col="version")
     got = {r["k"]: (r["val"], r["score"]) for r in t.read(spark).collect()}
     assert got == {1: ("a", None), 2: ("b2", 0.5)}
 

@@ -4,15 +4,12 @@ lake, S8 keyed upsert)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_cloud_logistics_spark.catalog import SCHEMAS, load_table
 from etl_cloud_logistics_spark.sources import (
     foreach_batch_upsert,
-    read_json_staging,
-    read_lake,
     upsert_parquet,
     write_json_staging,
     write_partitioned_lake,
@@ -24,13 +21,13 @@ def test_partitioned_lake_roundtrip_and_pruning(spark, sf_small, tmp_path):
     orders = load_table(spark, sf_small, "orders")
     write_partitioned_lake(orders, lake, date_col="o_orderdate")
 
-    full = read_lake(spark, lake)
+    full = spark.read.parquet(lake)
     assert full.count() == orders.count()
 
     # pick a real date and prune to it
     some_day = orders.select(F.to_date("o_orderdate").alias("d")).distinct().orderBy("d").first()["d"]
     day_str = some_day.isoformat()
-    pruned = read_lake(spark, lake, start_date=day_str, end_date=day_str)
+    pruned = full.filter(F.col("ingest_date") == F.lit(day_str).cast("date"))
     expected = orders.filter(F.to_date("o_orderdate") == F.lit(day_str)).count()
     assert pruned.count() == expected
 
@@ -52,7 +49,7 @@ def test_dynamic_partition_overwrite_replaces_only_touched_day(spark, tmp_path):
         "d", F.col("d").cast("timestamp")
     )
     write_partitioned_lake(df2, lake, date_col="d")
-    out = {(r["k"], r["v"]) for r in read_lake(spark, lake).collect()}
+    out = {(r["k"], r["v"]) for r in spark.read.parquet(lake).collect()}
     assert out == {(1, "a"), (3, "c")}
 
 
@@ -60,23 +57,15 @@ def test_json_staging_roundtrip(spark, sf_small, tmp_path):
     staging = str(tmp_path / "staging")
     nation = load_table(spark, sf_small, "nation")
     write_json_staging(nation, staging, batch_id="b1")
-    back = read_json_staging(spark, staging, SCHEMAS["nation"], batch_id="b1")
+    staged = spark.read.parquet(staging)
+    assert set(staged.columns) == {"raw_data", "batch_id", "load_timestamp"}
+    back = staged.filter(F.col("batch_id") == "b1").select(
+        F.from_json("raw_data", SCHEMAS["nation"]).alias("doc")
+    ).select("doc.*")
     assert back.count() == nation.count()
     orig = {tuple(r) for r in nation.collect()}
     rt = {(r["n_nationkey"], r["n_name"], r["n_regionkey"]) for r in back.collect()}
     assert rt == orig
-    assert set(back.columns) == {"n_nationkey", "n_name", "n_regionkey", "batch_id", "load_timestamp"}
-
-
-def test_json_staging_bad_doc_is_null_not_fail(spark, tmp_path):
-    staging = str(tmp_path / "staging_bad")
-    bad = spark.createDataFrame(
-        [Row(raw_data="{not json", batch_id="b1")],
-    ).withColumn("load_timestamp", F.current_timestamp())
-    bad.write.mode("append").parquet(staging)
-    back = read_json_staging(spark, staging, SCHEMAS["nation"])
-    rows = back.collect()
-    assert len(rows) == 1 and rows[0]["n_nationkey"] is None
 
 
 def test_upsert_parquet_last_writer_wins(spark, tmp_path):
@@ -141,63 +130,6 @@ def test_foreach_batch_upsert_streaming(spark, sf_small, tmp_path):
         assert got[r["user_id"]] == r["max_id"]
 
 
-def test_bucketed_join_has_no_shuffle(spark, sf_small, tmp_path):
-    """Co-located bucketed join: both sides pre-hashed on the key → the
-    join plan contains NO shuffle exchange (the 100 TB fact-join layout)."""
-    from etl_cloud_logistics_spark.sources.bucketed import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    orders = load_table(spark, sf_small, "orders")
-    lineitem = load_table(spark, sf_small, "lineitem").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    write_bucketed(orders, "b_orders", "o_orderkey", n_buckets=4)
-    write_bucketed(lineitem, "b_lineitem", "o_orderkey", n_buckets=4)
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    # force the non-broadcast path: at real fact×fact scale neither side
-    # broadcasts, which is exactly when bucketing pays
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey")
-        # correctness: same as the plain join
-        plain = orders.join(lineitem, "o_orderkey")
-        assert joined.count() == plain.count()
-        # plan: no Exchange feeding the SortMergeJoin
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan
-        # aggregation on the bucket key also skips its exchange
-        agg = spark.table("b_orders").groupBy("o_orderkey").count()
-        agg_plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in agg_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_jdbc_reader_builds_partitioned_options(spark):
-    from etl_cloud_logistics_spark.sources.jdbc import build_jdbc_options, jdbc_reader
-
-    opts = build_jdbc_options(
-        url="jdbc:postgresql://host/db",
-        table="trips",
-        partition_column="trip_id",
-        lower_bound=0,
-        upper_bound=100000,
-        num_partitions=16,
-    )
-    assert opts["partitionColumn"] == "trip_id"
-    assert opts["numPartitions"] == "16"
-    assert opts["pushDownPredicate"] == "true"
-    with pytest.raises(ValueError, match="lower_bound"):
-        build_jdbc_options("jdbc:x", "t", partition_column="k")
-    # reader construction itself succeeds without a database
-    jdbc_reader(spark, url="jdbc:postgresql://host/db", table="trips")
-
-
 def test_generator_deterministic_and_invariants(spark):
     from etl_cloud_logistics_spark.sources.generator import generate_trips_like
 
@@ -217,141 +149,6 @@ def test_generator_deterministic_and_invariants(spark):
     }
     assert abs(frac["completed"] - 0.85) < 0.03
     assert abs(frac["cancelled"] - 0.05) < 0.02
-
-
-def test_apply_cdc_upserts_and_deletes(spark):
-    from etl_cloud_logistics_spark.sources import apply_cdc
-
-    schema = "k long, val string, op string, version long"
-    snap = spark.createDataFrame(
-        [(1, "a", "upsert", 10), (2, "b", "upsert", 11), (3, "c", "upsert", 12)], schema
-    ).drop("op")
-    snap = snap.withColumn("op", F.lit("upsert")).select("k", "val", "op", "version").drop("op")
-    changes = spark.createDataFrame(
-        [
-            (2, "b2", "update", 20),   # update wins over snapshot
-            (3, None, "delete", 21),   # delete removes the key
-            (4, "d", "insert", 22),    # new key
-            (4, "d2", "update", 23),   # later change to the same new key
-            (1, "stale", "update", 5), # older than snapshot → loses
-        ],
-        schema,
-    )
-    out = {r["k"]: (r["val"], r["version"]) for r in apply_cdc(snap, changes, ["k"]).collect()}
-    assert out == {1: ("a", 10), 2: ("b2", 20), 4: ("d2", 23)}
-    # bootstrap from nothing
-    boot = apply_cdc(None, changes, ["k"])
-    assert {r["k"] for r in boot.collect()} == {1, 2, 4}
-
-
-def test_compact_partition_reduces_files_preserves_rows(spark, sf_small, tmp_path):
-    import os
-
-    from etl_cloud_logistics_spark.sources.maintenance import compact_partition
-
-    lake = str(tmp_path / "clake")
-    orders = load_table(spark, sf_small, "orders")
-    write_partitioned_lake(orders.repartition(8), lake, date_col="o_orderdate")
-    some_day = (
-        orders.select(F.to_date("o_orderdate").alias("d")).groupBy("d").count()
-        .orderBy(F.desc("count")).first()["d"].isoformat()
-    )
-    part_dir = os.path.join(lake, f"ingest_date={some_day}")
-    before_files = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-    before_rows = spark.read.parquet(part_dir).count()
-
-    n = compact_partition(spark, lake, "ingest_date", some_day, target_files=1)
-    after_files = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-    assert n == before_rows
-    assert len(after_files) == 1 and len(after_files) <= len(before_files)
-    # whole lake still consistent
-    assert read_lake(spark, lake).count() == orders.count()
-
-
-def test_sorted_lake_files_have_disjoint_ranges(spark, sf_small, tmp_path):
-    """The sorted layout must actually cluster: per-file min/max of the sort
-    key (from the parquet footers via pyarrow) may not overlap."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from etl_cloud_logistics_spark.sources.maintenance import write_sorted_lake
-
-    out = str(tmp_path / "sorted")
-    orders = load_table(spark, sf_small, "orders")
-    write_sorted_lake(orders, out, sort_cols=["o_totalprice"], n_files=4)
-
-    ranges = []
-    for f in os.listdir(out):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(out, f)).metadata
-        idx = md.schema.to_arrow_schema().get_field_index("o_totalprice")
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    assert len(ranges) == 4
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # disjoint file ranges → min/max pruning works
-    # rows preserved
-    assert spark.read.parquet(out).count() == orders.count()
-
-
-def test_jdbc_live_roundtrip_embedded_derby(spark, tmp_path):
-    """Live end-to-end exercise of the JDBC option plumbing (r3 VERDICT
-    missing-item 1: the options were built but never executed against a
-    real server).  No external database exists in this sandbox, but the
-    pyspark distribution ships Apache Derby (the Hive-metastore engine),
-    whose EMBEDDED driver runs the SQL engine inside this same JVM — a
-    genuine JDBC server path: Spark's JDBCRelation plans range predicates,
-    ships them over java.sql, and Derby executes them.
-
-    Covers: jdbc write → partitioned jdbc_reader read (one range query per
-    partition, the S1 scan-parallelism contract) → row/value equality →
-    filter pushdown into the JDBC source (PushedFilters in the scan)."""
-    import os
-
-    from etl_cloud_logistics_spark.sources.jdbc import jdbc_reader
-
-    os.environ.setdefault("DERBY_OPTS", "-Dderby.stream.error.file=/dev/null")
-    url = f"jdbc:derby:{tmp_path}/ordersdb;create=true"
-    driver = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    rows = [(i, float(i) * 1.5, f"status-{i % 3}") for i in range(1000)]
-    src = spark.createDataFrame(rows, "o_key bigint, o_price double, o_status string")
-    (
-        src.write.format("jdbc")
-        .options(url=url, dbtable="orders_jdbc", **driver)
-        # Derby maps Spark StringType to CLOB by default, which cannot be
-        # compared/pushed down — pin a VARCHAR, as a real deployment would
-        .option("createTableColumnTypes", "o_status VARCHAR(16)")
-        .mode("overwrite")
-        .save()
-    )
-
-    reader = jdbc_reader(
-        spark,
-        url=url,
-        table="orders_jdbc",
-        partition_column="o_key",
-        lower_bound=0,
-        upper_bound=1000,
-        num_partitions=4,
-        properties=driver,
-    )
-    df = reader.load()
-    # the partitioned scan really splits into one range query per partition
-    assert df.rdd.getNumPartitions() == 4
-    got = sorted((r.o_key, r.o_price, r.o_status) for r in df.collect())
-    assert got == rows
-
-    filtered = df.filter((F.col("o_key") >= 100) & (F.col("o_key") < 200))
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters:" in plan and "GreaterThanOrEqual(o_key,100)" in plan, plan
-    assert filtered.count() == 100
 
 
 def test_small_heavy_scans_are_parallelized(spark, sf_small):
@@ -395,173 +192,6 @@ def test_heavy_scan_parallelization_noop_at_scale(spark, sf_small):
             catalog._TABLE_CACHE.pop(key, None)
 
 
-# --- textfiles: JSONL / CSV ingestion with quarantine -----------------------
-
-
-def test_read_jsonl_corpus_quarantines_bad_lines(spark, tmp_path):
-    from etl_cloud_logistics_spark.sources.textfiles import read_jsonl_corpus
-    from pyspark.sql import types as T
-
-    p = tmp_path / "shard"
-    p.mkdir()
-    (p / "part-0.jsonl").write_text(
-        "\n".join(
-            [
-                '{"doc_id": 1, "text": "hello", "lang": "en"}',
-                "not json at all",
-                '{"doc_id": "oops", "text": "bad type", "lang": "en"}',
-                '{"doc_id": 3, "lang": "de"}',  # missing required text
-                "",
-                '{"doc_id": 4, "text": "ok", "lang": "fr"}',
-            ]
-        )
-    )
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
-    good, quar = read_jsonl_corpus(spark, str(p), schema, required=["text"])
-    g = {r.doc_id: r.text for r in good.collect()}
-    assert g == {1: "hello", 4: "ok"}
-    assert set(good.columns) == {"src_file", "doc_id", "text", "lang"}
-    q = sorted((r.reason, r.raw_line) for r in quar.collect())
-    assert [r for r, _ in q] == ["malformed", "malformed", "missing_required"]
-    # quarantined lines are verbatim — replayable after a fix
-    assert ("malformed", "not json at all") in q
-
-
-def test_read_csv_corpus_quarantines_and_drops_header(spark, tmp_path):
-    from etl_cloud_logistics_spark.sources.textfiles import read_csv_corpus
-    from pyspark.sql import types as T
-
-    p = tmp_path / "csv"
-    p.mkdir()
-    (p / "a.csv").write_text(
-        "\n".join(
-            [
-                "order_id,status,total",
-                "1,OPEN,10.5",
-                "2,CLOSED,notanumber",
-                "3,OPEN",
-                "4,SHIPPED,99.0",
-            ]
-        )
-    )
-    schema = T.StructType(
-        [
-            T.StructField("order_id", T.LongType()),
-            T.StructField("status", T.StringType()),
-            T.StructField("total", T.DoubleType()),
-        ]
-    )
-    good, quar = read_csv_corpus(
-        spark, str(p), schema, required=["order_id", "total"], header=True
-    )
-    g = {r.order_id: (r.status, r.total) for r in good.collect()}
-    assert g == {1: ("OPEN", 10.5), 4: ("SHIPPED", 99.0)}
-    reasons = sorted(r.reason for r in quar.collect())
-    assert len(reasons) == 2 and "OPEN" not in g.get(3, ("", 0.0))
-
-
-def test_read_csv_header_drop_is_positional_not_textual(spark, tmp_path):
-    """The header drop removes the FIRST PHYSICAL LINE per file, never a
-    data row that textually equals the field names, and it removes a real
-    header even when its spelling differs from the schema (extra spaces /
-    case) — the two failure modes of text-matching the header."""
-    from pyspark.sql import types as T
-
-    from etl_cloud_logistics_spark.sources.textfiles import read_csv_corpus
-
-    p = tmp_path / "csvpos"
-    p.mkdir()
-    # all-string schema: under text matching, a.csv's row 2 ("name,city" as
-    # DATA) would vanish, and b.csv's spaced/cased header would ingest as data
-    (p / "a.csv").write_text("name,city\nalice,rome\nname,city\nbob,oslo\n")
-    (p / "b.csv").write_text("Name , City\ncarol,lima\n")
-    schema = T.StructType(
-        [T.StructField("name", T.StringType()), T.StructField("city", T.StringType())]
-    )
-    good, quar = read_csv_corpus(spark, str(p), schema, header=True)
-    rows = {(r.name, r.city) for r in good.collect()}
-    assert rows == {
-        ("alice", "rome"),
-        ("name", "city"),  # the legitimate data row survives
-        ("bob", "oslo"),
-        ("carol", "lima"),  # b.csv's nonstandard header was still dropped
-    }
-    assert good.count() == 4 and quar.count() == 0
-
-
-def test_jsonl_round_trip(spark, tmp_path):
-    from etl_cloud_logistics_spark.sources.textfiles import (
-        read_jsonl_corpus,
-        write_jsonl,
-    )
-    from pyspark.sql import types as T
-
-    df = spark.createDataFrame(
-        [(i, f"doc {i}", "en") for i in range(20)],
-        "doc_id long, text string, lang string",
-    )
-    out = str(tmp_path / "export")
-    write_jsonl(df.repartition(3), out)
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
-    good, quar = read_jsonl_corpus(spark, out, schema, required=["doc_id", "text"])
-    assert quar.count() == 0
-    back = sorted((r.doc_id, r.text, r.lang) for r in good.collect())
-    assert back == sorted((r.doc_id, r.text, r.lang) for r in df.collect())
-
-
-def test_jsonl_schema_must_not_claim_sentinel(spark):
-    import pytest as _pytest
-
-    from etl_cloud_logistics_spark.sources.textfiles import read_jsonl_corpus
-    from pyspark.sql import types as T
-
-    schema = T.StructType([T.StructField("_corrupt_record", T.StringType())])
-    with _pytest.raises(ValueError):
-        read_jsonl_corpus(spark, "/nonexistent", schema)
-
-
-def test_read_jsonl_corpus_reads_gzip_shards(spark, tmp_path):
-    """Web-scale JSONL ships gzip-compressed; the line reader must ingest
-    .gz shards transparently (Hadoop codec inference from the extension)
-    with the same quarantine contract.  Note gzip is NOT splittable — one
-    task per shard — which is why export keeps many moderate shards
-    rather than one big one."""
-    import gzip
-
-    from etl_cloud_logistics_spark.sources.textfiles import read_jsonl_corpus
-    from pyspark.sql import types as T
-
-    p = tmp_path / "gz"
-    p.mkdir()
-    for shard in range(2):
-        lines = [
-            f'{{"doc_id": {shard * 10 + i}, "text": "doc {shard * 10 + i}"}}'
-            for i in range(5)
-        ] + (["broken {"] if shard == 0 else [])
-        with gzip.open(p / f"part-{shard}.jsonl.gz", "wt") as f:
-            f.write("\n".join(lines))
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    good, quar = read_jsonl_corpus(spark, str(p), schema, required=["doc_id"])
-    assert good.count() == 10
-    q = quar.collect()
-    assert len(q) == 1 and q[0].raw_line == "broken {" and q[0].reason == "malformed"
-    assert q[0].src_file.endswith("part-0.jsonl.gz")
-
-
 def test_orc_roundtrip_and_predicate_pushdown(spark, sf_small, tmp_path):
     """The lake surface is format-agnostic where Spark is: ORC round-trips
     the orders table bit-for-bit (values AND schema), partition pruning
@@ -591,63 +221,6 @@ def test_orc_roundtrip_and_predicate_pushdown(spark, sf_small, tmp_path):
     fplan = filtered._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in fplan and "o_totalprice" in fplan.split("PushedFilters: [", 1)[1][:200], fplan[:800]
     assert filtered.count() == orders.filter(F.col("o_totalprice") > 100000.0).count()
-
-
-def test_sorted_lake_scan_skips_row_groups_at_read(spark, tmp_path):
-    """End-to-end half of the clustered-layout story (the footer test above
-    proves the stats are disjoint; this proves the READER uses them): a
-    narrow range predicate on the sort key over the sorted layout must
-    produce far fewer scan-output rows than the same predicate over an
-    interleaved layout — i.e. parquet row-group min/max pruning engages at
-    read time, it isn't just metadata.  Synthesized 200k-row data + small
-    parquet.block.size force many row groups per file so the effect is
-    intra-file, the form that matters at 100 TB where a file is ~1 GB and
-    a row group ~128 MB."""
-    from etl_cloud_logistics_spark.sources.maintenance import write_sorted_lake
-
-    data = spark.range(200_000).select(
-        F.col("id").alias("k"), F.hex(F.xxhash64("id")).alias("payload")
-    )
-    lo, hi = 100_000, 101_000
-    expected = hi - lo + 1
-
-    def scan_rows(path_df) -> int:
-        filtered = path_df.filter((F.col("k") >= lo) & (F.col("k") <= hi))
-        # collect() runs THIS frame's own QueryExecution; count() would spawn
-        # a twin execution and leave these metrics at zero
-        assert len(filtered.collect()) == expected  # same answer either layout
-        plan = filtered._jdf.queryExecution().executedPlan()
-        leaves = plan.collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            m = leaves.apply(i).metrics()
-            if m.contains("numOutputRows"):
-                total += m.apply("numOutputRows").value()
-        return total
-
-    sorted_path = str(tmp_path / "sorted")
-    write_sorted_lake(data, sorted_path, sort_cols=["k"], n_files=2)
-    # rewrite with tiny row groups (many groups per file -> intra-file skip);
-    # sortWithinPartitions re-establishes the order per output task
-    spark.read.parquet(sorted_path).sortWithinPartitions("k").write.mode(
-        "overwrite"
-    ).option("parquet.block.size", 64 * 1024).parquet(str(tmp_path / "sorted_rg"))
-
-    # interleaved control: same rows, same tiny row groups, but hash order so
-    # every row group's min/max spans the whole key domain
-    data.orderBy(F.xxhash64("id", F.lit(3))).write.mode("overwrite").option(
-        "parquet.block.size", 64 * 1024
-    ).parquet(str(tmp_path / "shuffled_rg"))
-
-    pruned = scan_rows(spark.read.parquet(str(tmp_path / "sorted_rg")))
-    unpruned = scan_rows(spark.read.parquet(str(tmp_path / "shuffled_rg")))
-    # essentially no group skipped in the interleaved layout: a tiny tail
-    # row group can land min/max outside the probed range by luck (observed
-    # once at 199_999 — r12), so the control asserts "scanned ~everything",
-    # not bit-for-bit everything
-    assert unpruned >= 199_000, unpruned
-    # clustered row groups must cut scan output by an order of magnitude
-    assert pruned * 10 <= unpruned, (pruned, unpruned)
 
 
 def _file_ranges(path, cols):

@@ -1,13 +1,15 @@
 """Regression tests for the metrics reader the bench, the tools and the
 probe records are built on (etl_cloud_logistics_spark/metrics.py) — a
 biased meter poisons every artifact that quotes it, so the meter gets its
-own pins."""
+own pins — and the AST guards on the package's shape: one status-store
+reader, and every public operator reached from the product surface."""
 
 from __future__ import annotations
 
 import ast
 import glob
 import os
+from collections import defaultdict
 
 from pyspark.sql import functions as F
 
@@ -123,3 +125,86 @@ def test_status_store_is_read_only_through_the_metrics_module():
                 offenders.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
     assert len(paths) > 50
     assert not offenders, offenders
+
+
+# Public package names that no query, pipeline or streaming job reaches and
+# that stay anyway, each with its reason.  Whatever they use is reached
+# through them.
+REACH_EXEMPT = {
+    "sources.generator.generate_trips_like": (
+        "COVERAGE F22: the weighted-distribution generator; the streaming rate "
+        "source draws uniform values, so no reached code covers F22"
+    ),
+    "operators.similarity.srp_signatures": (
+        "the relational reference twin that srp_signatures_arrow is pinned "
+        "bit-identical to"
+    ),
+    "operators.dedup.components_probe_info": (
+        "probe introspection read by tools/scaling_probe.py"
+    ),
+}
+
+# Package modules and subpackages whose every line is reached: the product
+# surface.
+_REACH_ROOTS = ("queries", "streaming", "pipelines", "catalog", "session", "metrics")
+
+
+def _code_names(node):
+    """Identifiers ``node`` uses as code: names and attribute names.  String
+    constants (docstrings included) and comments never count."""
+    return {
+        n.id if isinstance(n, ast.Name) else n.attr
+        for n in ast.walk(node)
+        if isinstance(n, (ast.Name, ast.Attribute))
+    }
+
+
+def test_every_public_package_name_is_reached():
+    """A name walk from the product surface: ``__spark_entry__.py`` and the
+    package's root modules (``_REACH_ROOTS``) are reached whole; a reached
+    name reaches every top-level def, class or assignment of the package
+    that binds it.  Each public top-level def/class must be reached or be
+    in ``REACH_EXEMPT``, and no exemption may be reached without it."""
+    pkg = os.path.join(ROOT, "etl_cloud_logistics_spark")
+    with open(os.path.join(ROOT, "__spark_entry__.py")) as fh:
+        seed = _code_names(ast.parse(fh.read()))
+    bodies = defaultdict(list)  # name -> top-level nodes binding it
+    public = {}  # "module.name" -> name
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        mod = os.path.relpath(path, pkg)[: -len(".py")].replace(os.sep, ".")
+        mod = mod.removesuffix(".__init__")
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        if mod.split(".")[0] in _REACH_ROOTS:
+            seed |= _code_names(tree)
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                bodies[node.name].append(node)
+                if not node.name.startswith("_"):
+                    public[f"{mod}.{node.name}"] = node.name
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name):
+                            bodies[n.id].append(node)
+
+    def reach(names):
+        reached, todo = set(), list(names)
+        while todo:
+            name = todo.pop()
+            if name not in reached:
+                reached.add(name)
+                for node in bodies[name]:
+                    todo.extend(_code_names(node) - reached)
+        return reached
+
+    assert len(public) > 100
+    assert set(REACH_EXEMPT) <= set(public), set(REACH_EXEMPT) - set(public)
+    from_surface = reach(seed)
+    stale = [q for q in REACH_EXEMPT if public[q] in from_surface]
+    assert not stale, f"exempt but reached, drop the exemption: {stale}"
+    reached = reach(seed | {public[q] for q in REACH_EXEMPT})
+    unreached = sorted(q for q, name in public.items() if name not in reached)
+    assert not unreached, f"public names no query, pipeline or streaming job reaches: {unreached}"
