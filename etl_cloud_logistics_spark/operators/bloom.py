@@ -41,11 +41,6 @@ class BloomModel:
     m_bits: int
     n_hashes: int
 
-    def fp_rate_estimate(self, n_keys: int) -> float:
-        """Classic (1 - e^{-kn/m})^k estimate for documentation/tuning."""
-        k, m = self.n_hashes, self.m_bits
-        return float((1.0 - np.exp(-k * n_keys / m)) ** k)
-
 
 def _hash_cols(key_col: str, m_bits: int, n_hashes: int):
     return [

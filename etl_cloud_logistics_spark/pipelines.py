@@ -442,6 +442,22 @@ def run_curation_export(
     }
 
 
+def _write_model(out_dir: str, version: int, model: dict) -> str:
+    """Write the ANN model of index ``version`` atomically (tmp + fsync +
+    rename) and return its path.  The model is PART of the index version —
+    an unversioned model.json clobbered by rebuilds would dequantize a
+    pinned elder version with the wrong bounds/centroids (silently wrong
+    neighbors) — so every version gets its own file."""
+    model_path = os.path.join(out_dir, "ann_index", f"model_v{version}.json")
+    tmp_path = model_path + ".tmp"
+    with open(tmp_path, "w") as f:
+        json.dump(model, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp_path, model_path)
+    return model_path
+
+
 def run_index_build(
     spark: SparkSession,
     sf_dir: str,
@@ -485,18 +501,8 @@ def run_index_build(
 
     table = SnapshotTable(os.path.join(out_dir, "ann_index"))
     version = table.write(index)
-    # the model is PART of the index version — an unversioned model.json
-    # clobbered by rebuilds would dequantize a pinned elder version with
-    # the wrong bounds/centroids (silently wrong neighbors); write one
-    # model per version, atomically (tmp + rename)
     model = {"centroids": centroids, "lo": lo, "hi": hi, "n_clusters": n_clusters}
-    model_path = os.path.join(out_dir, "ann_index", f"model_v{version}.json")
-    tmp_path = model_path + ".tmp"
-    with open(tmp_path, "w") as f:
-        json.dump(model, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp_path, model_path)
+    model_path = _write_model(out_dir, version, model)
 
     stored = table.read(spark, version)
     queries = emb.filter(F.col("vec_id") < 10)
@@ -560,15 +566,7 @@ def run_index_append(
         build_sq8_index(new_vectors, model["lo"], model["hi"], centroids=model["centroids"])
     )
     version = table.write(delta, mode="append", operation="index-append")
-    new_model_path = os.path.join(
-        out_dir, "ann_index", f"model_v{version}.json"
-    )
-    tmp_path = new_model_path + ".tmp"
-    with open(tmp_path, "w") as f:
-        json.dump(model, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp_path, new_model_path)
+    new_model_path = _write_model(out_dir, version, model)
     return {
         "index_version": version,
         "parent_version": parent,

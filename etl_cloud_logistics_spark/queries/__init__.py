@@ -80,7 +80,7 @@ driver history: nine TPC-H rows (``tpch_q1/q3/q4/q5/q6/q7/q10/q14/q19``),
 ``multimodal_image_header_roundtrip``, ``containment_excerpt_pairs``,
 ``remove_duplicated_spans``, ``semi_join_urgent_customers`` (numeric-kind
 gate re-verified r11), ``zorder_key_events`` (new r11 — the Morton
-clustering key proven against SQL), ``neardup_triangle_stats`` (new
+key proven against SQL), ``neardup_triangle_stats`` (new
 r11 — exact triangle/clustering counts over the SimHash graph, oracle
 shares the pair CTEs with the long-driver-green ``simhash_near_pairs``),
 ``neardup_truss_components`` (new r11 — bridge-edge denoised

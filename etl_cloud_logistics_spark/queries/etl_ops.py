@@ -937,23 +937,20 @@ def _zorder_oracle() -> str:
 @register(
     "zorder_key_events",
     oracle=_zorder_oracle(),
-    extra=True,  # r11 engine breadth: the z-order clustering key
-    # (sources/layout.py, the SnapshotTable compact(cluster_by=...) path)
-    # proven bit-for-bit against SQL; layout-only machinery, so it starts
-    # in the CI exact gate — a rotation candidate with the other
-    # zero-history rows.
+    extra=True,  # r11 engine breadth: the z-order key
+    # (sources/layout.py) proven bit-for-bit against SQL; it starts in the
+    # CI exact gate — a rotation candidate with the other zero-history
+    # rows.
 )
 def zorder_key_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Morton z-key over (user_id, value) — the clustering key
-    ``sources.layout.cluster_by_zorder`` range-sorts files by (Bayer's
-    UB-tree curve; Delta OPTIMIZE ZORDER BY's layout contract; ref
-    04_dimensional_model.sql:162-168 gets the equivalent from Snowflake
-    micro-partition pruning).  The bucketize+interleave expression tree
-    is pure codegen'd integer ops; this row pins the math cross-engine so
-    the layout and pruning tests can trust the key.  Subsampled output
-    (1/11th) keeps the compare light while the min/max normalization
-    still runs over the full table, exactly like a real clustering
-    pass."""
+    """Morton z-key over (user_id, value) — the key a z-ordered writer
+    range-sorts files by (Bayer's UB-tree curve; Delta OPTIMIZE ZORDER
+    BY's layout contract; ref 04_dimensional_model.sql:162-168 gets the
+    equivalent from Snowflake micro-partition pruning).  The
+    bucketize+interleave expression tree is pure codegen'd integer ops;
+    this row pins the math cross-engine.  Subsampled output (1/11th) keeps
+    the compare light while the min/max normalization still runs over the
+    full table."""
     from ..sources.layout import zorder_key_for  # noqa: PLC0415
 
     events = load_table(spark, sf_dir, "events")

@@ -8,7 +8,7 @@ point upserts (S8) — re-expressed as native Spark writers.
 from .generator import generate_trips_like, uniform_ts, weighted_choice
 from .lake import write_partitioned_lake
 from .snapshots import ConcurrentWriteError, SnapshotTable
-from .layout import cluster_by_zorder, zorder_key_for
+from .layout import zorder_key_for
 from .staging import write_json_staging
 from .upsert import foreach_batch_upsert, upsert_parquet
 
@@ -22,6 +22,5 @@ __all__ = [
     "generate_trips_like",
     "weighted_choice",
     "uniform_ts",
-    "cluster_by_zorder",
     "zorder_key_for",
 ]

@@ -1,35 +1,24 @@
-"""Multi-dimensional clustering (Z-order) for the lake layout.
+"""The Z-order (Morton) key for multi-dimensional clustering.
 
-The reference gets multi-predicate locality for free from warehouse
-services — Snowflake micro-partitions with per-partition min/max pruning
+The reference gets multi-predicate locality from warehouse services —
+Snowflake micro-partitions with per-partition min/max pruning
 (``scripts/04_dimensional_model.sql:162-168``) and clustered index layouts
-(``scripts/03_optimization_indexes.sql:15-16``).  A parquet lake gets the
-same read-side effect only if the writer CLUSTERS rows so each file covers
-a small region of the predicate space; a linear sort gives perfect
-locality on the leading column and none on the rest.  Z-ordering (the
-public Delta Lake OPTIMIZE ZORDER design) interleaves the bits of the
-clustering columns so a contiguous key range maps to a compact
-hyper-rectangle — every clustered column prunes, not just the first.
+(``scripts/03_optimization_indexes.sql:15-16``).  A parquet writer gets the
+same read-side effect only if it sorts rows by a key under which each file
+covers a small region of the predicate space; a linear sort gives locality
+on the leading column and none on the rest.  The Z-order key (the public
+Delta Lake OPTIMIZE ZORDER design) interleaves the bits of the clustering
+columns so a contiguous key range maps to a compact hyper-rectangle.
 
-How it composes here:
-- ``zorder_key`` builds the interleaved key as a static chain of
-  shift/or expressions — whole-stage-codegen arithmetic, no UDF;
-- ``cluster_by_zorder`` range-partitions on that key and sorts within
-  partitions, so each output parquet file covers one compact z-range;
-- ``SnapshotTable.compact(cluster_by=...)`` rewrites a table through it,
-  records per-FILE min/max stats in the manifest, and ``read_pruned``
-  then skips at file granularity on ANY of the clustered columns.
+This module builds that key and nothing more:
+- ``zorder_key_for`` min/max-scales each column to a 16-bit bucket (one
+  tiny bounds agg: 2·k scalars of driver metadata) and interleaves them;
+- ``zorder_key`` is the interleave itself, a static chain of shift/or
+  expressions — whole-stage-codegen arithmetic, no UDF.
 
-Scale notes (100 TB):
-- the key is pure column arithmetic: clustering cost is one range
-  shuffle + local sort, the same shape as any repartition — no driver
-  involvement beyond the tiny bounds agg;
-- bounds are per-column global min/max (one agg job).  Heavily skewed
-  columns waste key bits under min/max scaling (the classic z-order
-  caveat); ``bucketing='quantile'`` (r11) replaces ``_bucket16`` with
-  equal-population rank buckets from ``approxQuantile`` — the interleave
-  itself is unchanged, and the skew win is footer-pinned in
-  tests/test_sources.py.
+The registry row ``zorder_key_events`` differential-tests the key
+bit-for-bit against a DuckDB oracle.  Min/max scaling wastes key bits on a
+heavily skewed column (the classic z-order caveat).
 """
 
 from __future__ import annotations
@@ -68,40 +57,6 @@ def zorder_key(buckets: list[Column]) -> Column:
     return out
 
 
-_QUANTILE_BUCKETS = 256  # 8 meaningful bits/dim; plenty at file granularity
-
-
-def _bucket_quantile(col: Column, boundaries: list[float]) -> Column:
-    """Rank-bucket a numeric column by PRE-COMPUTED quantile boundaries —
-    the public refinement for SKEWED columns (this module's documented
-    caveat): min/max scaling gives a Zipf-like column one useful bucket
-    (everything piles at the low edge, the huge max stretches the scale),
-    so its interleaved bits carry no information and pruning on it dies.
-    Equal-POPULATION buckets spend every bit on real data density.
-
-    The bucket index (= count of boundaries <= value) is computed by a
-    statically-unrolled balanced comparison tree: ``len(boundaries)``
-    ``when`` nodes but only ``log2`` of them on any evaluation path, all
-    inside whole-stage codegen — no UDF, no HOF lambda (which would be
-    interpreted per element).  NULLs take the all-left path to bucket 0,
-    matching ``_bucket16``'s nulls-first contract."""
-
-    def build(lo: int, hi: int) -> Column:
-        # invariant: value >= boundaries[:lo], value < boundaries[hi:]
-        if lo == hi:
-            return F.lit(lo).cast("long")
-        mid = (lo + hi) // 2
-        return F.when(
-            col.cast("double") >= F.lit(float(boundaries[mid])), build(mid + 1, hi)
-        ).otherwise(build(lo, mid))
-
-    # scale into the 16-bit interleave domain: padding the low bits with
-    # zeros preserves Morton ORDER exactly (comparisons are unaffected),
-    # it only coarsens granularity to the quantile grid
-    scale = (1 << _BITS) // (len(boundaries) + 1)
-    return build(0, len(boundaries)) * F.lit(scale)
-
-
 def _numeric_form(df: DataFrame, cols: list[str]) -> dict[str, Column]:
     """Date and timestamp columns participate via their numeric day/epoch
     form; everything else as-is."""
@@ -117,43 +72,12 @@ def _numeric_form(df: DataFrame, cols: list[str]) -> dict[str, Column]:
     return numeric
 
 
-def zorder_key_for(
-    df: DataFrame, cols: list[str], bucketing: str = "uniform"
-) -> Column:
-    """Build the Morton-key Column for ``cols``.
-
-    ``bucketing='uniform'`` (default): min/max scale per column — one tiny
-    bounds agg (2·k scalars of driver metadata).  Exposed (r11) so the key
-    math is usable outside the compaction path: the registry row
-    ``zorder_key_events`` differential-tests this exact expression
-    bit-for-bit against a DuckDB oracle, which is what lets the layout
-    tests trust the key.
-
-    ``bucketing='quantile'`` (r11): equal-population rank buckets from
-    ``approxQuantile`` (255 cut points per column on the driver — bounded
-    metadata, same class as the bounds agg) — the right choice when a
-    clustering column is heavily skewed; see ``_bucket_quantile``."""
+def zorder_key_for(df: DataFrame, cols: list[str]) -> Column:
+    """Build the Morton-key Column for ``cols``: each column min/max-scaled
+    to 16 bits over ``df``, then interleaved."""
     if not cols:
         raise ValueError("zorder_key_for needs at least one clustering column")
-    if bucketing not in ("uniform", "quantile"):
-        raise ValueError(
-            f"unknown bucketing {bucketing!r}: use 'uniform' or 'quantile'"
-        )
     numeric = _numeric_form(df, cols)
-    if bucketing == "quantile":
-        proj = df.select(*[numeric[c].cast("double").alias(c) for c in cols])
-        probs = [i / _QUANTILE_BUCKETS for i in range(1, _QUANTILE_BUCKETS)]
-        cuts = proj.approxQuantile(cols, probs, 0.001)
-        buckets = []
-        for c, bounds in zip(cols, cuts):
-            if not bounds:  # all-NULL column: approxQuantile returns []
-                buckets.append(F.lit(0).cast("long"))
-                continue
-            # dedupe (heavy ties collapse cut points; the tree needs them
-            # strictly usable, duplicates just waste comparisons)
-            uniq = sorted(set(bounds))
-            buckets.append(_bucket_quantile(numeric[c], uniq))
-        return zorder_key(buckets)
     row = df.agg(
         *[F.min(numeric[c]).alias(f"__lo_{c}") for c in cols],
         *[F.max(numeric[c]).alias(f"__hi_{c}") for c in cols],
@@ -163,19 +87,3 @@ def zorder_key_for(
         for c in cols
     ]
     return zorder_key(buckets)
-
-
-def cluster_by_zorder(
-    df: DataFrame, cols: list[str], n_files: int, bucketing: str = "uniform"
-) -> DataFrame:
-    """Rewrite ``df`` into ``n_files``-way z-ordered layout: each output
-    partition (= parquet file on write) covers one compact z-range, so its
-    min/max footer stats are tight on EVERY clustering column.  Pass
-    ``bucketing='quantile'`` when a clustering column is heavily skewed
-    (see ``zorder_key_for``)."""
-    keyed = df.withColumn("__z", zorder_key_for(df, cols, bucketing))
-    return (
-        keyed.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )

@@ -223,81 +223,6 @@ def test_orc_roundtrip_and_predicate_pushdown(spark, sf_small, tmp_path):
     assert filtered.count() == orders.filter(F.col("o_totalprice") > 100000.0).count()
 
 
-def _file_ranges(path, cols):
-    """Per-file [min, max] of each column, from the parquet footers."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in sorted(os.listdir(path)):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, f)).metadata
-        schema = md.schema.to_arrow_schema()
-        rng = {}
-        for c in cols:
-            idx = schema.get_field_index(c)
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            rng[c] = (min(mins), max(maxs))
-        out.append(rng)
-    return out
-
-
-def test_zorder_write_skips_files_on_both_dims(spark, sf_small, tmp_path):
-    """The z-order layout claim, pinned on real footer statistics (r11 —
-    the manifest tests in test_snapshots.py pin the kit's OWN read_pruned;
-    this pins what a PLAIN parquet reader sees): the SAME rows written
-    z-clustered on (user_id, value) via sources.layout.cluster_by_zorder
-    admit far fewer candidate files than a round-robin layout of the same
-    file count, for conjunctive predicates on BOTH dims."""
-    from etl_cloud_logistics_spark.sources.layout import cluster_by_zorder
-
-    events = load_table(spark, sf_small, "events").select(
-        "event_id", "user_id", "value"
-    )
-    n_files = 16
-    zpath, rpath = str(tmp_path / "zorder"), str(tmp_path / "roundrobin")
-    cluster_by_zorder(events, ["user_id", "value"], n_files).write.mode(
-        "overwrite"
-    ).parquet(zpath)
-    events.repartition(n_files).write.mode("overwrite").parquet(rpath)
-
-    # identical row set — layout is metadata, not semantics
-    got = sorted(r.event_id for r in spark.read.parquet(zpath).collect())
-    want = sorted(r.event_id for r in events.collect())
-    assert got == want
-
-    zr = _file_ranges(zpath, ["user_id", "value"])
-    rr = _file_ranges(rpath, ["user_id", "value"])
-    assert len(zr) == len(rr) == n_files
-
-    def candidates(franges, uid, vlo, vhi):
-        return sum(
-            1
-            for r in franges
-            if r["user_id"][0] <= uid <= r["user_id"][1]
-            and not (vhi < r["value"][0] or vlo > r["value"][1])
-        )
-
-    # probe a grid of conjunctive predicates spanning both dims (sf0.001
-    # events: user_id 0-14, value ~0-330)
-    probes = [
-        (uid, v, v + 10.0) for uid in (1, 4, 7, 10, 13) for v in (20.0, 100.0, 250.0)
-    ]
-    z_total = sum(candidates(zr, *p) for p in probes)
-    r_total = sum(candidates(rr, *p) for p in probes)
-    # round-robin files span most of the space (not all: a 60-row sample
-    # can miss a sparse tail band), so most probes admit most files
-    assert r_total >= 0.6 * len(probes) * n_files, (r_total, len(probes) * n_files)
-    # z-order must prune at least half of the file reads across the grid
-    assert z_total <= 0.5 * r_total, (z_total, r_total)
-
-
 def test_zorder_key_for_validation_and_degeneracy(spark, sf_small):
     from etl_cloud_logistics_spark.sources.layout import zorder_key_for
 
@@ -314,131 +239,3 @@ def test_zorder_key_for_validation_and_degeneracy(spark, sf_small):
     )
     key = zorder_key_for(degen, ["c", "dead", "value"])
     assert degen.withColumn("z", key).filter("z IS NULL").count() == 0
-
-
-def test_zorder_scan_prunes_dim_a_single_sort_cannot(spark, tmp_path):
-    """End-to-end reader half of the z-order story (the footer test proves
-    the stats; this proves Spark's scan USES them, intra-file): for a
-    predicate on the dimension a single-column sort did NOT sort by, the
-    sorted layout reads everything while the z-ordered layout's row groups
-    — clustered in BOTH dims — prune an order of magnitude of scan output.
-    Tiny parquet.block.size forces many row groups per file, the intra-file
-    form that matters at 100 TB (file ~1 GB, row group ~128 MB)."""
-    from etl_cloud_logistics_spark.sources.layout import cluster_by_zorder
-
-    data = spark.range(200_000).select(
-        F.pmod(F.xxhash64("id"), F.lit(1000)).alias("u"),
-        (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(100_000)) / 100.0).alias("v"),
-        F.hex(F.xxhash64("id", F.lit(2))).alias("payload"),
-    )
-    tiny = {"parquet.block.size": str(64 * 1024)}
-    zpath = str(tmp_path / "z")
-    upath = str(tmp_path / "usort")
-    cluster_by_zorder(data, ["u", "v"], 2).write.mode("overwrite").options(
-        **tiny
-    ).parquet(zpath)
-    # control: classic single-column clustering on u only
-    data.repartitionByRange(2, "u").sortWithinPartitions("u").write.mode(
-        "overwrite"
-    ).options(**tiny).parquet(upath)
-
-    lo, hi = 400.0, 410.0  # ~1% band on v, unbounded u
-
-    def scan_rows(df) -> tuple[int, int]:
-        filtered = df.filter((F.col("v") >= lo) & (F.col("v") <= hi))
-        n = len(filtered.collect())  # collect: this frame's own execution
-        plan = filtered._jdf.queryExecution().executedPlan()
-        leaves = plan.collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            m = leaves.apply(i).metrics()
-            if m.contains("numOutputRows"):
-                total += m.apply("numOutputRows").value()
-        return n, total
-
-    n_z, scanned_z = scan_rows(spark.read.parquet(zpath))
-    n_u, scanned_u = scan_rows(spark.read.parquet(upath))
-    assert n_z == n_u > 0  # identical answers
-    assert scanned_u >= 200_000  # u-sort can't skip a v predicate at all
-    assert scanned_z * 5 <= scanned_u, (scanned_z, scanned_u)
-
-
-def test_zorder_quantile_bucketing_rescues_skewed_columns(spark, tmp_path):
-    """The documented z-order caveat, now closed: under min/max scaling a
-    Zipf-like column piles into one bucket (its huge max stretches the
-    scale), its interleaved bits carry nothing, and pruning on it dies.
-    Quantile (equal-population) bucketing spends every bit on real data
-    density.  Footer-pinned: narrow bands in the DENSE low region of the
-    skewed dim admit far fewer candidate files under quantile bucketing
-    than uniform, at identical file counts and row sets."""
-    from etl_cloud_logistics_spark.sources.layout import cluster_by_zorder
-
-    # skewed dim: ~ 2^(hash % 24) spans 1..8.4e6 with mass at small values;
-    # second dim uniform
-    data = spark.range(100_000).select(
-        F.pow(F.lit(2.0), F.pmod(F.xxhash64("id"), F.lit(24)).cast("double"))
-        .alias("s"),
-        F.pmod(F.xxhash64("id", F.lit(1)), F.lit(10_000)).alias("u"),
-        F.col("id"),
-    )
-    n_files = 16
-    qpath, upath = str(tmp_path / "quant"), str(tmp_path / "unif")
-    cluster_by_zorder(data, ["s", "u"], n_files, bucketing="quantile").write.mode(
-        "overwrite"
-    ).parquet(qpath)
-    cluster_by_zorder(data, ["s", "u"], n_files).write.mode("overwrite").parquet(
-        upath
-    )
-
-    # same rows either way
-    assert (
-        spark.read.parquet(qpath).agg(F.sum("id")).first()[0]
-        == spark.read.parquet(upath).agg(F.sum("id")).first()[0]
-    )
-    qr = _file_ranges(qpath, ["s"])
-    ur = _file_ranges(upath, ["s"])
-    assert len(qr) == len(ur) == n_files
-
-    def admits(franges, lo, hi):
-        return sum(1 for r in franges if not (hi < r["s"][0] or lo > r["s"][1]))
-
-    # dense-region bands: powers of two 1..2^11 (over 99% of rows live
-    # below 2^12 is false — mass is uniform over exponents, but each band
-    # is dense in ROWS relative to its value width)
-    bands = [(2.0**e, 2.0**e) for e in range(0, 12)]
-    q_total = sum(admits(qr, *b) for b in bands)
-    u_total = sum(admits(ur, *b) for b in bands)
-    # uniform scaling: all these values land in bucket 0 -> every file's
-    # s-range covers them -> no pruning; quantile must at least halve it
-    assert q_total * 2 <= u_total, (q_total, u_total)
-
-
-def test_quantile_bucket_tree_matches_bisect(spark):
-    """The balanced comparison tree must compute exactly
-    bisect.bisect_right(boundaries, value) — the rank-bucket contract —
-    for every branch shape: values below/above all boundaries, equal to a
-    boundary (>= counts it, so ties go RIGHT), between boundaries, NULL
-    (all-left path to bucket 0), and boundary lists whose length is not a
-    power of two (uneven tree)."""
-    import bisect
-
-    from etl_cloud_logistics_spark.sources.layout import _BITS, _bucket_quantile
-
-    for boundaries in ([1.0, 3.0, 7.0], [2.5], [0.0, 1.0, 2.0, 3.0, 4.0]):
-        scale = (1 << _BITS) // (len(boundaries) + 1)
-        vals = sorted(
-            {b + d for b in boundaries for d in (-0.5, 0.0, 0.5)} | {-99.0, 99.0}
-        )
-        df = spark.createDataFrame([(v,) for v in vals], "v double").withColumn(
-            "b", _bucket_quantile(F.col("v"), boundaries)
-        )
-        got = {r["v"]: r["b"] for r in df.collect()}
-        for v in vals:
-            assert got[v] == bisect.bisect_right(boundaries, v) * scale, (
-                boundaries,
-                v,
-            )
-        nulls = spark.createDataFrame([(None,)], "v double").withColumn(
-            "b", _bucket_quantile(F.col("v"), boundaries)
-        )
-        assert nulls.first()["b"] == 0
