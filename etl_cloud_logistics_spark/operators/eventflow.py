@@ -38,9 +38,8 @@ def funnel_user_steps(
     timestamp of each step (``step_ts_1`` … ``step_ts_K``, null once the
     chain breaks).  Step k binds to the first event of type ``steps[k]``
     STRICTLY after the step-(k-1) completion — the stacked window-mins
-    share one hash exchange on the key.  This frame is both the input to
-    the ``funnel_counts`` roll-up and the batch twin the streaming funnel
-    (streaming.jobs.funnel_stream) is equality-tested against."""
+    share one hash exchange on the key.  This frame is the input to the
+    ``funnel_counts`` roll-up."""
     w = W.partitionBy(key_col)
     cur = df.select(key_col, type_col, ts_col)
     prev_ts = None

@@ -216,33 +216,3 @@ def cm_lookup(cells: DataFrame, items: DataFrame, item_col: str,
         .agg(F.min(F.coalesce(F.col("cell"), F.lit(0))).alias("cm_estimate"))
     )
 
-
-def mg_compress(summary: DataFrame, k: int) -> DataFrame:
-    """Reduce a weighted ``(item, cnt)`` summary to ≤ k counters — the
-    ASSOCIATIVE merge step of Agarwal et al. 2012 that makes Misra-Gries
-    summaries mergeable: sum counts per item, subtract the (k+1)-th
-    largest combined count from everything, drop non-positives.  Each
-    merge adds at most that subtracted value to the total undercount, so
-    a tree (or streaming left) fold of per-chunk summaries keeps the
-    global ``n/(k+1)`` bound.
-
-    The input is bounded (union of MG summaries: ≤ k rows each), so the
-    single-partition rank window and the 1-row cutoff lookup are bounded
-    state, not data-sized work — the same legitimacy class as the kit's
-    other model-metadata collects."""
-    from pyspark.sql import Window
-
-    combined = summary.groupBy("item").agg(F.sum("cnt").alias("cnt"))
-    w = Window.orderBy(F.desc("cnt"), "item")
-    cutoff = (
-        combined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == k + 1)
-        .first()
-    )
-    if cutoff is None:
-        return combined
-    c = int(cutoff["cnt"])
-    return (
-        combined.select("item", (F.col("cnt") - F.lit(c)).alias("cnt"))
-        .filter(F.col("cnt") > 0)
-    )

@@ -522,218 +522,3 @@ def run_index_build(
         "model_path": model_path,
     }
 
-
-def run_index_append(
-    spark: SparkSession,
-    new_vectors: DataFrame,
-    out_dir: str,
-) -> dict:
-    """Append-only incremental maintenance of the ANN index built by
-    :func:`run_index_build` — the FAISS ``add``-without-``train``
-    contract: NEW vectors are encoded with the index's PINNED model
-    (coarse quantizer + SQ8 bounds read from the latest version's model
-    file, NEVER retrained — retraining would re-bucket history, which is a
-    REBUILD and gets its own version + model via ``run_index_build``) and
-    committed as an APPEND version of the same ``SnapshotTable``: no
-    existing index file is read, re-encoded, or rewritten, so the cost is
-    O(delta), while serving from the new version sees old ∪ new and a
-    pinned elder version still time-travels to exactly its own rows.
-
-    The stated trade-off (same as FAISS add-after-train): if the delta's
-    distribution drifts outside the trained SQ8 bounds, out-of-range
-    dimensions clamp — quantization error grows for those vectors until
-    the next full rebuild refreshes bounds; the exact-rerank contract
-    still guarantees REPORTED scores stay exact, drift can only cost
-    shortlist recall.  The new version gets its own model file with the
-    inherited parameters, preserving the one-model-per-version invariant
-    (every version can always be dequantized with the parameters it was
-    encoded under)."""
-    from .operators.similarity import build_sq8_index
-    from .sources.snapshots import SnapshotTable
-
-    table = SnapshotTable(os.path.join(out_dir, "ann_index"))
-    parent = table.latest_version()
-    if parent is None:
-        raise FileNotFoundError(
-            f"no ANN index at {out_dir!r} — run_index_build first; append "
-            "has no model to encode with"
-        )
-    model_path = os.path.join(out_dir, "ann_index", f"model_v{parent}.json")
-    with open(model_path) as f:
-        model = json.load(f)
-
-    delta, appended = _counted(
-        build_sq8_index(new_vectors, model["lo"], model["hi"], centroids=model["centroids"])
-    )
-    version = table.write(delta, mode="append", operation="index-append")
-    new_model_path = _write_model(out_dir, version, model)
-    return {
-        "index_version": version,
-        "parent_version": parent,
-        "appended_rows": appended.get["n"],
-        "index_rows": table.read(spark).count(),
-        "model_path": new_model_path,
-    }
-
-
-def run_incremental_dedup(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    store_path: str,
-    threshold: float = 0.5,
-    n: int = 3,
-    n_hashes: int = 8,
-    rows_per_band: int = 2,
-) -> dict:
-    """Incremental ingestion dedup — how a 100 TB pipeline actually runs
-    MinHash dedup: each arriving batch is checked against a PERSISTED
-    signature store (a versioned ``SnapshotTable`` of per-doc signatures +
-    LSH band keys), never against re-read history text.
-
-    Per batch:
-    1. signatures + band keys for the NEW docs only (one narrow pass);
-    2. candidates = band-key equi-join of new against (store ∪ new) — so
-       within-batch duplicates are caught in the same pass; history-side
-       cost is a join against stored keys, O(|store| matched buckets), no
-       recompute;
-    3. verdict by SIGNATURE agreement (matching minima / n_hashes — the
-       unbiased MinHash estimate of Jaccard): stored state is O(n_hashes)
-       strings per doc, so the store never holds text; a pipeline wanting
-       exact-Jaccard confirmation fetches the original text for the
-       (rare) flagged pairs out of band — stated trade-off;
-    4. only UNIQUE new docs' signatures append to the store (a new
-       version: time travel gives every past ingest's dedup state), so a
-       replayed batch deduplicates against itself — idempotent ingest.
-
-    Returns the verdicts (doc_id, dup_of — smallest matching prior/peer
-    id) and the commit info."""
-    from .operators.dedup import band_keys, minhash_signatures, shingle_array
-    from .sources.snapshots import SnapshotTable
-
-    # short_doc_fallback: docs with < n tokens would otherwise produce
-    # all-null minima → sig='' and band_key='' → every distinct short doc
-    # silently flagged a duplicate of the first one (est_jaccard compares
-    # ''=='' at every offset).  The fallback hashes the full text instead.
-    #
-    # Signature-scheme versioning: signatures are only comparable when
-    # derived identically — a store written under a different shingle n,
-    # hash count, banding, or fallback rule would silently miss (or
-    # falsely merge) cross-era duplicates.  Every state row carries the
-    # scheme stamp; a mismatch on read refuses loudly rather than
-    # mis-deduplicating (backfill needs the original text, which the store
-    # deliberately never holds — so the remedies are re-ingest into a new
-    # store, or read history with the old parameters).
-    scheme = f"mh1:n{n}:h{n_hashes}:rpb{rows_per_band}:sdf1"
-    sh = shingle_array(new_docs, n=n, short_doc_fallback=True)
-    sig_long = minhash_signatures(sh, n_hashes=n_hashes).localCheckpoint(eager=True)
-    bands_new = band_keys(sig_long, rows_per_band=rows_per_band)
-    sig_new = sig_long.groupBy("doc_id").agg(
-        F.concat_ws(
-            "",
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("j", "h"))), lambda x: x["h"]
-            ),
-        ).alias("sig")
-    )
-    state_new = sig_new.join(bands_new, "doc_id").select(
-        "doc_id", "sig", "band", "band_key", F.lit(scheme).alias("scheme")
-    )
-
-    table = SnapshotTable(store_path)
-    try:
-        stored = table.read(spark)
-        if "scheme" not in stored.columns:
-            raise ValueError(
-                f"signature store at {store_path} predates scheme stamping — "
-                f"its signatures are not comparable to {scheme!r} ones; "
-                f"re-ingest into a fresh store"
-            )
-        foreign = (
-            stored.select("scheme").filter(F.col("scheme") != scheme).limit(1).collect()
-        )
-        if foreign:
-            raise ValueError(
-                f"signature store at {store_path} holds scheme "
-                f"{foreign[0]['scheme']!r} but this run derives {scheme!r} — "
-                f"cross-era signatures would silently miss duplicates; "
-                f"re-ingest into a fresh store or run with the stored "
-                f"parameters"
-            )
-    except FileNotFoundError:
-        stored = spark.createDataFrame(
-            [], "doc_id long, sig string, band bigint, band_key string, scheme string"
-        )
-    # tag sides: against HISTORY any stored match blocks a new doc (ids are
-    # independent spaces, no ordering assumption); within the BATCH the
-    # smaller id wins, like every canonicalizer here.  A re-sent doc_id
-    # (replayed batch) is a duplicate of its stored self by id identity.
-    pool = (
-        stored.withColumn("is_new", F.lit(False))
-        .unionByName(state_new.withColumn("is_new", F.lit(True)))
-        .localCheckpoint(eager=True)
-    )
-    a = state_new.select(F.col("doc_id").alias("new_id"), "band", "band_key")
-    b = pool.select(F.col("doc_id").alias("old_id"), "band", "band_key", "is_new")
-    cand = (
-        a.join(b, ["band", "band_key"])
-        .filter(
-            (~F.col("is_new") & (F.col("old_id") != F.col("new_id")))
-            | (F.col("is_new") & (F.col("old_id") < F.col("new_id")))
-        )
-        .select("new_id", "old_id")
-        .distinct()
-    )
-    replayed = state_new.select("doc_id").join(
-        stored.select("doc_id").distinct(), "doc_id"
-    ).select(F.col("doc_id").alias("new_id"), F.col("doc_id").alias("old_id"))
-    sig_pool = pool.select("doc_id", "sig").distinct()
-    # signature agreement: count matching 32-hex minima at aligned offsets
-    match_frac = (
-        F.aggregate(
-            F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-            F.lit(0),
-            lambda acc, j: acc
-            + F.when(
-                F.substring(F.col("sig_a"), j * 32 + 1, 32)
-                == F.substring(F.col("sig_b"), j * 32 + 1, 32),
-                1,
-            ).otherwise(0),
-        ).cast("double")
-        / n_hashes
-    )
-    dup_pairs = (
-        cand.join(
-            sig_pool.select(F.col("doc_id").alias("new_id"), F.col("sig").alias("sig_a")),
-            "new_id",
-        )
-        .join(
-            sig_pool.select(F.col("doc_id").alias("old_id"), F.col("sig").alias("sig_b")),
-            "old_id",
-        )
-        .withColumn("est_jaccard", match_frac)
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-    blockers = dup_pairs.select("new_id", "old_id").unionByName(replayed)
-    verdicts = (
-        state_new.select("doc_id")
-        .distinct()
-        .join(
-            blockers.groupBy("new_id").agg(F.min("old_id").alias("dup_of")),
-            state_new["doc_id"] == F.col("new_id"),
-            "left",
-        )
-        .select("doc_id", "dup_of")
-        .localCheckpoint(eager=True)
-    )
-    unique_ids = verdicts.filter(F.col("dup_of").isNull()).select("doc_id")
-    appended = state_new.join(unique_ids, "doc_id")
-    version = table.write(appended, mode="append", operation="incremental_dedup")
-    n_new = new_docs.select("doc_id").distinct().count()
-    n_dup = verdicts.filter(F.col("dup_of").isNotNull()).count()
-    return {
-        "verdicts": verdicts,
-        "store_version": version,
-        "n_docs": n_new,
-        "n_duplicates": n_dup,
-        "n_inserted": n_new - n_dup,
-    }

@@ -37,9 +37,8 @@ from . import register
 def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest-status state (ST2): one row per user with their most recent
     event.  Scale: a per-key window with row_number — one shuffle on the
-    key; in streaming this is the struct-max state kept natively by
-    streaming.jobs.latest_status_stream_agg (JVM path, r11) and by the
-    applyInPandasWithState template latest_status_stream."""
+    key; in streaming this is the keyed upsert sink of
+    streaming.pipeline.start_streaming_pipeline."""
     events = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
@@ -251,9 +250,8 @@ def session_stats_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SessionWindow row takes ST6's driver slot from the lag+cumsum twin).
     # Engine breadth (r10): the NATIVE F.session_window batch
     # aggregate — a distinct physical operator (SessionWindow merging
-    # aggregation) from session_stats_per_user's lag+cumsum formulation,
-    # and the batch twin of streaming.jobs.session_window_counts.  The
-    # oracle replays the semantics gaps-and-islands style: Spark defines a
+    # aggregation) from session_stats_per_user's lag+cumsum formulation.
+    # The oracle replays the semantics gaps-and-islands style: Spark defines a
     # session's end as last_event_ts + gap, so MAX(ts) + 30 min matches
     # session_window.end exactly.
 )

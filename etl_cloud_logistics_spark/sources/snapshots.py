@@ -1,22 +1,21 @@
 """Versioned lake table with a transaction log — the production-shaped
-storage path for the versioned outputs (the ANN index, the dedup signature
-store; SURVEY.md §2.1, §4).
+storage path for the versioned ANN index of ``pipelines.run_index_build``
+(SURVEY.md §2.1, §4).
 
 The reference leans on warehouse-native table services: Snowflake Time
 Travel / zero-copy clones (``scripts/04_dimensional_model.sql:162-168``).
 Spark has no built-in versioned table, so this module implements the
 public transaction-log design (Delta Lake, VLDB 2020; Apache Iceberg spec)
-over plain parquet, cut to the lifecycle the pipelines use: write a
-version (overwrite or append), read the latest, time-travel to an older
-one:
+over plain parquet, cut to the lifecycle the index uses: write a new
+version, read the latest, time-travel to an older one:
 
     table_dir/
       _log/00000000000000000000.json   one manifest per committed version
-      data/v0-<op>/part-*.parquet      immutable data directories
+      data/v0-<id>/part-*.parquet      immutable data directories
 
-- A manifest names the data directories composing that version, plus
-  bookkeeping (operation, parent).  Committed data is never mutated, so a
-  reader that has picked a manifest sees an immutable snapshot — reads are
+- A manifest names the data directory of that version, plus bookkeeping
+  (parent, schema).  Committed data is never mutated, so a reader that has
+  picked a manifest sees an immutable snapshot — reads are
   snapshot-isolated with no locks, and every historical version stays
   readable (time travel).
 - Commit protocol: the manifest is fully written to a temp name (+fsync),
@@ -29,20 +28,15 @@ one:
   conditional PUT / DynamoDB lock table.  A crash anywhere before the link
   leaves the previous version intact and visible.
 - The parent version is pinned ONCE at the start of a write and the commit
-  targets ``parent + 1``, so a commit that interleaves between "read the
-  parent's file set" and "commit" collides on the slot-claim — an append
-  can never silently drop a racer's rows.
+  targets ``parent + 1``, so a rebuild that races another for the same
+  slot collides on the slot-claim instead of silently replacing it.
 - The LOG owns the table schema (Delta's rule): every manifest records the
-  version's full schema, readers apply it by name over the data files, and
-  evolution is ADDITIVE — an append whose frame carries new columns
-  appends them (files committed earlier read them as NULL, no rewrite); a
-  type change to an existing column raises ``SchemaEvolutionError``.
+  version's schema and readers apply it by name over the data files, so a
+  read runs no schema-inference job.
 
 Scale notes (100 TB):
 - The log is tiny (one small JSON per commit) regardless of table size;
   readers list one directory and read one file before any data I/O.
-- ``mode="append"`` adds a data directory without reading or touching
-  existing files, so an incremental commit costs O(delta).
 - Nothing is deleted at commit time, so concurrent readers of older
   snapshots never break.
 """
@@ -63,41 +57,6 @@ _MANIFEST_WIDTH = 20
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed the version this writer raced for."""
-
-
-class SchemaEvolutionError(ValueError):
-    """An incoming schema changes the type of an existing column."""
-
-
-def _nullable(schema: StructType) -> StructType:
-    """All top-level fields nullable: after evolution, files committed
-    before a column existed read that column as NULL, so the table-level
-    contract for every column is nullable."""
-    out = StructType()
-    for f in schema.fields:
-        out = out.add(f.name, f.dataType, True)
-    return out
-
-
-def _merge_schemas(parent: StructType | None, new: StructType) -> StructType:
-    """Additive schema evolution (the Delta/Iceberg rule): parent columns
-    keep their position and type; columns new in ``new`` append at the end;
-    a type CHANGE to an existing column raises — rewriting history is a
-    different operation than evolving forward."""
-    if parent is None:
-        return _nullable(new)
-    merged = _nullable(parent)
-    by_name = {f.name: f for f in merged.fields}
-    for f in new.fields:
-        have = by_name.get(f.name)
-        if have is None:
-            merged = merged.add(f.name, f.dataType, True)
-        elif have.dataType != f.dataType:
-            raise SchemaEvolutionError(
-                f"column {f.name!r}: {have.dataType.simpleString()} -> "
-                f"{f.dataType.simpleString()} is a type change, not an evolution"
-            )
-    return merged
 
 
 def _manifest_name(version: int) -> str:
@@ -145,36 +104,22 @@ class SnapshotTable:
             os.unlink(tmp)
 
     # --------------------------------------------------------------- write
-    def _write_data(self, df: DataFrame, version: int, operation: str) -> str:
-        rel = f"{_DATA_DIR}/v{version}-{operation}-{uuid.uuid4().hex[:8]}"
+    def _write_data(self, df: DataFrame, version: int) -> str:
+        rel = f"{_DATA_DIR}/v{version}-{uuid.uuid4().hex[:8]}"
         df.write.mode("error").parquet(os.path.join(self.path, rel))
         return rel
 
-    def write(
-        self, df: DataFrame, mode: str = "overwrite", operation: str | None = None
-    ) -> int:
-        """Commit ``df`` as the next version.  ``overwrite`` replaces the
-        file set; ``append`` adds a data directory and keeps the prior ones
-        (no existing file is read or touched), evolving the schema
-        additively."""
-        if mode not in ("overwrite", "append"):
-            raise ValueError(f"mode must be overwrite|append, got {mode!r}")
+    def write(self, df: DataFrame) -> int:
+        """Commit ``df`` as the next version, replacing the file set; every
+        earlier version stays readable by time travel."""
         parent = self.latest_version()  # pinned — never re-fetched
         version = 0 if parent is None else parent + 1
-        files = []
-        parent_schema: StructType | None = None
-        if mode == "append" and parent is not None:
-            manifest = self._read_manifest(parent)
-            files = list(manifest["files"])
-            parent_schema = StructType.fromJson(manifest["schema"])
-        schema = _merge_schemas(parent_schema, df.schema)
-        files.append(self._write_data(df, version, operation or mode))
+        rel = self._write_data(df, version)
         self._commit(version, {
             "version": version,
             "parent": parent,
-            "operation": operation or mode,
-            "files": files,
-            "schema": json.loads(schema.json()),
+            "files": [rel],
+            "schema": json.loads(df.schema.json()),
         })
         return version
 
@@ -182,8 +127,8 @@ class SnapshotTable:
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Snapshot read.  ``version=None`` → latest; an explicit version is
         a time-travel read.  The manifest's schema, not the files', is
-        applied (the log owns the schema — Delta's rule), so a file
-        committed before a column was added reads it as NULL."""
+        applied (the log owns the schema — Delta's rule), so no
+        schema-inference job runs."""
         latest = self.latest_version()
         if latest is None:
             raise FileNotFoundError(f"{self.path} has no committed version")

@@ -339,192 +339,3 @@ def test_index_build_pipeline_end_to_end(spark, sf_med, tmp_path):
     assert report2["index_version"] == report["index_version"] + 1
     assert t.read(spark, report["index_version"]).count() == 500
 
-
-def test_incremental_dedup_against_signature_store(spark, tmp_path):
-    """Ingestion-time dedup: batch 2 checks against batch 1's PERSISTED
-    signatures (no history recompute), catches stored near-dups, in-batch
-    dups, and replayed ids; only unique docs grow the store; a full batch
-    replay with fresh ids marks everything duplicate."""
-    from etl_cloud_logistics_spark.pipelines import run_incremental_dedup
-    from etl_cloud_logistics_spark.sources.snapshots import SnapshotTable
-
-    store = str(tmp_path / "sigstore")
-    base = "the quick brown fox jumps over the lazy dog again and again today"
-    b1 = spark.createDataFrame(
-        [
-            (1, base),
-            (2, "completely different text about spark streaming engines at scale"),
-            (3, "a third unrelated document mentioning warehouses and parquet files"),
-        ],
-        "doc_id long, text string",
-    )
-    r1 = run_incremental_dedup(spark, b1, store)
-    assert r1["n_duplicates"] == 0 and r1["n_inserted"] == 3
-
-    b2 = spark.createDataFrame(
-        [
-            (10, base),  # exact dup of stored doc 1
-            (11, base.replace("today", "tonight")),  # near-dup of stored doc 1
-            (12, "an entirely fresh document on watermarks and state stores"),
-            (13, "twin sentences inside one batch share almost every word here"),
-            (14, "twin sentences inside one batch share almost every word too"),
-            (2, "completely different text about spark streaming engines at scale"),
-        ],
-        "doc_id long, text string",
-    )
-    r2 = run_incremental_dedup(spark, b2, store)
-    v = {r.doc_id: r.dup_of for r in r2["verdicts"].collect()}
-    assert v[10] == 1 and v[11] == 1          # caught against the STORE
-    assert v[12] is None and v[13] is None    # fresh + in-batch canonical
-    assert v[14] == 13                        # in-batch near-dup
-    assert v[2] == 2                          # replayed id is idempotent
-    assert r2["n_inserted"] == 2              # only 12 and 13 join the store
-    t = SnapshotTable(store)
-    stored_ids = {
-        r.doc_id for r in t.read(spark).select("doc_id").distinct().collect()
-    }
-    assert stored_ids == {1, 2, 3, 12, 13}
-    # replaying batch 2 under NEW ids: everything is now a duplicate
-    b2_replay = b2.withColumn("doc_id", F.col("doc_id") + 100)
-    r3 = run_incremental_dedup(spark, b2_replay, store)
-    assert r3["n_duplicates"] == r3["n_docs"]
-
-
-def test_incremental_dedup_rejects_scheme_change(spark, tmp_path):
-    """Signatures are only comparable under identical derivation (shingle
-    n, hash count, banding, fallback): a store written under one scheme
-    must refuse a run under another instead of silently missing cross-era
-    duplicates (r5 advice).  The scheme stamp travels in the state rows."""
-    import pytest as _pytest
-
-    from etl_cloud_logistics_spark.pipelines import run_incremental_dedup
-    from etl_cloud_logistics_spark.sources.snapshots import SnapshotTable
-
-    store = str(tmp_path / "sigstore_scheme")
-    b1 = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog again today")],
-        "doc_id long, text string",
-    )
-    run_incremental_dedup(spark, b1, store)
-    stored = SnapshotTable(store).read(spark)
-    assert set(stored.select("scheme").distinct().toPandas()["scheme"]) == {
-        "mh1:n3:h8:rpb2:sdf1"
-    }
-    b2 = spark.createDataFrame(
-        [(2, "another document arriving after a tokenizer upgrade happened")],
-        "doc_id long, text string",
-    )
-    with _pytest.raises(ValueError, match="scheme"):
-        run_incremental_dedup(spark, b2, store, n_hashes=16)
-    # same parameters still ingest fine
-    r = run_incremental_dedup(spark, b2, store)
-    assert r["n_inserted"] == 1
-
-
-def test_incremental_dedup_short_docs_not_collapsed(spark, tmp_path):
-    """Docs shorter than the shingle width (< n tokens) must NOT all collide:
-    without the full-text fallback their MinHash minima are all null, every
-    short doc gets sig='' / band_key='' and est_jaccard('','')=1.0, so every
-    distinct short doc after the first was silently dropped.  Identical short
-    docs must still dedup, including against the persisted store."""
-    from etl_cloud_logistics_spark.pipelines import run_incremental_dedup
-
-    store = str(tmp_path / "sigstore_short")
-    b1 = spark.createDataFrame(
-        [(1, "hello"), (2, "goodbye world"), (3, "ok")],
-        "doc_id long, text string",
-    )
-    r1 = run_incremental_dedup(spark, b1, store)
-    v1 = {r.doc_id: r.dup_of for r in r1["verdicts"].collect()}
-    assert v1 == {1: None, 2: None, 3: None}  # three DISTINCT short docs
-    assert r1["n_inserted"] == 3
-
-    b2 = spark.createDataFrame(
-        [
-            (10, "hello"),          # exact short dup of stored doc 1
-            (11, "brand new"),      # fresh short doc
-            (12, "same pair"),      # in-batch short twins...
-            (13, "same pair"),
-        ],
-        "doc_id long, text string",
-    )
-    r2 = run_incremental_dedup(spark, b2, store)
-    v2 = {r.doc_id: r.dup_of for r in r2["verdicts"].collect()}
-    assert v2[10] == 1            # caught against the STORE by full-text hash
-    assert v2[11] is None
-    assert v2[12] is None and v2[13] == 12
-    assert r2["n_inserted"] == 2
-
-
-def test_index_append_encodes_with_pinned_model(spark, sf_med, tmp_path):
-    """Incremental index maintenance: an append encodes ONLY the delta with
-    the parent version's model (no retrain, no history re-encode), serving
-    from the new version retrieves old AND new vectors, the old version
-    still time-travels to exactly its own rows, and appending without an
-    index fails loudly."""
-    import json as _json
-
-    import pytest as _pytest
-
-    from etl_cloud_logistics_spark.catalog import load_table
-    from etl_cloud_logistics_spark.operators.similarity import knn_sq8_serve
-    from etl_cloud_logistics_spark.pipelines import run_index_append, run_index_build
-    from etl_cloud_logistics_spark.sources.snapshots import SnapshotTable
-
-    out = str(tmp_path / "annout")
-    with _pytest.raises(FileNotFoundError):
-        run_index_append(
-            spark,
-            load_table(spark, sf_med, "embeddings").limit(1),
-            out,
-        )
-
-    base = run_index_build(spark, sf_med, out, n_clusters=8, nprobe=2, k=3)
-    emb = load_table(spark, sf_med, "embeddings")
-    # delta: 20 existing vectors re-badged with fresh ids (same distribution,
-    # so SQ8 bounds hold exactly and retrievability is geometric fact)
-    delta = emb.filter(F.col("vec_id") < 20).withColumn(
-        "vec_id", F.col("vec_id") + 100000
-    )
-    rep = run_index_append(spark, delta, out)
-    assert rep["parent_version"] == base["index_version"]
-    assert rep["index_version"] == base["index_version"] + 1
-    assert rep["appended_rows"] == 20
-    assert rep["index_rows"] == 520
-
-    t = SnapshotTable(f"{out}/ann_index")
-    # old version untouched (time travel) and old rows byte-identical in new
-    assert t.read(spark, base["index_version"]).count() == 500
-    old_rows = {
-        r["neighbor_id"]: (r["bucket"], list(r["codes"]))
-        for r in t.read(spark, base["index_version"]).collect()
-    }
-    new_rows = {
-        r["neighbor_id"]: (r["bucket"], list(r["codes"]))
-        for r in t.read(spark, rep["index_version"]).collect()
-    }
-    assert all(new_rows[i] == old_rows[i] for i in old_rows)
-    # one model per version, appended model inherits the parent's params
-    m0 = _json.load(open(base["model_path"]))
-    m1 = _json.load(open(rep["model_path"]))
-    assert m0 == m1 and rep["model_path"] != base["model_path"]
-
-    # serving from the appended version: querying with original vec 3 must
-    # surface its appended twin 100003 at cos 1.0 (the self-match filter
-    # excludes 3 itself; the twin proves the delta rows are live in the
-    # index and fetchable in the rerank)
-    corpus = emb.unionByName(delta)
-    queries = emb.filter(F.col("vec_id") == 3)
-    served = knn_sq8_serve(
-        t.read(spark, rep["index_version"]),
-        queries,
-        corpus,
-        k=3,
-        lo=m1["lo"],
-        hi=m1["hi"],
-        centroids=m1["centroids"],
-        nprobe=2,
-    )
-    rows = {r["neighbor_id"]: r for r in served.collect()}
-    assert 100003 in rows, sorted(rows)
-    assert rows[100003]["cos_sim"] == 1.0 and rows[100003]["rank"] == 1

@@ -1,6 +1,6 @@
 """Versioned lake table (sources/snapshots.py): transaction-log commits,
-snapshot isolation, time travel, additive schema evolution on append,
-optimistic-concurrency conflict detection."""
+snapshot isolation, time travel, optimistic-concurrency conflict
+detection."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import pytest
 
 from etl_cloud_logistics_spark.sources.snapshots import (
     ConcurrentWriteError,
-    SchemaEvolutionError,
     SnapshotTable,
 )
 
@@ -29,13 +28,12 @@ def test_write_read_roundtrip_and_versions(spark, tmp_path):
     assert t.latest_version() is None
     v0 = t.write(_mk(spark, [(1, "a", 1), (2, "b", 1)]))
     assert v0 == 0
-    v1 = t.write(_mk(spark, [(3, "c", 2)]), mode="append")
+    v1 = t.write(_mk(spark, [(3, "c", 2)]))
     assert v1 == 1
-    assert _rows(t.read(spark), "k", "val") == [(1, "a"), (2, "b"), (3, "c")]
-    # time travel: v0 unchanged by the append
+    assert _rows(t.read(spark), "k", "val") == [(3, "c")]
+    # time travel: v0 unchanged by the newer version
     assert _rows(t.read(spark, version=0), "k", "val") == [(1, "a"), (2, "b")]
-    ops = [t._read_manifest(v)["operation"] for v in (v0, v1)]
-    assert ops == ["overwrite", "append"]
+    assert [t._read_manifest(v)["parent"] for v in (v0, v1)] == [None, 0]
 
 
 def test_commit_conflict_raises_and_leaves_table_intact(spark, tmp_path):
@@ -48,9 +46,9 @@ def test_commit_conflict_raises_and_leaves_table_intact(spark, tmp_path):
         t._commit(1, {"version": 1, "parent": 0, "operation": "lost", "files": []})
     # the winner's manifest is untouched
     assert t._read_manifest(1)["operation"] == "race"
-    # rebase-and-retry path: the next append lands on version 2
-    assert t.write(_mk(spark, [(2, "b", 2)]), mode="append") == 2
-    assert _rows(t.read(spark), "k", "val") == [(1, "a"), (2, "b")]
+    # rebase-and-retry path: the next write lands on version 2
+    assert t.write(_mk(spark, [(2, "b", 2)])) == 2
+    assert _rows(t.read(spark), "k", "val") == [(2, "b")]
 
 
 def test_crash_debris_is_invisible_to_readers(spark, tmp_path):
@@ -59,7 +57,7 @@ def test_crash_debris_is_invisible_to_readers(spark, tmp_path):
     # simulate a writer that died after writing data but before commit:
     # an orphan data dir and a temp manifest
     _mk(spark, [(99, "ghost", 9)]).write.parquet(
-        os.path.join(t.path, "data", "v1-append-deadbeef")
+        os.path.join(t.path, "data", "v1-deadbeef")
     )
     with open(os.path.join(t.log_dir, "_tmp-deadbeef.json"), "w") as fh:
         json.dump({"version": 1}, fh)
@@ -67,68 +65,40 @@ def test_crash_debris_is_invisible_to_readers(spark, tmp_path):
     assert _rows(t.read(spark), "k", "val") == [(1, "a")]
 
 
-def test_append_pinned_parent_detects_interleaved_commit(spark, tmp_path):
-    """The lost-update race: a commit landing between our read of the
-    parent's file set and our commit must make OUR append raise
-    ConcurrentWriteError (parent is pinned once), never silently drop the
-    racer's rows."""
+def test_pinned_parent_detects_interleaved_commit(spark, tmp_path):
+    """Two rebuilds racing for one slot: a commit landing between our
+    pinning of the parent and our commit must make OUR write raise
+    ConcurrentWriteError (parent is pinned once), never silently replace
+    the racer's version."""
     t = SnapshotTable(str(tmp_path / "tbl"))
     t.write(_mk(spark, [(1, "a", 1)]))
     racer = SnapshotTable(t.path)
     orig_write_data = t._write_data
 
-    def interleave(df, version, operation):
-        rel = orig_write_data(df, version, operation)
-        # racer commits while our append's Spark write job is "running"
-        racer.write(_mk(spark, [(7, "r", 7)]), mode="append")
+    def interleave(df, version):
+        rel = orig_write_data(df, version)
+        # racer commits while our Spark write job is "running"
+        racer.write(_mk(spark, [(7, "r", 7)]))
         return rel
 
     t._write_data = interleave
     with pytest.raises(ConcurrentWriteError):
-        t.write(_mk(spark, [(2, "b", 2)]), mode="append")
-    # the racer's rows are the table's latest state — nothing was lost
-    assert _rows(t.read(spark), "k", "val") == [(1, "a"), (7, "r")]
-
-
-def test_append_schema_evolution_adds_column(spark, tmp_path):
-    """An append whose frame carries a new column evolves the table schema
-    additively: files committed earlier read the new column as NULL, the
-    appended rows carry its values, and time travel to the pre-evolution
-    version still shows the old schema."""
-    t = SnapshotTable(str(tmp_path / "tbl"))
-    t.write(_mk(spark, [(1, "a", 1), (2, "b", 1)]))
-    evolved = spark.createDataFrame(
-        [(100, "x", 2, "new")], "k int, val string, version int, tag string"
-    )
-    v = t.write(evolved, mode="append")
-    out = t.read(spark)
-    assert out.columns == ["k", "val", "version", "tag"]
-    got = {r["k"]: (r["val"], r["tag"]) for r in out.collect()}
-    assert got == {1: ("a", None), 2: ("b", None), 100: ("x", "new")}
-    assert "tag" not in t.read(spark, version=v - 1).columns
-
-
-def test_append_rejects_type_change(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / "tbl"))
-    t.write(_mk(spark, [(1, "a", 1)]))
-    bad = spark.createDataFrame([(2, 5, 2)], "k int, val int, version int")
-    with pytest.raises(SchemaEvolutionError):
-        t.write(bad, mode="append")
-    assert t.latest_version() == 0  # nothing committed
+        t.write(_mk(spark, [(2, "b", 2)]))
+    # the racer's version is the table's latest state — nothing was lost
+    assert t.latest_version() == 1
+    assert _rows(t.read(spark), "k", "val") == [(7, "r")]
+    assert _rows(t.read(spark, version=0), "k", "val") == [(1, "a")]
 
 
 def test_snapshot_table_matches_model_under_random_op_sequences(spark, tmp_path):
-    """Model-based property test: random short sequences of overwrite /
-    append, mirrored against a plain multiset model of the rows.  After
-    every op the latest read must equal the model, and a time-travel read
-    of a random earlier version must equal the model as of that version."""
+    """Model-based property test: random short sequences of writes,
+    mirrored against a plain multiset model of the rows.  After every
+    write the latest read must equal the model, and a time-travel read of
+    a random earlier version must equal the model as of that version."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    op = st.tuples(
-        st.sampled_from(["overwrite", "append"]),
-        st.lists(st.integers(0, 9), min_size=1, max_size=4),
-    )
+    op = st.lists(st.integers(0, 9), min_size=1, max_size=4)
 
     @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
     @given(ops=st.lists(op, min_size=1, max_size=5), data=st.data())
@@ -136,13 +106,11 @@ def test_snapshot_table_matches_model_under_random_op_sequences(spark, tmp_path)
         import uuid
 
         t = SnapshotTable(str(tmp_path / f"m-{uuid.uuid4().hex}"))
-        model: list[tuple[int, str, int]] = []
         history: dict[int, list] = {}  # model snapshot per committed version
-        for step, (mode, keys) in enumerate(ops):
+        for step, keys in enumerate(ops):
             rows = [(k, f"v{step}", step) for k in keys]
-            version = t.write(_mk(spark, rows), mode=mode)
-            model = (model if mode == "append" else []) + rows
-            history[version] = sorted(model)
+            version = t.write(_mk(spark, rows))
+            history[version] = sorted(rows)
             assert _rows(t.read(spark), "k", "val", "version") == history[version]
             pick = data.draw(st.sampled_from(sorted(history)), label="time_travel_to")
             got = _rows(t.read(spark, version=pick), "k", "val", "version")

@@ -1,13 +1,14 @@
 """Streaming tests: chronological file micro-batches over events chunks,
 asserting (a) windowed counts match the batch twin, (b) alert emission,
-(c) latest-status state, (d) watermark drops late rows (ST6 — the policy
-the reference lacks; SURVEY.md §2.9)."""
+(c) the orchestrated pipeline's keyed latest-status state, through a
+restart too, (d) watermark drops late rows (ST6 — the policy the
+reference lacks; SURVEY.md §2.9)."""
 
 from __future__ import annotations
 
 import datetime as dt
-import json
 import os
+import shutil
 import time
 import uuid
 
@@ -17,31 +18,57 @@ from pyspark.sql import functions as F
 from etl_cloud_logistics_spark.catalog import load_table
 from etl_cloud_logistics_spark.streaming.jobs import (
     alert_stream,
-    latest_status_stream,
     read_event_stream,
-    run_stream_to_memory,
     windowed_counts,
 )
 
-
-# r10 (VERDICT r9 #3): every stateful job family runs under BOTH state-store
-# providers — the default HDFS-backed heap store and RocksDB (the
-# 100 TB-key-cardinality backend).  ``None`` keeps the session default.
-_PROVIDERS = pytest.mark.parametrize(
-    "provider",
-    [
-        pytest.param(None, id="heap"),
-        pytest.param("rocksdb", id="rocksdb"),
-    ],
+# The state-store provider is a per-QUERY choice, read from the session
+# conf when the query starts.  The default HDFS-backed store keeps state as
+# JVM heap objects (right for tests and modest key counts); RocksDB keeps
+# it off-heap, the backend for 100 TB-class key cardinality.
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 
-def _resolve_provider(provider):
-    if provider == "rocksdb":
-        from etl_cloud_logistics_spark.streaming.jobs import ROCKSDB_PROVIDER
+def start_with_provider(spark, writer, state_store_provider: str | None = None):
+    """Start a configured ``DataStreamWriter`` under a per-query state-store
+    provider: the conf is captured by the query at ``.start()``, so it is
+    set just before and restored right after — later queries are
+    unaffected."""
+    prev = spark.conf.get(_PROVIDER_CONF, None) if state_store_provider else None
+    if state_store_provider:
+        spark.conf.set(_PROVIDER_CONF, state_store_provider)
+    try:
+        return writer.start()
+    finally:
+        if state_store_provider:
+            if prev is None:
+                spark.conf.unset(_PROVIDER_CONF)
+            else:
+                spark.conf.set(_PROVIDER_CONF, prev)
 
-        return ROCKSDB_PROVIDER
-    return provider
+
+def run_stream_to_memory(
+    stream_df,
+    query_name: str,
+    checkpoint_dir: str,
+    output_mode: str = "append",
+    state_store_provider: str | None = None,
+):
+    """Drive a streaming frame to completion over the currently-available
+    files (the synchronous test harness): memory sink +
+    processAllAvailable.  ``None`` keeps the session's provider."""
+    writer = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    q = start_with_provider(stream_df.sparkSession, writer, state_store_provider)
+    q.processAllAvailable()
+    return q
 
 
 def _assert_ran_on_rocksdb(q, provider):
@@ -79,12 +106,11 @@ def _ckpt(tmp_path_factory) -> str:
     return str(tmp_path_factory.mktemp(f"ckpt_{uuid.uuid4().hex[:6]}"))
 
 
-@_PROVIDERS
+@pytest.mark.parametrize("provider", [None, ROCKSDB_PROVIDER], ids=["heap", "rocksdb"])
 def test_windowed_counts_match_batch(spark, chunked_events, tmp_path_factory, provider):
-    """Tumbling windowed aggregation state under BOTH providers (r11,
-    VERDICT r10 #4 — the plain stateful aggs were the last heap-only
-    streaming family)."""
-    provider = _resolve_provider(provider)
+    """Tumbling windowed aggregation state under BOTH state-store providers:
+    the default HDFS-backed heap store and RocksDB (the
+    100 TB-key-cardinality backend)."""
     src, events = chunked_events
     stream = read_event_stream(spark, src)
     out_name = f"win_out_{'rocks' if provider else 'heap'}"
@@ -128,91 +154,6 @@ def test_alert_stream_matches_batch(spark, chunked_events, tmp_path_factory):
         assert set(sev) <= {"warning", "high", "critical"} and sum(sev.values()) == want.count()
     finally:
         q.stop()
-
-
-def test_latest_status_state(spark, chunked_events, tmp_path_factory):
-    src, events = chunked_events
-    stream = read_event_stream(spark, src)
-    q = run_stream_to_memory(
-        latest_status_stream(stream),
-        "latest_out",
-        _ckpt(tmp_path_factory),
-        output_mode="update",
-    )
-    try:
-        # update mode emits one row per user per trigger; last emission wins
-        got = {
-            r.user_id: (r.last_event_id, r.last_event_type)
-            for r in spark.sql(
-                """SELECT user_id, last_event_id, last_event_type FROM (
-                       SELECT *, row_number() OVER (
-                           PARTITION BY user_id ORDER BY last_ts DESC, last_event_id DESC
-                       ) rn FROM latest_out) WHERE rn = 1"""
-            ).collect()
-        }
-        want = {
-            r.user_id: (r.last_event_id, r.last_event_type)
-            for r in events.withColumn(
-                "rn",
-                F.row_number().over(
-                    __import__("pyspark.sql.window", fromlist=["Window"]).Window
-                    .partitionBy("user_id")
-                    .orderBy(F.desc("ts"), F.desc("event_id"))
-                ),
-            )
-            .filter("rn = 1")
-            .selectExpr(
-                "user_id", "event_id AS last_event_id", "event_type AS last_event_type"
-            )
-            .collect()
-        }
-        assert got == want
-    finally:
-        q.stop()
-
-
-@_PROVIDERS
-def test_latest_status_agg_equals_python_twin(
-    spark, chunked_events, tmp_path_factory, provider
-):
-    """The native struct-max streaming aggregation
-    (``latest_status_stream_agg``) emits exactly what the
-    applyInPandasWithState twin does — same final row per user across ALL
-    columns — under both state-store providers.  This pins the pair so the
-    fast JVM path can't drift from the arbitrary-stateful template."""
-    from etl_cloud_logistics_spark.streaming.jobs import latest_status_stream_agg
-
-    provider = _resolve_provider(provider)
-    src, _events = chunked_events
-
-    def final_rows(job_fn, out_name):
-        q = run_stream_to_memory(
-            job_fn(read_event_stream(spark, src)),
-            out_name,
-            _ckpt(tmp_path_factory),
-            output_mode="update",
-            state_store_provider=provider,
-        )
-        try:
-            rows = {
-                r.user_id: (r.last_event_id, r.last_ts, r.last_event_type, r.last_value)
-                for r in spark.sql(
-                    f"""SELECT * FROM (
-                           SELECT *, row_number() OVER (
-                               PARTITION BY user_id
-                               ORDER BY last_ts DESC, last_event_id DESC
-                           ) rn FROM {out_name}) WHERE rn = 1"""
-                ).collect()
-            }
-            _assert_ran_on_rocksdb(q, provider)
-        finally:
-            q.stop()
-        return rows
-
-    suffix = "rocks" if provider else "heap"
-    native = final_rows(latest_status_stream_agg, f"latest_agg_{suffix}")
-    python_twin = final_rows(latest_status_stream, f"latest_py_{suffix}")
-    assert native == python_twin and native
 
 
 def test_watermark_drops_late_rows(spark, tmp_path_factory):
@@ -331,53 +272,6 @@ def test_eta_stream_computes_remaining(spark, chunked_events, tmp_path_factory):
         assert r["eta_minutes"] == round(r["remaining_km"] / 60.0 * 60.0, 1)
 
 
-@_PROVIDERS
-def test_session_window_stream_matches_batch(
-    spark, chunked_events, tmp_path_factory, provider
-):
-    """Streamed session windows == the same session_window agg run in batch
-    (complete mode so all sessions are emitted).  Both state-store
-    providers (r11): the session-merging state must behave identically on
-    the heap store and RocksDB."""
-    from etl_cloud_logistics_spark.streaming.jobs import session_window_counts
-
-    provider = _resolve_provider(provider)
-    src, events = chunked_events
-    stream = read_event_stream(spark, src)
-    out_name = f"sess_out_{'rocks' if provider else 'heap'}"
-    q = run_stream_to_memory(
-        session_window_counts(stream, watermark="10 hours", gap="30 minutes"),
-        out_name,
-        _ckpt(tmp_path_factory),
-        output_mode="complete",
-        state_store_provider=provider,
-    )
-    try:
-        got = {
-            (r["session_start"], r["session_end"], r["user_id"], r["n_events"])
-            for r in spark.sql(f"SELECT * FROM {out_name}").collect()
-        }
-        _assert_ran_on_rocksdb(q, provider)
-    finally:
-        q.stop()
-
-    batch = (
-        events.groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-    want = {
-        (r["session_start"], r["session_end"], r["user_id"], r["n_events"])
-        for r in batch.collect()
-    }
-    assert got == want and want
-
-
 def test_checkpoint_recovery_exactly_once(spark, sf_small, tmp_path_factory):
     """Stop the stream mid-input, add more files, restart from the SAME
     checkpoint: the sink must end up with every event exactly once (no
@@ -435,54 +329,14 @@ def test_checkpoint_recovery_exactly_once(spark, sf_small, tmp_path_factory):
         assert got[r["user_id"]] == r["m"]
 
 
-@_PROVIDERS
-def test_stream_stream_join_matches_batch(
-    spark, chunked_events, tmp_path_factory, provider
-):
-    """Watermarked stream-stream join == the identical join run in batch.
-    Both state-store providers (r11): join state (buffered rows per side)
-    is the family with the biggest per-key state, exactly what RocksDB is
-    for at scale."""
-    from etl_cloud_logistics_spark.streaming.jobs import stream_stream_join
-
-    provider = _resolve_provider(provider)
-    src, events = chunked_events
-    stream = read_event_stream(spark, src)
-    clicks_s = stream.filter(F.col("event_type") == "click")
-    purch_s = stream.filter(F.col("event_type") == "purchase")
-    out_name = f"ssj_out_{'rocks' if provider else 'heap'}"
-    q = run_stream_to_memory(
-        stream_stream_join(clicks_s, purch_s, watermark="10 hours", within="30 minutes"),
-        out_name,
-        _ckpt(tmp_path_factory),
-        state_store_provider=provider,
-    )
-    try:
-        got = {
-            (r["user_id"], r["click_id"], r["purchase_id"])
-            for r in spark.sql(f"SELECT * FROM {out_name}").collect()
-        }
-        _assert_ran_on_rocksdb(q, provider)
-    finally:
-        q.stop()
-
-    batch = stream_stream_join(
-        events.filter(F.col("event_type") == "click"),
-        events.filter(F.col("event_type") == "purchase"),
-        watermark="10 hours",
-        within="30 minutes",
-    )
-    want = {(r["user_id"], r["click_id"], r["purchase_id"]) for r in batch.collect()}
-    assert got == want
-    assert want  # fixture produces actual matches
-
-
-def test_streaming_pipeline_end_to_end(spark, chunked_events, tmp_path_factory):
+@pytest.mark.parametrize("restart", [False, True], ids=["fresh", "restart"])
+def test_streaming_pipeline_end_to_end(spark, chunked_events, tmp_path_factory, restart):
     """The orchestrated three-query pipeline lands alerts, keyed state, and
     (watermark-closed) hourly counts consistent with batch over the same
-    input."""
-    import os
-
+    input.  ``restart``: the pipeline drains chunks 0–1, stops, and a
+    second ``start_streaming_pipeline`` on the same warehouse drains the
+    chunk added since — checkpoint recovery must neither drop nor
+    duplicate anything."""
     from etl_cloud_logistics_spark.streaming.pipeline import (
         run_until_drained,
         start_streaming_pipeline,
@@ -490,13 +344,22 @@ def test_streaming_pipeline_end_to_end(spark, chunked_events, tmp_path_factory):
 
     src, events = chunked_events
     wh = str(tmp_path_factory.mktemp("stream_wh"))
+    if restart:
+        chunks = [os.path.join(src, f"chunk_{i}.parquet") for i in range(3)]
+        src = str(tmp_path_factory.mktemp("stream_src_restart"))
+        for chunk in chunks[:2]:
+            shutil.copy(chunk, src)
+        run_until_drained(start_streaming_pipeline(spark, src, wh, alert_threshold=35.0))
+        time.sleep(0.05)
+        shutil.copy(chunks[2], src)
     queries = start_streaming_pipeline(spark, src, wh, alert_threshold=35.0)
     run_until_drained(queries)
 
-    # alerts == batch filter
+    # alerts == batch filter, each alert exactly once
     alerts = spark.read.parquet(os.path.join(wh, "alerts"))
     expected_alerts = events.filter(F.col("value") > 35.0).count()
     assert alerts.count() == expected_alerts
+    assert alerts.select("alert_id").distinct().count() == expected_alerts
 
     # keyed state == batch max-event per user
     state = spark.read.parquet(os.path.join(wh, "latest_status"))
@@ -505,10 +368,10 @@ def test_streaming_pipeline_end_to_end(spark, chunked_events, tmp_path_factory):
         for r in events.groupBy("user_id").agg(F.max("event_id").alias("m")).collect()
     }
     got = {r["user_id"]: r["event_id"] for r in state.collect()}
-    assert got == want
+    assert got == want and state.count() == len(want)
 
     # hourly counts: append mode only emits watermark-closed windows — every
-    # emitted row must match its batch twin exactly
+    # emitted window appears once and matches its batch twin exactly
     counts = spark.read.parquet(os.path.join(wh, "hourly_counts"))
     batch = {
         (r["window_start"], r["event_type"]): r["n_events"]
@@ -517,636 +380,10 @@ def test_streaming_pipeline_end_to_end(spark, chunked_events, tmp_path_factory):
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
         .collect()
     }
-    for r in counts.collect():
+    rows = counts.collect()
+    assert rows and len({(r["window_start"], r["event_type"]) for r in rows}) == len(rows)
+    for r in rows:
         assert batch[(r["window_start"], r["event_type"])] == r["n_events"]
-
-
-@_PROVIDERS
-def test_dedup_stream_drops_cross_batch_duplicates(
-    spark, sf_small, tmp_path_factory, provider
-):
-    """Redelivered events (same event_id, later micro-batch within the
-    watermark) must be dropped; the surviving set equals the batch-side
-    distinct-by-key, and state is keyed not unbounded-buffered.  Runs under
-    both state-store providers (r10): dropDuplicatesWithinWatermark's state
-    must behave identically on the heap store and RocksDB."""
-    provider = _resolve_provider(provider)
-    import os
-
-    from etl_cloud_logistics_spark.catalog import load_table
-    from etl_cloud_logistics_spark.streaming.jobs import dedup_stream
-
-    base = str(tmp_path_factory.mktemp("dedup_src"))
-    events = load_table(spark, sf_small, "events").orderBy("ts", "event_id")
-    rows = events.collect()
-    chunk = (len(rows) + 1) // 2
-    batches = [rows[:chunk], rows[chunk:] + rows[: chunk // 2]]  # redeliver half of batch 0
-    for i, part in enumerate(batches):
-        df = spark.createDataFrame(part, events.schema)
-        df.coalesce(1).write.mode("overwrite").parquet(f"{base}/_tmp_{i}")
-        src = [f for f in os.listdir(f"{base}/_tmp_{i}") if f.endswith(".parquet")][0]
-        os.rename(f"{base}/_tmp_{i}/{src}", f"{base}/chunk_{i}.parquet")
-    stream = read_event_stream(spark, base)
-    out_name = f"dedup_out_{'rocks' if provider else 'heap'}"
-    q = run_stream_to_memory(
-        dedup_stream(stream, watermark="10 hours"),
-        out_name,
-        _ckpt(tmp_path_factory),
-        state_store_provider=provider,
-    )
-    try:
-        got = spark.sql(f"SELECT event_id FROM {out_name}").collect()
-        _assert_ran_on_rocksdb(q, provider)
-    finally:
-        q.stop()
-    ids = [r["event_id"] for r in got]
-    assert len(ids) == len(set(ids)), "a duplicate survived"
-    assert sorted(ids) == sorted(
-        r["event_id"] for r in events.dropDuplicates(["event_id"]).collect()
-    )
-
-
-@pytest.mark.slow_probe
-def test_dedup_stream_state_is_watermark_bounded(spark, tmp_path_factory):
-    """The documented reason dedup_stream uses dropDuplicatesWithinWatermark
-    (streaming/jobs.py): dedup state must be EVICTED once the event-time
-    watermark passes it, so state size plateaus at the watermark horizon
-    instead of growing with every key ever seen (a plain dropDuplicates
-    would OOM a 100 TB ingest).  Six micro-batches of 100 fresh keys each,
-    2 h apart, watermark 1 h: numRowsTotal must stay bounded by ~2 batches
-    (current + the not-yet-evicted previous), never approach the 600-key
-    cumulative total, and must not grow after the plateau is reached."""
-    import datetime
-    import os
-
-    from etl_cloud_logistics_spark.catalog import SCHEMAS
-    from etl_cloud_logistics_spark.streaming.jobs import (
-        dedup_stream,
-        read_event_stream,
-        run_stream_to_memory,
-    )
-
-    base = str(tmp_path_factory.mktemp("dedup_state_src"))
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-    n_batches, per_batch = 6, 100
-    for b in range(n_batches):
-        rows = [
-            (
-                b * per_batch + i,                       # fresh event_id
-                t0 + datetime.timedelta(hours=2 * b, seconds=i),
-                i % 10,
-                "ping",
-                1.0,
-                "{}",
-            )
-            for i in range(per_batch)
-        ]
-        df = spark.createDataFrame(rows, SCHEMAS["events"])
-        df.coalesce(1).write.mode("overwrite").parquet(f"{base}/_tmp_{b}")
-        src = [f for f in os.listdir(f"{base}/_tmp_{b}") if f.endswith(".parquet")][0]
-        os.rename(f"{base}/_tmp_{b}/{src}", f"{base}/chunk_{b}.parquet")
-
-    stream = read_event_stream(spark, base)  # maxFilesPerTrigger=1
-    q = run_stream_to_memory(
-        dedup_stream(stream, watermark="1 hour"),
-        "dedup_state_out",
-        _ckpt(tmp_path_factory),
-    )
-    try:
-        out = spark.sql("SELECT event_id FROM dedup_state_out").count()
-        totals = [
-            p["stateOperators"][0]["numRowsTotal"]
-            for p in (json.loads(pj.json) for pj in q.recentProgress)
-            if p.get("stateOperators") and p["stateOperators"][0]["numRowsUpdated"] > 0
-        ]
-    finally:
-        q.stop()
-    assert out == n_batches * per_batch  # all fresh keys pass the dedup
-    assert len(totals) >= n_batches - 1
-    # bounded: never holds more than two batches' worth of keys, and the
-    # plateau holds once eviction kicks in — no monotone growth toward 600
-    assert max(totals) <= 2 * per_batch, totals
-    assert totals[-1] <= 2 * per_batch, totals
-    assert max(totals[2:]) <= max(totals[:2]), totals
-
-
-@_PROVIDERS
-def test_funnel_stream_exact_under_out_of_order(
-    spark, sf_small, tmp_path_factory, provider
-):
-    """Streaming funnel == batch funnel under ADVERSARIAL arrival order:
-    the source delivers the chronologically LATER half of the events first,
-    so completions discovered in batch 1 must be revised downward when the
-    earlier events arrive in batch 2 — exactly the case a scalar state
-    machine gets wrong (a late early view re-validates clicks that were
-    'too early' at first sight).  Final per-user state must equal
-    operators.eventflow.funnel_user_steps over the full table.  Runs under
-    both state-store providers (r10): applyInPandasWithState's arbitrary
-    state must round-trip RocksDB's serialized form identically."""
-    provider = _resolve_provider(provider)
-    from etl_cloud_logistics_spark.operators.eventflow import funnel_user_steps
-    from etl_cloud_logistics_spark.streaming.jobs import (
-        FUNNEL_STEPS,
-        funnel_stream,
-        read_event_stream,
-        run_stream_to_memory,
-    )
-
-    base = str(tmp_path_factory.mktemp("funnel_src"))
-    events = load_table(spark, sf_small, "events").filter(
-        F.col("event_type").isin(FUNNEL_STEPS)
-    )
-    rows = events.orderBy("ts", "event_id").collect()
-    half = len(rows) // 2
-    for i, part_rows in enumerate([rows[half:], rows[:half]]):  # later half FIRST
-        part = spark.createDataFrame(part_rows, events.schema)
-        part.coalesce(1).write.mode("overwrite").parquet(f"{base}/_tmp_{i}")
-        src = [f for f in os.listdir(f"{base}/_tmp_{i}") if f.endswith(".parquet")][0]
-        os.rename(f"{base}/_tmp_{i}/{src}", f"{base}/chunk_{i}.parquet")
-        time.sleep(0.05)
-
-    out_name = f"funnel_out_{'rocks' if provider else 'heap'}"
-    q = run_stream_to_memory(
-        funnel_stream(read_event_stream(spark, base)),
-        out_name,
-        _ckpt(tmp_path_factory),
-        output_mode="update",
-        state_store_provider=provider,
-    )
-    try:
-        _assert_ran_on_rocksdb(q, provider)
-        # step_reached is monotone nondecreasing and each step_ts monotone
-        # nonincreasing across updates (docstring contract), so the final
-        # state is (max step, min ts) over the emission history
-        got = {
-            r.user_id: (r.step, r.t1, r.t2, r.t3)
-            for r in spark.sql(
-                """SELECT user_id, max(step_reached) AS step,
-                          min(step_ts_1) AS t1, min(step_ts_2) AS t2,
-                          min(step_ts_3) AS t3
-                   FROM {} GROUP BY user_id""".format(out_name)
-            ).collect()
-        }
-    finally:
-        q.stop()
-
-    want = {}
-    for r in funnel_user_steps(events, FUNNEL_STEPS).collect():
-        ts = [r.step_ts_1, r.step_ts_2, r.step_ts_3]
-        want[r.user_id] = (sum(t is not None for t in ts), *ts)
-    assert got == want
-    # sanity: the adversarial order actually exercised a revision — at
-    # least one user converts (otherwise the test is vacuous)
-    assert any(v[0] == len(FUNNEL_STEPS) for v in want.values())
-
-
-@_PROVIDERS
-def test_latest_status_ttl_state_evicts_idle_users(spark, tmp_path_factory, provider):
-    """The bounded-state ST2 variant: users idle past the 2 h event-time
-    TTL are evicted once the watermark passes — state tracks ACTIVE users,
-    not lifetime users.  Three micro-batches, each a fresh cohort of 10
-    users, 4 h apart (watermark 1 h): an unbounded store would end at 30
-    state rows; the TTL store must stay well below the cumulative total
-    and end at roughly one cohort.  Runs under both state-store providers
-    (r10): state TIMEOUT/eviction must behave identically on RocksDB."""
-    provider = _resolve_provider(provider)
-    import datetime
-    import os
-
-    from etl_cloud_logistics_spark.catalog import SCHEMAS
-    from etl_cloud_logistics_spark.streaming.jobs import (
-        latest_status_stream_ttl,
-        read_event_stream,
-        run_stream_to_memory,
-    )
-
-    base = str(tmp_path_factory.mktemp("ttl_state_src"))
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-    n_batches, per_batch = 3, 10
-    for b in range(n_batches):
-        rows = [
-            (
-                b * 1000 + i,
-                t0 + datetime.timedelta(hours=4 * b, seconds=i),
-                b * 100 + i,  # fresh user cohort per batch
-                "ping",
-                1.0,
-                "{}",
-            )
-            for i in range(per_batch)
-        ]
-        df = spark.createDataFrame(rows, SCHEMAS["events"])
-        df.coalesce(1).write.mode("overwrite").parquet(f"{base}/_tmp_{b}")
-        src = [f for f in os.listdir(f"{base}/_tmp_{b}") if f.endswith(".parquet")][0]
-        os.rename(f"{base}/_tmp_{b}/{src}", f"{base}/chunk_{b}.parquet")
-
-    stream = read_event_stream(spark, base)
-    out_name = f"ttl_state_out_{'rocks' if provider else 'heap'}"
-    q = run_stream_to_memory(
-        latest_status_stream_ttl(stream),
-        out_name,
-        _ckpt(tmp_path_factory),
-        output_mode="update",
-        state_store_provider=provider,
-    )
-    try:
-        _assert_ran_on_rocksdb(q, provider)
-        seen_users = spark.sql(
-            f"SELECT COUNT(DISTINCT user_id) AS n FROM {out_name}"
-        ).first()["n"]
-        totals = [
-            p["stateOperators"][0]["numRowsTotal"]
-            for p in (json.loads(pj.json) for pj in q.recentProgress)
-            if p.get("stateOperators")
-        ]
-    finally:
-        q.stop()
-    assert seen_users == n_batches * per_batch  # every cohort was emitted
-    # eviction happened: the final state is nowhere near the 30-user
-    # cumulative total an unbounded store would hold
-    assert totals and totals[-1] <= 2 * per_batch, totals
-    assert max(totals) < n_batches * per_batch, totals
-
-
-def test_latest_status_ttl_survives_very_late_event(spark, tmp_path_factory):
-    """An event arriving more than TTL behind the watermark must not kill
-    the query: arbitrary stateful ops do NOT auto-drop late rows, so
-    best_ts + ttl can land earlier than the current watermark — the timeout
-    is clamped to just past the watermark instead of throwing."""
-    import datetime
-    import os
-
-    from etl_cloud_logistics_spark.catalog import SCHEMAS
-    from etl_cloud_logistics_spark.streaming.jobs import (
-        latest_status_stream_ttl,
-        read_event_stream,
-        run_stream_to_memory,
-    )
-
-    base = str(tmp_path_factory.mktemp("ttl_late_src"))
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-
-    def write_chunk(idx, rows):
-        df = spark.createDataFrame(rows, SCHEMAS["events"])
-        df.coalesce(1).write.mode("overwrite").parquet(f"{base}/_tmp_{idx}")
-        src = [f for f in os.listdir(f"{base}/_tmp_{idx}") if f.endswith(".parquet")][0]
-        os.rename(f"{base}/_tmp_{idx}/{src}", f"{base}/chunk_{idx}.parquet")
-
-    # batch 0 pushes the watermark to ~hour 10; batch 1's user 99 event sits
-    # at hour 0 — 10 h behind, far past the 2 h TTL horizon
-    write_chunk(0, [(1, t0 + datetime.timedelta(hours=10), 1, "ping", 1.0, "{}")])
-    write_chunk(1, [(2, t0, 99, "ping", 1.0, "{}")])
-
-    stream = read_event_stream(spark, base)
-    q = run_stream_to_memory(
-        latest_status_stream_ttl(stream),
-        "ttl_late_out",
-        _ckpt(tmp_path_factory),
-        output_mode="update",
-    )
-    try:
-        assert q.exception() is None  # the pre-fix code dies here
-        users = {
-            r.user_id for r in spark.sql("SELECT user_id FROM ttl_late_out").collect()
-        }
-    finally:
-        q.stop()
-    assert users == {1, 99}
-
-
-def test_latest_status_ttl_validates_against_watermark(spark, tmp_path_factory):
-    """ttl ≤ watermark delay is rejected eagerly (eviction would degenerate)."""
-    import pytest as _pytest
-
-    from etl_cloud_logistics_spark.streaming.jobs import (
-        latest_status_stream_ttl,
-        read_event_stream,
-    )
-
-    base = str(tmp_path_factory.mktemp("ttl_validate_src"))
-    stream = read_event_stream(spark, base)
-    with _pytest.raises(ValueError, match="watermark"):
-        latest_status_stream_ttl(stream, watermark="3 hours", ttl="2 hours")
-
-
-@pytest.mark.slow_probe
-def test_streaming_soak_all_stateful_jobs_through_restart(
-    spark, tmp_path_factory
-):
-    """Soak: ALL four stateful jobs (watermark-bounded dedup, TTL
-    latest-status, strict-order funnel, windowed counts) run concurrently
-    over one at-least-once source, are stopped MID-INPUT, and restart from
-    their checkpoints to consume redeliveries plus fresh data.  Per-job
-    recovery is pinned elsewhere; this pins the composition:
-
-    - dedup state survives the restart (redeliveries delivered AFTER the
-      restart are dropped by state recovered from the checkpoint) and the
-      durable audit sink holds every event exactly once;
-    - TTL state plateaus at the active-cohort size across the restart
-      (numRowsTotal never near the lifetime-user total);
-    - funnel and windowed-count emissions aggregate to the batch answers
-      over the full input despite duplicates and the stop/start;
-    - no query dies (q.exception() is None for all four)."""
-    import datetime
-
-    from etl_cloud_logistics_spark.catalog import SCHEMAS
-    from etl_cloud_logistics_spark.operators.eventflow import funnel_user_steps
-    from etl_cloud_logistics_spark.streaming.jobs import (
-        FUNNEL_STEPS,
-        dedup_stream,
-        funnel_stream,
-        latest_status_stream_ttl,
-        read_event_stream,
-        windowed_counts,
-    )
-
-    base = str(tmp_path_factory.mktemp("soak_src"))
-    sink_base = str(tmp_path_factory.mktemp("soak_sinks"))
-    ckpt_base = str(tmp_path_factory.mktemp("soak_ckpts"))
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-
-    def cohort(b):
-        rows = []
-        for i in range(10):
-            u = b * 100 + i
-            start = t0 + datetime.timedelta(hours=4 * b, seconds=i)
-            for s, step in enumerate(FUNNEL_STEPS):
-                rows.append(
-                    (
-                        b * 1000 + i * 10 + s,
-                        start + datetime.timedelta(seconds=60 * s),
-                        u,
-                        step,
-                        float(10 * s),
-                        "{}",
-                    )
-                )
-        return rows
-
-    def write_chunk(idx, rows):
-        df = spark.createDataFrame(rows, SCHEMAS["events"])
-        df.coalesce(1).write.mode("overwrite").parquet(f"{base}/_tmp_{idx}")
-        src = [f for f in os.listdir(f"{base}/_tmp_{idx}") if f.endswith(".parquet")][0]
-        os.rename(f"{base}/_tmp_{idx}/{src}", f"{base}/chunk_{idx}.parquet")
-
-    c0, c1, c2 = cohort(0), cohort(1), cohort(2)
-    delivered = []  # the as-delivered multiset (windowed counts see dups)
-
-    JOBS = {
-        "dedup": lambda s: dedup_stream(s),
-        "ttl": lambda s: latest_status_stream_ttl(s),
-        "funnel": lambda s: funnel_stream(s),
-        "wins": lambda s: windowed_counts(s),
-    }
-
-    def start_all():
-        qs = {}
-        for name, job in JOBS.items():
-            out = f"{sink_base}/{name}"
-
-            def sink(batch_df, batch_id, _out=out):
-                batch_df.write.mode("append").parquet(_out)
-
-            qs[name] = (
-                job(read_event_stream(spark, base))
-                .writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", f"{ckpt_base}/{name}")
-                .start()
-            )
-        return qs
-
-    # run 1: cohort 0, then cohort 1 with five in-batch duplicates
-    write_chunk(0, c0)
-    write_chunk(1, c1 + c1[:5])
-    delivered += c0 + c1 + c1[:5]
-    qs = start_all()
-    for q in qs.values():
-        q.processAllAvailable()
-    for q in qs.values():
-        assert q.exception() is None
-        q.stop()
-
-    # mid-input restart: the source then redelivers ten cohort-1 events
-    # (within every job's watermark horizon) and ships a fresh cohort
-    write_chunk(2, c1[:10])
-    write_chunk(3, c2)
-    delivered += c1[:10] + c2
-    qs = start_all()
-    for q in qs.values():
-        q.processAllAvailable()
-    ttl_totals = [
-        p["stateOperators"][0]["numRowsTotal"]
-        for p in (json.loads(pj.json) for pj in qs["ttl"].recentProgress)
-        if p.get("stateOperators")
-    ]
-    for q in qs.values():
-        assert q.exception() is None
-        q.stop()
-
-    all_events = spark.createDataFrame(c0 + c1 + c2, SCHEMAS["events"])
-    delivered_df = spark.createDataFrame(delivered, SCHEMAS["events"])
-
-    # dedup: every event exactly once across both runs — in-batch dups,
-    # post-restart redeliveries, and checkpoint replay all collapse
-    audit = spark.read.parquet(f"{sink_base}/dedup")
-    assert audit.count() == 90
-    assert audit.select("event_id").distinct().count() == 90
-
-    # TTL latest-status: final emission per user equals the batch answer
-    ttl_rows = spark.read.parquet(f"{sink_base}/ttl")
-    got_latest = {
-        r.user_id: r.m
-        for r in ttl_rows.groupBy("user_id")
-        .agg(F.max("last_event_id").alias("m"))
-        .collect()
-    }
-    want_latest = {
-        r.user_id: r.m
-        for r in all_events.groupBy("user_id").agg(F.max("event_id").alias("m")).collect()
-    }
-    assert got_latest == want_latest
-    # ...and state plateaus at the active-cohort scale, not lifetime users
-    assert ttl_totals and ttl_totals[-1] <= 20, ttl_totals
-    assert max(ttl_totals) < 30, ttl_totals
-
-    # funnel: monotone emissions aggregate to the batch funnel
-    fun = spark.read.parquet(f"{sink_base}/funnel")
-    got_funnel = {
-        r.user_id: (r.step, r.t1, r.t2, r.t3)
-        for r in fun.groupBy("user_id")
-        .agg(
-            F.max("step_reached").alias("step"),
-            F.min("step_ts_1").alias("t1"),
-            F.min("step_ts_2").alias("t2"),
-            F.min("step_ts_3").alias("t3"),
-        )
-        .collect()
-    }
-    want_funnel = {}
-    for r in funnel_user_steps(all_events, FUNNEL_STEPS).collect():
-        ts = [r.step_ts_1, r.step_ts_2, r.step_ts_3]
-        want_funnel[r.user_id] = (sum(t is not None for t in ts), *ts)
-    assert got_funnel == want_funnel
-    assert all(v[0] == len(FUNNEL_STEPS) for v in want_funnel.values())
-
-    # windowed counts: running updates max out at the batch counts over the
-    # AS-DELIVERED multiset (duplicates included — dedup is a separate job)
-    wins = spark.read.parquet(f"{sink_base}/wins")
-    got_wins = {
-        (r.window_start, r.event_type): r.m
-        for r in wins.groupBy("window_start", "event_type")
-        .agg(F.max("n_events").alias("m"))
-        .collect()
-    }
-    want_wins = {
-        ((r["w"]["start"]), r.event_type): r.n
-        for r in delivered_df.groupBy(
-            F.window("ts", "1 hour").alias("w"), "event_type"
-        )
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert got_wins == want_wins
-
-
-def test_drift_monitor_stream_flags_shifted_batch(spark, tmp_path_factory):
-    """Per-micro-batch KS monitoring against a static reference: batches
-    drawn from the reference's distribution score near zero, the shifted
-    batch scores high — and the monitor row count matches the non-empty
-    batch count (exactly one score per batch)."""
-    import datetime
-
-    from etl_cloud_logistics_spark.catalog import SCHEMAS
-    from etl_cloud_logistics_spark.streaming.jobs import (
-        foreach_batch_drift_monitor,
-        read_event_stream,
-    )
-
-    base = str(tmp_path_factory.mktemp("drift_src"))
-    out = str(tmp_path_factory.mktemp("drift_out")) + "/scores"
-    t0 = datetime.datetime(2024, 1, 1)
-
-    def rows(batch, shift):
-        return [
-            (
-                batch * 1000 + i,
-                t0 + datetime.timedelta(hours=batch, seconds=i),
-                i,
-                "ping",
-                float((i * 37) % 100) + shift,  # deterministic uniform-ish
-                "{}",
-            )
-            for i in range(200)
-        ]
-
-    def write_chunk(idx, chunk_rows):
-        df = spark.createDataFrame(chunk_rows, SCHEMAS["events"])
-        df.coalesce(1).write.mode("overwrite").parquet(f"{base}/_tmp_{idx}")
-        src = [f for f in os.listdir(f"{base}/_tmp_{idx}") if f.endswith(".parquet")][0]
-        os.rename(f"{base}/_tmp_{idx}/{src}", f"{base}/chunk_{idx}.parquet")
-
-    reference = spark.createDataFrame(rows(9, 0.0), SCHEMAS["events"]).select("value")
-    write_chunk(0, rows(0, 0.0))   # same distribution
-    write_chunk(1, rows(1, 0.0))   # same distribution
-    write_chunk(2, rows(2, 60.0))  # shifted by 60
-
-    q = (
-        read_event_stream(spark, base)
-        .writeStream.foreachBatch(
-            foreach_batch_drift_monitor(reference, "value", out)
-        )
-        .option("checkpointLocation", _ckpt(tmp_path_factory))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    scores = {r.batch_id: r.ks_stat for r in spark.read.parquet(out).collect()}
-    assert len(scores) == 3
-    assert scores[0] == 0.0 and scores[1] == 0.0  # identical value multisets
-    assert scores[2] > 0.5  # 60-point shift on a 0..99 support
-    n = {r.batch_id: (r.n_ref, r.n_batch) for r in spark.read.parquet(out).collect()}
-    assert all(v == (200, 200) for v in n.values())
-
-
-@pytest.mark.slow_probe
-def test_streaming_heavy_hitters_bounded_state_and_undercount(
-    spark, tmp_path_factory
-):
-    """Fold a Zipf-ish item stream through the streaming MG summary in 3
-    micro-batches: state stays ≤ k rows, every true heavy item (count >
-    n/(k+1)) survives the fold, estimates never overcount and undercount
-    by at most n/(k+1) — and a crash-replay of the last batch changes
-    nothing (replay-safe batch ids)."""
-    from collections import Counter
-
-    from etl_cloud_logistics_spark.streaming.jobs import (
-        foreach_batch_heavy_hitters,
-    )
-
-    base = str(tmp_path_factory.mktemp("hh_src"))
-    state = str(tmp_path_factory.mktemp("hh_state")) + "/summary"
-    k = 16
-
-    def zipf_rows(batch):
-        rows = []
-        for i in range(1200):
-            # heavy items a/b/c dominate; tail spreads across 200 items
-            if i % 3 == 0:
-                item = "a"
-            elif i % 5 == 0:
-                item = "b"
-            elif i % 7 == 0:
-                item = "c"
-            else:
-                item = f"t{(batch * 1200 + i) % 200}"
-            rows.append((item,))
-        return rows
-
-    all_rows = []
-    for b in range(3):
-        chunk = zipf_rows(b)
-        all_rows += chunk
-        df = spark.createDataFrame(chunk, "item string")
-        df.coalesce(1).write.mode("overwrite").parquet(f"{base}/_tmp_{b}")
-        src = [
-            f for f in os.listdir(f"{base}/_tmp_{b}") if f.endswith(".parquet")
-        ][0]
-        os.rename(f"{base}/_tmp_{b}/{src}", f"{base}/chunk_{b}.parquet")
-
-    sink = foreach_batch_heavy_hitters(state, "item", k=k)
-    q = (
-        spark.readStream.schema("item string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", _ckpt(tmp_path_factory))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got = {r["item"]: r["cnt"] for r in spark.read.parquet(state).collect()}
-    true = Counter(r[0] for r in all_rows)
-    n = len(all_rows)
-    bound = n / (k + 1)
-    assert len(got) <= k
-    for item, cnt in true.items():
-        if cnt > bound:
-            assert item in got, f"heavy item {item} lost (true={cnt})"
-    for item, est in got.items():
-        assert est <= true[item], f"{item}: est {est} > true {true[item]}"
-        assert true[item] - est <= bound + 1e-9
-
-    # crash-replay: re-applying the final batch must be a no-op
-    before = sorted(got.items())
-    last_batch = spark.createDataFrame(zipf_rows(2), "item string")
-    sink(last_batch, 2)
-    after = sorted(
-        (r["item"], r["cnt"]) for r in spark.read.parquet(state).collect()
-    )
-    assert after == before
 
 
 def test_decode_event_json_roundtrip(spark, sf_small):
@@ -1188,7 +425,6 @@ def test_rate_source_events_drive_streaming_jobs(spark, tmp_path_factory):
     from etl_cloud_logistics_spark.streaming.jobs import (
         alert_stream,
         read_event_stream,
-        run_stream_to_memory,
     )
 
     import time as _time
@@ -1311,397 +547,3 @@ def test_crash_mid_batch_restart_exactly_once_state(
     for r in expected.collect():
         assert got[r["user_id"]] == r["m"]
 
-
-def test_crash_mid_stream_restart_ttl_state(spark, tmp_path_factory):
-    """The applyInPandasWithState TTL job (ST2) through a mid-stream CRASH:
-    its downstream foreachBatch sink throws while batches remain, the query
-    dies, and a restart from the checkpoint recovers the state-store state
-    and finishes.  Union of emissions across both runs, reduced by
-    max-event-id per user, must equal the batch answer over the full input
-    — redelivered updates collapse, none are lost."""
-    import datetime
-    import os
-
-    from etl_cloud_logistics_spark.catalog import SCHEMAS
-    from etl_cloud_logistics_spark.streaming.jobs import latest_status_stream_ttl
-
-    base = str(tmp_path_factory.mktemp("ttlcrash_src"))
-    out = str(tmp_path_factory.mktemp("ttlcrash_out"))
-    ckpt = str(tmp_path_factory.mktemp("ttlcrash_ckpt"))
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-
-    all_rows = []
-    for b in range(3):
-        rows = [
-            (
-                b * 1000 + i,
-                t0 + datetime.timedelta(minutes=30 * b, seconds=i),
-                i % 7,  # overlapping users so state carries across batches
-                "ping",
-                float(b),
-                "{}",
-            )
-            for i in range(10)
-        ]
-        all_rows.extend(rows)
-        df = spark.createDataFrame(rows, SCHEMAS["events"])
-        df.coalesce(1).write.mode("overwrite").parquet(f"{base}/_tmp_{b}")
-        src = [f for f in os.listdir(f"{base}/_tmp_{b}") if f.endswith(".parquet")][0]
-        os.rename(f"{base}/_tmp_{b}/{src}", f"{base}/chunk_{b}.parquet")
-
-    crashed = {"done": False}
-
-    def sink(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(out)
-        if batch_id == 1 and not crashed["done"]:
-            crashed["done"] = True
-            raise RuntimeError("injected crash mid-stream")
-
-    def start():
-        stream = read_event_stream(spark, base, max_files_per_trigger=1)
-        return (
-            latest_status_stream_ttl(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-    q = start()
-    with pytest.raises(Exception):
-        q.processAllAvailable()
-    q.stop()
-    assert crashed["done"]
-
-    q2 = start()
-    q2.processAllAvailable()
-    q2.stop()
-    assert q2.exception() is None
-
-    emitted = spark.read.parquet(out)
-    latest = emitted.groupBy("user_id").agg(
-        F.max_by("last_event_type", "last_event_id").alias("t"),
-        F.max("last_event_id").alias("e"),
-    )
-    events_df = spark.createDataFrame(all_rows, SCHEMAS["events"])
-    expected = events_df.groupBy("user_id").agg(
-        F.max_by("event_type", "event_id").alias("t"),
-        F.max("event_id").alias("e"),
-    )
-    got = {r["user_id"]: (r["t"], r["e"]) for r in latest.collect()}
-    exp = {r["user_id"]: (r["t"], r["e"]) for r in expected.collect()}
-    assert got == exp
-
-
-def test_latest_status_state_under_rocksdb_provider(spark, chunked_events, tmp_path_factory):
-    """ST2 under the RocksDB state-store provider (r9, VERDICT r8 #6): the
-    100 TB-key-cardinality backend must produce the same latest-status
-    answer as the default HDFS-backed heap store, and the seam must restore
-    the session conf so later queries keep the default provider."""
-    from etl_cloud_logistics_spark.streaming.jobs import (
-        _PROVIDER_CONF,
-        ROCKSDB_PROVIDER,
-    )
-
-    src, events = chunked_events
-    stream = read_event_stream(spark, src)
-    q = run_stream_to_memory(
-        latest_status_stream(stream),
-        "latest_rocks_out",
-        _ckpt(tmp_path_factory),
-        output_mode="update",
-        state_store_provider=ROCKSDB_PROVIDER,
-    )
-    try:
-        assert spark.conf.get(_PROVIDER_CONF, None) is None  # seam restored
-        got = {
-            r.user_id: (r.last_event_id, r.last_event_type)
-            for r in spark.sql(
-                """SELECT user_id, last_event_id, last_event_type FROM (
-                       SELECT *, row_number() OVER (
-                           PARTITION BY user_id ORDER BY last_ts DESC, last_event_id DESC
-                       ) rn FROM latest_rocks_out) WHERE rn = 1"""
-            ).collect()
-        }
-        want = {
-            r.user_id: (r.last_event_id, r.last_event_type)
-            for r in events.withColumn(
-                "rn",
-                F.row_number().over(
-                    __import__("pyspark.sql.window", fromlist=["Window"]).Window
-                    .partitionBy("user_id")
-                    .orderBy(F.desc("ts"), F.desc("event_id"))
-                ),
-            )
-            .filter("rn = 1")
-            .selectExpr(
-                "user_id", "event_id AS last_event_id", "event_type AS last_event_type"
-            )
-            .collect()
-        }
-        assert got == want
-        # the query really ran on RocksDB, not a silent fallback
-        progress = q.lastProgress
-        op = progress["stateOperators"][0]
-        mem = op.get("customMetrics", {})
-        assert any("rocksdb" in k.lower() for k in mem), sorted(mem)[:8]
-    finally:
-        q.stop()
-
-
-_PROTOBUF = pytest.mark.skipif(
-    __import__("importlib").util.find_spec("google") is None
-    or __import__("importlib").util.find_spec("google.protobuf") is None,
-    reason="transformWithState's state protocol needs protobuf (absent in "
-    "this container; the operator's eager guard is tested below and the "
-    "processor logic is unit-tested without the runtime)",
-)
-
-
-@_PROTOBUF
-@_PROVIDERS
-def test_transform_with_state_running_stats_matches_batch(
-    spark, chunked_events, tmp_path_factory, provider
-):
-    """transformWithStateInPandas (r11, the Spark-4 stateful API): per-user
-    running stats folded through ValueState must end, after all chunks, at
-    exactly the batch groupBy aggregate — under both state-store providers.
-    idle_ttl is huge so no timer fires inside the fixture's horizon.
-    Skipped where protobuf is absent (this container); activates on any
-    normally-provisioned cluster."""
-    from etl_cloud_logistics_spark.streaming.jobs import running_user_stats_stream
-
-    provider = _resolve_provider(provider)
-    src, events = chunked_events
-    stream = read_event_stream(spark, src)
-    out_name = f"tws_out_{'rocks' if provider else 'heap'}"
-    q = run_stream_to_memory(
-        running_user_stats_stream(stream, watermark="10 hours", idle_ttl="3650 days"),
-        out_name,
-        _ckpt(tmp_path_factory),
-        output_mode="update",
-        state_store_provider=provider,
-    )
-    try:
-        rows = spark.sql(f"SELECT * FROM {out_name}").collect()
-        _assert_ran_on_rocksdb(q, provider)
-    finally:
-        q.stop()
-    assert not any(r["closed"] for r in rows)
-    # update mode re-emits the running row per touched key per batch; the
-    # final (max n_events) row per user is the fold's end state
-    final = {}
-    for r in rows:
-        cur = final.get(r["user_id"])
-        if cur is None or r["n_events"] > cur["n_events"]:
-            final[r["user_id"]] = r
-    want = {
-        r["user_id"]: r
-        for r in events.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("total_value"),
-            F.max("ts").alias("last_ts"),
-        )
-        .collect()
-    }
-    assert set(final) == set(want)
-    for uid, got in final.items():
-        assert got["n_events"] == want[uid]["n_events"], uid
-        assert got["total_value"] == pytest.approx(
-            want[uid]["total_value"], rel=1e-9
-        ), uid
-        assert got["last_ts"] == want[uid]["last_ts"], uid
-
-
-@_PROTOBUF
-def test_transform_with_state_timer_evicts_and_emits_closed(
-    spark, tmp_path_factory
-):
-    """The capability transformWithState adds over applyInPandasWithState:
-    a per-key EVENT-TIME TIMER fires when the watermark passes it, emitting
-    the user's final row (closed=true) and clearing state — so idle users
-    leave a summary instead of silently vanishing, and a later event
-    re-creates the state from zero.  Skipped where protobuf is absent;
-    the same scenario is unit-tested below without the runtime."""
-    import os as _os
-
-    from etl_cloud_logistics_spark.streaming.jobs import running_user_stats_stream
-
-    base = str(tmp_path_factory.mktemp("tws_src"))
-    t0 = dt.datetime(2024, 6, 1, 10, 0, 0)
-
-    def write_chunk(name, rows):
-        df = spark.createDataFrame(
-            [(i, ts, uid, "view", 2.0, "{}") for i, ts, uid in rows],
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(f"{base}/_tmp")
-        src = [f for f in _os.listdir(f"{base}/_tmp") if f.endswith(".parquet")][0]
-        _os.rename(f"{base}/_tmp/{src}", f"{base}/{name}.parquet")
-        time.sleep(0.05)
-
-    stream = read_event_stream(spark, base)
-    q = run_stream_to_memory(
-        running_user_stats_stream(stream, watermark="10 minutes", idle_ttl="1 hour"),
-        "tws_evict_out",
-        _ckpt(tmp_path_factory),
-        output_mode="update",
-    )
-    try:
-        # user 1: two events, then goes idle
-        write_chunk("c0", [(1, t0, 1), (2, t0 + dt.timedelta(minutes=5), 1)])
-        q.processAllAvailable()
-        # user 2 far in the future: watermark jumps past user 1's timer
-        # (10:05 + 1 h), firing the eviction
-        write_chunk("c1", [(3, t0 + dt.timedelta(hours=4), 2)])
-        q.processAllAvailable()
-        # user 1 returns: state re-creates from zero (n_events restarts at 1)
-        write_chunk("c2", [(4, t0 + dt.timedelta(hours=5), 1)])
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM tws_evict_out ORDER BY closed, n_events").collect()
-    finally:
-        q.stop()
-    closed = [r for r in rows if r["closed"]]
-    assert len(closed) == 1 and closed[0]["user_id"] == 1
-    assert closed[0]["n_events"] == 2 and closed[0]["total_value"] == 4.0
-    # the post-eviction return starts a fresh fold
-    reborn = [
-        r for r in rows if r["user_id"] == 1 and not r["closed"] and r["n_events"] == 1
-    ]
-    assert any(r["last_ts"] == t0 + dt.timedelta(hours=5) for r in reborn)
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeHandle:
-    """Minimal StatefulProcessorHandle double: one ValueState + a timer set
-    — lets the processor's fold/timer logic run without the protobuf
-    runtime."""
-
-    def __init__(self):
-        self.states = {}
-        self.timers = []
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        self.states[name] = _FakeValueState()
-        return self.states[name]
-
-    def listTimers(self):
-        return list(self.timers)
-
-    def deleteTimer(self, t):
-        self.timers.remove(t)
-
-    def registerTimer(self, t):
-        self.timers.append(t)
-
-
-def _mk_processor_with_fake_handle(idle_ttl_ms):
-    from etl_cloud_logistics_spark.streaming.jobs import (
-        _make_running_stats_processor,
-    )
-
-    proc = _make_running_stats_processor(idle_ttl_ms)
-    handle = _FakeHandle()
-    proc.init(handle)
-    return proc, handle
-
-
-def test_transform_with_state_processor_fold_logic():
-    """Pure-Python coverage of the StatefulProcessor semantics (the part
-    the protobuf-less container CAN verify): batches fold into ValueState,
-    the running emission carries the cumulative stats, the per-key timer
-    re-arms at last_ts + ttl, and timer expiry emits the closed row and
-    clears state so the next batch starts a fresh fold."""
-    import pandas as _pd
-
-    ttl_ms = 3_600_000
-    proc, handle = _mk_processor_with_fake_handle(ttl_ms)
-    t0 = _pd.Timestamp("2024-06-01 10:00:00")
-
-    def batch(rows):
-        return _pd.DataFrame(
-            {"value": [v for v, _ in rows], "ts": [ts for _, ts in rows]}
-        )
-
-    out1 = list(
-        proc.handleInputRows(
-            (7,), iter([batch([(2.0, t0), (3.0, t0 + _pd.Timedelta(minutes=5))])]), None
-        )
-    )
-    assert len(out1) == 1
-    r = out1[0].iloc[0]
-    assert (r["user_id"], r["n_events"], r["total_value"], bool(r["closed"])) == (
-        7, 2, 5.0, False,
-    )
-    last_ms = int((t0 + _pd.Timedelta(minutes=5)).value // 1_000_000)
-    assert handle.timers == [last_ms + ttl_ms]  # armed at last event + ttl
-    # second batch folds on top and RE-ARMS (old timer deleted, one live)
-    out2 = list(
-        proc.handleInputRows(
-            (7,), iter([batch([(4.0, t0 + _pd.Timedelta(hours=2))])]), None
-        )
-    )
-    r2 = out2[0].iloc[0]
-    assert (r2["n_events"], r2["total_value"]) == (3, 9.0)
-    new_last_ms = int((t0 + _pd.Timedelta(hours=2)).value // 1_000_000)
-    assert handle.timers == [new_last_ms + ttl_ms]
-    # expiry: closed row emitted from state, state cleared
-    out3 = list(proc.handleExpiredTimer((7,), None, None))
-    r3 = out3[0].iloc[0]
-    assert (r3["n_events"], r3["total_value"], bool(r3["closed"])) == (3, 9.0, True)
-    assert not handle.states["stats"].exists()
-    # expiry on already-cleared state emits nothing (idempotent)
-    assert list(proc.handleExpiredTimer((7,), None, None)) == []
-    # a return after eviction starts from zero
-    out4 = list(
-        proc.handleInputRows(
-            (7,), iter([batch([(1.0, t0 + _pd.Timedelta(hours=9))])]), None
-        )
-    )
-    assert out4[0].iloc[0]["n_events"] == 1
-
-
-def test_transform_with_state_guard_is_loud(spark, sf_small):
-    """Where protobuf is missing, the operator must fail EAGERLY with the
-    documented error, not crash the streaming driver worker mid-query with
-    an opaque 'exited unexpectedly' (the failure mode observed without the
-    guard)."""
-    import importlib.util as _ilu
-
-    from etl_cloud_logistics_spark.catalog import load_table
-    from etl_cloud_logistics_spark.streaming.jobs import running_user_stats_stream
-
-    if _ilu.find_spec("google") is not None and _ilu.find_spec(
-        "google.protobuf"
-    ) is not None:
-        pytest.skip("protobuf present: the guard passes through by design")
-    events = load_table(spark, sf_small, "events")
-    with pytest.raises(RuntimeError, match="requires the 'protobuf' package"):
-        running_user_stats_stream(events)
-
-
-def test_transform_with_state_ttl_validates_against_watermark(spark, sf_small):
-    from etl_cloud_logistics_spark.catalog import load_table
-    from etl_cloud_logistics_spark.streaming.jobs import running_user_stats_stream
-
-    events = load_table(spark, sf_small, "events")
-    with pytest.raises(ValueError, match="must exceed the watermark"):
-        running_user_stats_stream(events, watermark="2 hours", idle_ttl="1 hour")

@@ -51,14 +51,6 @@ Usage: python tools/scaling_probe.py [K ...]            (default 1 5 10)
            COMPOSED end-to-end: two consecutive days at an N-key
            dimension with 10% churn; SCD2+fact invariants on the
            composed result; default 1e7)
-       python tools/scaling_probe.py --streaming [N ...] (stateful
-           streaming jobs end-to-end through the file micro-batch
-           source at N events, heap AND RocksDB providers, wall +
-           per-batch + state metrics; default 1e6 4e6)
-       python tools/scaling_probe.py --streamrec [N ...] (restart-from-
-           checkpoint cost at N-event state: drain 12/16 chunks, stop,
-           append 4, restart; first-batch state-reload vs steady,
-           both providers; default 4e6)
 
 ``--vectors`` probes the vector kit instead: SRP hyperplane-LSH signature
 generation and the PCA moments pass over K× replicas of the embeddings
@@ -1746,384 +1738,6 @@ def bloomrt_probe(rs: list[int]) -> None:
             shutil.rmtree(root, ignore_errors=True)
 
 
-_STREAM_BASE_EPOCH = 1_577_836_800  # 2020-01-01T00:00Z
-
-
-def _stream_event_chunks(
-    spark, root: str, n: int, n_chunks: int = 16
-) -> tuple[str, int, int]:
-    """Synthesize N deterministic events as chronological chunk files under
-    ``root/events`` (see streaming_probe's docstring for the distribution:
-    ±4 min jitter inside every watermark, 2% exact-redelivery duplicates,
-    N/20 users each carrying all four event types).
-    Returns (src_dir, n_users, expected_distinct_event_ids)."""
-    import shutil  # noqa: PLC0415
-
-    n_users = max(1, n // 20)
-    rate = max(1, n // (4 * 3600))  # events per event-time second
-    src = os.path.join(root, "events")
-    os.makedirs(src, exist_ok=True)
-    per = n // n_chunks
-    for c in range(n_chunks):
-        lo = c * per
-        hi = (c + 1) * per if c < n_chunks - 1 else n
-        tmp = os.path.join(root, f"_tmp_{c}")
-        # 2% TRUE duplicates: every 50th row re-emits its predecessor as an
-        # exact redelivery — EVERY column derives from the effective id, so
-        # the copy is byte-identical (a payload-differing event_id collision
-        # would instead violate the uniqueness contract the latest-status
-        # twins document, and would mis-state the dedup workload)
-        eid = F.when((F.col("id") % 50 == 49), F.col("id") - 1).otherwise(F.col("id"))
-        (
-            spark.range(lo, hi)
-            .select(eid.alias("eid"))
-            .select(
-                F.col("eid").alias("event_id"),
-                F.timestamp_seconds(
-                    F.lit(_STREAM_BASE_EPOCH)
-                    + (F.col("eid") / float(rate))
-                    + (F.pmod(F.hash(F.col("eid")), F.lit(480)) - 240)
-                ).alias("ts"),
-                # eid//4 (not eid): with type = eid%4 and n_users divisible
-                # by 4, ``eid % n_users`` would freeze each user on ONE type
-                # — zero cross-type join matches / funnel conversions
-                # (caught r11: the first ssjoin draw's batch pin was
-                # vacuously 0==0).  Consecutive-id bursts give every user
-                # all four types AND full user coverage at n >= 4*users.
-                ((F.col("eid") / 4).cast("long") % n_users).alias("user_id"),
-                F.element_at(
-                    F.array(F.lit("ping"), F.lit("move"), F.lit("scan"), F.lit("drop")),
-                    (F.col("eid") % 4 + 1).cast("int"),
-                ).alias("event_type"),
-                (F.pmod(F.hash(F.col("eid")), F.lit(5000)) / 100.0).alias("value"),
-                F.to_json(F.struct(F.col("eid").alias("seq"))).alias("props"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(tmp, part), os.path.join(src, f"chunk_{c:02d}.parquet"))
-        shutil.rmtree(tmp, ignore_errors=True)
-        time.sleep(0.05)  # strictly increasing mtimes → chronological replay
-    return src, n_users, n - n // 50  # ids with i%50==49 in [0,n) collapse
-
-
-def streaming_probe(ns: list[int]) -> None:
-    """Stateful streaming throughput at scale (r11): the streaming family
-    was the last with correctness tests but NO measured slope — every
-    claim about the state-store seam ("RocksDB for 100 TB-class key
-    cardinality") rested on the provider being *exercised*, not priced.
-
-    Per event tier N (default 1e6 / 4e6): synthesize N deterministic
-    events (monotone event time at ~N/4h-span density, ±4 min jitter so
-    arrival order is genuinely out-of-order but inside every job's
-    watermark; 2% exact duplicates for the dedup job; N/20 distinct
-    users) as 16 chronological parquet chunk-files, then drive each
-    stateful job family end-to-end through the file micro-batch source
-    (maxFilesPerTrigger=2 → 8 micro-batches) into a noop sink, under BOTH
-    state-store providers:
-
-    - ``windowed_counts``  — JVM tumbling agg, tiny state (types×windows);
-      prices the pure streaming machinery.
-    - ``session_window``   — JVM session agg keyed by user: state ~= users.
-    - ``dedup``            — dropDuplicatesWithinWatermark on event_id:
-      state ~= the watermark horizon's event count; output row count is
-      pinned to the expected distinct count.
-    - ``latest``           — applyInPandasWithState keyed by user: the
-      Python-state path; final state row count is pinned to n_users.
-    - ``latestagg``        — the native struct-max twin of ``latest``
-      (same pin): the measured JVM-vs-Python-state comparison.
-    - ``ssjoin``           — watermarked stream-stream inner join of two
-      type-slices of the source: per-key buffered state on BOTH sides
-      (the largest-state family); output matches are pinned to the same
-      join run in batch over the same chunk files (and asserted nonzero —
-      a vacuous 0==0 pin hides a broken generator).
-    - ``funnel``           — applyInPandasWithState with per-key candidate
-      LISTS (the heaviest Python state shape shipped), over the
-      generator's types mapped onto the funnel steps.
-
-    Reported per (job, provider): wall, Mrows/s, micro-batch count,
-    per-batch trigger p50/max, final state rows + state memory, and the
-    no-silent-fallback RocksDB custom-metric check.  The per-batch max
-    vs p50 also exposes any round-over-round degradation (the streaming
-    analog of the r10 iterative-stats pathology — expected flat).
-    """
-    import json  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from etl_cloud_logistics_spark.streaming.jobs import (  # noqa: PLC0415
-        ROCKSDB_PROVIDER,
-        dedup_stream,
-        funnel_stream,
-        latest_status_stream,
-        latest_status_stream_agg,
-        read_event_stream,
-        session_window_counts,
-        start_with_provider,
-        stream_stream_join,
-        windowed_counts,
-    )
-
-    spark = get_spark("scaling-probe-streaming")
-
-    def ssjoin(stream):
-        # the two sides are disjoint type-slices of ONE source: per-key
-        # buffered state on both sides, the biggest-state join family
-        return stream_stream_join(
-            stream.filter(F.col("event_type") == "move"),
-            stream.filter(F.col("event_type") == "scan"),
-        )
-
-    def funnel(stream):
-        # map the generator's types onto the funnel steps (ping→view,
-        # move→click, scan→purchase; drop stays a non-step): per-key
-        # candidate LISTS — the heaviest Python state shape shipped
-        t = F.col("event_type")
-        mapped = stream.withColumn(
-            "event_type",
-            F.when(t == "ping", "view")
-            .when(t == "move", "click")
-            .when(t == "scan", "purchase")
-            .otherwise(t),
-        )
-        return funnel_stream(mapped)
-
-    def run_one(src: str, job_fn, output_mode: str, provider: str | None, root: str):
-        stream = read_event_stream(spark, src, max_files_per_trigger=2)
-        out = job_fn(stream)
-        ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=root)
-        writer = (
-            out.writeStream.outputMode(output_mode)
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-        )
-        q = start_with_provider(spark, writer, provider)
-        try:
-            t0 = time.perf_counter()
-            q.processAllAvailable()
-            wall = time.perf_counter() - t0
-            progress = [
-                json.loads(p) if isinstance(p, str) else p for p in q.recentProgress
-            ]
-        finally:
-            # stop even on a mid-drain failure: the caller's rmtree must not
-            # delete the source/checkpoint under a still-running query
-            q.stop()
-        batches = [p for p in progress if p.get("numInputRows", 0) > 0]
-        trig = sorted(p["durationMs"]["triggerExecution"] / 1e3 for p in batches)
-        out_rows = sum(p.get("sink", {}).get("numOutputRows", 0) for p in batches)
-        state_rows = state_mb = 0
-        rocksdb_ok = provider is None
-        for p in reversed(progress):
-            ops = p.get("stateOperators") or []
-            if ops:
-                state_rows = ops[0].get("numRowsTotal", 0)
-                cm = ops[0].get("customMetrics", {})
-                mem = ops[0].get("memoryUsedBytes", 0) or cm.get(
-                    "rocksdbTotalMemoryUsage", 0
-                )
-                state_mb = mem / 2**20
-                if provider is not None:
-                    rocksdb_ok = any("rocksdb" in k.lower() for k in cm)
-                break
-        return {
-            "wall": wall,
-            "batches": len(batches),
-            "in_rows": sum(p["numInputRows"] for p in batches),
-            "out_rows": out_rows,
-            "p50_batch": trig[len(trig) // 2] if trig else 0.0,
-            "max_batch": trig[-1] if trig else 0.0,
-            "state_rows": state_rows,
-            "state_mb": state_mb,
-            "rocksdb_ok": rocksdb_ok,
-        }
-
-    jobs = [
-        ("windowed", windowed_counts, "append"),
-        ("session", session_window_counts, "append"),
-        ("dedup", dedup_stream, "append"),
-        ("latest", latest_status_stream, "update"),
-        ("latestagg", latest_status_stream_agg, "update"),
-        ("ssjoin", ssjoin, "append"),
-        ("funnel", funnel, "update"),
-    ]
-    print(
-        "streaming throughput probe: N events / 16 chunks / 8 micro-batches, "
-        f"noop sink, both state-store providers (load1={os.getloadavg()[0]:.2f})"
-    )
-    print(
-        f"{'events':>9} {'job':>9} {'provider':>8} {'wall_s':>7} {'Mrows/s':>8} "
-        f"{'batches':>7} {'p50_b':>6} {'max_b':>6} {'state_rows':>10} "
-        f"{'state_MB':>8} {'pin':>5}"
-    )
-    for n in ns:
-        root = tempfile.mkdtemp(prefix=f"streamprobe_{n}_")
-        try:
-            src, n_users, n_distinct = _stream_event_chunks(spark, root, n)
-            # batch twin of the stream-stream join over the same chunk
-            # files: the expected match count pins the streaming result
-            batch = spark.read.parquet(src)
-            expected_ssj = ssjoin(batch).count()
-            # a zero expectation would make the ssjoin pin vacuous (0==0)
-            # — exactly the user/type correlation bug this generator fixed
-            assert expected_ssj > 0, "ssjoin batch twin found no matches"
-            for job_name, fn, mode in jobs:
-                for prov_name, prov in (("heap", None), ("rocksdb", ROCKSDB_PROVIDER)):
-                    r = run_one(src, fn, mode, prov, root)
-                    # a stream-stream self-join scans the source once per
-                    # side, so its input counter reads 2N
-                    assert r["in_rows"] in (n, 2 * n), (job_name, r["in_rows"], n)
-                    assert r["rocksdb_ok"], (job_name, prov_name, "silent fallback")
-                    pin = "-"
-                    if job_name == "dedup":
-                        pin = str(r["out_rows"] == n_distinct)
-                    elif job_name in ("latest", "latestagg"):
-                        pin = str(r["state_rows"] == n_users)
-                    elif job_name == "ssjoin":
-                        pin = str(r["out_rows"] == expected_ssj)
-                    elif job_name == "funnel":
-                        pin = str(r["state_rows"] == n_users)
-                    print(
-                        f"{n:>9} {job_name:>9} {prov_name:>8} {r['wall']:>7.2f} "
-                        f"{n / r['wall'] / 1e6:>8.3f} {r['batches']:>7} "
-                        f"{r['p50_batch']:>6.2f} {r['max_batch']:>6.2f} "
-                        f"{r['state_rows']:>10} {r['state_mb']:>8.1f} {pin:>5}"
-                    )
-                    assert pin in ("-", "True"), (job_name, prov_name, pin)
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-
-
-def streaming_recovery_probe(ns: list[int]) -> None:
-    """Restart-from-checkpoint cost at large state (r11): crash-restart
-    CORRECTNESS is pytest-pinned (tests/test_streaming.py), but the COST
-    of rebuilding multi-million-row state from a checkpoint — the number
-    an on-call engineer needs when a 100 TB pipeline's executor dies —
-    was never measured, and it is exactly where the two providers differ
-    structurally: the heap store reloads its newest delta+snapshot files
-    into JVM maps before the first post-restart batch can run, while
-    RocksDB re-opens an LSM tree (changelog/SST files) with costs mostly
-    deferred into compaction.
-
-    Per event tier N (default 4e6), for the two biggest-state JVM
-    families (dedup ~ watermark-horizon rows; latestagg ~ one row/user)
-    under both providers: drain the first 12 of 16 chunks, STOP the
-    query (clean handoff — same checkpoint shape a crash leaves, minus
-    in-flight batch replay), append the last 4 chunks, restart from the
-    same checkpoint, and split the restart's wall into time-to-first-
-    batch-completion (state reload + batch 1) vs the steady remainder.
-    Pins: total sink output across both phases still equals the expected
-    distinct count (dedup — no duplicate slips through the restart), and
-    final state cardinality matches the single-run probe."""
-    import json  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from etl_cloud_logistics_spark.streaming.jobs import (  # noqa: PLC0415
-        ROCKSDB_PROVIDER,
-        dedup_stream,
-        latest_status_stream_agg,
-        read_event_stream,
-        start_with_provider,
-    )
-
-    spark = get_spark("scaling-probe-streamrec")
-
-    def start_query(src, job_fn, output_mode, provider, ckpt):
-        stream = read_event_stream(spark, src, max_files_per_trigger=2)
-        out = job_fn(stream)
-        writer = (
-            out.writeStream.outputMode(output_mode)
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-        )
-        return start_with_provider(spark, writer, provider)
-
-    def drain(q):
-        try:
-            t0 = time.perf_counter()
-            q.processAllAvailable()
-            wall = time.perf_counter() - t0
-            progress = [
-                json.loads(p) if isinstance(p, str) else p for p in q.recentProgress
-            ]
-        finally:
-            # stop even on a mid-drain failure: the caller's rmtree must not
-            # delete the source/checkpoint under a still-running query
-            q.stop()
-        batches = [p for p in progress if p.get("numInputRows", 0) > 0]
-        out_rows = sum(p.get("sink", {}).get("numOutputRows", 0) for p in batches)
-        state_rows = 0
-        for p in reversed(progress):
-            if p.get("stateOperators"):
-                state_rows = p["stateOperators"][0].get("numRowsTotal", 0)
-                break
-        trig = [p["durationMs"]["triggerExecution"] / 1e3 for p in batches]
-        return wall, trig, out_rows, state_rows
-
-    jobs = [("dedup", dedup_stream, "append"), ("latestagg", latest_status_stream_agg, "update")]
-    print(
-        "streaming restart-from-checkpoint probe: drain 12/16 chunks, stop, "
-        f"append 4, restart (load1={os.getloadavg()[0]:.2f})"
-    )
-    print(
-        f"{'events':>9} {'job':>9} {'provider':>8} {'phase1_s':>8} "
-        f"{'state_rows':>10} {'restart_s':>9} {'first_b':>7} {'rest_p50':>8} "
-        f"{'pin':>5}"
-    )
-    for n in ns:
-        # synthesize the deterministic corpus ONCE per tier; each combo
-        # gets cheap file copies (copy order re-establishes the mtime
-        # chronology) instead of 4x redundant Spark synthesis jobs
-        stage_root = tempfile.mkdtemp(prefix=f"streamrec_stage_{n}_")
-        try:
-            stage_src, n_users, n_distinct = _stream_event_chunks(
-                spark, stage_root, n
-            )
-            chunk_files = sorted(os.listdir(stage_src))
-
-            def copy_chunks(dst: str, names: list[str]) -> None:
-                for f in names:
-                    shutil.copy(os.path.join(stage_src, f), os.path.join(dst, f))
-                    time.sleep(0.02)
-
-            for job_name, fn, mode in jobs:
-                for prov_name, prov in (("heap", None), ("rocksdb", ROCKSDB_PROVIDER)):
-                    root = tempfile.mkdtemp(prefix=f"streamrec_{n}_")
-                    try:
-                        src = os.path.join(root, "events")
-                        os.makedirs(src)
-                        copy_chunks(src, chunk_files[:12])
-                        ckpt = os.path.join(root, "ckpt")
-                        q = start_query(src, fn, mode, prov, ckpt)
-                        w1, _t1, out1, rows1 = drain(q)
-                        copy_chunks(src, chunk_files[12:])
-                        t0 = time.perf_counter()
-                        q2 = start_query(src, fn, mode, prov, ckpt)
-                        w2, trig2, out2, rows2 = drain(q2)
-                        restart_wall = time.perf_counter() - t0
-                        first_b = trig2[0] if trig2 else 0.0
-                        rest = sorted(trig2[1:])
-                        rest_p50 = rest[len(rest) // 2] if rest else 0.0
-                        pin = "-"
-                        if job_name == "dedup":
-                            pin = str(out1 + out2 == n_distinct)
-                        elif job_name == "latestagg":
-                            pin = str(rows2 == n_users)
-                        print(
-                            f"{n:>9} {job_name:>9} {prov_name:>8} {w1:>8.2f} "
-                            f"{rows1:>10} {restart_wall:>9.2f} {first_b:>7.2f} "
-                            f"{rest_p50:>8.2f} {pin:>5}"
-                        )
-                        assert pin in ("-", "True"), (job_name, prov_name, pin)
-                    finally:
-                        shutil.rmtree(root, ignore_errors=True)
-        finally:
-            shutil.rmtree(stage_root, ignore_errors=True)
-
-
 def dedup_probe(ks: list[int]) -> None:
     """MinHash/LSH near-dup + connected components over K× corpus
     replicas (the module docstring's default mode)."""
@@ -2177,8 +1791,6 @@ PROBES = {
     "--etl": (etl_probe, [100_000, 1_000_000, 10_000_000]),
     "--etl-e2e": (etl_e2e_probe, [10_000_000]),
     "--bloomrt": (bloomrt_probe, [32_000_000]),
-    "--streaming": (streaming_probe, [1_000_000, 4_000_000]),
-    "--streamrec": (streaming_recovery_probe, [4_000_000]),
 }
 
 
