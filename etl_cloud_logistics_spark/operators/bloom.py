@@ -155,14 +155,13 @@ def bloom_semi_join(
     big: DataFrame,
     small: DataFrame,
     big_key: str,
-    small_key: str | None = None,
     how: str = "inner",
     bits_per_key: int = 10,
     n_hashes: int = 7,
 ) -> DataFrame:
     """Semi-join-reduced equi-join: build a Bloom over the small side's
     keys, prefilter the big side BEFORE its shuffle, then run the exact
-    join on survivors — same rows as ``big.join(small, ...)`` (false
+    join on survivors — same rows as ``big.join(small, big_key)`` (false
     positives die in the exact join; no false negatives exist).
 
     When the join is selective (most big-side rows match nothing), the
@@ -182,9 +181,6 @@ def bloom_semi_join(
             f"Bloom prefilter drops unmatched big-side rows before the join, "
             f"which would corrupt an outer join (got how={how!r})"
         )
-    small_key = small_key or big_key
-    model = build_bloom(small, small_key)
+    model = build_bloom(small, big_key)
     reduced = bloom_filter_rows(big, big_key, model)
-    if small_key == big_key:
-        return reduced.join(small, big_key, how)
-    return reduced.join(small, reduced[big_key] == small[small_key], how)
+    return reduced.join(small, big_key, how)

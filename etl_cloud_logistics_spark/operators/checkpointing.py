@@ -101,11 +101,11 @@ def _reset_plan_stats(df: DataFrame) -> DataFrame:
     loop each round's checkpoint therefore seeds the next round's
     estimate with the previous round's product: the BigInt's DIGIT COUNT
     grows ~4x per round (measured 7 -> 24 -> 96 -> 383 -> 1529 -> 6114
-    digits over five star rounds), and by round ~15 the driver burns
-    whole minutes in Karatsuba/Toom-Cook BigInteger multiplies inside
-    stats estimation — a thread dump shows 170 s of
-    ``BigInteger.multiplyToomCook3`` under ``visitJoin`` — which is why
-    late star/label rounds on large graphs slowed geometrically
+    digits over five rounds of a star-contraction components loop), and
+    by round ~15 the driver burns whole minutes in Karatsuba/Toom-Cook
+    BigInteger multiplies inside stats estimation — a thread dump shows
+    170 s of ``BigInteger.multiplyToomCook3`` under ``visitJoin`` — which
+    is why late iterative rounds on large graphs slowed geometrically
     (2.6x/round) while rows, plans and GC stayed constant.  The parquet
     round-trip of RELIABLE mode resets stats naturally; this is the
     zero-I/O local-mode equivalent: the SAME checkpointed RDD (no data

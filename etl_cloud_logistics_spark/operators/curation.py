@@ -314,10 +314,9 @@ def budget_select(
     weight_col: str,
     budget: int,
     id_col: str = "doc_id",
-    ascending: bool = False,
     partitions: int | None = None,
 ) -> DataFrame:
-    """Select rows in ``order_col`` priority order until the running sum of
+    """Select rows in descending ``order_col`` order until the running sum of
     ``weight_col`` would exceed ``budget`` — the "best docs under an N-token
     budget" selection every data-constrained training run makes (quality
     score desc, token count as weight).
@@ -342,7 +341,7 @@ def budget_select(
     ``cum_weight > budget`` are cut; the first over-budget row is NOT
     included (strict knapsack-prefix semantics, matching the oracle's
     ``QUALIFY cum <= budget``)."""
-    ordn = F.col(order_col).asc() if ascending else F.col(order_col).desc()
+    ordn = F.col(order_col).desc()
     n_parts = partitions or df.sparkSession.sparkContext.defaultParallelism
     # localCheckpoint (eager), NOT persist: the offsets collected below are
     # only valid for the exact partition assignment they were computed from,

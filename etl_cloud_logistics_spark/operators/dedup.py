@@ -19,32 +19,12 @@ Scale design (100 TB corpus):
 
 from __future__ import annotations
 
-import threading
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .checkpointing import RoundCheckpointer
-
-# neardup_components(algorithm="auto"): label-propagation rounds before the
-# star fallback kicks in.  Dense near-dup clusters converge in 2-4 rounds
-# and hub-skew graphs in 4-5 (GRAPH_PROBE_r09), so 8 gives the fast path
-# ample margin while bounding the waste on a pathological chain to 8 cheap
-# shrinking-frontier rounds.
-AUTO_LABEL_ROUNDS = 8
-
-# Thread-local probe/test introspection (r10, VERDICT r9 nit #2: function
-# attributes were shared mutable state — two concurrent invocations, e.g.
-# under bench.py's concurrent phase, could clobber each other's counters).
-_probe_tls = threading.local()
-
-
-def components_probe_info() -> dict:
-    """rounds + algorithm ("label" | "label+star" | "star") of this
-    thread's last neardup_components run (probes/tests only, not API)."""
-    return dict(getattr(_probe_tls, "components", {}))
 
 # ---------------------------------------------------------------------------
 # tokenization / shingling
@@ -286,7 +266,6 @@ def shingle_array(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    short_doc_fallback: bool = False,
 ) -> DataFrame:
     """Distinct word n-gram shingles as ONE array column ``sh`` per doc —
     the no-shuffle twin of :func:`shingles` (transform over token positions
@@ -294,12 +273,8 @@ def shingle_array(
 
     Docs with fewer than ``n`` tokens have an EMPTY shingle set.  Downstream
     MinHash then yields all-null minima, which collapses every short doc to
-    the same empty signature/band key — distinct short docs would
-    false-positive as duplicates of each other.  ``short_doc_fallback=True``
-    substitutes the full lowered token text as the doc's single shingle:
-    identical short docs still match (equal signatures), distinct ones never
-    collide.  Off by default so oracle twins that mirror the exact
-    empty-set semantics stay bit-identical."""
+    the same empty signature/band key; the oracle twins mirror these
+    empty-set semantics bit-identically."""
     toks = tokens(df, text_col).select(id_col, "ws")
     # sequence(1, 0) would be DESCENDING [1, 0], so short docs need the guard
     positions = F.when(
@@ -313,10 +288,6 @@ def shingle_array(
             ),
         )
     )
-    if short_doc_fallback:
-        arr = F.when(F.size("ws") >= n, arr).otherwise(
-            F.array(F.concat_ws(" ", F.col("ws")))
-        )
     return toks.select(id_col, arr.alias("sh"))
 
 
@@ -439,7 +410,6 @@ def minhash_lsh_neardup(
     n_hashes: int = 8,
     rows_per_band: int = 2,
     threshold: float = 0.5,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs: MinHash/LSH candidate generation + exact Jaccard
     verification of candidates only (the scalable two-phase layout).
@@ -447,31 +417,12 @@ def minhash_lsh_neardup(
     Signature + banding are narrow per-doc expressions; the only shuffles
     are the band-bucket equi-join and the two candidate⋈shingle-array joins.
 
-    ``max_shingle_freq`` is the hot-shingle guard, same contract as in
-    :func:`jaccard_pairs` but for a failure mode SPECIFIC to MinHash: a
-    shingle present in a large fraction of documents (stopword runs,
-    boilerplate, templated markup) tends to BE the md5 minimum for every
-    document containing it, collapsing signature diversity — every such
-    doc lands in one band bucket and the "linear" candidate join turns
-    quadratic in that bucket.  Measured with tools/scaling_probe.py: a
-    corpus whose docs all share interleaved filler tokens produced 16.3M
-    candidates for 2,560 true pairs (verify stage 114 s at 50k docs);
-    capping shingles at ``max_shingle_freq`` docs before signatures cut
-    candidates to the true-pair scale.  Ubiquitous shingles carry no
-    near-dup signal, so dropping them from BOTH the signatures and the
-    verify arrays keeps the Jaccard semantics consistent (both sides see
-    the same evidence — the common-crawl preprocessing trick)."""
-    if max_shingle_freq is not None:
-        sh = shingles(df, id_col, text_col, n)
-        freq = sh.groupBy("s").agg(F.count("*").alias("_df"))
-        kept = sh.join(
-            freq.filter(F.col("_df") <= max_shingle_freq), "s"
-        ).drop("_df")
-        sh_arr = (
-            kept.groupBy(id_col).agg(F.collect_list("s").alias("sh")).persist()
-        )
-    else:
-        sh_arr = shingle_array(df, id_col, text_col, n).persist()
+    Hot shingles are the MinHash failure mode: a shingle present in a
+    large fraction of documents (stopword runs, boilerplate) tends to BE
+    the md5 minimum for every document containing it, so every such doc
+    lands in one band bucket and the candidate join turns quadratic in
+    that bucket."""
+    sh_arr = shingle_array(df, id_col, text_col, n).persist()
     cand = lsh_candidate_pairs(
         minhash_signatures(sh_arr, id_col, n_hashes), id_col, rows_per_band
     )
@@ -571,8 +522,6 @@ def neardup_components(
     id_col: str = "doc_id",
     max_iter: int = 20,
     checkpoint_dir: str | None = None,
-    algorithm: str = "label",
-    auto_label_rounds: int | None = None,
 ) -> DataFrame:
     """Connected components over near-duplicate pairs by iterative min-label
     propagation: every doc's label converges to the smallest doc_id reachable
@@ -607,70 +556,9 @@ def neardup_components(
     files stay on disk for the life of the result; the stale intermediate
     slot is cleaned up before returning.
 
-    ``algorithm`` selects the iteration scheme (r9):
-
-    - ``"label"`` (default): the delta min-label propagation above —
-      rounds = O(diameter), the right shape for near-dup cluster graphs
-      (dense, diameter ~2-3 in practice) where it converges in 2-4
-      cheap rounds;
-    - ``"star"``: alternating large-star/small-star
-      (``operators.graph.connected_components_star``) — rounds =
-      O(log n) regardless of diameter, the big-graph path for
-      chain-shaped or unknown-topology inputs where label propagation's
-      round count (and its loud ``max_iter`` failure) would explode.
-      Equal output by construction (component = min reachable id either
-      way; pytest-pinned on paths/rings/random graphs);
-    - ``"auto"``: label propagation for up to
-      min(``max_iter``, ``AUTO_LABEL_ROUNDS``) rounds — the fast path on
-      the dense shallow graphs this operator usually serves — then, if
-      labels still move, CONTRACT the graph by the partial labels (each
-      pair becomes (lbl(a), lbl(b)); the label rounds already collapsed
-      every short-diameter cluster, so the contracted graph holds only
-      the long-chain remainder) and finish with the star algorithm.
-      Correct on any topology with no loud-failure mode: partial labels
-      are always ids reachable from their node, so contraction preserves
-      connectivity and the component minimum — equal output
-      pytest-pinned against both pure algorithms.
-
-    ``auto_label_rounds`` (r10) overrides the module default label budget
-    for ``algorithm='auto'`` only.  The default (8) is sized so hub-skew
-    power-law graphs CONVERGE inside the label phase (4-5 rounds measured,
-    GRAPH_PROBE_r09) and never pay the star fallback; a caller that knows
-    its dense clusters are diameter <= 3 (typical near-dup clusters) can
-    pass 3-4 to halve the label phase's cost on inputs that do fall
-    through to the star — correctness is budget-independent (any partial
-    labels contract soundly); only which phase does the work changes.
+    Chain-shaped graphs whose diameter exceeds ``max_iter`` fail loudly
+    rather than split a component.
     """
-    if algorithm == "star":
-        from .graph import connected_components_star, star_probe_info  # noqa: PLC0415
-
-        labeled = connected_components_star(
-            pairs, "doc_a", "doc_b", max_iter=max(max_iter, 50),
-            checkpoint_dir=checkpoint_dir,
-        )
-        # keep components_probe_info() per-call fresh on this path too
-        # (ADVICE r10: the early return used to leave the previous
-        # invocation's rounds/algorithm visible on this thread)
-        _probe_tls.components = {
-            "rounds": star_probe_info().get("rounds"),
-            "algorithm": "star",
-        }
-        # isolated ids never appear in the pair list: label them as their
-        # own singleton components, like the label-prop path does
-        return all_ids.select(F.col(id_col)).join(
-            labeled.select(F.col("node").alias(id_col), "component"),
-            id_col,
-            "left",
-        ).select(id_col, F.coalesce("component", F.col(id_col)).alias("component"))
-    if algorithm not in ("label", "auto"):
-        raise ValueError(
-            f"unknown algorithm {algorithm!r}: use 'label', 'star' or 'auto'"
-        )
-    if auto_label_rounds is None:
-        auto_label_rounds = AUTO_LABEL_ROUNDS
-    label_rounds = (
-        max_iter if algorithm == "label" else min(max_iter, auto_label_rounds)
-    )
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
@@ -687,8 +575,7 @@ def neardup_components(
     )
     frontier = labels  # round 0: every initial label still needs propagating
     converged = False
-    rounds = 0
-    for rounds in range(label_rounds):
+    for _ in range(max_iter):
         # propagate only labels that improved last round — min over the
         # frontier neighbors; earlier labels already reached these nodes
         neighbor_min = (
@@ -711,45 +598,6 @@ def neardup_components(
             break
     edges.unpersist()
     checkpoint.cleanup_stale()
-    _probe_tls.components = {"rounds": rounds, "algorithm": "label"}
-    if not converged and algorithm == "auto":
-        # auto fallback: every cluster with diameter <= label_rounds is
-        # already collapsed to one label, so contracting each pair to its
-        # endpoints' labels leaves only the long-chain remainder — finish
-        # that with the O(log n)-round star algorithm and compose.  lbl(x)
-        # is always an id REACHABLE from x (induction over rounds), so the
-        # contracted graph's connectivity is exactly the original's
-        # quotient and its component minima are the original minima.
-        from .graph import connected_components_star  # noqa: PLC0415
-
-        _probe_tls.components = {"rounds": rounds, "algorithm": "label+star"}
-        contracted = (
-            pairs.select("doc_a", "doc_b")
-            .join(
-                labels.select(F.col("node").alias("doc_a"), F.col("lbl").alias("ca")),
-                "doc_a",
-            )
-            .join(
-                labels.select(F.col("node").alias("doc_b"), F.col("lbl").alias("cb")),
-                "doc_b",
-            )
-            .select("ca", "cb")
-        )
-        star_labels = connected_components_star(
-            contracted, "ca", "cb", max_iter=max(max_iter, 50),
-            checkpoint_dir=checkpoint_dir,
-        )
-        # labels whose whole cluster already collapsed contract to pure
-        # self-loops, which the star drops — they keep their lbl
-        return (
-            labels.join(
-                star_labels.withColumnRenamed("node", "lbl"), "lbl", "left"
-            )
-            .select(
-                F.col("node").alias(id_col),
-                F.coalesce("component", F.col("lbl")).alias("component"),
-            )
-        )
     if not converged:
         # labels still moved on the last round: a component with diameter >
         # max_iter would be silently split into bogus sub-components, and the

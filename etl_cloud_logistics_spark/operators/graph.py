@@ -1,9 +1,7 @@
 """Iterative graph analytics over an edge list: bit-exact fixed-point
-PageRank, frontier BFS, and the O(log n)-round alternating
-large-star/small-star connected components (the high-diameter complement
-to operators/dedup.py's label-propagation canonicalizer) — rank the
-co-purchase graph's influential parts, the near-dup graph's hub documents,
-the event-transition graph's sink states.
+PageRank and frontier BFS — rank the co-purchase graph's influential
+parts, the near-dup graph's hub documents, the event-transition graph's
+sink states.
 
 Same iterative discipline as ``neardup_components``:
 
@@ -25,8 +23,6 @@ compares it against driver-side numpy power iteration.
 """
 
 from __future__ import annotations
-
-import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -276,178 +272,6 @@ def pagerank_fixed(
     return ranks.select("node", F.col("r").alias("rank_fp"))
 
 
-# Probe/test introspection for the last completed invocation on the
-# CURRENT thread (tools/scaling_probe.py --diameter / --automix and the
-# equal-output tests read it; not API).  Thread-local since r10: the
-# engine's own bench runs queries concurrently, and a shared function
-# attribute would let two invocations clobber each other's counters
-# (VERDICT r9 "what's wrong" #2).
-_probe_tls = threading.local()
-
-
-def star_probe_info() -> dict:
-    """rounds + input_nodes of this thread's last connected_components_star
-    run.  input_nodes is the round-0 convergence-signature node count —
-    free evidence of how large the star phase's input actually was (the
-    auto-mode contraction check)."""
-    return dict(getattr(_probe_tls, "star", {}))
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 50,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond")
-    — the HIGH-DIAMETER / big-graph path.  Min-label propagation
-    (``operators.dedup.neardup_components``) runs rounds = O(diameter):
-    fine for near-dup cluster graphs (dense, diameter ~2-3), pathological
-    on chain-shaped graphs (a 10^5-node path needs 10^5 rounds).  The
-    star operations contract every component to a star rooted at its
-    minimum id in O(log n) rounds regardless of diameter, because each
-    round rewires nodes to their neighborhood minima — path length halves
-    (or better) every alternation instead of shrinking by one.
-
-    Per round, on the canonical edge set E (a < b per edge):
-
-    - LARGE-STAR: for each node u with m(u) = min(N(u) ∪ {u}) over the
-      SYMMETRIZED neighborhood, connect every STRICTLY LARGER neighbor to
-      m(u): {(v, m(u)) : v ∈ N(u), v > u}.  The emission rows are exactly
-      the canonical edges themselves (v > u ⟺ the (a, b) orientation), so
-      this is one groupBy-min over the symmetrized list (map-side combine
-      shrinks the exchange toward O(V)) joined back onto E by its small
-      endpoint, plus a distinct — never a partition-wide window sort, and
-      nothing 2E-row is persisted.
-    - SMALL-STAR: key each edge by its larger endpoint b with m(b) =
-      min(N(b)); connect the smaller neighbors and b itself to m(b):
-      {(v, m(b)) : v ∈ N(b) ∪ {b}, v ≠ m(b)}.  Same groupBy-min + join
-      shape, keyed by b.
-
-    Convergence is detected with GraphFrames' monotone signature: P(u) =
-    min(N(u) ∪ {u}) is non-increasing per node under both operations
-    (small-star retains (u, P(u)) verbatim; large-star connects u to
-    m(P(u)) ≤ P(u)), so S = Σ_u P(u) is non-increasing and S unchanged
-    over a full round means NO node's parent moved — which forces P to be
-    component-constant (an edge (x, y) with P(x) < P(y) would have
-    small-star(x) emit (P(y), P(x)) that round, decreasing S) and
-    self-fixed at each component's minimum id.  The sum is accumulated as
-    DECIMAL(38,0), exact for any id width, and comes free off the
-    large-star's per-node min frame (one O(V)-row aggregate per round).
-
-    Shuffle shape at scale: every exchange is hash-partitioned on a node
-    id over the CURRENT edge set, which only ever shrinks (stars collapse
-    parallel structure); no all-pairs stage, no driver-side graph state —
-    the per-round aggregate returns one row.  Numeric node ids required
-    (the signature sums them); the engine's doc/node ids are integral
-    throughout.
-
-    Returns (node, component) for every node appearing in ``edges``;
-    isolated ids never enter an edge list, so callers wanting them join
-    against their id universe (``neardup_components(algorithm="star")``
-    does).  Raises after ``max_iter`` non-converged rounds — with O(log n)
-    convergence the default 50 covers any physically storable graph.
-    """
-    for c in (src_col, dst_col):
-        if not isinstance(
-            edges.schema[c].dataType,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType),
-        ):
-            raise TypeError(
-                "connected_components_star needs integral node ids (the "
-                f"convergence signature sums them); got {edges.schema[c]} — "
-                "use neardup_components' label propagation for opaque ids"
-            )
-    chk = RoundCheckpointer(checkpoint_dir, prefix="cc-star")
-    e = chk(
-        edges.select(F.col(src_col).alias("x"), F.col(dst_col).alias("y"))
-        .filter("x <> y")
-        .select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
-        .distinct()
-    )
-    prev_sig = None
-    converged = False
-    rounds = 0
-    input_nodes = 0
-    for rounds in range(max_iter):
-        sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        # per-node parent P(u) = min(N(u) ∪ {u}): O(V) rows after the
-        # map-side-combined groupBy; persisted because both the signature
-        # aggregate and the large-star join read it this round
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("mv", "u").alias("m"))
-            .persist()
-        )
-        sig = mins.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("m").cast("decimal(38,0)")).alias("s"),
-        ).first()
-        sig = (sig["n"], sig["s"])
-        if rounds == 0:
-            input_nodes = int(sig[0])
-        if sig == prev_sig:
-            mins.unpersist()
-            converged = True
-            break
-        prev_sig = sig
-        # large-star: the v > u emission rows are exactly the canonical
-        # edges (u = a, v = b), so join E by its small endpoint; the new
-        # edge (b, m(a)) is already canonical because m(a) ≤ a < b.
-        # Materialized through the checkpointer: the small-star below
-        # reads it from three subplans (the minsb aggregate and both
-        # union branches), and neither exchange reuse nor a lazy persist
-        # dedupes the join across them reliably under AQE — unmaterialized,
-        # the large-star join re-executed per consumer (measured +1.7 GB
-        # shuffle at the 1e6-node path tier).
-        ls = chk(
-            e.join(mins, e["a"] == mins["u"])
-            .select(F.col("m").alias("a"), "b")
-            .distinct()
-        )
-        # small-star: m(b) = min(N(b)) over the smaller-endpoint neighbors;
-        # emit (v, m(b)) for every v ∈ N(b) except m(b) itself, plus
-        # (b, m(b)) — all canonical since m(b) < v ≤ b.  minsb is O(V)
-        # and read by both union branches; the cheap persist stops its
-        # groupBy exchange running once per consumer.
-        minsb = ls.groupBy("b").agg(F.min("a").alias("mb")).persist()
-        e = chk(
-            ls.join(minsb, "b")
-            .filter(F.col("a") != F.col("mb"))
-            .select(F.col("mb").alias("a"), F.col("a").alias("b"))
-            .union(minsb.select(F.col("mb").alias("a"), "b"))
-            .distinct()
-        )
-        minsb.unpersist()
-        mins.unpersist()
-    _probe_tls.star = {"rounds": rounds, "input_nodes": input_nodes}
-    if not converged:
-        chk.cleanup_all()
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds — not expected for any O(log n)-round run; raise "
-            "max_iter only after checking the input for pathology"
-        )
-    # final labels straight off the converged star set: every non-root
-    # appears exactly once as the larger endpoint of (root, v); roots are
-    # the nodes never appearing as b
-    labels = chk(
-        e.select(F.col("b").alias("node"), F.col("a").alias("component")).union(
-            e.select(F.col("a").alias("node"))
-            .distinct()
-            .join(e.select(F.col("b").alias("node")), "node", "left_anti")
-            .select("node", F.col("node").alias("component"))
-        )
-    )
-    chk.cleanup_stale(returning=labels)
-    return labels
-
-
 def _oriented_triangle_stream(
     edges: DataFrame, src_col: str, dst_col: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -615,35 +439,31 @@ def triangle_support(
 
 def truss_peel(
     edges: DataFrame,
+    n_rounds: int,
     k: int = 4,
-    n_rounds: int | None = None,
     src_col: str = "src",
     dst_col: str = "dst",
-    max_iter: int = 50,
 ) -> DataFrame:
-    """k-truss peeling (Cohen 2008): iteratively delete every edge closing
-    fewer than k−2 triangles until fixpoint — the maximal subgraph where
-    each edge is embedded in at least k−2 triangles.  The graded version
-    of ``triangle_support``'s one-shot bridge filter: peeling re-measures
-    support on the SURVIVORS, so a chain of weakly-supported cliques
-    unravels even when every edge individually clears the bar on the raw
-    graph.
+    """k-truss peeling (Cohen 2008): ``n_rounds`` times, delete every edge
+    closing fewer than k−2 triangles — at fixpoint, the maximal subgraph
+    where each edge is embedded in at least k−2 triangles.  The graded
+    version of ``triangle_support``'s one-shot bridge filter: peeling
+    re-measures support on the SURVIVORS, so a chain of weakly-supported
+    cliques unravels even when every edge individually clears the bar on
+    the raw graph.
 
-    ``n_rounds`` fixed (the ``pagerank_fixed`` pattern) makes the result
-    a pure function of (edge set, k, n_rounds) with a statically
-    unrollable SQL twin — the registry row runs 3 rounds, converged on
-    its graph, and stays deterministic at any scale whether or not 3
-    rounds converge there.  ``n_rounds=None`` peels to fixpoint
-    (production mode): each round is one oriented triangle enumeration
-    (O(m^{3/2}) wedges, see ``triangle_stats``) over a monotonically
-    shrinking edge set, with convergence read from the per-round edge
-    count the round must materialize anyway; raises after ``max_iter``
-    non-converged rounds like the star components loop.
+    Fixed rounds (the ``pagerank_fixed`` pattern) make the result a pure
+    function of (edge set, k, n_rounds) with a statically unrollable SQL
+    twin — the registry row runs 3 rounds, converged on its graph, and
+    stays deterministic at any scale whether or not 3 rounds converge
+    there.  Each round is one oriented triangle enumeration (O(m^{3/2})
+    wedges, see ``triangle_stats``) over a monotonically shrinking edge
+    set; rounds past the fixpoint are no-ops.
 
     Returns the surviving canonical edges with support measured ON the
-    surviving set: (lo, hi, support) — under fixed ``n_rounds`` a
-    support may still sit below k−2 if the graph needed more rounds,
-    which is readable from the output rather than papered over.
+    surviving set: (lo, hi, support) — a support may still sit below k−2
+    if the graph needed more rounds, which is readable from the output
+    rather than papered over.
     """
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3 (every edge is a 2-truss); got {k}")
@@ -654,34 +474,13 @@ def truss_peel(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n_prev = e.count() if n_rounds is None else None
-    rounds = 0
-    while True:
-        if n_rounds is not None:
-            if rounds >= n_rounds:
-                break
-        elif rounds >= max_iter:
-            raise RuntimeError(
-                f"truss_peel(k={k}) did not converge in {max_iter} rounds — "
-                "each round deletes at least one edge, so this graph needs "
-                "a larger max_iter (or the fixed n_rounds mode)"
-            )
-        kept = (
+    for _ in range(n_rounds):
+        e = (
             triangle_support(e, src_col="lo", dst_col="hi")
             .filter(F.col("support") >= k - 2)
             .select("lo", "hi")
             .localCheckpoint(eager=True)
         )
-        rounds += 1
-        if n_rounds is None:
-            n_kept = kept.count()
-            if n_kept == n_prev:
-                e = kept
-                break
-            n_prev = n_kept
-        e = kept
-        if n_rounds is None and n_prev == 0:
-            break
     return triangle_support(e, src_col="lo", dst_col="hi")
 
 

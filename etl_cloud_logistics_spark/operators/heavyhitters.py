@@ -6,11 +6,10 @@ Architecture is candidate-then-verify, the same shape as the LSH dedup
 paths: a one-pass bounded-memory sketch proposes a candidate superset, an
 exact pass confined to the candidates emits true counts.  That makes the
 OUTPUT exactly the true heavy-hitter set — oracle-checkable with plain
-``HAVING count >= T`` — while memory stays k counters per partition.  k is
-a true constant only under RELATIVE-threshold sizing (``rel_threshold``,
-k = ceil(2/rel)); self-sizing from an absolute threshold necessarily grows
-k ~ n/threshold and is capped at ``max_k`` (raising when the completeness
-bound cannot be honored at the cap) — see :func:`heavy_hitters_exact`.
+``HAVING count >= T`` — while memory stays k counters per partition.
+Self-sizing from an absolute threshold grows k ~ n/threshold, capped at
+``max_k`` (raising when the completeness bound cannot be honored at the
+cap) — see :func:`heavy_hitters_exact`.
 
 Guarantees (pytest-pinned on a Zipf stress fixture):
 - per-partition state ≤ k counters, regardless of row count;
@@ -26,7 +25,6 @@ Guarantees (pytest-pinned on a Zipf stress fixture):
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import pandas as pd
@@ -76,10 +74,8 @@ def mg_sketch_partials(items: DataFrame, item_col: str, k: int) -> DataFrame:
 def heavy_hitters_exact(
     items: DataFrame,
     item_col: str,
-    threshold: int | None = None,
-    k: int | None = None,
+    threshold: int,
     *,
-    rel_threshold: float | None = None,
     max_k: int = 1 << 20,
 ) -> DataFrame:
     """True heavy-hitter set with EXACT counts: MG candidates → exact count
@@ -87,41 +83,19 @@ def heavy_hitters_exact(
     ``threshold > n/(k+1)`` (n = total rows) — under that sizing no true
     heavy item can be decremented out of every partition summary.
 
-    The contract is ENFORCED, not assumed; sizing comes in two flavors:
-
-    - ``rel_threshold`` (fraction of n — the scale-safe spelling): k is the
-      CONSTANT ``ceil(2/rel_threshold)``, so per-partition state and the
-      broadcast candidate set are bounded regardless of input size.  This
-      is the true "k counters per partition at any input size" mode; the
-      absolute cutoff for the final filter is ``ceil(rel_threshold * n)``
-      (one cheap single-column counting scan, no shuffle).
-    - absolute ``threshold`` with ``k=None``: self-sizes to
-      ``k = ceil(2n/threshold)`` — note this k GROWS with n for a fixed
-      absolute threshold (an absolute cutoff over growing data is itself a
-      shrinking fraction), so it is capped at ``max_k`` and raises when the
-      completeness bound cannot be honored at the cap.  Prefer
-      ``rel_threshold`` at corpus scale.
-
-    An explicit ``k`` skips self-sizing but raises if it violates the bound
-    (silent incompleteness is the one failure mode a candidate-then-verify
-    design must never have)."""
-    if (threshold is None) == (rel_threshold is None):
-        raise ValueError("pass exactly one of threshold / rel_threshold")
-    if rel_threshold is not None and not 0 < rel_threshold <= 1:
-        raise ValueError(f"rel_threshold must be in (0, 1], got {rel_threshold}")
+    The contract is ENFORCED, not assumed: k self-sizes to
+    ``ceil(2n/threshold)`` — it GROWS with n for a fixed absolute threshold
+    (an absolute cutoff over growing data is itself a shrinking fraction),
+    so it is capped at ``max_k`` and raises when the completeness bound
+    cannot be honored at the cap (silent incompleteness is the one failure
+    mode a candidate-then-verify design must never have)."""
     n = items.count()
-    if rel_threshold is not None:
-        # the 1e-9 slack absorbs float noise (0.1 * 100 ceils to 11 without it)
-        threshold = max(1, math.ceil(rel_threshold * n - 1e-9))
-        if k is None:
-            k = max(16, math.ceil(2 / rel_threshold))
-    elif k is None:
-        k = min(max_k, max(16, -(-2 * n // max(threshold, 1))))
+    k = min(max_k, max(16, -(-2 * n // max(threshold, 1))))
     if n > 0 and threshold <= n / (k + 1):
         raise ValueError(
             f"threshold {threshold} <= n/(k+1) = {n}/{k + 1:d} — the MG "
-            f"candidate set is not guaranteed complete; raise k (explicitly "
-            f"or via max_k) or raise the threshold / rel_threshold"
+            f"candidate set is not guaranteed complete; raise max_k or the "
+            f"threshold"
         )
     partials = mg_sketch_partials(items, item_col, k)
     candidates = partials.groupBy("item").agg(F.sum("cnt").alias("est"))

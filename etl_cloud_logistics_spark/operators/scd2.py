@@ -116,44 +116,18 @@ def scd2_asof_lookup(
     fact: DataFrame,
     keys: list[str],
     fact_ts: str,
-    broadcast_dim: bool | None = None,
-    prefilter_dim_keys: bool = False,
 ) -> DataFrame:
     """Temporal/range join (J10): attach the dimension version valid at the
     fact's timestamp — ``fact.ts BETWEEN dim.valid_from AND dim.valid_to``
     (etl_pipeline.py:1144-1158); open versions have ``valid_to IS NULL``.
 
-    ``broadcast_dim``: ``None`` (default) lets Catalyst/AQE pick the join
-    strategy from the dim's statistics — a small dimension still becomes a
-    broadcast-hash join (the equi keys are extracted from the conjunction,
-    the validity range stays as the join residual), while a dimension too
-    large to ship (10^7+ natural keys × versions) falls back to a
-    sort-merge join that shuffles ONCE on the natural key with the range
-    as residual — the 100 TB-safe plan.  ``True`` forces the broadcast
-    hint (the pre-r10 behavior; correct when the caller knows the dim is
-    small regardless of stats), ``False`` never broadcasts.  The r10 ETL
-    scale probe (``tools/scaling_probe.py --etl``) measures both paths.
-
-    ``prefilter_dim_keys`` (r11, opt-in): before the join, semi-reduce the
-    dimension to keys that actually appear in the fact via a BROADCAST of
-    ``fact.select(keys).distinct()``.  This is the daily-ETL shape —
-    a date-sliced extract touches a small fraction of a huge dimension —
-    and it is NOT automatic: Spark's runtime bloom-filter injection
-    refuses join conditions carrying a non-equi residual (measured r11,
-    ``BLOOMRT_PROBE_r11.txt`` — pure-equi left joins inject, adding the
-    validity-range residual kills it), so the SMJ path otherwise shuffles
-    every dimension version on every run.  Measured at a 1.1e7-version
-    dim × 1e6-key day extract: the dim-side exchange drops ~10× (the key
-    fraction).  Opt-in because the benefit inverts when the fact touches
-    MOST dim keys (the prefilter then broadcasts a huge distinct set and
-    removes nothing) — callers with daily-extract shapes should set it;
-    the semi-join cannot change left-join results (a dim row whose key
-    has no fact row produces nothing in a fact-preserving join).
+    Catalyst/AQE picks the join strategy from the dim's statistics — a
+    small dimension still becomes a broadcast-hash join (the equi keys are
+    extracted from the conjunction, the validity range stays as the join
+    residual), while a dimension too large to ship (10^7+ natural keys ×
+    versions) falls back to a sort-merge join that shuffles ONCE on the
+    natural key with the range as residual — the 100 TB-safe plan.
     """
-    if prefilter_dim_keys:
-        dim = dim.join(
-            F.broadcast(fact.select(*keys).distinct()), keys, "leftsemi"
-        )
     cond = F.lit(True)
     for k in keys:
         cond = cond & (fact[k] == dim[k])
@@ -163,10 +137,7 @@ def scd2_asof_lookup(
         & (ts >= dim[VALID_FROM])
         & ((dim[VALID_TO].isNull()) | (ts < dim[VALID_TO]))
     )
-    dim_side = F.broadcast(dim) if broadcast_dim else dim
-    if broadcast_dim is False:
-        dim_side = dim.hint("shuffle_merge")
-    joined = fact.join(dim_side, cond, "left")
+    joined = fact.join(dim, cond, "left")
     # the dim copy of each join key is redundant post-join; dropping it here
     # keeps the result unambiguous for by-name selection
     for k in keys:

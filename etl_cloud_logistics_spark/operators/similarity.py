@@ -1055,7 +1055,6 @@ def knn_pq(
     codebooks: list[list[list[float]]],
     dim: int = 64,
     shortlist: int | None = None,
-    bucket_col: str | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -1065,10 +1064,9 @@ def knn_pq(
     reconstruction norm; the shortlist ranks by approx cosine of the float
     query against reconstructed candidates (rounded to 9 dp before the rank
     cut, so fold noise never decides it), and only the shortlist gets the
-    exact decimal rerank.  ``bucket_col=None`` scores the whole corpus (the
-    pure-PQ measurement mode); give a bucket column to compose with IVF
-    pruning."""
-    bucket = F.col(bucket_col) if bucket_col else F.lit(0)
+    exact decimal rerank.  Every corpus vector sits in one bucket, so the
+    whole corpus is scored (the pure-PQ measurement mode)."""
+    bucket = F.lit(0)
 
     def recon(codes: str) -> Column:
         return decode_pq(F.col(codes), codebooks)

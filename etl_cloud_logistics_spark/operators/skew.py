@@ -30,7 +30,6 @@ def salted_agg(
     df: DataFrame,
     group_cols: list[str],
     sum_cols: list[str] | None = None,
-    count: bool = True,
     n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase aggregation over (keys ⊕ salt) → keys, for algebraic
@@ -45,9 +44,8 @@ def salted_agg(
             *[F.sum(c).alias(f"__sum_{c}") for c in sum_cols],
         )
     )
-    aggs = []
-    if count:
-        aggs.append(F.sum("__cnt").alias("n_rows"))
-    aggs += [F.sum(f"__sum_{c}").alias(f"sum_{c}") for c in sum_cols]
-    return stage1.groupBy(*group_cols).agg(*aggs)
+    return stage1.groupBy(*group_cols).agg(
+        F.sum("__cnt").alias("n_rows"),
+        *[F.sum(f"__sum_{c}").alias(f"sum_{c}") for c in sum_cols],
+    )
 

@@ -105,16 +105,11 @@ def build_fact_orders(
     surrogate lookup into the SCD2 customer dimension, derived measures,
     QA flags.
 
-    The as-of lookup runs with default policies here deliberately: a
-    steady-state daily extract would benefit from
-    ``scd2_asof_lookup(prefilter_dim_keys=True)`` (r11 — 4.4× less
-    exchange at a 1e7-dim/1e6-key day, see BLOOMRT_PROBE_r11.txt), but
-    this function also serves initial loads and backfills whose extract
-    touches MOST dim keys, where the prefilter's forced key broadcast
-    inverts into the same scale wall the r10 adaptive broadcast policy
-    removed.  Callers that KNOW their extract is a thin daily slice can
-    pass the flag through their own lookup; the pipeline default stays
-    shape-safe."""
+    The as-of lookup lets Catalyst/AQE pick the join strategy from the
+    dimension's statistics: this function serves initial loads and
+    backfills whose extract touches MOST dim keys as well as thin daily
+    slices, and a forced broadcast (of the dim, or of the extract's keys
+    as a prefilter) inverts into a scale wall on one of the two shapes."""
     enriched = (
         orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
         .groupBy("o_orderkey", "o_custkey", "o_orderdate", "o_orderstatus", "o_totalprice")

@@ -281,12 +281,9 @@ def curation_pipeline_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     5. leakage-safe md5 split on source + language-mixture downsampling.
 
     Stage costs at 100 TB: (1) rides the corpus scan, (2) one narrow
-    hash-shuffle, (3) the pair stage — EXACT Jaccard here so the spanning
-    oracle replays it bit-for-bit; production runs the same pipeline with
-    ``candidates='lsh'`` (capped MinHash-LSH candidates + exact verify of
-    candidates only — the evidence-bounded setting, probed at scale by
-    tools/scaling_probe.py --pipeline), (4) broadcast probe, (5) pure
-    column expressions.  Output: one row per kept training doc."""
+    hash-shuffle, (3) the pair stage — EXACT Jaccard over shared shingles,
+    so the spanning oracle replays it bit-for-bit, (4) broadcast probe,
+    (5) pure column expressions.  Output: one row per kept training doc."""
     docs = load_table(spark, sf_dir, "documents")
     return curation_pipeline(spark, docs)
 
@@ -294,25 +291,13 @@ def curation_pipeline_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
 def curation_pipeline(
     spark: SparkSession,
     docs: DataFrame,
-    candidates: str = "exact",
     threshold: float = 0.5,
-    max_shingle_freq: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Pipeline implementation over an arbitrary documents frame (doc_id,
-    text, lang, source) with a parameterized near-dup CANDIDATE stage:
-
-    - ``candidates='exact'``: shared-shingle join + exact Jaccard — every
-      qualifying pair by construction; the oracle-replayable setting the
-      registry row uses.
-    - ``candidates='lsh'``: MinHash-LSH candidate generation + exact
-      Jaccard verification of candidates only (``minhash_lsh_neardup``),
-      with the ``max_shingle_freq`` hot-shingle cap — the 100 TB setting:
-      candidate volume is evidence-bounded by shared band buckets instead
-      of shared shingles, so the only super-linear stage of the exact form
-      becomes ~linear (measured by tools/scaling_probe.py --pipeline).
-      With no cap and the same threshold the two settings agree whenever
-      LSH recall is 1.0 (pytest-pinned on the sf corpus).
+    text, lang, source).  The near-dup candidate stage is the shared-shingle
+    join + exact Jaccard (``jaccard_pairs``): every qualifying pair by
+    construction, the oracle-replayable setting the registry row uses.
 
     ``checkpoint_dir`` (r7) forwards to the connected-components stage —
     on a real cluster the label-propagation rounds should use the
@@ -320,7 +305,6 @@ def curation_pipeline(
     lost executor doesn't fail the longest stage of the pipeline."""
     from ..operators.dedup import (
         jaccard_pairs,
-        minhash_lsh_neardup,
         neardup_components,
         shingles,
     )
@@ -360,24 +344,12 @@ def curation_pipeline(
         .repartition(spark.sparkContext.defaultParallelism)
         .localCheckpoint(eager=True)
     )
-    if candidates == "exact":
-        sh = shingles(qe).persist()
-        pairs = (
-            jaccard_pairs(sh, threshold=threshold)
-            .select("doc_a", "doc_b")
-            .persist()
-        )
-    elif candidates == "lsh":
-        sh = None
-        pairs = (
-            minhash_lsh_neardup(
-                qe, threshold=threshold, max_shingle_freq=max_shingle_freq
-            )
-            .select("doc_a", "doc_b")
-            .persist()
-        )
-    else:
-        raise ValueError(f"candidates must be 'exact' or 'lsh', got {candidates!r}")
+    sh = shingles(qe).persist()
+    pairs = (
+        jaccard_pairs(sh, threshold=threshold)
+        .select("doc_a", "doc_b")
+        .persist()
+    )
     nodes = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
@@ -388,8 +360,7 @@ def curation_pipeline(
     # downstream depends on sh/pairs any more — release those caches here
     # rather than leaking them for the session's life (registry-wide sweeps
     # run this query alongside 89 others)
-    if sh is not None:
-        sh.unpersist()
+    sh.unpersist()
     pairs.unpersist()
     canon = qe.join(comp, "doc_id", "left").filter(
         F.col("component").isNull() | (F.col("component") == F.col("doc_id"))

@@ -21,14 +21,13 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "etl-cloud-logistics-spark",
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session with scale-aware defaults."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
         .config("spark.sql.session.timeZone", "UTC")
@@ -45,7 +44,5 @@ def get_spark(
         # testdata parquet carries TIMESTAMP(NANOS) which Spark has no native
         # type for; read as long and convert in catalog.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()

@@ -3,10 +3,8 @@
 re-expressed as one streaming job family over the events source.
 
 Mapping (SURVEY.md §2.9):
-- ST1 ingestion        → ``read_event_stream`` (multi-source seam, r7:
-  ``files`` for tests, ``kafka`` + ``decode_event_json`` for production
-  brokers, ``rate`` for self-contained soak runs — all yield EVENT_SCHEMA
-  columns, so every downstream job is source-agnostic)
+- ST1 ingestion        → ``read_event_stream`` (chronological parquet
+  chunks dropped into a directory, read as EVENT_SCHEMA columns)
 - ST2 status lookup    → the keyed upsert sink of
   ``streaming.pipeline.start_streaming_pipeline``
   (``sources.upsert.foreach_batch_upsert``: the DynamoDB
@@ -34,89 +32,18 @@ from ..catalog import SCHEMAS, ensure_session_confs
 EVENT_SCHEMA = SCHEMAS["events"]
 
 
-def decode_event_json(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """Parse a broker payload column (Kafka/Kinesis deliver bytes) into the
-    canonical event columns.  Pure column expressions — works on batch and
-    streaming frames alike, so the decode contract is pytest-testable
-    without a broker (the same separation the JDBC source keeps between
-    option-plumbing and the untestable network hop).  Failure semantics
-    (from_json's PERMISSIVE default, r8 docstring correction): only
-    UNPARSEABLE JSON nulls the whole struct → an all-null row; a payload
-    that parses but has a missing or wrong-typed field nulls just that
-    field, yielding a partial row.  A downstream ``event_id IS NOT NULL``
-    filter therefore quarantines both fully-malformed payloads AND
-    otherwise-well-formed events that merely lack ``event_id`` — choose a
-    stricter per-field policy if partial rows should survive."""
-    return raw.select(
-        F.from_json(F.col(value_col).cast("string"), EVENT_SCHEMA).alias("e")
-    ).select("e.*")
-
-
 def read_event_stream(
-    spark: SparkSession,
-    source_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    source: str = "files",
-    kafka_bootstrap: str | None = None,
-    kafka_topic: str = "events",
-    rows_per_second: int = 100,
+    spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    """Event stream (ST1) from one of three sources, all yielding the same
-    EVENT_SCHEMA columns so every downstream job is source-agnostic:
-
-    - ``files`` (default): chronological parquet chunks dropped into
-      ``source_dir`` — the test harness's replayable micro-batch source;
-    - ``kafka``: ``format('kafka')`` + JSON payload decode
-      (:func:`decode_event_json`) — the production broker path.  Needs the
-      spark-sql-kafka connector on the classpath and a reachable
-      bootstrap server; neither exists in the test sandbox, so only the
-      decode half is differential-tested;
-    - ``rate``: Spark's built-in rate source mapped to deterministic
-      synthetic events — a self-contained soak/throughput source that
-      runs anywhere, used to exercise the multi-source seam in CI."""
+    """Event stream (ST1): chronological parquet chunks dropped into
+    ``source_dir``, read as EVENT_SCHEMA columns — a replayable file
+    source, so checkpointed restarts are exactly-once."""
     ensure_session_confs(spark)
-    if source == "files":
-        if source_dir is None:
-            raise ValueError("source='files' requires source_dir")
-        return (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(source_dir)
-        )
-    if source == "kafka":
-        if kafka_bootstrap is None:
-            raise ValueError(
-                "source='kafka' requires kafka_bootstrap "
-                "(host:port of the broker bootstrap servers)"
-            )
-        raw = (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", kafka_bootstrap)
-            .option("subscribe", kafka_topic)
-            .option("startingOffsets", "earliest")
-            .load()
-        )
-        return decode_event_json(raw)
-    if source == "rate":
-        raw = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", rows_per_second)
-            .load()
-        )
-        # deterministic event synthesis from the monotone rate counter —
-        # same distribution family as sources/generator.py's batch events
-        return raw.select(
-            F.col("value").alias("event_id"),
-            F.col("timestamp").alias("ts"),
-            (F.col("value") % 50).alias("user_id"),
-            F.element_at(
-                F.array(F.lit("ping"), F.lit("move"), F.lit("scan"), F.lit("drop")),
-                (F.col("value") % 4 + 1).cast("int"),
-            ).alias("event_type"),
-            (F.pmod(F.hash(F.col("value")), F.lit(5000)) / 100.0).alias("value"),
-            F.to_json(F.struct(F.col("value").alias("seq"))).alias("props"),
-        )
-    raise ValueError(f"unknown source {source!r}: use 'files', 'kafka' or 'rate'")
+    return (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(source_dir)
+    )
 
 
 def windowed_counts(

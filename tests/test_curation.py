@@ -189,34 +189,6 @@ def test_temperature_rates_properties(spark):
     assert rh["small"] == 1.0
 
 
-def test_curation_pipeline_lsh_setting_matches_exact(spark, sf_small):
-    """The production candidate setting (MinHash-LSH + exact verify) keeps
-    exactly the same documents as the oracle-replayable exact-Jaccard
-    setting on the sf corpus — LSH recall there is 1.0 (pinned separately
-    in test_extensions), so the two pipelines must canonicalize the same
-    components and emit identical (doc_id, split, shard) rows."""
-    from etl_cloud_logistics_spark.catalog import load_table
-    from etl_cloud_logistics_spark.queries.curation_ops import curation_pipeline
-
-    docs = load_table(spark, sf_small, "documents")
-    exact = curation_pipeline(spark, docs, candidates="exact")
-    lsh = curation_pipeline(spark, docs, candidates="lsh")
-    cols = sorted(exact.columns)
-    assert sorted(lsh.columns) == cols
-    a = sorted(tuple(r) for r in exact.select(*cols).collect())
-    b = sorted(tuple(r) for r in lsh.select(*cols).collect())
-    assert a == b
-
-
-def test_curation_pipeline_rejects_unknown_candidate_setting(spark, sf_small):
-    from etl_cloud_logistics_spark.catalog import load_table
-    from etl_cloud_logistics_spark.queries.curation_ops import curation_pipeline
-
-    docs = load_table(spark, sf_small, "documents")
-    with pytest.raises(ValueError, match="candidates"):
-        curation_pipeline(spark, docs, candidates="minhash")
-
-
 def test_budget_select_matches_single_partition_window(spark):
     """The two-phase distributed prefix sum equals the naive global-window
     answer (computed here with one partition) for several budgets,

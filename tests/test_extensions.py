@@ -670,29 +670,6 @@ def test_sq8_index_parquet_roundtrip_serves_identically(spark, sf_med, tmp_path)
         assert a == b and len(a) == 30, name
 
 
-def test_minhash_hot_shingle_cap_controls_boilerplate(spark):
-    """The MinHash-specific hot-shingle failure mode (found by the scaling
-    probe): when boilerplate shingles dominate a corpus, they become the
-    md5 minima everywhere, signatures collapse, and the band join goes
-    quadratic — with every boilerplate-sharing pair ALSO passing the
-    uncapped Jaccard threshold on boilerplate evidence alone.  The
-    max_shingle_freq cap drops ubiquitous shingles from signatures AND
-    verify arrays: informative-content semantics, candidates at true-pair
-    scale."""
-    from etl_cloud_logistics_spark.operators.dedup import minhash_lsh_neardup
-
-    boiler = " ".join(f"b{i}" for i in range(30))
-    docs = [(i, f"{boiler} u{i}a u{i}b u{i}c") for i in range(40)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    uncapped = minhash_lsh_neardup(df, threshold=0.5).count()
-    capped = minhash_lsh_neardup(df, threshold=0.5, max_shingle_freq=10).count()
-    # uncapped: nearly all 780 pairs "match" on boilerplate evidence alone
-    assert uncapped >= 700
-    # capped: boilerplate carries no near-dup signal; unique content shares
-    # nothing, so no pair survives — and no candidate bucket ever exploded
-    assert capped == 0
-
-
 def test_semdedup_prune_invariants(spark, sf_small):
     """SemDeDup keep/drop set: (1) decisions partition the corpus, (2) no
     qualifying pair survives with BOTH endpoints kept (the operator's whole
@@ -1525,196 +1502,3 @@ def test_containment_catches_excerpt_jaccard_misses(spark):
     assert cont.get((0, 1)) == 1.0  # every excerpt shingle is in the long doc
     jac = jaccard_pairs(sh, threshold=0.5).collect()
     assert not jac  # symmetric overlap misses the embedded excerpt
-
-
-@pytest.mark.slow_probe
-def test_cc_star_matches_label_propagation_random(spark):
-    """Equal-output pin for the r9 star path: alternating large-star/
-    small-star and min-label propagation must agree on every node's
-    component (= min reachable id) over random graphs of varying density,
-    including duplicate, reversed, and self-loop edges."""
-    import random
-
-    from etl_cloud_logistics_spark.operators.dedup import neardup_components
-
-    for seed, n_nodes, n_edges in ((3, 60, 25), (4, 80, 120), (5, 40, 300)):
-        rng = random.Random(seed)
-        raw = [
-            (rng.randrange(n_nodes), rng.randrange(n_nodes))
-            for _ in range(n_edges)
-        ]
-        raw += [(b, a) for a, b in raw[: n_edges // 4]]  # reversed dups
-        raw += [(7, 7)]  # self-loop must be ignored
-        pairs = spark.createDataFrame(raw, "doc_a long, doc_b long")
-        ids = spark.createDataFrame([(i,) for i in range(n_nodes)], "doc_id long")
-        lab = {
-            r["doc_id"]: r["component"]
-            for r in neardup_components(pairs, ids).collect()
-        }
-        star = {
-            r["doc_id"]: r["component"]
-            for r in neardup_components(pairs, ids, algorithm="star").collect()
-        }
-        assert lab == star, (seed, {k: (lab[k], star[k]) for k in lab if lab[k] != star[k]})
-
-
-def test_cc_star_log_rounds_on_long_path(spark):
-    """The reason the star path exists: a 512-node path needs 511 label-
-    propagation rounds but only O(log n) star rounds.  max_iter=16 would
-    raise if convergence were diameter-bound — passing pins the log-round
-    behavior, not just the answer."""
-    from etl_cloud_logistics_spark.operators.graph import connected_components_star
-    from pyspark.sql import functions as F
-
-    n = 512
-    e = spark.range(n - 1).select(
-        (F.col("id") + 1).alias("src"), F.col("id").alias("dst")
-    )
-    out = connected_components_star(e, max_iter=16).collect()
-    assert len(out) == n
-    assert {r["component"] for r in out} == {0}
-
-
-def test_cc_star_isolated_ids_and_reliable_mode(spark, tmp_path):
-    """algorithm='star' keeps neardup_components' contract: isolated ids
-    label themselves; a checkpoint_dir switches to the two-slot parquet
-    scheme with identical output and no leaked stale slots beyond the one
-    backing the returned frame."""
-    from etl_cloud_logistics_spark.operators.dedup import neardup_components
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
-    )
-    nodes = spark.createDataFrame(
-        [(1,), (2,), (3,), (10,), (11,), (99,)], "doc_id long"
-    )
-    want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
-    local = {
-        r["doc_id"]: r["component"]
-        for r in neardup_components(pairs, nodes, algorithm="star").collect()
-    }
-    assert local == want
-    reliable = {
-        r["doc_id"]: r["component"]
-        for r in neardup_components(
-            pairs, nodes, algorithm="star", checkpoint_dir=str(tmp_path / "chk")
-        ).collect()
-    }
-    assert reliable == want
-
-
-def test_cc_star_rejects_non_integral_ids(spark):
-    """The convergence signature sums node ids; opaque ids must be routed
-    to label propagation, loudly."""
-    import pytest
-
-    from etl_cloud_logistics_spark.operators.graph import connected_components_star
-
-    e = spark.createDataFrame([("a", "b")], "src string, dst string")
-    with pytest.raises(TypeError, match="integral node ids"):
-        connected_components_star(e)
-
-
-def test_cc_star_empty_pairs_labels_everyone_singleton(spark):
-    """No duplicate pairs at all (a clean corpus): every id must label
-    itself, in both algorithms, without the star loop's empty edge set
-    tripping the convergence signature (count=0, sum=NULL on round one)."""
-    from etl_cloud_logistics_spark.operators.dedup import neardup_components
-
-    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
-    ids = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
-    for algo in ("label", "star"):
-        out = {
-            r["doc_id"]: r["component"]
-            for r in neardup_components(pairs, ids, algorithm=algo).collect()
-        }
-        assert out == {i: i for i in range(5)}, (algo, out)
-
-
-def test_cc_auto_uses_label_fast_path_on_shallow_graphs(spark):
-    """algorithm='auto' on a dense shallow graph must converge inside the
-    label-propagation budget and never touch the star fallback."""
-    from etl_cloud_logistics_spark.operators.dedup import (
-        components_probe_info,
-        neardup_components,
-    )
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (10, 11)], "doc_a long, doc_b long"
-    )
-    nodes = spark.createDataFrame(
-        [(1,), (2,), (3,), (10,), (11,), (99,)], "doc_id long"
-    )
-    out = {
-        r["doc_id"]: r["component"]
-        for r in neardup_components(pairs, nodes, algorithm="auto").collect()
-    }
-    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
-    assert components_probe_info()["algorithm"] == "label"
-
-
-@pytest.mark.slow_probe
-def test_cc_auto_contracts_and_finishes_with_star_on_chains(spark):
-    """algorithm='auto' on a mixed graph (shallow clusters + a 300-node
-    chain): the label budget cannot finish the chain, so auto must contract
-    by the partial labels and delegate to the star — same answer as both
-    pure algorithms, no RuntimeError anywhere."""
-    from pyspark.sql import functions as F
-
-    from etl_cloud_logistics_spark.operators.dedup import (
-        components_probe_info,
-        neardup_components,
-    )
-
-    n = 300
-    chain = [(1000 + i + 1, 1000 + i) for i in range(n - 1)]
-    clusters = [(1, 2), (2, 3), (50, 51)]
-    pairs = spark.createDataFrame(chain + clusters, "doc_a long, doc_b long")
-    nodes = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-        .unionByName(spark.createDataFrame([(7777,)], "doc_id long"))
-    )
-    auto = {
-        r["doc_id"]: r["component"]
-        for r in neardup_components(pairs, nodes, algorithm="auto").collect()
-    }
-    assert components_probe_info()["algorithm"] == "label+star"
-    want = {1: 1, 2: 1, 3: 1, 50: 50, 51: 50, 7777: 7777}
-    want.update({1000 + i: 1000 for i in range(n)})
-    assert auto == want
-    star = {
-        r["doc_id"]: r["component"]
-        for r in neardup_components(pairs, nodes, algorithm="star").collect()
-    }
-    assert auto == star
-    # r10: the label budget is a knob, never a semantic: any budget yields
-    # the identical components (partial labels always contract soundly)
-    for budget in (1, 2, 5):
-        tuned = {
-            r["doc_id"]: r["component"]
-            for r in neardup_components(
-                pairs, nodes, algorithm="auto", auto_label_rounds=budget
-            ).collect()
-        }
-        assert tuned == want, budget
-
-
-def test_components_probe_info_fresh_on_star_path(spark):
-    """ADVICE r10: the algorithm='star' early return must refresh the
-    thread-local probe info too — a probe that runs auto then star must
-    not read the auto invocation's stale rounds/algorithm."""
-    from etl_cloud_logistics_spark.operators.dedup import (
-        components_probe_info,
-        neardup_components,
-    )
-
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
-    nodes = spark.createDataFrame([(1,), (2,), (3,)], "doc_id long")
-    neardup_components(pairs, nodes, algorithm="auto").collect()
-    assert components_probe_info()["algorithm"] == "label"
-    neardup_components(pairs, nodes, algorithm="star").collect()
-    info = components_probe_info()
-    assert info["algorithm"] == "star"
-    assert info["rounds"] is not None and info["rounds"] >= 1

@@ -120,11 +120,12 @@ def test_scd2_invariants(spark):
     assert dangling.count() == 0
 
 
-def test_scd2_asof_broadcast_modes_equal(spark):
-    """scd2_asof_lookup's three broadcast policies (r10: None=Catalyst/AQE
-    decides — the scale-safe default, True=forced hint, False=forced
-    shuffle-merge) must return the identical matched set: the policy is a
-    physical-plan choice, never a semantic one."""
+def test_scd2_asof_lookup_matches_validity_windows(spark):
+    """scd2_asof_lookup attaches the version whose [valid_from, valid_to)
+    window holds the fact date: a closed version up to the day before its
+    successor opens, the successor from that day, the open window of a
+    brand-new key, and a null match for an unknown key or a pre-history
+    date."""
     from etl_cloud_logistics_spark.operators.scd2 import scd2_asof_lookup
 
     current, staging = _scd2_fixture(spark)
@@ -140,27 +141,14 @@ def test_scd2_asof_broadcast_modes_equal(spark):
         ],
         "fact_id long, k long, fact_date date",
     )
-    results = {}
-    for mode in (None, True, False):
-        out = scd2_asof_lookup(
-            dim, facts, ["k"], "fact_date", broadcast_dim=mode
-        ).select("fact_id", "name", "valid_from")
-        results[mode] = {(r.fact_id, r.name, r.valid_from) for r in out.collect()}
-    assert results[None] == results[True] == results[False]
-    by_id = {fid: (nm, vf) for fid, nm, vf in results[None]}
+    out = scd2_asof_lookup(dim, facts, ["k"], "fact_date").select(
+        "fact_id", "name", "valid_from"
+    )
+    rows = out.collect()
+    assert len(rows) == 6
+    by_id = {r.fact_id: (r.name, r.valid_from) for r in rows}
     assert by_id[101][0] == "b" and by_id[102][0] == "b2"
     assert by_id[104] == (None, None) and by_id[105] == (None, None)
-    # r11: the daily-extract prefilter (semi-reduce dim to fact keys) is a
-    # physical choice too — identical output including the null-match rows
-    # (an absent key can't be "filtered into" a match, and removed dim rows
-    # had no fact to join), with the semi plan actually present
-    pre = scd2_asof_lookup(
-        dim, facts, ["k"], "fact_date", broadcast_dim=False,
-        prefilter_dim_keys=True,
-    ).select("fact_id", "name", "valid_from")
-    assert {(r.fact_id, r.name, r.valid_from) for r in pre.collect()} == results[None]
-    plan = pre._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan, "prefilter must compile to a semi join"
 
 
 def test_asof_join_semantics(spark):
@@ -585,42 +573,22 @@ def test_misra_gries_bounds_on_zipf_stress(spark):
     for it, c in true.items():
         if c > err:
             assert it in merged, f"lost heavy item {it} ({c} > {err})"
-    # end-to-end: exact output == brute-force heavy set for a safe threshold
+    # end-to-end: the self-sizing k honors the bound, so the exact output
+    # == the brute-force heavy set for a safe threshold
     thresh = int(err) + 50
     got = {
         r["item"]: r["n_occurrences"]
-        for r in heavy_hitters_exact(df, "item", thresh, k=k).collect()
+        for r in heavy_hitters_exact(df, "item", threshold=thresh).collect()
     }
     want = {it: c for it, c in true.items() if c >= thresh}
     assert got == want
-    # the completeness contract is enforced, not assumed: an explicit k
-    # that voids threshold > n/(k+1) raises instead of silently undercounting
+    # the completeness contract is enforced, not assumed: a max_k too small
+    # to honor threshold > n/(k+1) raises instead of silently returning an
+    # incomplete candidate set
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        heavy_hitters_exact(df, "item", threshold=2, k=10)
-    # and the self-sizing default picks k honoring the bound
-    auto = heavy_hitters_exact(df, "item", threshold=thresh)
-    assert {r["item"]: r["n_occurrences"] for r in auto.collect()} == want
-    # RELATIVE-threshold sizing: k = ceil(2/rel) is a constant independent of
-    # n (the scale-safe mode); output == brute force at the same cutoff
-    rel = thresh / n
-    got_rel = {
-        r["item"]: r["n_occurrences"]
-        for r in heavy_hitters_exact(df, "item", rel_threshold=rel).collect()
-    }
-    import math as _math
-
-    want_rel = {
-        it: c for it, c in true.items() if c >= max(1, _math.ceil(rel * n - 1e-9))
-    }
-    assert got_rel == want_rel
-    # absolute self-sizing is capped: a max_k too small to honor the bound
-    # raises instead of silently returning an incomplete candidate set
-    with _pytest.raises(ValueError):
         heavy_hitters_exact(df, "item", threshold=2, max_k=10)
-    with _pytest.raises(ValueError):
-        heavy_hitters_exact(df, "item", threshold=5, rel_threshold=0.1)
 
 
 def test_pagerank_matches_power_iteration(spark):
@@ -1356,8 +1324,8 @@ def test_truss_peel_planted_k5_with_pendant_triangle(spark):
     """K5 plus a pendant triangle {10,11,12} attached by bridge (5,10):
     at k=4 the bridge (support 0) and the pendant triangle (each edge in
     exactly 1 triangle < 2) peel away, leaving exactly K5 with every edge
-    at support 3; at k=3 only the bridge peels.  Until-convergence and a
-    generous fixed n_rounds agree."""
+    at support 3; at k=3 only the bridge peels.  Both peels reach their
+    fixpoint in one round, so the second round must be a no-op."""
     import itertools
 
     from etl_cloud_logistics_spark.operators.graph import truss_peel
@@ -1366,27 +1334,27 @@ def test_truss_peel_planted_k5_with_pendant_triangle(spark):
     edges = k5 + [(10, 11), (11, 12), (10, 12), (5, 10)]
     df = spark.createDataFrame(edges, "src long, dst long")
 
-    got4 = {(r.lo, r.hi): r.support for r in truss_peel(df, k=4).collect()}
+    rounds = 2
+
+    got4 = {(r.lo, r.hi): r.support for r in truss_peel(df, rounds, k=4).collect()}
     assert got4 == {(a, b): 3 for a, b in k5}
 
-    got3 = {(r.lo, r.hi): r.support for r in truss_peel(df, k=3).collect()}
+    got3 = {(r.lo, r.hi): r.support for r in truss_peel(df, rounds, k=3).collect()}
     assert set(got3) == set(k5) | {(10, 11), (11, 12), (10, 12)}
     assert got3[(10, 11)] == 1
-
-    fixed = {(r.lo, r.hi): r.support
-             for r in truss_peel(df, k=4, n_rounds=6).collect()}
-    assert fixed == got4
 
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        truss_peel(df, k=2)
+        truss_peel(df, rounds, k=2)
 
 
 def test_truss_peel_matches_bruteforce_random_graph(spark):
     """Seeded random graph: distributed peel == the driver-side peel loop
     (recompute support, drop < k-2, repeat to fixpoint), edges AND final
-    supports, for k=3,4,5 — including the k where everything dies."""
+    supports, for k=3,4,5 — including the k where everything dies.  The
+    distributed peel runs as many rounds as the driver loop took to reach
+    its fixpoint, so the last round is a no-op on both sides."""
     import itertools
     import random
 
@@ -1399,8 +1367,9 @@ def test_truss_peel_matches_bruteforce_random_graph(spark):
     )
 
     def brute(k):
-        cur = set(und)
+        cur, rounds = set(und), 0
         while True:
+            rounds += 1
             sup = {e: 0 for e in cur}
             for a, b, c in itertools.combinations(range(n), 3):
                 if (a, b) in cur and (a, c) in cur and (b, c) in cur:
@@ -1409,13 +1378,13 @@ def test_truss_peel_matches_bruteforce_random_graph(spark):
                     sup[(b, c)] += 1
             nxt = {e for e in cur if sup[e] >= k - 2}
             if nxt == cur:
-                return {e: sup[e] for e in cur}
+                return {e: sup[e] for e in cur}, rounds
             cur = nxt
 
     df = spark.createDataFrame(und, "src long, dst long")
     for k in (3, 4, 5):
-        exp = brute(k)
-        got = {(r.lo, r.hi): r.support for r in truss_peel(df, k=k).collect()}
+        exp, rounds = brute(k)
+        got = {(r.lo, r.hi): r.support for r in truss_peel(df, rounds, k=k).collect()}
         assert got == exp, k
 
 

@@ -348,32 +348,37 @@ def test_numeric_kind_check_catches_decimal_double_drift(spark):
     ),
     extra_ids=st.sets(st.integers(0, 40), max_size=6),
 )
-def test_cc_star_equals_label_propagation_property(spark, edges, extra_ids):
-    """Property pin for the r9 star path: on ANY random multigraph (dups,
-    reversals, self-loops, isolated ids included), alternating-star and
-    min-label-propagation components must be identical maps — both define
+def test_cc_label_propagation_equals_union_find_property(spark, edges, extra_ids):
+    """Property pin for neardup_components: on ANY random multigraph (dups,
+    reversals, self-loops, isolated ids and an empty pair list included),
+    min-label propagation gives the same map as a driver-side union-find —
     component(x) = min id reachable from x."""
-    from pyspark.sql import functions as F
-
     from etl_cloud_logistics_spark.operators.dedup import neardup_components
 
     ids = sorted({a for a, _ in edges} | {b for _, b in edges} | extra_ids)
     if not ids:
         return
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # roots stay component minima
+    want = {i: find(i) for i in ids}
     pairs = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in edges] or [(ids[0], ids[0])],
-        "doc_a long, doc_b long",
+        [(int(a), int(b)) for a, b in edges], "doc_a long, doc_b long"
     )
     id_df = spark.createDataFrame([(int(i),) for i in ids], "doc_id long")
     lab = {
         r["doc_id"]: r["component"]
         for r in neardup_components(pairs, id_df, max_iter=80).collect()
     }
-    star = {
-        r["doc_id"]: r["component"]
-        for r in neardup_components(pairs, id_df, algorithm="star").collect()
-    }
-    assert lab == star
+    assert lab == want
 
 
 @settings(max_examples=100, deadline=None, suppress_health_check=list(HealthCheck))

@@ -2,7 +2,9 @@
 probe records are built on (etl_cloud_logistics_spark/metrics.py) — a
 biased meter poisons every artifact that quotes it, so the meter gets its
 own pins — and the AST guards on the package's shape: one status-store
-reader, and every public operator reached from the product surface."""
+reader, every public operator reached from the product surface, and every
+branch a reached operator takes on a defaulted parameter selected by some
+product call."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ import ast
 import glob
 import os
 from collections import defaultdict
+from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
 
@@ -132,15 +135,12 @@ def test_status_store_is_read_only_through_the_metrics_module():
 # Whatever they use is reached through them.
 REACH_EXEMPT = {
     "sources.generator.generate_trips_like": (
-        "COVERAGE F22: the weighted-distribution generator; the streaming rate "
-        "source draws uniform values, so no reached code covers F22"
+        "COVERAGE F22: the weighted-distribution generator; no reached code "
+        "covers F22"
     ),
     "operators.similarity.srp_signatures": (
         "the relational reference twin that srp_signatures_arrow is pinned "
         "bit-identical to"
-    ),
-    "operators.dedup.components_probe_info": (
-        "probe introspection read by tools/scaling_probe.py"
     ),
     "streaming.jobs.eta_stream": (
         "COVERAGE ST3: the periodic ETA recompute; no reached code covers ST3"
@@ -207,66 +207,19 @@ def _is_registered(node):
     )
 
 
-def test_every_public_package_name_is_reached():
-    """A name walk from the product surface (``PRODUCT_ENTRY``).  A module
-    entry is reached whole, except the non-dunder methods of its classes; a
-    def entry, and every ``@register`` query def, reaches its own name.  A
-    reached name reaches every top-level def, class header or assignment of
-    the package that binds it; a method is reached only by an attribute name
-    (``x.method``), never by a bare name.  Each public top-level def, class
-    and assigned name, and each public method of a public class, must be
-    reached or be in ``REACH_EXEMPT``, and no exemption may be reached
-    without it.
+@dataclass
+class _ProductWalk:
+    """The package as the guards see it, walked from ``PRODUCT_ENTRY``."""
 
-    Known limit: the walk matches names, not types.  A reached ``x.write``
-    reaches every method named ``write``, and a reached ``run`` reaches
-    every top-level ``run`` in the package, so a name that shares its
-    spelling with a reached one passes unchecked."""
-    pkg = os.path.join(ROOT, "etl_cloud_logistics_spark")
-    paths = {"__spark_entry__": os.path.join(ROOT, "__spark_entry__.py")}
-    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
-        mod = os.path.relpath(path, pkg)[: -len(".py")].replace(os.sep, ".")
-        paths[mod.removesuffix(".__init__")] = path
-    entries = set(PRODUCT_ENTRY) - {"@register"}
-    seed, resolved = set(), set()
-    bodies = defaultdict(list)  # name or .attr -> nodes it reaches
-    public = {}  # "module.name" -> name, "module.Class.method" -> .method
-    for mod, path in paths.items():
-        with open(path) as fh:
-            tree = ast.parse(fh.read())
-        is_entry = mod in entries
-        resolved |= {mod} & entries
-        for node in tree.body:
-            if isinstance(node, ast.ClassDef):
-                for meth in filter(_is_method, node.body):
-                    bodies["." + meth.name].append(meth)
-                    if not (node.name.startswith("_") or meth.name.startswith("_")):
-                        public[f"{mod}.{node.name}.{meth.name}"] = "." + meth.name
-                header = _class_header(node)
-            else:
-                header = [node]
-            if is_entry:
-                for part in header:
-                    seed |= _code_names(part)
-                continue
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                bodies[node.name].extend(header)
-                names = [node.name]
-                if f"{mod}.{node.name}" in entries or _is_registered(node):
-                    resolved.add(f"{mod}.{node.name}")
-                    seed.add(node.name)
-            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
-                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
-                names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
-                for name in names:
-                    bodies[name].append(node)
-            else:
-                names = []
-            for name in names:
-                if not name.startswith("_"):
-                    public[f"{mod}.{name}"] = name
+    entries: set  # the PRODUCT_ENTRY keys other than ``@register``
+    resolved: set = field(default_factory=set)  # entries found in the code
+    seed: set = field(default_factory=set)  # names the entries use
+    bodies: dict = field(default_factory=lambda: defaultdict(list))  # name -> nodes it reaches
+    public: dict = field(default_factory=dict)  # "module.name" -> name, "module.Class.method" -> .method
+    defs: dict = field(default_factory=dict)  # public non-entry def or method -> its node
+    trees: list = field(default_factory=list)  # every parsed file, entries included
 
-    def reach(names):
+    def reach(self, names):
         reached, todo = set(), list(names)
         while todo:
             name = todo.pop()
@@ -274,18 +227,172 @@ def test_every_public_package_name_is_reached():
                 reached.add(name)
                 if name.startswith("."):
                     todo.append(name[1:])  # ``module.fn`` reaches ``fn``
-                for node in bodies[name]:
+                for node in self.bodies[name]:
                     todo.extend(_code_names(node) - reached)
         return reached
 
-    assert entries <= resolved, f"stale PRODUCT_ENTRY: {sorted(entries - resolved)}"
-    assert sum(q.startswith("queries.") for q in resolved) > 100  # the @register defs
+
+def _product_walk():
+    """Parse the package and ``__spark_entry__.py``.  A module entry is
+    reached whole, except the non-dunder methods of its classes; a def entry,
+    and every ``@register`` query def, reaches its own name.  A reached name
+    reaches every top-level def, class header or assignment of the package
+    that binds it; a method is reached only by an attribute name
+    (``x.method``), never by a bare name."""
+    pkg = os.path.join(ROOT, "etl_cloud_logistics_spark")
+    paths = {"__spark_entry__": os.path.join(ROOT, "__spark_entry__.py")}
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        mod = os.path.relpath(path, pkg)[: -len(".py")].replace(os.sep, ".")
+        paths[mod.removesuffix(".__init__")] = path
+    walk = _ProductWalk(entries=set(PRODUCT_ENTRY) - {"@register"})
+    for mod, path in paths.items():
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        walk.trees.append(tree)
+        is_entry = mod in walk.entries
+        walk.resolved |= {mod} & walk.entries
+        for node in tree.body:
+            if isinstance(node, ast.ClassDef):
+                for meth in filter(_is_method, node.body):
+                    walk.bodies["." + meth.name].append(meth)
+                    if not (node.name.startswith("_") or meth.name.startswith("_")):
+                        walk.public[f"{mod}.{node.name}.{meth.name}"] = "." + meth.name
+                        walk.defs[f"{mod}.{node.name}.{meth.name}"] = meth
+                header = _class_header(node)
+            else:
+                header = [node]
+            if is_entry:
+                for part in header:
+                    walk.seed |= _code_names(part)
+                continue
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                walk.bodies[node.name].extend(header)
+                names = [node.name]
+                if f"{mod}.{node.name}" in walk.entries or _is_registered(node):
+                    walk.resolved.add(f"{mod}.{node.name}")
+                    walk.seed.add(node.name)
+                elif not (isinstance(node, ast.ClassDef) or node.name.startswith("_")):
+                    walk.defs[f"{mod}.{node.name}"] = node
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+                for name in names:
+                    walk.bodies[name].append(node)
+            else:
+                names = []
+            for name in names:
+                if not name.startswith("_"):
+                    walk.public[f"{mod}.{name}"] = name
+    return walk
+
+
+def test_every_public_package_name_is_reached():
+    """A name walk from the product surface (``PRODUCT_ENTRY``, walked by
+    ``_product_walk``).  Each public top-level def, class and assigned name,
+    and each public method of a public class, must be reached or be in
+    ``REACH_EXEMPT``, and no exemption may be reached without it.
+
+    Known limit: the walk matches names, not types.  A reached ``x.write``
+    reaches every method named ``write``, and a reached ``run`` reaches
+    every top-level ``run`` in the package, so a name that shares its
+    spelling with a reached one passes unchecked."""
+    walk = _product_walk()
+    public = walk.public
+    assert walk.entries <= walk.resolved, (
+        f"stale PRODUCT_ENTRY: {sorted(walk.entries - walk.resolved)}"
+    )
+    assert sum(q.startswith("queries.") for q in walk.resolved) > 100  # the @register defs
     assert len(public) > 100
     assert any(name.startswith(".") for name in public.values())
     assert set(REACH_EXEMPT) <= set(public), set(REACH_EXEMPT) - set(public)
-    from_surface = reach(seed)
+    from_surface = walk.reach(walk.seed)
     stale = [q for q in REACH_EXEMPT if public[q] in from_surface]
     assert not stale, f"exempt but reached, drop the exemption: {stale}"
-    reached = reach(seed | {public[q] for q in REACH_EXEMPT})
+    reached = walk.reach(walk.seed | {public[q] for q in REACH_EXEMPT})
     unreached = sorted(q for q, name in public.items() if name not in reached)
     assert not unreached, f"public names no query, pipeline or streaming job reaches: {unreached}"
+
+
+# Forks (see the guard below) that no product call sets and that stay anyway,
+# each as ``"module.def(param)"`` with its reason.
+OPTION_EXEMPT = {}
+
+
+def _forks(fn):
+    """The defaulted parameters of ``fn`` that an ``if``/``elif``/``while``
+    or conditional expression in its body tests.  An ``if`` whose body only
+    raises is input validation, not a fork."""
+    args = fn.args
+    positional = [*args.posonlyargs, *args.args]
+    defaulted = [a.arg for a in positional[len(positional) - len(args.defaults) :]]
+    defaulted += [a.arg for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None]
+    tested = set()
+    for node in ast.walk(fn):
+        if isinstance(node, ast.If) and all(isinstance(s, ast.Raise) for s in node.body):
+            continue
+        if isinstance(node, (ast.If, ast.While, ast.IfExp)):
+            tested |= {n.id for n in ast.walk(node.test) if isinstance(n, ast.Name)}
+    return [p for p in defaulted if p in tested]
+
+
+def _sets(call, param, index):
+    """Whether ``call`` passes ``param`` (positional slot ``index``, or None
+    for keyword-only): by keyword, by position, or through ``*``/``**``."""
+    return (
+        any(k.arg in (param, None) for k in call.keywords)
+        or (index is not None and any(isinstance(a, ast.Starred) for a in call.args))
+        or (index is not None and len(call.args) > index)
+    )
+
+
+def test_every_fork_is_set_by_a_product_caller():
+    """Each fork of a reached public def or method that is not itself an
+    entry — a defaulted parameter its body branches on (``_forks``) — must
+    be passed, by keyword, by position or through ``*args``/``**kwargs``,
+    by at least one call in the package or ``__spark_entry__.py`` outside
+    the def itself, or be in ``OPTION_EXEMPT``; no exemption may be set by
+    such a call.  Calls in tests, tools, ``bench.py`` and ``perfbench/``
+    do not count: a branch only they select is not product code.
+
+    Known limits: calls match by name, as in the reachability walk (a call
+    ``x.run(k=1)`` sets ``k`` for every method named ``run``); a parameter
+    that is only forwarded to another call is not a fork here, its callee's
+    branch is; and the guard sees which parameters a caller passes, not
+    which values, so a required parameter whose every product call passes
+    the same value (a branch on ``n is None`` that no caller takes) passes
+    unchecked."""
+    walk = _product_walk()
+    reached = walk.reach(walk.seed)
+    calls = defaultdict(list)  # name or .attr -> call nodes
+    for tree in walk.trees:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                if isinstance(node.func, ast.Name):
+                    calls[node.func.id].append(node)
+                elif isinstance(node.func, ast.Attribute):
+                    calls["." + node.func.attr].append(node)
+    checked, unset = 0, {}
+    for qual, fn in walk.defs.items():
+        name = walk.public[qual]
+        if name not in reached:
+            continue
+        checked += 1
+        method = name.startswith(".")
+        positional = [a.arg for a in (*fn.args.posonlyargs, *fn.args.args)]
+        if method and not any("staticmethod" in _code_names(d) for d in fn.decorator_list):
+            positional = positional[1:]  # self / cls
+        own = {id(n) for n in ast.walk(fn)}
+        callers = [
+            c
+            for c in calls["." + name.lstrip(".")] + ([] if method else calls[name])
+            if id(c) not in own
+        ]
+        for param in _forks(fn):
+            index = positional.index(param) if param in positional else None
+            if not any(_sets(c, param, index) for c in callers):
+                unset[f"{qual}({param})"] = name
+    assert checked > 100
+    stale = sorted(set(OPTION_EXEMPT) - set(unset))
+    assert not stale, f"exempt but set by a product call (or gone), drop the exemption: {stale}"
+    forks = sorted(set(unset) - set(OPTION_EXEMPT))
+    assert not forks, f"forks no product call sets, delete the branch: {forks}"

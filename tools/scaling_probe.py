@@ -13,9 +13,6 @@ show a ~100× step from K=1 to K=10.
 
 Usage: python tools/scaling_probe.py [K ...]            (default 1 5 10)
        python tools/scaling_probe.py --vectors [K ...]  (embedding kit)
-       python tools/scaling_probe.py --pipeline [K ...] (composed curation
-           pipeline, LSH candidate setting — the production configuration
-           of the engine's flagship use case, not just its kit pieces)
        python tools/scaling_probe.py --bloom [N ...]    (distributed Bloom
            build at N distinct keys; default 1e6 3e6 1e7)
        python tools/scaling_probe.py --graph [K ...]    (frontier BFS +
@@ -23,9 +20,9 @@ Usage: python tools/scaling_probe.py [K ...]            (default 1 5 10)
        python tools/scaling_probe.py --winnow [K ...]   (winnowing
            fingerprints + capped pair join over K× replicas)
        python tools/scaling_probe.py --powerlaw [E ...] (pagerank/BFS/
-           components label-prop AND star on synthesized Zipf-endpoint
-           graphs at E edges, BOTH checkpoint modes, wall + measured
-           shuffle; default 1e5 1e6 1e7)
+           components label-prop on synthesized Zipf-endpoint graphs at
+           E edges, BOTH checkpoint modes, wall + measured shuffle;
+           default 1e5 1e6 1e7)
        python tools/scaling_probe.py --sssp [E ...]     (fixed-round
            Bellman-Ford on Zipf graphs: wall + true shuffle per round,
            local==reliable checksum pin; default 1e5 1e6 1e7)
@@ -33,9 +30,6 @@ Usage: python tools/scaling_probe.py [K ...]            (default 1 5 10)
            counts on Zipf graphs at E edges: degree-ordered orientation
            vs the id-ordered wedge blowup, analytic wedge totals + an
            equal-count pin; default 1e5 1e6 4e6)
-       python tools/scaling_probe.py --diameter [N ...] (path/grid graphs
-           at N nodes: label propagation's O(diameter) pathology vs the
-           star algorithm's O(log n) rounds; default 1e4 1e5 1e6)
        python tools/scaling_probe.py --skewjoin [R ...] (hot-key join at
            R fact rows, 30% on one key: AQE skew split vs disabled vs
            manual targeted salting, equal-output checksums; default 16e6)
@@ -167,16 +161,11 @@ def vector_probe(ks: list[int]) -> None:
 
 
 def replicated_documents_full(spark, k: int):
-    """Like :func:`replicated_corpus` but keeps lang/source (the composed
-    pipeline's split/mixture stages consume them) and tags by SUFFIXING
-    every word with the replica id instead of interleaving filler tokens.
-    A per-word suffix is a bijection on the vocabulary, so word counts,
-    distinct-trigram counts, and hence the pipeline's quality-gate
-    decisions (10..1000 words, repetition <= 0.2) are IDENTICAL to the
-    base corpus in every replica — kept-doc counts must scale exactly K×.
-    The interleaved-tag construction used by the kit probe doubles token
-    counts, which pushes every sf0.1 doc over the gate's 1000-word cap and
-    would leave stages 4-5 probing empty frames (kept=0 observed)."""
+    """Like :func:`replicated_corpus` but keeps lang/source and tags by
+    SUFFIXING every word with the replica id instead of interleaving filler
+    tokens.  A per-word suffix is a bijection on the vocabulary, so word
+    counts and distinct-trigram counts are IDENTICAL to the base corpus in
+    every replica (the interleaved-tag construction doubles token counts)."""
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "text", "lang", "source"
     )
@@ -200,40 +189,6 @@ def replicated_documents_full(spark, k: int):
     return out.repartition(spark.sparkContext.defaultParallelism).localCheckpoint(
         eager=True
     )
-
-
-def pipeline_probe(ks: list[int]) -> None:
-    """Scaling slope of the COMPOSED curation pipeline (quality gate →
-    exact dedup → LSH near-dup canonicalization → decontam → split/mix)
-    in its production candidate setting.  The kit probes above cover the
-    stages in isolation; the pipeline is the engine's stated core use
-    case, so its composition gets its own measured row.  Replica tagging
-    suffixes every word with the replica id (word counts and repetition
-    ratios preserved — see replicated_documents_full), so the quality gate
-    keeps identical docs per replica and kept counts scale ~K× (not
-    exactly: the split/mixture stage keys md5 decisions on doc_id, which
-    differs per replica — observed 1484 vs 1498–1505/replica at K=1/5/10);
-    a kept count far below K× would itself flag a scale bug."""
-    from etl_cloud_logistics_spark.queries.curation_ops import curation_pipeline
-
-    spark = get_spark("scaling-probe-pipe")
-    warm = replicated_documents_full(spark, 1)
-    curation_pipeline(spark, warm, candidates="lsh", max_shingle_freq=100).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    spark.catalog.clearCache()
-    print(f"composed-pipeline probe over {SF_DIR} (LSH candidates, freq cap 100)")
-    print(f"{'K':>3} {'docs':>7} {'wall_sec':>9} {'kept':>7}")
-    for k in ks:
-        corpus = replicated_documents_full(spark, k)
-        n_docs = corpus.count()
-        t0 = time.perf_counter()
-        kept = curation_pipeline(
-            spark, corpus, candidates="lsh", max_shingle_freq=100
-        ).count()
-        wall = time.perf_counter() - t0
-        print(f"{k:>3} {n_docs:>7} {wall:>9.2f} {kept:>7}")
-        spark.catalog.clearCache()
 
 
 def bloom_probe(n_keys_list: list[int]) -> None:
@@ -423,23 +378,6 @@ def powerlaw_probe(es: list[int]) -> None:
                     checkpoint_dir=chk_dir,
                 ).write.mode("overwrite").format("noop").save(),
             ),
-            (
-                # r9: the star variant on the same graph — the verdict-#3
-                # question is whether it cuts components' per-round
-                # shuffle (the family's heaviest row) on hub-skew graphs
-                # too, not just on the high-diameter shapes it exists for
-                "components_star",
-                lambda: neardup_components(
-                    edges.select(
-                        F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
-                    ),
-                    edges.select(F.col("src").alias("doc_id"))
-                    .unionByName(edges.select(F.col("dst").alias("doc_id")))
-                    .distinct(),
-                    checkpoint_dir=chk_dir,
-                    algorithm="star",
-                ).write.mode("overwrite").format("noop").save(),
-            ),
         ):
             meter = ExecutionMeter(spark)
             t0 = time.perf_counter()
@@ -461,8 +399,7 @@ def powerlaw_probe(es: list[int]) -> None:
     )
     print(
         f"{'E':>9} {'mode':>8} {'pr_sec':>7} {'pr_MB':>8} {'pr_MB/rnd':>9} "
-        f"{'bfs_sec':>8} {'bfs_MB':>8} {'cc_sec':>7} {'cc_MB':>8} "
-        f"{'ccs_sec':>7} {'ccs_MB':>8}"
+        f"{'bfs_sec':>8} {'bfs_MB':>8} {'cc_sec':>7} {'cc_MB':>8}"
     )
     for e in es:
         edges = powerlaw_edges(e)
@@ -480,8 +417,7 @@ def powerlaw_probe(es: list[int]) -> None:
                 f"{r['pagerank'][0]:>7.2f} {r['pagerank'][1]:>8.1f} "
                 f"{r['pagerank'][1] / N_ITER:>9.1f} "
                 f"{r['bfs'][0]:>8.2f} {r['bfs'][1]:>8.1f} "
-                f"{r['components'][0]:>7.2f} {r['components'][1]:>8.1f} "
-                f"{r['components_star'][0]:>7.2f} {r['components_star'][1]:>8.1f}"
+                f"{r['components'][0]:>7.2f} {r['components'][1]:>8.1f}"
             )
         spark.catalog.clearCache()
 
@@ -699,191 +635,6 @@ def triangle_probe(es: list[int]) -> None:
             f"{deg_s:>7.2f} {deg_mb:>7.1f} {id_s}   {pin}"
         )
         spark.catalog.clearCache()
-
-
-def diameter_probe(ns: list[int]) -> None:
-    """High-diameter regime for the connected-components family (r9,
-    VERDICT r8 item 2): the power-law probe covers hub-skew graphs whose
-    diameter is small, but label propagation runs rounds = O(diameter), so
-    chain-shaped inputs are its pathology — a 10^5-node path needs 10^5
-    rounds and would never finish.  Synthesize the two canonical shapes at
-    each node count: a PATH (diameter n-1, the worst case) and a square
-    GRID (diameter 2(sqrt(n)-1) — the 2-D long-range shape).  For each,
-    run BOTH algorithms:
-
-    - label propagation (``neardup_components``) with a 30-round budget —
-      expected DNF (loud RuntimeError) on every tier; recording that IS
-      the evidence the default needs the star fallback outside its
-      dense-cluster home turf;
-    - alternating star (``algorithm='star'``) — expected ~2·log2(n)
-      rounds, wall + shuffle + rounds recorded, labels verified == {0}.
-
-    r10 (VERDICT r9 #6): a third MIXED fixture per tier — n/2 nodes in
-    dense 50-node hub clusters (diameter 2, label propagation's home
-    turf) plus n/2 nodes in ONE long path (the label pathology) — runs
-    all three algorithms.  This is the honest unknown-topology case
-    ``algorithm='auto'`` exists for: pure label must DNF on the chain
-    half, pure star pays O(log n) rounds over ALL n nodes, and auto's
-    label phase must collapse every cluster so the contraction hands the
-    star phase ONLY the chain remainder — ``star_probe_info()``'s
-    round-0 node count (free off the convergence signature) is the
-    direct evidence the contraction shrinks the star input, vs the pure
-    star run's count on the identical graph.
-    """
-    import math
-
-    from etl_cloud_logistics_spark.operators.dedup import (  # noqa: PLC0415
-        neardup_components,
-    )
-    from etl_cloud_logistics_spark.operators.graph import (  # noqa: PLC0415
-        star_probe_info,
-    )
-
-    spark = get_spark("scaling-probe-diameter")
-
-    def path_edges(n: int):
-        return (
-            spark.range(n - 1)
-            .select((F.col("id") + 1).alias("doc_a"), F.col("id").alias("doc_b"))
-            .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=True)
-        )
-
-    def grid_edges(n: int):
-        side = int(math.isqrt(n))
-        cells = spark.range(side * side).select(
-            F.col("id").alias("v"),
-            (F.col("id") % side).alias("c"),
-            (F.col("id") / side).cast("long").alias("r"),
-        )
-        right = cells.filter(F.col("c") < side - 1).select(
-            F.col("v").alias("doc_a"), (F.col("v") + 1).alias("doc_b")
-        )
-        down = cells.filter(F.col("r") < side - 1).select(
-            F.col("v").alias("doc_a"), (F.col("v") + side).alias("doc_b")
-        )
-        return (
-            right.unionByName(down)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=True)
-        )
-
-    def ids_of(pairs):
-        return (
-            pairs.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-
-    # warm the plan shapes once
-    warm = path_edges(2_000)
-    neardup_components(warm, ids_of(warm), algorithm="star").write.mode(
-        "overwrite"
-    ).format("noop").save()
-    try:
-        neardup_components(warm, ids_of(warm), max_iter=30)
-    except RuntimeError:
-        pass
-    spark.catalog.clearCache()
-
-    print(
-        "high-diameter CC probe (path: diameter n-1; grid: 2(sqrt(n)-1); "
-        "label budget 30 rounds)"
-    )
-    print(
-        f"{'shape':>5} {'nodes':>8} {'label':>9} {'star_sec':>8} "
-        f"{'star_MB':>8} {'star_rounds':>11} {'components':>10}"
-    )
-    for n in ns:
-        for shape, build in (("path", path_edges), ("grid", grid_edges)):
-            pairs = build(n)
-            ids = ids_of(pairs).localCheckpoint(eager=True)
-            try:
-                neardup_components(pairs, ids, max_iter=30).write.mode(
-                    "overwrite"
-                ).format("noop").save()
-                from etl_cloud_logistics_spark.operators.dedup import (  # noqa: PLC0415
-                    components_probe_info,
-                )
-
-                label = f"{components_probe_info()['rounds'] + 1}rnd"
-            except RuntimeError:
-                label = "DNF>30"
-            spark.catalog.clearCache()
-            meter = ExecutionMeter(spark)
-            t0 = time.perf_counter()
-            comp = neardup_components(pairs, ids, algorithm="star")
-            n_comp = comp.select("component").distinct().count()
-            wall = time.perf_counter() - t0
-            m = meter.read().metrics
-            rounds = star_probe_info()["rounds"]
-            print(
-                f"{shape:>5} {ids.count():>8} {label:>9} {wall:>8.2f} "
-                f"{m.get('shuffle bytes written', 0.0) / 2**20:>8.1f} "
-                f"{rounds:>11} {n_comp:>10}"
-            )
-            spark.catalog.clearCache()
-        # mixed fixture: hub clusters + one long chain, all 3 algorithms
-        from etl_cloud_logistics_spark.operators.dedup import (  # noqa: PLC0415
-            components_probe_info,
-        )
-
-        half = n // 2
-        clusters = (
-            spark.range(half)
-            .filter(F.col("id") % 50 != 0)
-            .select(
-                F.col("id").alias("doc_a"),
-                (F.col("id") - F.col("id") % 50).alias("doc_b"),
-            )
-        )
-        chain = spark.range(half, n - 1).select(
-            (F.col("id") + 1).alias("doc_a"), F.col("id").alias("doc_b")
-        )
-        pairs = (
-            clusters.unionByName(chain)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=True)
-        )
-        ids = ids_of(pairs).localCheckpoint(eager=True)
-        expected_comps = half // 50 + 1  # one comp per hub cluster + the chain
-        try:
-            neardup_components(pairs, ids, max_iter=30).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            label = f"{components_probe_info()['rounds'] + 1}rnd"
-        except RuntimeError:
-            label = "DNF>30"
-        spark.catalog.clearCache()
-        results = {}
-        for algo in ("star", "auto"):
-            meter = ExecutionMeter(spark)
-            t0 = time.perf_counter()
-            comp = neardup_components(pairs, ids, algorithm=algo, max_iter=30)
-            n_comp = comp.select("component").distinct().count()
-            wall = time.perf_counter() - t0
-            m = meter.read().metrics
-            results[algo] = {
-                "sec": wall,
-                "mb": m.get("shuffle bytes written", 0.0) / 2**20,
-                "star_rounds": star_probe_info()["rounds"],
-                "star_input_nodes": star_probe_info()["input_nodes"],
-                "mode": components_probe_info().get("algorithm", "star"),
-                "comps": n_comp,
-            }
-            assert n_comp == expected_comps, (algo, n_comp, expected_comps)
-            spark.catalog.clearCache()
-        s, a = results["star"], results["auto"]
-        print(
-            f"mixed {ids.count():>8} {label:>9} {s['sec']:>8.2f} "
-            f"{s['mb']:>8.1f} {s['star_rounds']:>11} {s['comps']:>10}"
-        )
-        print(
-            f"  auto@{n}: {a['sec']:.2f}s {a['mb']:.1f}MB mode={a['mode']} "
-            f"star_rounds={a['star_rounds']} star_input_nodes="
-            f"{a['star_input_nodes']} (pure star saw {s['star_input_nodes']}; "
-            f"contraction kept {a['star_input_nodes'] / max(s['star_input_nodes'], 1):.1%})"
-        )
 
 
 def winnow_probe(ks: list[int]) -> None:
@@ -1256,13 +1007,10 @@ def etl_probe(ns: list[int]) -> None:
       the classify step is ONE full-outer hash join on the natural key
       and the rewrite is a union of narrow projections.
     - run the as-of fact lookup (4 facts per key, timestamps straddling
-      the version boundary so every match arm is exercised) BOTH ways:
-      ``broadcast_dim=True`` (the pre-r10 forced hint — fine for real
-      dimensions, a wall at 10^7+ versions) and the r10 default
-      ``broadcast_dim=None`` (Catalyst/AQE picks; large dims get a
-      sort-merge join that shuffles once on the key with the validity
-      range as residual).  Equal output is checksum-pinned per tier, and
-      the executed join strategy is read from the AQE-final plan.
+      the version boundary so every match arm is exercised): Catalyst/AQE
+      picks the join, so large dims get a sort-merge join that shuffles
+      once on the key with the validity range as residual.  The executed
+      join strategy is read from the AQE-final plan.
 
     The largest tier then gets a SECOND merge day (a later effective
     date over partially-overlapping churn) and the SCD2 invariants are
@@ -1354,10 +1102,7 @@ def etl_probe(ns: list[int]) -> None:
         "overwrite"
     ).format("noop").save()
     wfacts = make_facts(10_000)
-    for mode in (True, None):
-        asof_checksum(
-            scd2_asof_lookup(wdim, wfacts, ["k"], "order_ts", broadcast_dim=mode)
-        )
+    asof_checksum(scd2_asof_lookup(wdim, wfacts, ["k"], "order_ts"))
     spark.catalog.clearCache()
 
     print(
@@ -1367,8 +1112,7 @@ def etl_probe(ns: list[int]) -> None:
     )
     print(
         f"{'keys':>9} {'churn%':>6} {'merge_sec':>9} {'merge_MB':>8} "
-        f"{'dim_rows':>9} {'asof_bcast':>10} {'asof_auto':>9} {'auto_join':>9} "
-        f"{'match_ok':>8}"
+        f"{'dim_rows':>9} {'asof_sec':>8} {'asof_join':>9} {'asof_rows':>9}"
     )
     largest = max(ns)
     for n in ns:
@@ -1384,16 +1128,12 @@ def etl_probe(ns: list[int]) -> None:
             dim2 = merged.localCheckpoint(eager=True)
             dim_rows = dim2.count()
             facts = make_facts(n)
-            w_b, n_b, h_b, _s = asof_checksum(
-                scd2_asof_lookup(dim2, facts, ["k"], "order_ts", broadcast_dim=True)
-            )
-            w_a, n_a, h_a, strat = asof_checksum(
+            w_a, n_a, _h, strat = asof_checksum(
                 scd2_asof_lookup(dim2, facts, ["k"], "order_ts")
             )
-            ok = (n_b, h_b) == (n_a, h_a)
             print(
                 f"{n:>9} {pct:>6} {merge_wall:>9.2f} {mb:>8.1f} {dim_rows:>9} "
-                f"{w_b:>10.2f} {w_a:>9.2f} {strat:>9} {str(ok):>8}"
+                f"{w_a:>8.2f} {strat:>9} {n_a:>9}"
             )
             if n == largest and pct == 10:
                 # second merge day over partially-overlapping churn, then
@@ -1744,18 +1484,14 @@ def dedup_probe(ks: list[int]) -> None:
     spark = get_spark("scaling-probe")
     # warm-up: compile the plans once at the smallest scale
     warm = replicated_corpus(spark, 1)
-    minhash_lsh_neardup(warm, threshold=0.5, max_shingle_freq=100).write.mode("overwrite").format(
-        "noop"
-    ).save()
+    minhash_lsh_neardup(warm, threshold=0.5).write.mode("overwrite").format("noop").save()
     print(f"scale probe over {SF_DIR} (base docs replicated K×, tagged)")
     print(f"{'K':>3} {'docs':>7} {'lsh_sec':>8} {'pairs':>7} {'comp_sec':>9} {'clusters':>9}")
     for k in ks:
         corpus = replicated_corpus(spark, k)
         n_docs = corpus.count()
         t0 = time.perf_counter()
-        pairs = minhash_lsh_neardup(corpus, threshold=0.5, max_shingle_freq=100).select(
-            "doc_a", "doc_b"
-        ).persist()
+        pairs = minhash_lsh_neardup(corpus, threshold=0.5).select("doc_a", "doc_b").persist()
         n_pairs = pairs.count()
         lsh_sec = time.perf_counter() - t0
         nodes = (
@@ -1777,14 +1513,12 @@ def dedup_probe(ks: list[int]) -> None:
 # flag -> (probe, default sizes); no flag runs the dedup kit
 PROBES = {
     "--vectors": (vector_probe, [1, 5, 10]),
-    "--pipeline": (pipeline_probe, [1, 5, 10]),
     "--bloom": (bloom_probe, [1_000_000, 3_000_000, 10_000_000]),
     "--graph": (graph_probe, [1, 5, 10]),
     "--winnow": (winnow_probe, [1, 5, 10]),
     "--powerlaw": (powerlaw_probe, [100_000, 1_000_000, 10_000_000]),
     "--sssp": (sssp_probe, [100_000, 1_000_000, 10_000_000]),
     "--triangles": (triangle_probe, [100_000, 1_000_000, 4_000_000]),
-    "--diameter": (diameter_probe, [10_000, 100_000, 1_000_000]),
     "--skewjoin": (skewjoin_probe, [16_000_000]),
     "--ann": (ann_probe, [1, 8, 32]),
     "--text": (text_probe, [1, 5, 10]),
