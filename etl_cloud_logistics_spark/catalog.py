@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .operators.checkpointing import materialize
+
 TABLES = [
     "region",
     "nation",
@@ -156,17 +158,20 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-# (session-identity, sf_dir, table) -> loaded DataFrame.  DataFrames are
-# immutable lazy plans, so sharing one per table avoids re-listing files,
-# re-reading parquet footers and re-validating the schema on every query —
-# the analog of a catalog holding resolved table metadata.
+# (session-identity, checkpoint dir, sf_dir, table) -> loaded DataFrame.
+# DataFrames are immutable lazy plans, so sharing one per table avoids
+# re-listing files, re-reading parquet footers and re-validating the schema
+# on every query — the analog of a catalog holding resolved table metadata.
 #
 # The session identity is (applicationId, startTime) — stable for the life of
 # the SparkContext and never reused, unlike id(spark): CPython can hand a new
 # session the id() of a garbage-collected one, which would serve DataFrames
 # bound to a dead JVM session.  Entries from other (dead) sessions are purged
 # whenever a new session shows up, so the cache cannot grow across restarts.
-_TABLE_CACHE: dict[tuple[tuple[str, int], str, str], DataFrame] = {}
+# The checkpoint directory is part of the key because a small heavy table
+# is staged in the session's checkpoint mode: a reliable run must not read
+# blocks staged in local mode (see _parallelize_small_heavy_scan).
+_TABLE_CACHE: dict[tuple[tuple[str, int], str | None, str, str], DataFrame] = {}
 
 
 def _session_identity(spark: SparkSession) -> tuple[str, int]:
@@ -184,7 +189,7 @@ def load_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     microsecond-grain, so the truncation is lossless and matches DuckDB's
     ns→us view of the same files)."""
     ident = _session_identity(spark)
-    key = (ident, sf_dir, table)
+    key = (ident, spark.sparkContext.getCheckpointDir(), sf_dir, table)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
@@ -231,8 +236,7 @@ def _parallelize_small_heavy_scan(
     enough: Catalyst pushes deterministic filters and projections BELOW
     the exchange, so the expensive expressions land back on the one-task
     scan.  Instead the small table is spread and MATERIALIZED once per
-    session (``localCheckpoint``): the checkpointed blocks are a plan
-    barrier, every consumer computes above the parallel layout, and the
+    session (``materialize``): the checkpointed rows are a plan barrier, every consumer computes above the parallel layout, and the
     per-session table cache amortizes the one-time cost across all
     queries — the behavior a genuinely multi-split lake table would give.
     Parquet filter pushdown is forfeited for these two tables; their
@@ -255,7 +259,7 @@ def _parallelize_small_heavy_scan(
     est_splits = max(1, size // max(max_split, 1))
     if est_splits >= target:
         return df
-    return df.repartition(target).localCheckpoint(eager=True)
+    return materialize(df.repartition(target))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -75,7 +75,8 @@ def build_bloom(
     silent FALSE NEGATIVE — the one property a Bloom filter must never
     violate.  Every engine call site passes deterministic key derivations
     (n-gram projections, dimension keys); callers with nondeterministic
-    sources must materialize them first (localCheckpoint / write+read)."""
+    sources must materialize them first (``checkpointing.materialize`` or
+    write+read)."""
     # one scan feeds both the count and the build aggregation; a lazy
     # persist materialized by the count folds what used to be a separate
     # eager-checkpoint job into it (r11 optimization round, guide §2.4 —

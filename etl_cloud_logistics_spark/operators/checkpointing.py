@@ -1,25 +1,35 @@
-"""Lineage truncation for iterative DataFrame loops — the shared mechanism
-behind connected components, PageRank and BFS.
+"""Every eager materialization in the package, and the one switch that
+chooses how it is done: the session's checkpoint directory
+(``SparkContext.getCheckpointDir()``, set by ``spark.checkpoint.dir`` or
+``SparkContext.setCheckpointDir``).
 
-Every iterative operator in the kit re-derives a frame from itself each
-round; without truncation the final plan nests every prior round's join
-and planning cost explodes.  Two mechanisms, selected by
-``checkpoint_dir``:
+- No directory (the default): LOCAL mode.  Frames are staged by eager
+  ``localCheckpoint`` — zero I/O, blocks live on executors and are freed
+  by the ContextCleaner with the RDD.  A lost executor fails the job,
+  which is fine on local[n] and for short batch steps.
+- A directory: RELIABLE mode, the restart-safe choice for long jobs at
+  100 TB.  Staged frames are written under it and survive executor loss;
+  ``spark.cleaner.referenceTracking.cleanCheckpoints`` (set by
+  ``session.get_spark``) deletes each one with its RDD, the lifetime a
+  localCheckpoint block has.
 
-- ``None`` (default): eager ``localCheckpoint`` — zero I/O, blocks live on
-  executors, freed by the ContextCleaner with the RDD.  A lost executor
-  fails the job, which is fine on local[n] and for short batch steps.
-- a path: RELIABLE checkpointing — each round's frame is written to
-  parquet under the path and read back, surviving executor loss on a real
-  cluster; the restart-safe choice for long iterative jobs at 100 TB.
-  Two slots alternate so a round never overwrites the files it is
-  reading, and each invocation namespaces its slots under a unique
-  subdirectory, so a shared ``checkpoint_dir`` (concurrent jobs, repeated
-  calls) never clobbers the parquet backing a still-live lazy result.
+Two staging forms read the switch:
 
-Extracted (r7) from ``neardup_components``' inline implementation so the
-graph family (``pagerank_fixed``/``bfs_min_hops``/``sssp_fixed``) offers
-the same cluster-safe mode instead of being localCheckpoint-only.
+- ``materialize(df)`` stages a frame once (multi-consumer inputs, range
+  layouts whose partition assignment must not be re-sampled, table
+  scans spread for CPU-heavy work).  Reliable mode is Spark's
+  ``checkpoint``, the reliable twin of ``localCheckpoint`` with the same
+  partition layout.
+- ``RoundCheckpointer`` truncates lineage once per round of an iterative
+  loop (connected components, PageRank, BFS, SSSP, truss peeling);
+  without truncation the final plan nests every prior round's join and
+  planning cost explodes.  Local rounds also reset the plan's size
+  statistics (``_reset_plan_stats``).  Reliable rounds are written to
+  parquet under the directory and read back: two slots alternate so a
+  round never overwrites the files it is reading, and each invocation
+  namespaces its slots under a unique subdirectory, so concurrent jobs
+  and repeated calls never clobber the parquet backing a still-live lazy
+  result.
 
 This module is also the one place that knows the graph family's PIN
 POLICY: which loop static is re-keyed by its join key, past which size,
@@ -33,8 +43,9 @@ import shutil
 import threading
 import uuid
 import warnings
+from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 # Pin gates: (operator = RoundCheckpointer prefix, static name, mode) ->
 # the row count past which ``static(..., pin_key=...)`` re-keys that static
@@ -144,10 +155,33 @@ def _reset_plan_stats(df: DataFrame) -> DataFrame:
         return df
 
 
-class RoundCheckpointer:
-    """Callable that truncates a DataFrame's lineage once per round.
+def _remove_dir(uri: str) -> None:
+    """Delete a directory under the checkpoint directory.  Spark reports
+    that directory as a ``file:`` URI; a directory under any other scheme
+    is left to its filesystem's own retention (no local cleanup)."""
+    parsed = urlparse(uri)
+    if parsed.scheme in ("", "file") and os.path.isdir(parsed.path):
+        shutil.rmtree(parsed.path, ignore_errors=True)
 
-    ``chk = RoundCheckpointer(checkpoint_dir, prefix="pagerank-fixed")`` then
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Stage ``df`` eagerly, once, in the session's mode: ``localCheckpoint``
+    without a checkpoint directory, Spark's reliable ``checkpoint`` under
+    it.  Both keep the frame's partition layout and truncate its lineage,
+    so every consumer reads the staged rows instead of re-running the
+    plan.  Plan size statistics carry over, as ``localCheckpoint`` carries
+    them; a loop that re-stages its own output every round uses
+    ``RoundCheckpointer``, which resets them."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=True)
+    return df.checkpoint(eager=True)
+
+
+class RoundCheckpointer:
+    """Callable that truncates a DataFrame's lineage once per round, in the
+    session's mode (see the module docstring).
+
+    ``chk = RoundCheckpointer(spark, prefix="pagerank-fixed")`` then
     ``frame = chk(frame)`` inside the loop; call
     ``chk.cleanup_stale(returning=frame)`` after the loop to drop the
     slots that only backed intermediate rounds (the final result's slot is
@@ -155,20 +189,19 @@ class RoundCheckpointer:
     result; the ``returning`` argument lets the guard prove that frame's
     slot is not among the deleted)."""
 
-    def __init__(self, checkpoint_dir: str | None = None, prefix: str = "rounds"):
+    def __init__(self, spark: SparkSession, prefix: str):
         self.calls = 0
         self.prefix = prefix
         self._static_names: list[str] = []
         self._persisted_statics: list[DataFrame] = []
+        root = spark.sparkContext.getCheckpointDir()  # a URI, or None: local
         self.run_dir = (
-            None
-            if checkpoint_dir is None
-            else os.path.join(checkpoint_dir, f"{prefix}-{uuid.uuid4().hex}")
+            None if root is None else f"{root.rstrip('/')}/{prefix}-{uuid.uuid4().hex}"
         )
 
     def _slot(self, i: int) -> str:
         assert self.run_dir is not None
-        return os.path.join(self.run_dir, f"slot-{i % 2}")
+        return f"{self.run_dir}/slot-{i % 2}"
 
     def __call__(self, df: DataFrame) -> DataFrame:
         if self.run_dir is None:
@@ -272,7 +305,7 @@ class RoundCheckpointer:
             out._rc_slot_kind = "static"
             return out
         else:
-            path = os.path.join(self.run_dir, f"static-{name}")
+            path = f"{self.run_dir}/static-{name}"
             self._static_names.append(name)
             df.write.mode("overwrite").parquet(path)
             out = df.sparkSession.read.parquet(path)
@@ -340,14 +373,10 @@ class RoundCheckpointer:
                     "checkpointer's files"
                 )
         if self.calls >= 2:
-            stale = self._slot(self.calls)
-            if os.path.isdir(stale):
-                shutil.rmtree(stale, ignore_errors=True)
+            _remove_dir(self._slot(self.calls))
         self._unpersist_statics()  # pinned caches layered over the slots
         for name in self._static_names:
-            path = os.path.join(self.run_dir, f"static-{name}")
-            if os.path.isdir(path):
-                shutil.rmtree(path, ignore_errors=True)
+            _remove_dir(f"{self.run_dir}/static-{name}")
         self._static_names.clear()
 
     def _unpersist_statics(self) -> None:
@@ -361,5 +390,5 @@ class RoundCheckpointer:
         stream like BFS's per-level frontier after the loop ends).  In
         local mode, unpersists any static blocks instead."""
         self._unpersist_statics()
-        if self.run_dir is not None and os.path.isdir(self.run_dir):
-            shutil.rmtree(self.run_dir, ignore_errors=True)
+        if self.run_dir is not None:
+            _remove_dir(self.run_dir)

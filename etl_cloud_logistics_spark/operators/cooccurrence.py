@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpointing import materialize
+
 
 def _mine_pairs(
     baskets: DataFrame,
@@ -36,16 +38,14 @@ def _mine_pairs(
     """Shared mining core: (li, item_cnt, pairs) where ``pairs`` is the
     ≥ minsup co-occurrence counts.  Eager: ``li`` checkpoints on build."""
     # the distinct'd (basket, item) projection feeds THREE consumers (item
-    # supports, the pair self-join twice, the basket total); an eager
-    # localCheckpoint materializes it once instead of re-running the
-    # corpus distinct per consumer — the dedup-kit reuse discipline.
+    # supports, the pair self-join twice, the basket total); staging it
+    # materializes it once instead of re-running the corpus distinct per
+    # consumer — the dedup-kit reuse discipline.
     # Eager: the operator executes when built, like neardup_components.
-    li = (
+    li = materialize(
         baskets.select(
             F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct()
     )
     item_cnt = li.groupBy("item").agg(F.count(F.lit(1)).alias("orders_i"))
     # Apriori prune: only items that alone reach minsup can form a pair

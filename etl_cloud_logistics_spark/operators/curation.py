@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpointing import materialize
 from .dedup import shingles
 
 # fraction of the 32-bit hex space per unit of rate; rate r -> first
@@ -343,19 +344,19 @@ def budget_select(
     ``QUALIFY cum <= budget``)."""
     ordn = F.col(order_col).desc()
     n_parts = partitions or df.sparkSession.sparkContext.defaultParallelism
-    # localCheckpoint (eager), NOT persist: the offsets collected below are
-    # only valid for the exact partition assignment they were computed from,
-    # and repartitionByRange re-SAMPLES its range boundaries whenever the
-    # frame re-executes — a cache eviction (or the unpersist this function
-    # used to do) would silently shift rows between partitions and corrupt
-    # the prefix sums.  The checkpoint pins the materialized partitions for
-    # the returned frame's lifetime; blocks are freed by the ContextCleaner
-    # when the result goes out of scope.
-    ranged = (
+    # an eager checkpoint (``materialize``), NOT persist: the offsets
+    # collected below are only valid for the exact partition assignment
+    # they were computed from, and repartitionByRange re-SAMPLES its range
+    # boundaries whenever the frame re-executes — a cache eviction (or the
+    # unpersist this function used to do) would silently shift rows between
+    # partitions and corrupt the prefix sums.  The checkpoint pins the
+    # materialized partitions for the returned frame's lifetime; blocks or
+    # files are freed by the ContextCleaner when the result goes out of
+    # scope.
+    ranged = materialize(
         df.repartitionByRange(n_parts, ordn, F.col(id_col).asc())
         .sortWithinPartitions(ordn, F.col(id_col).asc())
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     # NULL weights are a data error, not a zero: SUM skips them, so the row
     # would survive the <= budget cut without paying into cum_weight (and

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .checkpointing import RoundCheckpointer
+from .checkpointing import RoundCheckpointer, materialize
 
 # ---------------------------------------------------------------------------
 # tokenization / shingling
@@ -181,7 +181,7 @@ def _shared_shingle_counts(
     common, combine with per-doc set sizes.  ``max_shingle_freq`` drops
     ubiquitous shingles before the join (skew guard at corpus scale).
 
-    Eager: the shingle stream is staged behind ``localCheckpoint`` — it
+    Eager: the shingle stream is staged (``materialize``) — it
     feeds the frequency-cap join (both sides), the self-join (both sides)
     and the size aggregation, and a lazy/persisted formulation re-derived
     the whole tokenize→posexplode→distinct subtree per consumer (the r6
@@ -191,13 +191,11 @@ def _shared_shingle_counts(
     each upstream stage runs exactly once and the blocks are freed with
     the RDD by the context cleaner, not at session end."""
     if sh.storageLevel == StorageLevel.NONE:
-        sh = sh.localCheckpoint(eager=True)
+        sh = materialize(sh)
     if max_shingle_freq is not None:
         freq = sh.groupBy("s").agg(F.count("*").alias("_df"))
-        sh = (
-            sh.join(freq.filter(F.col("_df") <= max_shingle_freq), "s")
-            .drop("_df")
-            .localCheckpoint(eager=True)
+        sh = materialize(
+            sh.join(freq.filter(F.col("_df") <= max_shingle_freq), "s").drop("_df")
         )
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
     a = sh.select(F.col(id_col).alias("doc_a"), "s")
@@ -422,6 +420,7 @@ def minhash_lsh_neardup(
     the md5 minimum for every document containing it, so every such doc
     lands in one band bucket and the candidate join turns quadratic in
     that bucket."""
+    # reuse: the signatures and both sides of the candidate verification read it
     sh_arr = shingle_array(df, id_col, text_col, n).persist()
     cand = lsh_candidate_pairs(
         minhash_signatures(sh_arr, id_col, n_hashes), id_col, rows_per_band
@@ -489,7 +488,7 @@ def simhash_near_pairs(sig: DataFrame, id_col: str = "doc_id", max_hamming: int 
     materialization Spark computes the (expensive, narrow) fingerprint twice
     — so it is persisted here.  At 100 TB the same role is played by landing
     signatures in a table once and joining from that."""
-    sig = sig.persist()
+    sig = sig.persist()  # reuse: both sides of the block self-join
     blocked = sig.select(
         id_col,
         "simhash",
@@ -521,7 +520,6 @@ def neardup_components(
     all_ids: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over near-duplicate pairs by iterative min-label
     propagation: every doc's label converges to the smallest doc_id reachable
@@ -537,24 +535,12 @@ def neardup_components(
     joining old-vs-new labels, so each round costs one shuffle job plus one
     cheap scan.
 
-    ``checkpoint_dir`` selects the lineage-truncation mechanism.  ``None``
-    (default) uses ``localCheckpoint``: zero I/O, but the checkpoint blocks
-    live on executors, so a lost executor fails the job — fine on local[n]
-    and for short batch steps.  A path switches to RELIABLE checkpointing:
-    each round's labels are written to parquet under the path (two slots,
-    alternating, so a round never overwrites the files it is reading) and
-    read back, which survives executor loss on a real cluster — the
-    restart-safe choice for long iterative jobs at 100 TB.  Both mechanisms
-    keep the plan one-iteration deep; without truncation the final plan
-    nests every prior round's join and planning cost explodes.
-
-    A ``checkpoint_dir`` may be shared between invocations (and with
-    concurrent jobs): each call namespaces its slots under a unique
-    per-invocation subdirectory, so a later call never overwrites the
-    parquet files backing a still-live result from an earlier one.  The
-    returned DataFrame lazily reads this invocation's final slot — the
-    files stay on disk for the life of the result; the stale intermediate
-    slot is cleaned up before returning.
+    Rounds truncate lineage through ``RoundCheckpointer``, in the
+    session's checkpoint mode: ``localCheckpoint`` without a checkpoint
+    directory, the reliable parquet slots under one (restart-safe on a
+    real cluster; see operators/checkpointing.py).  In reliable mode the
+    returned DataFrame lazily reads this invocation's final slot, which
+    stays on disk for the life of the result.
 
     Chain-shaped graphs whose diameter exceeds ``max_iter`` fail loudly
     rather than split a component.
@@ -567,9 +553,9 @@ def neardup_components(
         # join key so the cached plan carries hashpartitioning(src) and
         # rounds stop re-exchanging O(|E|) (r8 power-law probe finding)
         .repartition("src")
-        .persist()
+        .persist()  # reuse: every round joins it; unpersisted after the loop
     )
-    checkpoint = RoundCheckpointer(checkpoint_dir, prefix="components")
+    checkpoint = RoundCheckpointer(pairs.sparkSession, prefix="components")
     labels = checkpoint(
         all_ids.select(F.col(id_col).alias("node"), F.col(id_col).alias("lbl"))
     )

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from .checkpointing import materialize
+
 
 def ks_statistic(
     df: DataFrame,
@@ -60,17 +62,17 @@ def ks_statistic(
         )
     )
     n_parts = partitions or df.sparkSession.sparkContext.defaultParallelism
-    # localCheckpoint (eager), NOT persist: the two-phase contract needs the
-    # SAME partition assignment in the offsets action and the final window —
-    # repartitionByRange re-SAMPLES its range boundaries on re-execution, so
-    # an evicted/unpersisted cache would silently shift rows between
-    # partitions and corrupt every prefix offset.  The checkpoint pins the
-    # materialized partitions for the frame's lifetime.
-    ranged = (
+    # an eager checkpoint (``materialize``), NOT persist: the two-phase
+    # contract needs the SAME partition assignment in the offsets action
+    # and the final window — repartitionByRange re-SAMPLES its range
+    # boundaries on re-execution, so an evicted/unpersisted cache would
+    # silently shift rows between partitions and corrupt every prefix
+    # offset.  The checkpoint pins the materialized partitions for the
+    # frame's lifetime.
+    ranged = materialize(
         counts.repartitionByRange(n_parts, F.col("v").asc())
         .sortWithinPartitions(F.col("v").asc())
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     part_sums = {
         r["_pid"]: (r["sa"], r["sb"])

@@ -7,8 +7,9 @@ Same iterative discipline as ``neardup_components``:
 
 - each round is ONE shuffle join (ranks ⋈ edges on src, contributions
   re-keyed to dst) plus one aggregation — no collect of graph data;
-- lineage truncates every round (eager ``localCheckpoint``), keeping the
-  plan one-iteration deep instead of nesting every prior round;
+- lineage truncates every round (``RoundCheckpointer``, in the session's
+  checkpoint mode), keeping the plan one-iteration deep instead of
+  nesting every prior round;
 - loop statics that every round joins against are pinned by their join
   key once the graph is big enough — a policy ``RoundCheckpointer`` owns
   (``operators.checkpointing.PIN_MIN_ROWS``), not the loops.
@@ -28,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .checkpointing import RoundCheckpointer
+from .checkpointing import RoundCheckpointer, materialize
 
 PR_SCALE = 10**15  # fixed-point unit for pagerank_fixed (1.0 == 10^15)
 
@@ -39,7 +40,6 @@ def bfs_min_hops(
     src_col: str = "src",
     dst_col: str = "dst",
     max_hops: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Minimum hop count from ``seeds`` (a DataFrame with one ``node``
     column) to every reachable node, by frontier-deduplicated BFS.
@@ -51,19 +51,18 @@ def bfs_min_hops(
     level is one equi-join frontier⋈edges (the frontier is broadcast-sized
     in practice), a ``distinct``, and an anti-join against the visited set
     — the textbook level-synchronous BFS (Pregel's traversal shape) in
-    DataFrame form.  Lineage truncates every level (eager
-    ``localCheckpoint``), and iteration stops when the frontier empties or
-    at ``max_hops``.
+    DataFrame form.  Lineage truncates every level (``RoundCheckpointer``),
+    and iteration stops when the frontier empties or at ``max_hops``.
 
     Returns (node, hops) — first-visit level == minimum hop distance,
     because level h is explored only after all nodes at < h are visited.
 
-    ``checkpoint_dir`` switches lineage truncation from localCheckpoint to
-    the reliable two-slot parquet scheme (see operators.checkpointing);
-    the visited set and the per-level frontier are independent streams, so
-    each gets its own alternating slot pair."""
-    chk_v = RoundCheckpointer(checkpoint_dir, prefix="bfs-visited")
-    chk_f = RoundCheckpointer(checkpoint_dir, prefix="bfs-frontier")
+    The visited set and the per-level frontier are independent streams,
+    so each gets its own checkpointer (in reliable mode, its own
+    alternating slot pair)."""
+    spark = edges.sparkSession
+    chk_v = RoundCheckpointer(spark, prefix="bfs-visited")
+    chk_f = RoundCheckpointer(spark, prefix="bfs-frontier")
     edges_frame = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
@@ -102,7 +101,6 @@ def pagerank_fixed(
     n_iter: int = 12,
     damping_pct: int = 85,
     scale: int = PR_SCALE,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """PageRank in scaled-BIGINT fixed point: ranks are integers in units
     of ``1/scale`` and every operation is integer add/multiply/floor-div —
@@ -131,14 +129,13 @@ def pagerank_fixed(
       co-purchase graph) the per-round dangling-mass aggregate + broadcast
       is dropped from the plan entirely — ``dm`` is identically 0, so the
       round arithmetic is unchanged bit-for-bit;
-    - lineage truncates per checkpointed round, as before;
-      ``checkpoint_dir`` switches from localCheckpoint to the reliable
-      two-slot parquet scheme (operators.checkpointing.RoundCheckpointer,
-      shared with ``neardup_components``) — the executor-loss-safe mode
-      for long jobs on a real cluster.
+    - lineage truncates per checkpointed round, as before
+      (operators.checkpointing.RoundCheckpointer, shared with
+      ``neardup_components``; its reliable mode is the executor-loss-safe
+      one for long jobs on a real cluster).
 
     Returns (node, rank_fp: long)."""
-    chk = RoundCheckpointer(checkpoint_dir, prefix="pagerank-fixed")
+    chk = RoundCheckpointer(edges.sparkSession, prefix="pagerank-fixed")
     # r11 optimization round (guide §2.4 — remove jobs outright): the
     # pre-loop section used to schedule SIX actions (edges static, nodes
     # static, nodes.count, edges-od static, dangling count, ranks-init
@@ -194,7 +191,7 @@ def pagerank_fixed(
     n_dangling = n - counts.get("s", 0)
     if n == 0:
         # empty graph: in reliable mode `nodes` is backed by a static slot
-        # under a possibly-shared checkpoint_dir — returning it would leak
+        # under the shared checkpoint directory — returning it would leak
         # the run dir forever (r8 ADVICE fix).  Hand back an unbacked empty
         # literal frame and remove the whole per-invocation dir first.
         schema = T.StructType(
@@ -285,8 +282,8 @@ def _oriented_triangle_stream(
         .filter("x <> y")
         .select(F.least("x", "y").alias("lo"), F.greatest("x", "y").alias("hi"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
+    e = materialize(e)
     deg = (
         e.select(F.col("lo").alias("node"))
         .unionAll(e.select(F.col("hi").alias("node")))
@@ -309,8 +306,8 @@ def _oriented_triangle_stream(
             .otherwise(F.col("dlo"))
             .alias("dv"),
         )
-        .localCheckpoint(eager=True)
     )
+    oriented = materialize(oriented)
     e1 = oriented.select("u", F.col("v").alias("b"), F.col("dv").alias("db"))
     e2 = oriented.select("u", F.col("v").alias("c"), F.col("dv").alias("dc"))
     wedges = e1.join(e2, "u").where(
@@ -355,14 +352,14 @@ def triangle_stats(
        no cartesian, no driver-side adjacency;
     5. per-node counts: explode each triangle's three corners, groupBy.
 
-    The canonical edge set and the oriented edge set are eagerly
-    ``localCheckpoint``-ed: edges feed degree + both
+    The canonical edge set and the oriented edge set are eagerly staged
+    (``materialize``): edges feed degree + both
     orientation joins, oriented feeds three consumers (both wedge sides +
     closure) — without truncation the upstream derivation (for the
     near-dup caller: the whole SimHash subtree) re-executes per consumer.
     Same multi-consumer discipline as ``pagerank_copurchase``'s mined-pair
-    checkpoint; at cluster scale the materialization is executor-local
-    blocks, never a driver collect.
+    checkpoint; at cluster scale the materialization is executor blocks
+    or checkpoint files, never a driver collect.
 
     Returns (node, degree, triangles, clustering): degree over the simple
     undirected graph, triangles the node participates in, clustering =
@@ -458,7 +455,11 @@ def truss_peel(
     stays deterministic at any scale whether or not 3 rounds converge
     there.  Each round is one oriented triangle enumeration (O(m^{3/2})
     wedges, see ``triangle_stats``) over a monotonically shrinking edge
-    set; rounds past the fixpoint are no-ops.
+    set; rounds past the fixpoint are no-ops.  Rounds are checkpointed by
+    ``RoundCheckpointer``, whose local mode resets each round's size
+    estimate: a raw ``localCheckpoint`` carries the multiplied estimate
+    into the next round, and by round ~14 stats estimation alone stalls
+    the driver.
 
     Returns the surviving canonical edges with support measured ON the
     surviving set: (lo, hi, support) — a support may still sit below k−2
@@ -467,20 +468,20 @@ def truss_peel(
     """
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3 (every edge is a 2-truss); got {k}")
-    e = (
+    chk = RoundCheckpointer(edges.sparkSession, prefix="truss-peel")
+    e = materialize(
         edges.select(F.col(src_col).alias("x"), F.col(dst_col).alias("y"))
         .filter("x <> y")
         .select(F.least("x", "y").alias("lo"), F.greatest("x", "y").alias("hi"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     for _ in range(n_rounds):
-        e = (
+        e = chk(
             triangle_support(e, src_col="lo", dst_col="hi")
             .filter(F.col("support") >= k - 2)
             .select("lo", "hi")
-            .localCheckpoint(eager=True)
         )
+    chk.cleanup_stale(returning=e)
     return triangle_support(e, src_col="lo", dst_col="hi")
 
 
@@ -491,7 +492,6 @@ def sssp_fixed(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "w",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Hop-bounded cheapest distance from ``sources`` (one ``node``
     column) by ``n_rounds`` Bellman-Ford min-plus relaxations: after
@@ -513,8 +513,7 @@ def sssp_fixed(
     ``least()`` join above the local pin gate (bit-equal by min-plus
     algebra; the merge keeps the aggregation exchange to the candidate
     side — see the in-loop comment); lineage truncates per round via
-    RoundCheckpointer (``checkpoint_dir`` switches to the reliable
-    two-slot parquet scheme), and the static edge list is pinned to its
+    RoundCheckpointer, and the static edge list is pinned to its
     join key past the BFS gate so big graphs exchange only the O(|V|)
     distance side per round.
 
@@ -532,7 +531,7 @@ def sssp_fixed(
             f"{edges.schema[weight_col]} — scale fixed-point weights to "
             "integers first (the pagerank_fixed doctrine)"
         )
-    chk = RoundCheckpointer(checkpoint_dir, prefix="sssp-fixed")
+    chk = RoundCheckpointer(edges.sparkSession, prefix="sssp-fixed")
     edges_frame = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),

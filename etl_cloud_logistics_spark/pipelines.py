@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 
 from .catalog import load_table
 from .functions import date_key, sum_exact
+from .operators.checkpointing import materialize
 from .operators.dims import generate_dim_date
 from .operators.quality import flag_outliers, qa_flags
 from .operators.scd2 import scd2_apply, scd2_asof_lookup
@@ -406,7 +407,7 @@ def run_curation_export(
     from .operators.curation import pack_sequences, shard_assign
     from .queries.curation_ops import curation_pipeline_end2end
 
-    curated = curation_pipeline_end2end(spark, sf_dir).localCheckpoint(eager=True)
+    curated = materialize(curation_pipeline_end2end(spark, sf_dir))
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     train = curated.filter(F.col("split") == "train")
     payload = train.join(docs, "doc_id")

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.checkpointing import materialize
 from ..operators.curation import (
     contaminated_docs,
     mixture_sample,
@@ -292,17 +293,15 @@ def curation_pipeline(
     spark: SparkSession,
     docs: DataFrame,
     threshold: float = 0.5,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Pipeline implementation over an arbitrary documents frame (doc_id,
     text, lang, source).  The near-dup candidate stage is the shared-shingle
     join + exact Jaccard (``jaccard_pairs``): every qualifying pair by
     construction, the oracle-replayable setting the registry row uses.
 
-    ``checkpoint_dir`` (r7) forwards to the connected-components stage —
-    on a real cluster the label-propagation rounds should use the
-    reliable two-slot parquet scheme (operators/checkpointing.py) so a
-    lost executor doesn't fail the longest stage of the pipeline."""
+    Every staged frame and every label-propagation round follows the
+    session's checkpoint mode (operators/checkpointing.py): with a
+    checkpoint directory set, a lost executor doesn't fail the pipeline."""
     from ..operators.dedup import (
         jaccard_pairs,
         neardup_components,
@@ -325,25 +324,26 @@ def curation_pipeline(
     keep = q.groupBy(F.md5(F.lower("text").cast("binary")).alias("h")).agg(
         F.min("doc_id").alias("doc_id")
     )
-    # localCheckpoint (eager): the quality-gate expressions are the most
-    # expensive narrow work in the pipeline, and the survivors feed the
-    # shingle stage NOW plus two lazy branches later (decontam probe,
-    # final anti-join).  Checkpointing executes them once and truncates
-    # lineage, so every consumer re-reads materialized blocks instead of
-    # re-running the 3-gram expressions; unlike persist(), no CacheManager
-    # entry outlives the query — the blocks are freed by the ContextCleaner
-    # when the result goes out of scope.  (Executor-loss caveat as in
-    # neardup_components' default mode.)
+    # eager checkpoint (``materialize``): the quality-gate expressions are
+    # the most expensive narrow work in the pipeline, and the survivors
+    # feed the shingle stage NOW plus two lazy branches later (decontam
+    # probe, final anti-join).  Checkpointing executes them once and
+    # truncates lineage, so every consumer re-reads materialized rows
+    # instead of re-running the 3-gram expressions; unlike persist(), no
+    # CacheManager entry outlives the query — the blocks or files are
+    # freed by the ContextCleaner when the result goes out of scope.
     # repartition before the checkpoint: AQE coalesces the small join
     # output to ~1 partition (right for shuffle cost, wrong for the
     # CPU-heavy shingle/4-gram expressions downstream, which inherit the
     # checkpointed layout) — spreading the survivors across the cluster
     # here is the same small-scan-parallelization call load_table makes
-    qe = (
-        q.join(keep.select("doc_id"), "doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
+    qe = materialize(
+        q.join(keep.select("doc_id"), "doc_id").repartition(
+            spark.sparkContext.defaultParallelism
+        )
     )
+    # reuse, released below: the shared-shingle join reads sh three times,
+    # pairs feeds four branches (edges forward+reversed, nodes a+b)
     sh = shingles(qe).persist()
     pairs = (
         jaccard_pairs(sh, threshold=threshold)
@@ -355,7 +355,7 @@ def curation_pipeline(
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    comp = neardup_components(pairs, nodes, checkpoint_dir=checkpoint_dir)
+    comp = neardup_components(pairs, nodes)
     # comp is eagerly checkpointed inside neardup_components, so nothing
     # downstream depends on sh/pairs any more — release those caches here
     # rather than leaking them for the session's life (registry-wide sweeps

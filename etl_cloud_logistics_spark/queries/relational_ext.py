@@ -15,6 +15,7 @@ from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
 from ..functions import avg_round_half_up, round_half_up_ratio, sum_exact
+from ..operators.checkpointing import materialize
 from . import register
 
 
@@ -966,10 +967,10 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # association-rule statistics.  Checkpoint the mined pairs BEFORE the
     # two-direction union — otherwise the whole mining subtree sits in
     # both union branches and runs twice (caught in review, round 4)
-    pairs = (
-        frequent_pairs(li, "l_orderkey", "l_partkey", minsup=3)
-        .select("item_a", "item_b")
-        .localCheckpoint(eager=True)
+    pairs = materialize(
+        frequent_pairs(li, "l_orderkey", "l_partkey", minsup=3).select(
+            "item_a", "item_b"
+        )
     )
     edges = pairs.select(
         F.col("item_a").alias("src"), F.col("item_b").alias("dst")
@@ -1035,10 +1036,10 @@ def reachable_parts_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs-only mining cut (r7) + checkpoint before the two-direction
     # union (same reason as pagerank_copurchase: the union would run the
     # mining twice)
-    pairs = (
-        frequent_pairs(li, "l_orderkey", "l_partkey", minsup=3)
-        .select("item_a", "item_b")
-        .localCheckpoint(eager=True)
+    pairs = materialize(
+        frequent_pairs(li, "l_orderkey", "l_partkey", minsup=3).select(
+            "item_a", "item_b"
+        )
     )
     edges = pairs.select(
         F.col("item_a").alias("src"), F.col("item_b").alias("dst")
@@ -1117,14 +1118,12 @@ def cheapest_copurchase_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import sssp_fixed
 
     li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        frequent_pairs(li, "l_orderkey", "l_partkey", minsup=3)
-        .select(
+    pairs = materialize(  # two union consumers, like pagerank
+        frequent_pairs(li, "l_orderkey", "l_partkey", minsup=3).select(
             "item_a",
             "item_b",
             (F.lit(1) + F.expr("div(1000, pair_orders)")).alias("w"),
         )
-        .localCheckpoint(eager=True)  # two union consumers, like pagerank
     )
     edges = pairs.select(
         F.col("item_a").alias("src"), F.col("item_b").alias("dst"), "w"

@@ -819,7 +819,8 @@ def neardup_components_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     # pairs feeds four plan branches (edges forward+reversed, nodes a+b) —
-    # without persist the whole shingle⋈shingle pair join runs four times
+    # without persist the whole shingle⋈shingle pair join runs four times;
+    # sh feeds the shared-shingle join three times (both sides, the sizes)
     sh = shingles(docs).persist()
     pairs = jaccard_pairs(sh, threshold=0.5).select("doc_a", "doc_b").persist()
     nodes = (

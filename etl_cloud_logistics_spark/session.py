@@ -44,5 +44,9 @@ def get_spark(
         # testdata parquet carries TIMESTAMP(NANOS) which Spark has no native
         # type for; read as long and convert in catalog.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # reliable checkpoints (a session checkpoint directory, see
+        # operators/checkpointing.py) are deleted with their RDD, the
+        # lifetime a localCheckpoint block has
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .getOrCreate()
     )

@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import contextlib
+import itertools
 import os
 import sys
+from urllib.parse import urlparse
 
 import pytest
 
@@ -47,6 +50,32 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_spark("pytest", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture
+def reliable_checkpoints(spark, tmp_path):
+    """Reliable checkpoint mode for a block of a test: ``with
+    reliable_checkpoints() as chk:`` points the shared session's checkpoint
+    directory (the switch operators/checkpointing.py reads) at a fresh
+    directory under ``tmp_path`` and yields the local path Spark made
+    there.  Leaving the block, and the test, puts the session back in
+    local mode."""
+    sc = spark.sparkContext
+    fresh = itertools.count()
+
+    def reset():
+        sc._jsc.sc().setCheckpointDir(None)  # py4j: Option(null) is None
+
+    @contextlib.contextmanager
+    def reliable():
+        sc.setCheckpointDir(str(tmp_path / f"chk-{next(fresh)}"))
+        try:
+            yield urlparse(sc.getCheckpointDir()).path
+        finally:
+            reset()
+
+    yield reliable
+    reset()
 
 
 @pytest.fixture(scope="session")

@@ -300,23 +300,19 @@ def test_gopher_gate_passes_caller_columns_through(spark):
     assert set(out.columns) == set(df.columns) | {"_qg_n_words", "_qg_rep"}
 
 
-def test_curation_pipeline_reliable_checkpoint_identical(spark, sf_small, tmp_path):
-    """checkpoint_dir forwards to the components stage (r7): the pipeline's
-    output under reliable parquet checkpointing is row-identical to the
-    default localCheckpoint mode."""
+def test_curation_pipeline_reliable_checkpoint_identical(
+    spark, sf_small, reliable_checkpoints
+):
+    """With a session checkpoint directory every staging and every
+    components round is reliable: the pipeline's output is row-identical to
+    the default localCheckpoint mode."""
     from etl_cloud_logistics_spark.catalog import load_table
     from etl_cloud_logistics_spark.queries.curation_ops import curation_pipeline
 
     docs = load_table(spark, sf_small, "documents")
     base = sorted(map(tuple, curation_pipeline(spark, docs).collect()))
-    rel = sorted(
-        map(
-            tuple,
-            curation_pipeline(
-                spark, docs, checkpoint_dir=str(tmp_path / "chk")
-            ).collect(),
-        )
-    )
+    with reliable_checkpoints():
+        rel = sorted(map(tuple, curation_pipeline(spark, docs).collect()))
     assert rel == base and base
 
 

@@ -488,9 +488,9 @@ def test_neardup_components_long_chain(spark):
     assert out == {i: 0 for i in range(n)}
 
 
-def test_neardup_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir switches lineage truncation from localCheckpoint to
-    parquet round-trips (the executor-loss-safe mechanism for a real
+def test_neardup_components_reliable_checkpoint(spark, reliable_checkpoints):
+    """A session checkpoint directory switches lineage truncation from
+    localCheckpoint to parquet round-trips (the executor-loss-safe mechanism for a real
     cluster); results must be identical, including on the path-graph worst
     case that exercises many alternating-slot rounds."""
     from etl_cloud_logistics_spark.operators.dedup import neardup_components
@@ -502,35 +502,36 @@ def test_neardup_components_reliable_checkpoint(spark, tmp_path):
     nodes = spark.createDataFrame(
         [(i,) for i in range(n)] + [(20,), (21,)], "doc_id long"
     )
-    out = {
-        r["doc_id"]: r["component"]
-        for r in neardup_components(
-            pairs, nodes, checkpoint_dir=str(tmp_path / "chk")
-        ).collect()
-    }
+    with reliable_checkpoints():
+        out = {
+            r["doc_id"]: r["component"]
+            for r in neardup_components(pairs, nodes).collect()
+        }
     assert out == {**{i: 0 for i in range(n)}, 20: 20, 21: 20}
 
 
-def test_neardup_components_shared_checkpoint_dir_is_safe(spark, tmp_path):
-    """Two invocations may share one checkpoint_dir: slots are namespaced
-    per invocation, so the second call must not overwrite the parquet files
-    backing the first call's still-live (lazily-read) result — collecting
-    result A AFTER running call B must still give A's labels."""
+def test_neardup_components_shared_checkpoint_dir_is_safe(
+    spark, reliable_checkpoints
+):
+    """Two invocations share the session's checkpoint directory: slots are
+    namespaced per invocation, so the second call must not overwrite the
+    parquet files backing the first call's still-live (lazily-read) result
+    — collecting result A AFTER running call B must still give A's
+    labels."""
     from etl_cloud_logistics_spark.operators.dedup import neardup_components
-
-    chk = str(tmp_path / "shared-chk")
 
     def chain(lo: int, n: int):
         pairs = spark.createDataFrame(
             [(lo + i + 1, lo + i) for i in range(n - 1)], "doc_a long, doc_b long"
         )
         nodes = spark.createDataFrame([(lo + i,) for i in range(n)], "doc_id long")
-        return neardup_components(pairs, nodes, checkpoint_dir=chk)
+        return neardup_components(pairs, nodes)
 
-    first = chain(0, 9)
-    second = chain(100, 5)  # would clobber first's slots without namespacing
-    assert {r["component"] for r in second.collect()} == {100}
-    out = {r["doc_id"]: r["component"] for r in first.collect()}
+    with reliable_checkpoints():
+        first = chain(0, 9)
+        second = chain(100, 5)  # would clobber first's slots without namespacing
+        assert {r["component"] for r in second.collect()} == {100}
+        out = {r["doc_id"]: r["component"] for r in first.collect()}
     assert out == {i: 0 for i in range(9)}
 
 

@@ -760,8 +760,8 @@ def test_bloom_filter_rows_is_superset_prefilter(spark):
     assert fp / 4500 < 0.05, fp  # ~1% expected at 10 bits/key
 
 
-def test_graph_family_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir on pagerank_fixed/bfs_min_hops switches
+def test_graph_family_reliable_checkpoint(spark, reliable_checkpoints):
+    """A session checkpoint directory switches pagerank_fixed/bfs_min_hops
     lineage truncation from localCheckpoint to the shared two-slot parquet
     scheme (operators.checkpointing.RoundCheckpointer — executor-loss-safe
     on a real cluster); results must be IDENTICAL to the default mode, and
@@ -778,26 +778,22 @@ def test_graph_family_reliable_checkpoint(spark, tmp_path):
 
     edges = [(0, 1), (0, 2), (1, 2), (2, 0), (2, 3), (4, 5)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    chk = str(tmp_path / "chk")
+    seeds = spark.createDataFrame([(0,)], "node long")
 
     fixed_local = {
         (r.node, r.rank_fp) for r in pagerank_fixed(df, n_iter=5).collect()
     }
-    fixed_rel = {
-        (r.node, r.rank_fp)
-        for r in pagerank_fixed(df, n_iter=5, checkpoint_dir=chk).collect()
-    }
-    assert fixed_rel == fixed_local  # bit-exact: integer arithmetic
-
-    seeds = spark.createDataFrame([(0,)], "node long")
     bfs_local = {(r.node, r.hops) for r in bfs_min_hops(df, seeds).collect()}
-    bfs_rel = {
-        (r.node, r.hops)
-        for r in bfs_min_hops(df, seeds, checkpoint_dir=chk).collect()
-    }
+    with reliable_checkpoints() as chk:
+        fixed_rel = {
+            (r.node, r.rank_fp) for r in pagerank_fixed(df, n_iter=5).collect()
+        }
+        bfs_rel = {(r.node, r.hops) for r in bfs_min_hops(df, seeds).collect()}
+        assert any(d.startswith("bfs-visited") for d in os.listdir(chk))
+        # the frontier stream is intermediate-only: its run dir must be gone
+        leftover = [d for d in os.listdir(chk) if d.startswith("bfs-frontier")]
+    assert fixed_rel == fixed_local  # bit-exact: integer arithmetic
     assert bfs_rel == bfs_local == {(0, 0), (1, 1), (2, 1), (3, 2)}
-    # the frontier stream is intermediate-only: its run dir must be gone
-    leftover = [d for d in os.listdir(chk) if d.startswith("bfs-frontier")]
     assert not leftover, leftover
 
 
@@ -826,7 +822,7 @@ def test_frequent_pairs_matches_full_miner(spark):
     assert cut == full and cut
 
 
-def test_reliable_checkpoint_leaves_only_the_result_slot(spark, tmp_path):
+def test_reliable_checkpoint_leaves_only_the_result_slot(spark, reliable_checkpoints):
     """cleanup_stale must remove the static slots too (review, r7): after a
     reliable-mode pagerank_fixed the run dir holds exactly the one round
     slot the returned frame reads — no stranded edge-list copies — and the
@@ -837,9 +833,9 @@ def test_reliable_checkpoint_leaves_only_the_result_slot(spark, tmp_path):
 
     edges = [(0, 1), (1, 2), (2, 0), (2, 3)]  # node 3 dangles
     df = spark.createDataFrame(edges, "src long, dst long")
-    chk = str(tmp_path / "chk")
-    out = pagerank_fixed(df, n_iter=4, checkpoint_dir=chk)
-    rows = {(r.node, r.rank_fp) for r in out.collect()}
+    with reliable_checkpoints() as chk:
+        out = pagerank_fixed(df, n_iter=4)
+        rows = {(r.node, r.rank_fp) for r in out.collect()}
     assert len(rows) == 4
     (run_dir,) = os.listdir(chk)
     slots = sorted(os.listdir(os.path.join(chk, run_dir)))
@@ -864,7 +860,7 @@ def test_local_checkpoint_stats_stay_bounded(spark):
         RoundCheckpointer,
     )
 
-    chk = RoundCheckpointer(None, prefix="stats-pin")
+    chk = RoundCheckpointer(spark, prefix="stats-pin")
     e = chk(
         spark.range(2000).select(
             F.col("id").alias("a"), (F.col("id") + 1).alias("b")
@@ -916,7 +912,7 @@ def test_reset_plan_stats_fallback_is_loud(spark, monkeypatch):
     monkeypatch.setattr(spark, "_jsparkSession", _NoSeam(spark._jsparkSession))
     monkeypatch.setattr(ckpt, "_reset_fallback_warned", False)
     before = ckpt.reset_fallback_count
-    chk = ckpt.RoundCheckpointer(None, prefix="fallback-pin")
+    chk = ckpt.RoundCheckpointer(spark, prefix="fallback-pin")
     base = spark.range(100).select(F.col("id").alias("a"))
     with _warnings.catch_warnings(record=True) as caught:
         _warnings.simplefilter("always")
@@ -944,7 +940,7 @@ def test_reset_plan_stats_live_path_never_falls_back(spark):
     import etl_cloud_logistics_spark.operators.checkpointing as ckpt
 
     before = ckpt.reset_fallback_count
-    chk = ckpt.RoundCheckpointer(None, prefix="live-pin")
+    chk = ckpt.RoundCheckpointer(spark, prefix="live-pin")
     out = chk(spark.range(50).toDF("node"))
     assert out.count() == 50
     assert ckpt.reset_fallback_count == before, (
@@ -953,7 +949,7 @@ def test_reset_plan_stats_live_path_never_falls_back(spark):
     )
 
 
-def test_cleanup_stale_static_misuse_raises(spark, tmp_path):
+def test_cleanup_stale_static_misuse_raises(spark, reliable_checkpoints):
     """The r7 contract-by-docstring ("do NOT call cleanup_stale if you
     return a frame produced by static()") is now enforced (r8, verdict
     item 5): deleting parquet that backs a live static-slot frame raises
@@ -965,40 +961,42 @@ def test_cleanup_stale_static_misuse_raises(spark, tmp_path):
 
     from etl_cloud_logistics_spark.operators.checkpointing import RoundCheckpointer
 
-    chk = RoundCheckpointer(str(tmp_path / "chk"), prefix="guard")
-    df = spark.range(5).toDF("node")
-    st = chk.static(df, "edges")
-    r1 = chk(df.withColumn("lbl", df["node"] * 2))
-    # misuse 1: returning a static-backed frame
-    with _pytest.raises(ValueError, match="delete the parquet backing"):
-        chk.cleanup_stale(returning=st)
-    # misuse 2: statics exist but no proof-of-returning passed
-    with _pytest.raises(ValueError, match="static slots exist"):
-        chk.cleanup_stale()
-    # the static frame is still readable — nothing was deleted by the raises
-    assert st.count() == 5
-    # correct use: pass the round frame; statics are cleaned, result lives
-    chk.cleanup_stale(returning=r1)
-    assert r1.count() == 5
-    run_dir = chk.run_dir
-    leftovers = sorted(os.listdir(run_dir))
-    assert all(not p.startswith("static-") for p in leftovers), leftovers
+    with reliable_checkpoints() as root:
+        chk = RoundCheckpointer(spark, prefix="guard")
+        df = spark.range(5).toDF("node")
+        st = chk.static(df, "edges")
+        r1 = chk(df.withColumn("lbl", df["node"] * 2))
+        # misuse 1: returning a static-backed frame
+        with _pytest.raises(ValueError, match="delete the parquet backing"):
+            chk.cleanup_stale(returning=st)
+        # misuse 2: statics exist but no proof-of-returning passed
+        with _pytest.raises(ValueError, match="static slots exist"):
+            chk.cleanup_stale()
+        # the static frame is still readable — nothing was deleted by the raises
+        assert st.count() == 5
+        # correct use: pass the round frame; statics are cleaned, result lives
+        chk.cleanup_stale(returning=r1)
+        assert r1.count() == 5
+    leftovers = sorted(os.listdir(os.path.join(root, os.path.basename(chk.run_dir))))
+    assert leftovers and all(not p.startswith("static-") for p in leftovers), leftovers
 
 
-def test_pagerank_empty_graph_leaves_no_checkpoint_litter(spark, tmp_path):
+def test_pagerank_empty_graph_leaves_no_checkpoint_litter(
+    spark, reliable_checkpoints
+):
     """Empty-graph early exit in reliable mode (r8 ADVICE fix):
     pagerank_fixed must return an unbacked empty frame and remove its
-    per-invocation run dir, not leak static slots under a shared
-    checkpoint_dir forever."""
+    per-invocation run dir, not leak static slots under the shared
+    checkpoint directory forever."""
     import os
 
     from etl_cloud_logistics_spark.operators.graph import pagerank_fixed
 
     empty = spark.createDataFrame([], "src long, dst long")
-    chk = tmp_path / "chk"
-    out_fp = pagerank_fixed(empty, n_iter=3, checkpoint_dir=str(chk))
-    assert out_fp.columns == ["node", "rank_fp"] and out_fp.count() == 0
-    assert not os.path.isdir(chk) or os.listdir(chk) == [], (
+    with reliable_checkpoints() as chk:
+        out_fp = pagerank_fixed(empty, n_iter=3)
+        assert out_fp.columns == ["node", "rank_fp"] and out_fp.count() == 0
+    assert os.listdir(chk) == [], (
         "empty-graph path leaked checkpoint dirs: " + str(os.listdir(chk))
     )
 
@@ -1097,7 +1095,9 @@ def test_nodes_pin_gate_is_semantics_preserving(spark, monkeypatch):
     assert pinned == base == both and len(base) > 2000
 
 
-def test_partitioning_pin_reliable_mode_semantics(spark, monkeypatch, tmp_path):
+def test_partitioning_pin_reliable_mode_semantics(
+    spark, monkeypatch, reliable_checkpoints
+):
     """Same invariant for the reliable-mode pin (r8: parquet slot + keyed
     persisted read-back past the reliable edges-od gate): forcing
     the reliable threshold each way must not change fixed-point results,
@@ -1121,17 +1121,15 @@ def test_partitioning_pin_reliable_mode_semantics(spark, monkeypatch, tmp_path):
     pins = _record_pins(monkeypatch)
     gate = ("pagerank-fixed", "edges-od", "reliable")
     monkeypatch.setitem(PIN_MIN_ROWS, gate, 10**9)
-    base = {
-        (r.node, r.rank_fp)
-        for r in G.pagerank_fixed(
-            e, n_iter=3, checkpoint_dir=str(tmp_path / "a")
-        ).collect()
-    }
+    with reliable_checkpoints():
+        base = {
+            (r.node, r.rank_fp) for r in G.pagerank_fixed(e, n_iter=3).collect()
+        }
     assert pins == []
     monkeypatch.setitem(PIN_MIN_ROWS, gate, 1)
-    chk_b = tmp_path / "b"
-    out = G.pagerank_fixed(e, n_iter=3, checkpoint_dir=str(chk_b))
-    pinned = {(r.node, r.rank_fp) for r in out.collect()}
+    with reliable_checkpoints() as chk_b:
+        out = G.pagerank_fixed(e, n_iter=3)
+        pinned = {(r.node, r.rank_fp) for r in out.collect()}
     assert pins == [("pagerank-fixed", "e_src")], pins
     assert pinned == base and len(pinned) > 1000
     (run_dir,) = os.listdir(chk_b)
@@ -1139,12 +1137,16 @@ def test_partitioning_pin_reliable_mode_semantics(spark, monkeypatch, tmp_path):
     assert slots and all(p.startswith("slot-") for p in slots), slots
 
 
-def test_reliable_checkpoints_survive_block_loss(spark, monkeypatch, tmp_path):
-    """Executor loss, made executable: after every round checkpoint, drop
-    the blocks of every RDD the operator has cached so far (the
+def test_reliable_checkpoints_survive_block_loss(
+    spark, sf_small, monkeypatch, tmp_path, reliable_checkpoints
+):
+    """Executor loss, made executable: after every materialization (each
+    round checkpoint and each ``materialize`` staging), drop the blocks of
+    every RDD cached since the fault was armed (the
     BlockManagerMaster.removeRdd a lost executor amounts to).  Reliable
     mode — pinned statics forced on — must return results bit-equal to an
-    undisturbed run, because each cache layers over a parquet slot and
+    undisturbed run, for the graph loops and for the curation export,
+    because every cache layers over a checkpoint file or the source and
     recomputes from it; local mode must fail loudly instead of returning
     rows, because localCheckpoint blocks have nothing to recompute from."""
     import pytest as _pytest
@@ -1156,6 +1158,7 @@ def test_reliable_checkpoints_survive_block_loss(spark, monkeypatch, tmp_path):
         PIN_MIN_ROWS,
         RoundCheckpointer,
     )
+    from etl_cloud_logistics_spark.pipelines import run_curation_export
 
     jsc = spark.sparkContext._jsc.sc()
 
@@ -1176,39 +1179,66 @@ def test_reliable_checkpoints_survive_block_loss(spark, monkeypatch, tmp_path):
     )
     seeds = spark.createDataFrame([(0,)], "node long")
 
+    def export(tag):
+        out = str(tmp_path / tag)
+        summary = run_curation_export(spark, sf_small, out, n_shards=4)
+        del summary["out_dir"]  # the one field that differs between runs
+        manifest = spark.read.parquet(f"{out}/manifest").collect()
+        shards = spark.read.parquet(f"{out}/shards").collect()
+        return (
+            summary,
+            sorted(map(tuple, manifest)),
+            sorted((r.doc_id, r.text, r.shard, r.split) for r in shards),
+        )
+
     def run_all(tag):
-        d = str(tmp_path / tag)
-        ranks = G.pagerank_fixed(e, n_iter=6, checkpoint_dir=d)
-        dists = G.sssp_fixed(e, seeds, n_rounds=4, checkpoint_dir=d)
-        hops = G.bfs_min_hops(e, seeds, max_hops=4, checkpoint_dir=d)
+        ranks = G.pagerank_fixed(e, n_iter=6)
+        dists = G.sssp_fixed(e, seeds, n_rounds=4)
+        hops = G.bfs_min_hops(e, seeds, max_hops=4)
         return (
             {(r.node, r.rank_fp) for r in ranks.collect()},
             {(r.node, r.dist) for r in dists.collect()},
             {(r.node, r.hops) for r in hops.collect()},
+            export(tag),
         )
 
     monkeypatch.setitem(PIN_MIN_ROWS, ("pagerank-fixed", "edges-od", "reliable"), 1)
     monkeypatch.setitem(PIN_MIN_ROWS, ("sssp-fixed", "edges", "reliable"), 1)
-    undisturbed = run_all("calm")
+    with reliable_checkpoints():
+        undisturbed = run_all("calm")
 
     before = cached_rdd_ids()
     dropped = []
-    real_call = RoundCheckpointer.__call__
 
-    def call_then_lose_blocks(self, df):
-        out = real_call(self, df)
-        for rdd_id in cached_rdd_ids() - before:
-            jsc.env().blockManager().master().removeRdd(rdd_id, True)
-            dropped.append(rdd_id)
-        return out
+    def losing_blocks(real):
+        def staged_then_lose_blocks(self, *args, **kwargs):
+            out = real(self, *args, **kwargs)
+            for rdd_id in cached_rdd_ids() - before:
+                jsc.env().blockManager().master().removeRdd(rdd_id, True)
+                dropped.append(rdd_id)
+            return out
 
-    monkeypatch.setattr(RoundCheckpointer, "__call__", call_then_lose_blocks)
-    assert run_all("lossy") == undisturbed
+        return staged_then_lose_blocks
+
+    # ``materialize`` stages through these two DataFrame methods
+    frame_cls = type(e)
+    for owner, name in [
+        (RoundCheckpointer, "__call__"),
+        (frame_cls, "checkpoint"),
+        (frame_cls, "localCheckpoint"),
+    ]:
+        monkeypatch.setattr(owner, name, losing_blocks(getattr(owner, name)))
+    # a fresh directory: the documents table is staged again under the fault
+    with reliable_checkpoints():
+        assert run_all("lossy") == undisturbed
     assert dropped, "no cached RDD was dropped: the fault never fired"
-    assert all(len(r) > 50 for r in undisturbed)
+    assert all(len(r) > 50 for r in undisturbed[:3])
+    assert undisturbed[3][0]["n_docs"] > 0 and undisturbed[3][2]
 
     with _pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
         G.pagerank_fixed(e, n_iter=6).collect()
+    with _pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        export("local")
 
 
 def test_triangle_stats_planted_k4_with_pendant(spark):
@@ -1325,7 +1355,12 @@ def test_truss_peel_planted_k5_with_pendant_triangle(spark):
     at k=4 the bridge (support 0) and the pendant triangle (each edge in
     exactly 1 triangle < 2) peel away, leaving exactly K5 with every edge
     at support 3; at k=3 only the bridge peels.  Both peels reach their
-    fixpoint in one round, so the second round must be a no-op."""
+    fixpoint in one round, so the second round must be a no-op.
+
+    The k=4 peel also runs 14 rounds, 13 of them no-ops: each round's
+    checkpoint must restart the plan's size estimate, or the estimate
+    multiplies from round to round until stats estimation stalls the
+    driver (the test_local_checkpoint_stats_stay_bounded pathology)."""
     import itertools
 
     from etl_cloud_logistics_spark.operators.graph import truss_peel
@@ -1338,6 +1373,14 @@ def test_truss_peel_planted_k5_with_pendant_triangle(spark):
 
     got4 = {(r.lo, r.hi): r.support for r in truss_peel(df, rounds, k=4).collect()}
     assert got4 == {(a, b): 3 for a, b in k5}
+
+    deep = truss_peel(df, 14, k=4)
+    # py4j converts java BigInteger to a Python int
+    bits = int(
+        deep._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    ).bit_length()
+    assert bits < 256, f"stats BigInt grew to {bits} bits"
+    assert {(r.lo, r.hi): r.support for r in deep.collect()} == got4
 
     got3 = {(r.lo, r.hi): r.support for r in truss_peel(df, rounds, k=3).collect()}
     assert set(got3) == set(k5) | {(10, 11), (11, 12), (10, 12)}
@@ -1451,7 +1494,7 @@ def test_sssp_fixed_matches_dijkstra_random_graph(spark):
 
 
 def test_sssp_fixed_merge_carry_gate_is_semantics_preserving(
-    spark, monkeypatch, tmp_path
+    spark, monkeypatch, reliable_checkpoints
 ):
     """The r12 big-graph carry (candidate-only MIN aggregation merged into
     the carried distances by a full-outer ``least()`` join, active only in
@@ -1490,21 +1533,16 @@ def test_sssp_fixed_merge_carry_gate_is_semantics_preserving(
         (r.node, r.dist) for r in G.sssp_fixed(e, seeds, n_rounds=5).collect()
     }
     assert pins == [("sssp-fixed", "src")], pins
-    reliable = {
-        (r.node, r.dist)
-        for r in G.sssp_fixed(
-            e, seeds, n_rounds=5, checkpoint_dir=str(tmp_path / "chk")
-        ).collect()
-    }
-    # force the r12 reliable-mode edge pin too (the broadcast-flip gate):
-    # pinned reliable must also be tuple-identical
-    monkeypatch.setitem(PIN_MIN_ROWS, ("sssp-fixed", "edges", "reliable"), 1)
-    reliable_pinned = {
-        (r.node, r.dist)
-        for r in G.sssp_fixed(
-            e, seeds, n_rounds=5, checkpoint_dir=str(tmp_path / "chk2")
-        ).collect()
-    }
+    with reliable_checkpoints():
+        reliable = {
+            (r.node, r.dist) for r in G.sssp_fixed(e, seeds, n_rounds=5).collect()
+        }
+        # force the r12 reliable-mode edge pin too (the broadcast-flip
+        # gate): pinned reliable must also be tuple-identical
+        monkeypatch.setitem(PIN_MIN_ROWS, ("sssp-fixed", "edges", "reliable"), 1)
+        reliable_pinned = {
+            (r.node, r.dist) for r in G.sssp_fixed(e, seeds, n_rounds=5).collect()
+        }
     assert pins == [("sssp-fixed", "src")] * 2, pins
     assert (
         merge_carry == union_carry == reliable == reliable_pinned

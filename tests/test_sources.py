@@ -181,7 +181,12 @@ def test_heavy_scan_parallelization_noop_at_scale(spark, sf_small):
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "64b")
         # bypass the table cache so load_table re-evaluates the guard
-        key = (catalog._session_identity(spark), sf_small, "documents")
+        key = (
+            catalog._session_identity(spark),
+            spark.sparkContext.getCheckpointDir(),
+            sf_small,
+            "documents",
+        )
         catalog._TABLE_CACHE.pop(key, None)
         df = catalog.load_table(spark, sf_small, "documents")
         plan = df._jdf.queryExecution().executedPlan().toString()

@@ -2,9 +2,9 @@
 probe records are built on (etl_cloud_logistics_spark/metrics.py) — a
 biased meter poisons every artifact that quotes it, so the meter gets its
 own pins — and the AST guards on the package's shape: one status-store
-reader, every public operator reached from the product surface, and every
-branch a reached operator takes on a defaulted parameter selected by some
-product call."""
+reader, one materialization path, every public operator reached from the
+product surface, and every branch a reached operator takes on a defaulted
+parameter selected by some product call."""
 
 from __future__ import annotations
 
@@ -127,6 +127,30 @@ def test_status_store_is_read_only_through_the_metrics_module():
             ):
                 offenders.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
     assert len(paths) > 50
+    assert not offenders, offenders
+
+
+def test_checkpoints_are_taken_only_through_the_checkpointing_module():
+    """One materialization path: no ``.localCheckpoint(`` or
+    ``.checkpoint(`` call in the package outside
+    ``operators/checkpointing.py``, whose ``materialize`` and
+    ``RoundCheckpointer`` read the session's checkpoint mode."""
+    pkg = os.path.join(ROOT, "etl_cloud_logistics_spark")
+    home = os.path.join(pkg, "operators", "checkpointing.py")
+    offenders, seen = [], 0
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                seen += 1
+                if path != home:
+                    offenders.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
+    assert seen >= 2  # the module's own calls: the scan is not vacuous
     assert not offenders, offenders
 
 
@@ -318,14 +342,22 @@ def test_every_public_package_name_is_reached():
 OPTION_EXEMPT = {}
 
 
+def _defaults(fn):
+    """Each defaulted parameter of ``fn`` -> its default, as an AST dump."""
+    args = fn.args
+    positional = [*args.posonlyargs, *args.args]
+    pairs = [
+        *zip(positional[len(positional) - len(args.defaults) :], args.defaults),
+        *((a, d) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None),
+    ]
+    return {a.arg: ast.dump(d) for a, d in pairs}
+
+
 def _forks(fn):
     """The defaulted parameters of ``fn`` that an ``if``/``elif``/``while``
     or conditional expression in its body tests.  An ``if`` whose body only
     raises is input validation, not a fork."""
-    args = fn.args
-    positional = [*args.posonlyargs, *args.args]
-    defaulted = [a.arg for a in positional[len(positional) - len(args.defaults) :]]
-    defaulted += [a.arg for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None]
+    defaulted = _defaults(fn)
     tested = set()
     for node in ast.walk(fn):
         if isinstance(node, ast.If) and all(isinstance(s, ast.Raise) for s in node.body):
@@ -335,34 +367,124 @@ def _forks(fn):
     return [p for p in defaulted if p in tested]
 
 
-def _sets(call, param, index):
-    """Whether ``call`` passes ``param`` (positional slot ``index``, or None
-    for keyword-only): by keyword, by position, or through ``*``/``**``."""
-    return (
-        any(k.arg in (param, None) for k in call.keywords)
-        or (index is not None and any(isinstance(a, ast.Starred) for a in call.args))
-        or (index is not None and len(call.args) > index)
-    )
+def _passed(call, param, index):
+    """The argument ``call`` passes for ``param`` (positional slot
+    ``index``, or None for keyword-only): a keyword value or a positional
+    argument; ``True`` when ``*``/``**`` may carry it; None if not passed."""
+    for k in call.keywords:
+        if k.arg == param:
+            return k.value
+    if any(k.arg is None for k in call.keywords):
+        return True
+    if index is not None and any(isinstance(a, ast.Starred) for a in call.args):
+        return True
+    if index is not None and len(call.args) > index:
+        return call.args[index]
+    return None
+
+
+def _forwards(call, arg, default, enclosing):
+    """Whether ``arg``, passed by ``call`` for a parameter whose default is
+    ``default``, only forwards that default: a bare name of a parameter of
+    the def the call sits in, with the same default.  A different default
+    is a value of the forwarding def's own."""
+    if not isinstance(arg, ast.Name) or id(call) not in enclosing:
+        return False
+    return _defaults(enclosing[id(call)]).get(arg.id) == default
+
+
+@dataclass
+class _Def:
+    """A def the fork guard resolves calls to, with its fork parameters."""
+
+    node: ast.AST
+    positional: list  # parameter names a positional argument fills, in order
+    defaults: dict  # _defaults(node)
+    forks: set
+
+
+def _package_defs(walk):
+    """Every def of the package by the name a call uses: ``f`` for a
+    top-level def, ``.m`` for a method, and a class name for its
+    ``__init__``; each with its forks, grown to a fixed point by forwarding
+    (``_forwards``): a defaulted parameter a def passes as a bare name to a
+    callee's fork with the same default is a fork of that def too.  Also returns, per call node, the innermost
+    def, method or lambda the call sits in."""
+    defs = defaultdict(list)
+    enclosing = {}  # id(call) -> innermost enclosing def node
+
+    def add(key, fn, method):
+        positional = [a.arg for a in (*fn.args.posonlyargs, *fn.args.args)]
+        if method and not any("staticmethod" in _code_names(d) for d in fn.decorator_list):
+            positional = positional[1:]  # self / cls
+        defs[key].append(_Def(fn, positional, _defaults(fn), set(_forks(fn))))
+        for node in ast.walk(fn):  # breadth first: inner defs come later
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                for call in ast.walk(node):
+                    if isinstance(call, ast.Call):
+                        enclosing[id(call)] = node
+
+    for tree in walk.trees:
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                add(node.name, node, method=False)
+            elif isinstance(node, ast.ClassDef):
+                for meth in node.body:
+                    if isinstance(meth, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        key = node.name if meth.name == "__init__" else "." + meth.name
+                        add(key, meth, method=True)
+    changed = True
+    while changed:
+        changed = False
+        for d in (d for group in list(defs.values()) for d in group):
+            for call in ast.walk(d.node):
+                if not isinstance(call, ast.Call) or enclosing[id(call)] is not d.node:
+                    continue
+                for callee in _callees(defs, call):
+                    for param in callee.forks:
+                        index = callee.positional.index(param) if param in callee.positional else None
+                        arg = _passed(call, param, index)
+                        if _forwards(call, arg, callee.defaults[param], enclosing):
+                            changed |= arg.id not in d.forks
+                            d.forks.add(arg.id)
+    return defs, enclosing
+
+
+def _callees(defs, call):
+    """The defs ``call`` may reach, matched by name: ``f(...)`` a top-level
+    def or class named ``f``, ``x.f(...)`` a method or a module's def ``f``."""
+    if isinstance(call.func, ast.Name):
+        return defs.get(call.func.id, [])
+    if isinstance(call.func, ast.Attribute):
+        return defs.get("." + call.func.attr, []) + defs.get(call.func.attr, [])
+    return []
 
 
 def test_every_fork_is_set_by_a_product_caller():
     """Each fork of a reached public def or method that is not itself an
-    entry — a defaulted parameter its body branches on (``_forks``) — must
-    be passed, by keyword, by position or through ``*args``/``**kwargs``,
-    by at least one call in the package or ``__spark_entry__.py`` outside
-    the def itself, or be in ``OPTION_EXEMPT``; no exemption may be set by
-    such a call.  Calls in tests, tools, ``bench.py`` and ``perfbench/``
-    do not count: a branch only they select is not product code.
+    entry — a defaulted parameter its body branches on (``_forks``), or
+    forwards as a bare name to a callee's fork with the same default
+    (``_package_defs``) — must be passed a value, by keyword, by position
+    or through ``*args``/``**kwargs``, by at least one call in the package
+    or ``__spark_entry__.py`` outside the def itself, or be in
+    ``OPTION_EXEMPT``; no exemption may be set by such a call.  A call that
+    only forwards a defaulted parameter of the def it sits in, with the
+    same default, does not set it: that parameter is a fork of the
+    forwarding def instead.  Calls in tests, tools, ``bench.py`` and
+    ``perfbench/`` do not count: a branch only they select is not product
+    code.
 
     Known limits: calls match by name, as in the reachability walk (a call
-    ``x.run(k=1)`` sets ``k`` for every method named ``run``); a parameter
-    that is only forwarded to another call is not a fork here, its callee's
-    branch is; and the guard sees which parameters a caller passes, not
-    which values, so a required parameter whose every product call passes
-    the same value (a branch on ``n is None`` that no caller takes) passes
-    unchecked."""
+    ``x.run(k=1)`` sets ``k`` for every method named ``run``, and a
+    forward to any def named ``run`` with a fork ``k`` makes a fork); a
+    forward is a bare parameter name only, so passing it through an
+    expression or a container hides it; and the guard sees which
+    parameters a caller passes, not which values, so a required parameter
+    whose every product call passes the same value (a branch on ``n is
+    None`` that no caller takes) passes unchecked."""
     walk = _product_walk()
     reached = walk.reach(walk.seed)
+    defs, enclosing = _package_defs(walk)
     calls = defaultdict(list)  # name or .attr -> call nodes
     for tree in walk.trees:
         for node in ast.walk(tree):
@@ -371,6 +493,7 @@ def test_every_fork_is_set_by_a_product_caller():
                     calls[node.func.id].append(node)
                 elif isinstance(node.func, ast.Attribute):
                     calls["." + node.func.attr].append(node)
+    by_node = {id(d.node): d for group in defs.values() for d in group}
     checked, unset = 0, {}
     for qual, fn in walk.defs.items():
         name = walk.public[qual]
@@ -378,18 +501,20 @@ def test_every_fork_is_set_by_a_product_caller():
             continue
         checked += 1
         method = name.startswith(".")
-        positional = [a.arg for a in (*fn.args.posonlyargs, *fn.args.args)]
-        if method and not any("staticmethod" in _code_names(d) for d in fn.decorator_list):
-            positional = positional[1:]  # self / cls
         own = {id(n) for n in ast.walk(fn)}
         callers = [
             c
             for c in calls["." + name.lstrip(".")] + ([] if method else calls[name])
             if id(c) not in own
         ]
-        for param in _forks(fn):
-            index = positional.index(param) if param in positional else None
-            if not any(_sets(c, param, index) for c in callers):
+        d = by_node[id(fn)]
+        for param in sorted(d.forks):
+            index = d.positional.index(param) if param in d.positional else None
+            if not any(
+                (arg := _passed(c, param, index)) is not None
+                and not _forwards(c, arg, d.defaults[param], enclosing)
+                for c in callers
+            ):
                 unset[f"{qual}({param})"] = name
     assert checked > 100
     stale = sorted(set(OPTION_EXEMPT) - set(unset))

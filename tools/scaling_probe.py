@@ -60,8 +60,11 @@ moments is one constant-state pass).
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -77,6 +80,23 @@ from etl_cloud_logistics_spark.operators.dedup import (  # noqa: E402
 from etl_cloud_logistics_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+@contextlib.contextmanager
+def _checkpoint_mode(spark, mode: str):
+    """Run a block in the session's ``local`` checkpoint mode, or in
+    ``reliable`` mode under a fresh session checkpoint directory that is
+    removed afterwards (the switch operators/checkpointing.py reads)."""
+    if mode == "local":
+        yield
+        return
+    chk = tempfile.mkdtemp(prefix="probechk-")
+    spark.sparkContext.setCheckpointDir(chk)
+    try:
+        yield
+    finally:
+        spark.sparkContext._jsc.sc().setCheckpointDir(None)  # back to local
+        shutil.rmtree(chk, ignore_errors=True)
 
 
 def replicated_corpus(spark, k: int):
@@ -345,26 +365,25 @@ def powerlaw_probe(es: list[int]) -> None:
     def powerlaw_edges(n_edges: int):
         return _powerlaw_edges(spark, n_edges)
 
-    import shutil
-    import tempfile
-
     N_ITER = 8  # the registry row's configuration
     MAX_HOPS = 4  # hub-seeded: the giant component is within ~3 hops
 
-    def run_all(edges, seeds, chk_dir):
+    def run_all(edges, seeds):
         rows = {}
         for op, fn in (
             (
                 "pagerank",
-                lambda: pagerank_fixed(
-                    edges, n_iter=N_ITER, checkpoint_dir=chk_dir
-                ).write.mode("overwrite").format("noop").save(),
+                lambda: pagerank_fixed(edges, n_iter=N_ITER)
+                .write.mode("overwrite")
+                .format("noop")
+                .save(),
             ),
             (
                 "bfs",
-                lambda: bfs_min_hops(
-                    edges, seeds, max_hops=MAX_HOPS, checkpoint_dir=chk_dir
-                ).write.mode("overwrite").format("noop").save(),
+                lambda: bfs_min_hops(edges, seeds, max_hops=MAX_HOPS)
+                .write.mode("overwrite")
+                .format("noop")
+                .save(),
             ),
             (
                 "components",
@@ -375,7 +394,6 @@ def powerlaw_probe(es: list[int]) -> None:
                     edges.select(F.col("src").alias("doc_id"))
                     .unionByName(edges.select(F.col("dst").alias("doc_id")))
                     .distinct(),
-                    checkpoint_dir=chk_dir,
                 ).write.mode("overwrite").format("noop").save(),
             ),
         ):
@@ -391,7 +409,7 @@ def powerlaw_probe(es: list[int]) -> None:
     # warm the plan shapes once at the smallest size
     warm = powerlaw_edges(10_000)
     seeds_w = warm.agg(F.min("src").alias("node"))
-    run_all(warm, seeds_w, None)
+    run_all(warm, seeds_w)
 
     print(
         "power-law graph probe (endpoints ~ Zipf via md5-uniforms, "
@@ -406,12 +424,8 @@ def powerlaw_probe(es: list[int]) -> None:
         n_edges = edges.count()
         seeds = edges.agg(F.min("src").alias("node"))
         for mode in ("local", "reliable"):
-            chk = None if mode == "local" else tempfile.mkdtemp(prefix="plchk-")
-            try:
-                r = run_all(edges, seeds, chk)
-            finally:
-                if chk is not None:
-                    shutil.rmtree(chk, ignore_errors=True)
+            with _checkpoint_mode(spark, mode):
+                r = run_all(edges, seeds)
             print(
                 f"{n_edges:>9} {mode:>8} "
                 f"{r['pagerank'][0]:>7.2f} {r['pagerank'][1]:>8.1f} "
@@ -447,11 +461,11 @@ def sssp_probe(es: list[int]) -> None:
             ).cast("long").alias("w"),
         )
 
-    def run(edges, seeds, chk_dir):
+    def run(edges, seeds):
         meter = ExecutionMeter(spark)
         t0 = time.perf_counter()
         row = (
-            sssp_fixed(edges, seeds, n_rounds=N_ROUNDS, checkpoint_dir=chk_dir)
+            sssp_fixed(edges, seeds, n_rounds=N_ROUNDS)
             .agg(
                 F.count(F.lit(1)).alias("reached"),
                 F.sum(F.col("dist") * F.col("dist")).alias("chk"),
@@ -463,11 +477,8 @@ def sssp_probe(es: list[int]) -> None:
         spark.catalog.clearCache()
         return wall, mb, int(row["reached"]), int(row["chk"])
 
-    import shutil
-    import tempfile
-
     warm = weighted(_powerlaw_edges(spark, 10_000))
-    run(warm, warm.agg(F.min("src").alias("node")), None)
+    run(warm, warm.agg(F.min("src").alias("node")))
 
     print(
         f"sssp probe (Zipf graphs, hash weights 1-9, {N_ROUNDS} fixed "
@@ -483,12 +494,8 @@ def sssp_probe(es: list[int]) -> None:
         seeds = edges.agg(F.min("src").alias("node"))
         results = {}
         for mode in ("local", "reliable"):
-            chk = None if mode == "local" else tempfile.mkdtemp(prefix="ssspchk-")
-            try:
-                wall, mb, reached, chksum = run(edges, seeds, chk)
-            finally:
-                if chk is not None:
-                    shutil.rmtree(chk, ignore_errors=True)
+            with _checkpoint_mode(spark, mode):
+                wall, mb, reached, chksum = run(edges, seeds)
             results[mode] = (reached, chksum)
             pin = (
                 str(results["local"] == results["reliable"])
@@ -1195,9 +1202,6 @@ def etl_e2e_probe(ns: list[int]) -> None:
     successor, total/current row counts reconcile with the churn
     arithmetic, and the day slice of the fact equals the day's extract.
     """
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.pipelines import run_daily_etl  # noqa: PLC0415
 
     spark = get_spark("scaling-probe-etl-e2e")
@@ -1399,8 +1403,6 @@ def bloomrt_probe(rs: list[int]) -> None:
         f"{'R':>10} {'mode':>16} {'wall_s':>7} {'scan_rows':>11} "
         f"{'shuffle_MB':>10} {'checksum':>20}"
     )
-    import tempfile  # noqa: PLC0415
-
     for r in rs:
         n_keys = 1_000_000
         root = tempfile.mkdtemp(prefix="bloomrt_")
@@ -1473,8 +1475,6 @@ def bloomrt_probe(rs: list[int]) -> None:
                     spark.conf.unset(k)
                 else:
                     spark.conf.set(k, v)
-            import shutil  # noqa: PLC0415
-
             shutil.rmtree(root, ignore_errors=True)
 
 
